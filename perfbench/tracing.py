@@ -43,24 +43,17 @@ class _QueryExecutionListener:
             opt = phases.get(phase)
             return float(opt.get().durationMs()) if opt.isDefined() else 0.0
 
-        self._tracer.record_query(
-            func_name,
-            duration_ns / 1e9,
-            _ms("analysis") / 1e3,
-            _ms("optimization") / 1e3,
-            _ms("planning") / 1e3,
-        )
+        self._tracer.record_query(_ms("analysis") / 1e3, _ms("optimization") / 1e3, _ms("planning") / 1e3)
 
     def onFailure(self, func_name, qe, exception):  # noqa: N802 - JVM interface
-        if self._tracer.active:
-            self._tracer.count("catalyst.failed_actions")
+        pass  # failed operations are counted by the workload that ran them
 
     class Java:
         implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
 
 
 class Tracer:
-    """In-memory spans and counters for one traced run."""
+    """In-memory spans and Catalyst phases for one traced run."""
 
     def __init__(self, spark) -> None:
         from pyspark.java_gateway import ensure_callback_server_started
@@ -68,7 +61,6 @@ class Tracer:
         self.spark = spark
         self.active = False
         self.spans: dict[str, list[float]] = defaultdict(list)
-        self.counts: dict[str, int] = defaultdict(int)
         self.actions: list[dict] = []
         self._lock = threading.Lock()
         self._patched: list[tuple[object, str, object]] = []
@@ -99,20 +91,10 @@ class Tracer:
         with self._lock:
             self.spans[layer].append(seconds)
 
-    def count(self, name: str, n: int = 1) -> None:
-        with self._lock:
-            self.counts[name] += n
-
-    def record_query(self, func_name, seconds, analysis, optimization, planning):
+    def record_query(self, analysis: float, optimization: float, planning: float) -> None:
         with self._lock:
             self.actions.append(
-                {
-                    "func": func_name,
-                    "s": seconds,
-                    "analysis_s": analysis,
-                    "optimization_s": optimization,
-                    "planning_s": planning,
-                }
+                {"analysis_s": analysis, "optimization_s": optimization, "planning_s": planning}
             )
 
     def take_actions(self) -> list[dict]:

@@ -48,7 +48,7 @@ from cassaforte_meter_transmission_gen_spark.streaming.pipeline import (
 )
 
 import corpus
-from oracle import canonical_digest, duck_rows
+from tests.parity import compare, duck_connection
 
 #: energy of every generated meter-second: the sawtooth's per-tick sum
 #: over the sample rate, truncated (the reference's golden value)
@@ -597,9 +597,13 @@ class Queries(Workload):
         res.cold_s = sum(res.attempt(name, run, name, COLD, tr.wants(COLD, 0)) or 0.0 for name in order)
         rng.shuffle(order)
         t_check = time.perf_counter()
-        for name in order:
-            if name in cold_frames:
-                res.attempt(f"check {name}", self._check, spark, staged, cold_frames.pop(name), name, res)
+        duck = duck_connection(staged[0])
+        try:
+            for name in order:
+                if name in cold_frames:
+                    res.attempt(f"check {name}", self._check, spark, duck, cold_frames.pop(name), name, res)
+        finally:
+            duck.close()
         t_window = time.perf_counter()
         check_pass_s = t_window - t_check
         t_end = t_window + seconds
@@ -648,11 +652,11 @@ class Queries(Workload):
             )
         return res
 
-    def _check(self, spark, staged, df, name, res: Result) -> None:
-        """Row count and order-insensitive digest of ``df`` (the cold
-        pass's frame for query ``name``, executed again) against the
-        DuckDB oracle; the flagship read against the rows the layout
-        holds."""
+    def _check(self, spark, duck, df, name, res: Result) -> None:
+        """``df`` (the cold pass's frame for query ``name``, executed
+        again) against its DuckDB oracle with the repository's parity
+        gate (row count, column names, order-insensitive values); the
+        flagship read against the rows the layout holds."""
         try:
             if name == FLAGSHIP:
                 row = df.agg(
@@ -663,12 +667,11 @@ class Queries(Workload):
                 ).first()
                 want = (2 * FLAGSHIP_HOURS * 3600, 2, JOULES_PER_SECOND, JOULES_PER_SECOND)
                 res.check(name, tuple(row) == want, f"{tuple(row)} != {want}")
-                return
-            got = canonical_digest(df.columns, [tuple(r) for r in df.collect()])
+            else:
+                problems = compare(df, duck, REGISTRY[name].oracle)
+                res.check(name, not problems, "; ".join(problems))
         finally:
             spark.catalog.clearCache()
-        want = canonical_digest(*duck_rows(staged[0], REGISTRY[name].oracle))
-        res.check(name, got == want, f"spark {got} != duckdb {want}")
 
 
 WORKLOADS = {w.name: w for w in (Ingest(), Stream(), Queries())}
