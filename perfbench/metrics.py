@@ -4,8 +4,10 @@
 prints all of them for its workload. ``PER_LAYER`` are single-layer
 figures from the traced run, each tagged with the workload that
 exercises the layer and the end-to-end metric it should move there.
-A traced run prints every per-layer name; a layer the workload does
-not exercise reads 0 and is tagged ``"exercised": false``.
+A traced run prints every per-layer name. The ``sources.*``,
+``rollups.*`` and ``ingest.*`` figures come from layer probes that run
+on every traced run; any other layer the workload does not exercise
+reads 0 and is tagged ``"exercised": false``.
 """
 
 from __future__ import annotations

@@ -143,7 +143,7 @@ def run(args: argparse.Namespace, work: str, started: float) -> int:
         tracer = tracing.Tracer(spark) if args.trace else None
         res = wl.measure(spark, staged, p, args.seconds, work, tracer)
         mem_peak_mb = jvm_peak_rss_mb(spark)
-        probes = layer_probes(spark, p, work, staged[1] if wl.name == "queries" else None) if tracer else {}
+        probes = layer_probes(spark, p, work, tracer, staged[1] if wl.name == "queries" else None) if tracer else {}
         stamp = environment_stamp(spark, args, cpus, load_start)
         if tracer:
             tracer.close()
@@ -155,7 +155,7 @@ def run(args: argparse.Namespace, work: str, started: float) -> int:
     detail = {
         "workload": wl.name,
         "trace": args.trace,
-        "metrics": {k: v for k, v in res.detail.items() if not k.startswith("_")},
+        "metrics": res.detail,
         "ops_s": res.ops,
         "warmup_s": res.warmup,
         "setup_s_each": setup_times,
@@ -177,7 +177,7 @@ def run(args: argparse.Namespace, work: str, started: float) -> int:
             "mem_peak_mb": mem_peak_mb,
         }
         out = {n: {"value": values[n], "unit": u} for n, u, *_ in metrics.END_TO_END}
-    print(json.dumps(detail, default=str))
+    print(json.dumps(detail))
     print(
         json.dumps(
             {"correct": res.failed == 0, "attempted": res.attempted, "failed": res.failed, "metrics": out}
@@ -188,7 +188,8 @@ def run(args: argparse.Namespace, work: str, started: float) -> int:
 
 def layer_metrics(metrics, tracing, workload: str, res, probes: dict, session_start_s: float, work: str) -> dict:
     """Every per-layer metric for this traced run, tagged with what it
-    should move; layers the workload does not exercise read 0."""
+    should move. Layer probes run on every traced run; a loop metric of a
+    layer the workload does not exercise reads 0."""
     from workloads import QUERY_MIX
 
     tr = res.trace
@@ -209,17 +210,13 @@ def layer_metrics(metrics, tracing, workload: str, res, probes: dict, session_st
     if log is not None and tr.build_windows:
         eager = tracing.summarize_event_log(log, tr.build_windows)["jobs"]
         values["plans.eager_jobs"] = eager / len(tr.build_windows) * len(QUERY_MIX)
-    if workload == "ingest" and values["ingest.call_s"]:
-        values["ingest.overlap_ratio"] = (
-            values["sources.raw_write_s"] + values["rollups.second_write_s"] + values["rollups.chain_s"]
-        ) / values["ingest.call_s"]
     return {
         m["name"]: {
             "value": values[m["name"]],
             "unit": m["unit"],
             "workloads": list(m["workloads"]),
             "moves": m["moves"],
-            "exercised": workload in m["workloads"],
+            "exercised": workload in m["workloads"] or m["name"] in probes,
         }
         for m in metrics.PER_LAYER
     }

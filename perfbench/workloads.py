@@ -318,9 +318,6 @@ class Ingest(Workload):
         want = expected_rows(INGEST_METERS, p.t0_epoch, INGEST_SECONDS)
         golden = INGEST_METERS * INGEST_SECONDS * JOULES_PER_SECOND
         footprints: list[tuple[int, int]] = []
-        if tracer:
-            tracer.wrap(pkg_ingest, "write_time_partitioned", "ingest.raw_write_in_call_s")
-            tracer.wrap(pkg_io.ParquetSink, "write", "ingest.sink_write_s")
 
         def call(i: int, phase: str) -> None:
             out = tempfile.mkdtemp(prefix="ingest_", dir=work)
@@ -362,16 +359,6 @@ class Ingest(Workload):
             "stored_bytes_per_sample": {"value": stored, "unit": "B/sample", "n": len(footprints)},
             "shape": {"meters": INGEST_METERS, "seconds": INGEST_SECONDS, "samples_per_call": self.samples},
         }
-        if tracer:
-            n_calls = len(tr.cold_windows) + len(tr.warm_windows)
-            res.layers.update(
-                {
-                    "ingest.call_s": statistics.median(tr.traced_latencies("call") or res.ops),
-                    "ingest.raw_write_in_call_s": sum(tracer.spans["ingest.raw_write_in_call_s"]) / n_calls,
-                    "ingest.sink_write_s": sum(tracer.spans["ingest.sink_write_s"]) / n_calls,
-                    "ingest.stored_bytes_per_sample": stored,
-                }
-            )
         return res
 
 
@@ -463,7 +450,7 @@ class Stream(Workload):
         for i, phase in closed_loop(seconds, self.warmup):
             res.attempt("stream_drain", drain, i, phase)
         if sigs:
-            dual = res.attempt("stream.ingest_dual", self._dual, spark, p)
+            dual = res.attempt("stream.ingest_dual", self._dual, spark, p, work)
             for k, sig in enumerate(sigs):
                 res.check(f"stream.equals_ingest_dual[{k}]", sig == dual, f"{sig} != {dual}")
         if not res.passes or not res.ops:
@@ -507,14 +494,21 @@ class Stream(Workload):
             )
         return res
 
-    def _dual(self, spark, p) -> dict:
-        """Signatures of the tables batch ingest writes for the same
-        shape: the generator's second table and its rollup chain."""
-        second = meter_samples_second(spark, STREAM_METERS, p.start_said, p.t0_epoch, STREAM_SECONDS)
-        sigs = {
-            f"meter_samples_{g}": signature(df, ["said", "datetime", "joules"])
-            for g, df in pkg_rollups.rollup_chain(second).items()
-        }
+    def _dual(self, spark, p, work: str) -> dict:
+        """Signatures of the tables batch ingest writes for the same shape
+        (its raw table as the generator's keys, since ``write_raw=False``)."""
+        out = tempfile.mkdtemp(prefix="dual_", dir=work)
+        try:
+            ingest_batch(
+                spark, out, num_meters=STREAM_METERS, start_said=p.start_said,
+                t0_epoch=p.t0_epoch, seconds=STREAM_SECONDS, write_raw=False,
+            )
+            sigs = {
+                t: signature(spark.read.parquet(os.path.join(out, t)), ["said", "datetime", "joules"])
+                for t in TABLES[1:]
+            }
+        finally:
+            shutil.rmtree(out, ignore_errors=True)
         ids = transmissions(spark, STREAM_METERS, p.start_said, p.t0_epoch, STREAM_SECONDS, with_watts=False)
         sigs["meter_samples"] = signature(ids, ["said", "datetime"])
         return sigs
@@ -677,9 +671,10 @@ class Queries(Workload):
 WORKLOADS = {w.name: w for w in (Ingest(), Stream(), Queries())}
 
 
-def layer_probes(spark, p: Params, work: str, layout: str | None = None) -> dict:
+def layer_probes(spark, p: Params, work: str, tracer, layout: str | None = None) -> dict:
     """Single layers called on their own, three times each (median), at
-    the ingest shape: the raw write, the second-table write and the
+    the ingest shape: ``ingest_batch`` (with spans around its raw write
+    and its sink writes), the raw write, the second-table write and the
     rollup chain; the stream staging write; the flagship read over
     ``layout`` (written here when not given)."""
 
@@ -688,11 +683,26 @@ def layer_probes(spark, p: Params, work: str, layout: str | None = None) -> dict
         fn()
         return time.perf_counter() - t0
 
-    raw, second, chain, stage, flag = [], [], [], [], []
+    tracer.wrap(pkg_ingest, "write_time_partitioned", "ingest.raw_write_in_call_s")
+    tracer.wrap(pkg_io.ParquetSink, "write", "ingest.sink_write_s")
+    calls, stored, raw, second, chain, stage, flag = [], [], [], [], [], [], []
     footprint = (0, 0)
     for _ in range(3):
         d = tempfile.mkdtemp(prefix="probe_", dir=work)
         try:
+            tracer.active = True
+            try:
+                calls.append(
+                    timed(
+                        lambda: ingest_batch(
+                            spark, os.path.join(d, "ingest"), num_meters=INGEST_METERS,
+                            start_said=p.start_said, t0_epoch=p.t0_epoch, seconds=INGEST_SECONDS,
+                        )
+                    )
+                )
+            finally:
+                tracer.active = False
+            stored.append(parquet_footprint(os.path.join(d, "ingest"))[0] / Ingest.samples)
             raw_dir = os.path.join(d, "raw")
             gen = transmissions(spark, INGEST_METERS, p.start_said, p.t0_epoch, INGEST_SECONDS)
             raw.append(timed(lambda: pkg_layout.write_time_partitioned(gen, raw_dir, clustered=True)))
@@ -731,7 +741,14 @@ def layer_probes(spark, p: Params, work: str, layout: str | None = None) -> dict
         if own:
             shutil.rmtree(layout, ignore_errors=True)
     scan = scans[0] if scans else {}
+    call_s = statistics.median(calls)
     return {
+        "ingest.call_s": call_s,
+        "ingest.raw_write_in_call_s": sum(tracer.spans["ingest.raw_write_in_call_s"]) / len(calls),
+        "ingest.sink_write_s": sum(tracer.spans["ingest.sink_write_s"]) / len(calls),
+        "ingest.stored_bytes_per_sample": statistics.median(stored),
+        "ingest.overlap_ratio": (statistics.median(raw) + statistics.median(second) + statistics.median(chain))
+        / call_s,
         "sources.raw_write_s": statistics.median(raw),
         "sources.raw_bytes": footprint[0],
         "sources.raw_files": footprint[1],
