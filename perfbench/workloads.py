@@ -187,7 +187,6 @@ class RunTrace:
 
     def __init__(self, tracer) -> None:
         self.tracer = tracer
-        self.cold_windows: list[tuple[float, float]] = []
         self.warm_windows: list[tuple[float, float]] = []
         self.build_windows: list[tuple[float, float]] = []
         self.cold_actions: list[dict] = []
@@ -218,15 +217,11 @@ class RunTrace:
         actions = self.tracer.take_actions()
         if phase == COLD:
             self.cold_actions += actions
-            self.cold_windows.append((w0, w1))
         else:
             self.actions += actions
             self.warm_windows.append((w0, w1))
             self.gc_s += self.tracer.gc_seconds() - self._gc0
             self.n_warm += n_ops
-
-    def traced_latencies(self, key: str) -> list[float]:
-        return self._lat[True].get(key, [])
 
     def overhead_frac(self) -> float:
         traced, untraced = self._lat[True], self._lat[False]
