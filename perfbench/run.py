@@ -118,12 +118,13 @@ def run(args: argparse.Namespace, work: str, started: float) -> int:
 
     import metrics
     import tracing
-    from workloads import WORKLOADS, Params, layer_probes
+    from workloads import WORKLOADS, Params, flagship_probe, write_probes
 
     load_start = os.getloadavg()
     wl, p = WORKLOADS[args.workload], Params.from_seed(args.seed)
     spark = staged = None
     setup_times: list[float] = []
+    stage_times: list[float] = []
     session_start_s = 0.0
     try:
         for rep in range(wl.setup_reps):
@@ -137,13 +138,24 @@ def run(args: argparse.Namespace, work: str, started: float) -> int:
             if rep == 0:
                 session_start_s = time.perf_counter() - t0
             spark.range(0, 1_000_000, 1, cpus).selectExpr("sum(id)").collect()
+            t1 = time.perf_counter()
             staged = wl.stage(spark, rep_dir, p)
+            stage_times.append(time.perf_counter() - t1)
             setup_times.append(time.perf_counter() - t0)
 
         tracer = tracing.Tracer(spark) if args.trace else None
         res = wl.measure(spark, staged, p, args.seconds, work, tracer)
         mem_peak_mb = jvm_peak_rss_mb(spark)
-        probes = layer_probes(spark, p, work, tracer, staged[1] if wl.name == "queries" else None) if tracer else {}
+        probes = {}
+        if tracer:
+            # the write-side layers are probed on the write workloads, the
+            # flagship read on the read workload
+            if wl.name == "queries":
+                probes = flagship_probe(spark, p, staged[1], tracer)
+            else:
+                probes = write_probes(spark, p, work, tracer)
+            if wl.name == "stream":
+                probes["sources.stage_s"] = statistics.median(stage_times)
         stamp = environment_stamp(spark, args, cpus, load_start)
         if tracer:
             tracer.close()
@@ -157,6 +169,7 @@ def run(args: argparse.Namespace, work: str, started: float) -> int:
         "trace": args.trace,
         "metrics": res.detail,
         "ops_s": res.ops,
+        "ops_cpu_s": res.ops_cpu,
         "warmup_s": res.warmup,
         "setup_s_each": setup_times,
         "session_start_s": session_start_s,
@@ -171,12 +184,16 @@ def run(args: argparse.Namespace, work: str, started: float) -> int:
     else:
         values = {
             "setup_s": statistics.median(setup_times),
+            "throughput_per_cpu_s": res.throughput_per_cpu_s,
+            "op_cpu_s": statistics.median(res.ops_cpu) if res.ops_cpu else 0.0,
+            "cold_cpu_s": res.cold_cpu_s,
+            "mem_peak_mb": mem_peak_mb,
             "throughput_per_s": res.throughput_per_s,
             "op_p50_s": statistics.median(res.ops) if res.ops else 0.0,
             "cold_s": res.cold_s,
-            "mem_peak_mb": mem_peak_mb,
         }
         out = {n: {"value": values[n], "unit": u} for n, u, *_ in metrics.END_TO_END}
+        detail["unbounded"] = {n: {"value": values[n], "unit": u} for n, u in metrics.UNBOUNDED}
     print(json.dumps(detail))
     print(
         json.dumps(
@@ -198,7 +215,8 @@ def layer_metrics(metrics, tracing, workload: str, res, probes: dict, session_st
     values.update(probes)
     values.update(tr.layers())
     values.update(res.layers)
-    values["trace.overhead_frac"] = tr.overhead_frac()
+    if "trace.overhead_frac" not in probes:
+        values["trace.overhead_frac"] = tr.overhead_frac()
     log = tracing.event_log_file(os.path.join(work, "eventlog"))
     if log is not None and tr.warm_windows:
         ev = tracing.summarize_event_log(log, tr.warm_windows)
