@@ -7,16 +7,12 @@ for negative hash values). Purpose: same host ⇒ same ``said`` range,
 different hosts ⇒ disjoint ranges (core.clj:28-31).
 
 Spark-first: this runs ONCE per job, driver-side — never inside a plan
-(determinism for the oracle; SURVEY §3.2). We keep a column variant for
-completeness (e.g. deriving disjoint id ranges for a table of workers).
+(determinism for the oracle; SURVEY §3.2).
 """
 
 from __future__ import annotations
 
 import hashlib
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 HOST_HASH_MOD = 100000
 
@@ -31,13 +27,6 @@ def host_hash(seed_str: str, mod: int = HOST_HASH_MOD) -> int:
     """
     digest = hashlib.sha1(seed_str.encode("utf-8")).hexdigest()
     return int(digest, 16) % mod
-
-
-def host_hash_col(seed: Column, mod: int = HOST_HASH_MOD) -> Column:
-    """Column variant: SHA1 hex → take 15 hex digits (fits a signed
-    long) → pmod. pmod mirrors Clojure's floor-mod (non-negative)."""
-    h = F.conv(F.substring(F.sha1(seed), 1, 15), 16, 10).cast("long")
-    return F.pmod(h, F.lit(mod)).cast("int")
 
 
 _M32 = 0xFFFFFFFF

@@ -92,6 +92,11 @@ def global_running_totals(
     separate ``approxQuantile`` driver job (r15, guide §5: one fewer
     driver-blocking job before the output job). Boundary placement
     affects only load balance, never results (module docstring)."""
+    if len(value_cols) != len(out_cols):
+        raise ValueError(
+            f"global_running_totals: {len(value_cols)} value_cols but "
+            f"{len(out_cols)} out_cols"
+        )
     if bounds is None:
         bounds = []
         if n_partitions > 1:

@@ -52,13 +52,6 @@ def rollup_chain(second_df: DataFrame) -> dict[str, DataFrame]:
     return out
 
 
-def route_grain(rollups: dict[str, DataFrame], grain: str) -> DataFrame:
-    """Grain routing (SURVEY §4 O4): answer a query at ``grain`` from the
-    coarsest sufficient pre-aggregated table — O(1)-ish reads instead of
-    raw scans, the reference's load-bearing design decision."""
-    return rollups[grain]
-
-
 GRAIN_SECONDS = {"second": 1, "minute": 60, "hour": 3600, "day": 86400}
 
 

@@ -31,11 +31,6 @@ def sql_dec_sum(expr: str) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(18,6))) AS DOUBLE)"
 
 
-def sql_dec_avg(expr: str) -> str:
-    """DuckDB text mirror of :func:`dec_avg`."""
-    return f"(CAST(SUM(CAST({expr} AS DECIMAL(18,6))) AS DOUBLE) / COUNT({expr}))"
-
-
 def sql_ntile_from_rank(rank0: str, n: int, k: int) -> str:
     """SQL ``ntile(k)`` as pure integer arithmetic over a 0-based
     global rank column: ntile puts the larger buckets FIRST — the first
@@ -88,8 +83,9 @@ def monotone_money_key(df, money_col: str, id_col: str, n_bounds: int = 0):
         F.max(id_col).alias("hi"),
         F.max(F.abs(mgrid)).alias("ma"),
     ]
-    if n_bounds > 1:
-        probs = [i / n_bounds for i in range(1, n_bounds)]
+    # one boundary per split point: none for n_bounds ≤ 1 (one bucket)
+    probs = [i / n_bounds for i in range(1, n_bounds)]
+    if probs:
         # accuracy 1000 ≈ approxQuantile(relativeError 0.001): balance
         # only — see the packing module docstring
         aggs.append(
@@ -122,5 +118,5 @@ def monotone_money_key(df, money_col: str, id_col: str, n_bounds: int = 0):
     # money > q sits above it, every key with money < q below — rows
     # AT q land in the upper bucket (b < key holds once id ≥ 0 ...
     # except id = 0; either side is fine, balance-only)
-    bounds = [float(int(q) * mult) for q in (row["qs"] or [])]
+    bounds = [float(int(q) * mult) for q in (row["qs"] or [])] if probs else []
     return (key, n, bounds)

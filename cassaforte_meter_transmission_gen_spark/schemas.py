@@ -220,9 +220,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(col_name, F.col(col_name).cast(want))
     memo[key] = df
     return df
-
-
-def register_corpus(spark: SparkSession, sf_dir: str) -> None:
-    """Register every corpus table as a temp view (for SQL-form plans)."""
-    for name in CORPUS_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

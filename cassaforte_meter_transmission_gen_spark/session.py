@@ -55,7 +55,6 @@ def get_spark(app_name: str = "cassaforte-spark-engine") -> SparkSession:
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", str(cpus))
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

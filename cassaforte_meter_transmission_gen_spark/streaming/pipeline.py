@@ -18,6 +18,48 @@ Correctness argument: streaming aggregation ≡ batch aggregation over
 the same inputs (sum is associative/commutative); asserted by
 tests/test_streaming.py and by the catalog entry
 ``streaming_rollup_minute`` sharing its oracle with the batch rollup.
+
+Exactly-once commit protocol
+----------------------------
+Every ``foreachBatch`` sink here that keeps its state in plain parquet
+commits through one protocol — the poor-man's transaction log that a
+table format like Delta/Iceberg replaces wholesale. (The bucketed and
+LSM sinks commit through ``sources.snapshot.SnapshotTable.commit``
+instead; :func:`snapshot_view_batch_fn` runs this protocol keyed on the
+applied source snapshot id rather than the micro-batch id.)
+
+- **Layout.** A sink owns its table dirs plus one ``commits_dir``. A
+  versioned table holds one full copy of its state per applied batch,
+  ``<table>/v=<batch_id>/``. The five-table ingest's raw and second
+  tables instead append ``<table>/batch=<batch_id>/`` dirs, which
+  :func:`compact_stream_tables` folds into ``_compacted/upto=<U>``
+  segments.
+- **Marker.** The commit point of batch ``b`` is the empty file
+  ``<commits_dir>/<b>``, published by ``os.replace`` of ``<b>.tmp``
+  (:func:`_commit`) only after every table of the batch is durable.
+- **High-watermark rule.** foreachBatch delivers batches in order and
+  the marker is each batch's last step, so every id ≤ the newest
+  marker (the high watermark, :func:`_high_watermark`) is committed. A
+  batch with ``batch_id <= hw`` is a replay and is skipped. Any other
+  batch merges onto ``v=<hw>`` and OVERWRITES its own ``v=<batch_id>``
+  (or ``batch=<batch_id>``) dir, so a batch replayed after a crash
+  before its marker rebuilds from the same committed base: it can
+  never be applied twice (:func:`versioned_merge_fn`).
+- **Retention.** After each commit only the newest ``retain_versions``
+  (default 4) ``v=`` dirs and markers are kept. The newest marker
+  alone carries the committed set, so pruning never widens a read. A
+  reader that resolved version N keeps a valid directory for
+  ``retain_versions - 1`` further commits (≈ that many trigger
+  intervals) — size it above the longest expected read.
+- **Readers.** Only ``v=<hw>`` (:func:`_read_committed`) and, for the
+  raw/second tables, the newest segment plus the batch dirs in
+  (segment upto, hw] (:func:`read_stream_table`) may be read. Anything
+  newer is an uncommitted in-flight batch, so a crash mid-batch is
+  invisible to every reader.
+
+The ``run_bounded_*`` harnesses drive a sink over a staged, bounded
+stream to completion (:func:`_drain`) and read back the committed
+result.
 """
 
 from __future__ import annotations
@@ -27,6 +69,7 @@ import hashlib
 import os
 import shutil
 import tempfile
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,6 +83,123 @@ def _slug(*parts) -> str:
     salted per process, so sink/view names built from it would differ
     across runs — md5 of the repr is stable everywhere."""
     return hashlib.md5(repr(parts).encode()).hexdigest()[:10]
+
+
+def _committed_batches(commits_dir: str) -> list[int]:
+    if not os.path.isdir(commits_dir):
+        return []
+    return sorted(int(f) for f in os.listdir(commits_dir) if f.isdigit())
+
+
+def _high_watermark(commits_dir: str) -> int | None:
+    """Latest committed batch id — every id ≤ it is committed (the
+    module docstring's high-watermark rule)."""
+    committed = _committed_batches(commits_dir)
+    return committed[-1] if committed else None
+
+
+def _commit(
+    commits_dir: str,
+    batch_id: int,
+    version_dirs: list[str],
+    retain_versions: int = 4,
+) -> None:
+    """Publish the marker of ``batch_id`` (the commit point), then prune
+    each of ``version_dirs`` and the markers to the newest
+    ``retain_versions`` — the module docstring's marker and retention
+    rules."""
+    marker = os.path.join(commits_dir, str(batch_id))
+    tmp = marker + ".tmp"
+    open(tmp, "w").close()
+    os.replace(tmp, marker)  # commit point
+    for d in version_dirs:
+        vers = sorted(int(v[2:]) for v in os.listdir(d) if v.startswith("v="))
+        for v in vers[:-retain_versions]:
+            shutil.rmtree(os.path.join(d, f"v={v}"), ignore_errors=True)
+    for b in _committed_batches(commits_dir)[:-retain_versions]:
+        try:
+            os.remove(os.path.join(commits_dir, str(b)))
+        except OSError:
+            pass
+
+
+def _read_committed(
+    spark: SparkSession, table_dir: str, commits_dir: str, schema: str
+) -> DataFrame:
+    """The committed version ``v=<hw>`` of a versioned table, read with
+    its pinned ``schema`` (no inference job); an empty frame of that
+    schema before the first commit."""
+    hw = _high_watermark(commits_dir)
+    if hw is None:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(f"{table_dir}/v={hw}")
+
+
+def versioned_merge_fn(
+    table_dir: str, commits_dir: str, schema: str, delta, merge
+):
+    """foreachBatch body of a one-table versioned sink under the module's
+    commit protocol: skip a replayed batch, else write
+    ``merge(committed state, delta(batch))`` as ``v=<batch_id>`` and
+    commit. ``delta(batch) -> DataFrame`` is the batch's contribution;
+    ``merge(prev, delta) -> DataFrame`` folds it into the committed
+    state (an empty frame of ``schema`` on the first batch)."""
+    os.makedirs(commits_dir, exist_ok=True)
+
+    def fn(batch: DataFrame, batch_id: int) -> None:
+        hw = _high_watermark(commits_dir)
+        if hw is not None and batch_id <= hw:
+            return  # replayed, fully applied
+        prev = _read_committed(batch.sparkSession, table_dir, commits_dir, schema)
+        merge(prev, delta(batch)).write.mode("overwrite").parquet(
+            f"{table_dir}/v={batch_id}"
+        )
+        _commit(commits_dir, batch_id, [table_dir])
+
+    return fn
+
+
+def _drain(writer) -> None:
+    """Run a bounded streaming query to completion: ``writer`` (a
+    configured ``DataStreamWriter``) gets a temp checkpoint and the
+    ``availableNow`` trigger, which processes every staged input file
+    and stops."""
+    with tempfile.TemporaryDirectory(prefix="stream_ckpt_") as ckpt:
+        writer.option("checkpointLocation", ckpt).trigger(
+            availableNow=True
+        ).start().awaitTermination()
+
+
+def _sum_merge(keys: tuple[str, ...], cols: tuple[str, ...]):
+    """``merge`` for additive state: union, then re-sum ``cols`` (as
+    long) per ``keys``."""
+    return lambda prev, delta: (
+        prev.unionByName(delta)
+        .groupBy(*keys)
+        .agg(*[F.sum(c).cast("long").alias(c) for c in cols])
+    )
+
+
+def _stage_ordered_files(prefix: str, frames: list[DataFrame]) -> str:
+    """Stage each frame as ONE parquet file, named and mtime-pinned in
+    list order, so a ``maxFilesPerTrigger`` file stream over the
+    returned dir replays them in that order."""
+    stage = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, stage, ignore_errors=True)
+    in_dir = os.path.join(stage, "in")
+    os.makedirs(in_dir)
+    for i, df in enumerate(frames):
+        tmp = os.path.join(stage, f"part{i}")
+        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        part = next(
+            f for f in os.listdir(tmp)
+            if f.endswith(".parquet") and not f.startswith("_")
+        )
+        dst = os.path.join(in_dir, f"{i:03d}.parquet")
+        os.replace(os.path.join(tmp, part), dst)
+        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+        shutil.rmtree(tmp, ignore_errors=True)
+    return in_dir
 
 
 def rate_transmission_stream(
@@ -113,33 +273,18 @@ def run_bounded_dedup_ingest(
     ``dup_fraction``-th second-grain row is staged TWICE (a retry
     storm): returns the deduplicated rows (append mode — each key emits
     once, when first seen)."""
-
-    stage = tempfile.mkdtemp(prefix="dup_stream_")
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
+    stream, stage = bounded_second_stream(spark, num_meters, seconds)
     try:
-        base = meter_samples_second(spark, num_meters=num_meters, seconds=seconds)
-        dupes = base.filter(
+        meter_samples_second(spark, num_meters=num_meters, seconds=seconds).filter(
             F.pmod(F.unix_timestamp("datetime"), F.lit(dup_fraction)) == 0
-        )
-        base.write.mode("overwrite").parquet(stage)
-        dupes.write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(METER_SAMPLES_SECOND)
-            .option("maxFilesPerTrigger", 8)
-            .parquet(stage)
-        )
-        deduped = dedup_transmission_stream(stream, lateness="10 minutes")
+        ).write.mode("append").parquet(stage)
         name = f"stream_dedup_{_slug(num_meters, seconds, dup_fraction)}"
-        with tempfile.TemporaryDirectory(prefix="dedup_ckpt_") as ckpt:
-            q = (
-                deduped.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        _drain(
+            dedup_transmission_stream(stream, lateness="10 minutes")
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+        )
     finally:
         shutil.rmtree(stage, ignore_errors=True)
     return spark.table(name)
@@ -178,18 +323,13 @@ def run_bounded_rollup(
     (availableNow trigger, complete output mode into a memory sink) and
     return the final result table — byte-equal to the batch rollup."""
     stream, _ = bounded_second_stream(spark, num_meters, seconds)
-    rollup = windowed_rollup(stream, grain_duration)
     name = f"stream_rollup_{_slug(grain_duration, num_meters, seconds)}"
-    with tempfile.TemporaryDirectory(prefix="meter_ckpt_") as ckpt:
-        q = (
-            rollup.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        windowed_rollup(stream, grain_duration)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+    )
     return spark.table(name)
 
 
@@ -226,124 +366,6 @@ def cumulative_energy_stream(stream: DataFrame) -> DataFrame:
     )
 
 
-def transform_with_state_available() -> bool:
-    """True when the transformWithState protocol's runtime dependency
-    (google.protobuf) is importable — probed, not assumed, so the
-    engine degrades to ``applyInPandasWithState`` with a clear reason
-    instead of a worker crash deep inside query startup."""
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def cumulative_energy_stream_v2(stream: DataFrame) -> DataFrame:
-    """The lifetime per-meter counter on the ``transformWithState``
-    API (Spark 4's arbitrary-state surface, the successor to
-    ``applyInPandasWithState``): a ``StatefulProcessor`` holding one
-    ``ValueState`` long per meter. Same semantics as
-    :func:`cumulative_energy_stream` — asserted equal in
-    tests/test_streaming.py — but on the API that adds typed state
-    variables, timers, TTL, and state schema evolution; requires the
-    RocksDB state store provider (the 100 TB state backend: state
-    spills to disk per executor instead of living on the JVM heap).
-
-    Environment note: the transformWithState protocol needs
-    ``google.protobuf`` at runtime (Spark's state-server messages are
-    proto-encoded); this sandbox doesn't ship it, so the path is gated
-    — :func:`transform_with_state_available` probes it, the test skips
-    without it, and ``applyInPandasWithState`` remains the exercised
-    default. The operator code itself is complete and runs wherever
-    protobuf is importable."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _Cumulative(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._total = handle.getValueState("total", "total LONG")
-
-        def handleInputRows(self, key, rows, timerValues):  # noqa: N802
-            total = self._total.get()[0] if self._total.exists() else 0
-            latest = None
-            for pdf in rows:
-                total += int(pdf["joules"].sum())
-                mx = pdf["datetime"].max()
-                latest = mx if latest is None else max(latest, mx)
-            self._total.update((total,))
-            yield pd.DataFrame(
-                {
-                    "said": [key[0]],
-                    "datetime": [latest],
-                    "cumulative_joules": [total],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("said").transformWithStateInPandas(
-        statefulProcessor=_Cumulative(),
-        outputStructType="said int, datetime timestamp, cumulative_joules long",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def run_bounded_cumulative_v2(
-    spark: SparkSession, num_meters: int = 4, seconds: int = 3600
-) -> DataFrame:
-    """Drive the transformWithState counter over the bounded stream
-    (RocksDB provider set for the query, restored after)."""
-    stream, _ = bounded_second_stream(spark, num_meters, seconds)
-    counted = cumulative_energy_stream_v2(stream)
-    name = f"stream_cumulative_v2_{_slug(num_meters, seconds)}"
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        with tempfile.TemporaryDirectory(prefix="meter_ckpt_v2_") as ckpt:
-            q = (
-                counted.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev)
-    return spark.table(name)
-
-
-def _committed_batches(commits_dir: str) -> list[int]:
-    import os
-
-    if not os.path.isdir(commits_dir):
-        return []
-    return sorted(int(f) for f in os.listdir(commits_dir) if f.isdigit())
-
-
-def _high_watermark(commits_dir: str) -> int | None:
-    """Latest committed batch id. foreachBatch delivers batches strictly
-    in order and the marker is each batch's last step, so EVERY id ≤ the
-    max marker is committed — which is what lets old markers be pruned
-    (the max marker alone carries the committed set)."""
-    committed = _committed_batches(commits_dir)
-    return committed[-1] if committed else None
-
-
 #: raw/second tables: per-batch append dirs (grains are versioned instead)
 BATCH_DIR_TABLES = ("meter_samples", "meter_samples_second")
 
@@ -358,7 +380,6 @@ def _compacted_state(table_path: str) -> tuple[int, str | None]:
     """(upto, dir) of the newest compacted segment under
     ``<table>/_compacted`` — rows of batches 0..upto folded into one
     parquet dir. (-1, None) when nothing is compacted yet."""
-    import os
 
     root = os.path.join(table_path, "_compacted")
     if not os.path.isdir(root):
@@ -385,32 +406,13 @@ def streaming_ingest_batch_fn(
     the raw arrays and the per-second energy rows, then COUNTER-merge
     each rollup grain (operators.rollups.counter_merge) into its table.
 
-    Delivery semantics — EXACTLY-ONCE, strictly stronger than the
-    reference's fire-and-forget (T5), via a batch-id commit protocol on
-    plain parquet (the poor-man's transaction log; a table format like
-    Delta/Iceberg replaces this wholesale):
-
-    - raw + second rows land in ``<table>/batch=<id>/`` with overwrite
-      — a replayed batch rewrites its own directory, never duplicates;
-    - each grain is written as a full new VERSION
-      ``<table>/v=<id>/`` = counter_merge(last COMMITTED version,
-      this batch's increment) — a replay re-reads the same committed
-      base and overwrites the same version directory, so double-merge
-      is impossible;
-    - the commit point is one empty marker file per batch id
-      (os.replace — atomic), written only after all five tables are
-      durable; readers resolve grains through the latest committed
-      marker AND filter raw/second reads to committed batch dirs
-      (:func:`read_stream_table`), so a crash mid-batch is invisible
-      to them for every table;
-    - grain versions and commit markers older than the newest
-      ``retain_versions`` are GC'd after commit. Retention is the
-      reader-consistency window: a grain reader that resolved version
-      N keeps a valid directory for ``retain_versions - 1`` further
-      commits (≈ that many trigger intervals) — size it above the max
-      expected reader duration. Markers prune to the same horizon; the
-      max marker alone carries the committed set (see
-      :func:`_high_watermark`), so pruning never widens reads.
+    Delivery is EXACTLY-ONCE, strictly stronger than the reference's
+    fire-and-forget (T5), by the module docstring's commit protocol:
+    raw + second rows land in ``<table>/batch=<id>/`` and each grain
+    as a new version ``<table>/v=<id>/`` = counter_merge(committed
+    version, this batch's increment); the marker lands only after all
+    five tables are durable, and grain versions and markers beyond the
+    newest ``retain_versions`` are pruned after it.
 
     ``crash_before_commit(batch_id) -> bool`` is a fault-injection seam
     for the restart tests: when it returns True the fn raises AFTER all
@@ -429,15 +431,13 @@ def streaming_ingest_batch_fn(
     directly from the just-written second table (sum is associative,
     so second→hour ≡ second→minute→hour), so raw rows are folded
     exactly once and the three merges are independent jobs."""
-    import os
-
     from ..functions.energy import joules_over_second
     from ..operators.rollups import CHAIN, counter_merge, rollup_from_second
 
     os.makedirs(commits_dir, exist_ok=True)
+    grain_paths = {g: paths[f"meter_samples_{g}"] for g in CHAIN}
 
     def fn(batch: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(commits_dir, str(batch_id))
         hw = _high_watermark(commits_dir)
         if hw is not None and batch_id <= hw:
             return  # replayed, fully applied — exactly-once
@@ -472,18 +472,6 @@ def streaming_ingest_batch_fn(
                 "said int, datetime timestamp, joules int"
             ).parquet(f"{paths['meter_samples_second']}/batch={batch_id}")
 
-        def _read_prev_grain(grain: str) -> DataFrame:
-            # resolving the prev-version grain relation (file listing
-            # under v=<hw>) depends only on the high watermark, never on
-            # this batch's data — prepared in a pool thread so the
-            # per-grain listings overlap the second-table write instead
-            # of running sequentially inside each merge (r15, guide
-            # §2.6; the r14 round left "3 prev-version footer reads +
-            # the marker sequential" as the stream's residual tail)
-            return spark.read.schema(GRAIN_SCHEMA).parquet(
-                f"{paths[f'meter_samples_{grain}']}/v={hw}"
-            )
-
         def _merge_grain(
             inc_second: DataFrame, prev: DataFrame | None, grain: str
         ) -> None:
@@ -493,12 +481,11 @@ def streaming_ingest_batch_fn(
             # independent Spark jobs (guide §2.6) instead of a chained
             # sequence of three driver-blocking actions per micro-batch
             inc = rollup_from_second(inc_second, grain)
-            gpath = paths[f"meter_samples_{grain}"]
             merged = inc if prev is None else counter_merge(prev, inc)
             (
                 merged.sortWithinPartitions("said", "datetime")
                 .write.mode("overwrite")
-                .parquet(f"{gpath}/v={batch_id}")
+                .parquet(f"{grain_paths[grain]}/v={batch_id}")
             )
 
         # The raw batch-dir write, the second write, and the three
@@ -509,14 +496,19 @@ def streaming_ingest_batch_fn(
         # driver-blocking actions. Only the real data dependency is
         # sequential: grain merges start after the second table (their
         # input) is durable. The commit marker still lands only after
-        # ALL five tables are durable (the .result() joins below), so
-        # the crash/replay protocol is unchanged.
-        from concurrent.futures import ThreadPoolExecutor
-
+        # ALL five tables are durable (the .result() joins below).
+        # Resolving each committed grain version (a file listing under
+        # v=<hw>) depends only on the high watermark, so it runs in the
+        # pool too, overlapping the second-table write (r15).
         with ThreadPoolExecutor(max_workers=4) as pool:
             fr = pool.submit(_write_raw)
             prev_futs = (
-                {g: pool.submit(_read_prev_grain, g) for g in CHAIN}
+                {
+                    g: pool.submit(
+                        _read_committed, spark, p, commits_dir, GRAIN_SCHEMA
+                    )
+                    for g, p in grain_paths.items()
+                }
                 if hw is not None
                 else {}
             )
@@ -536,27 +528,7 @@ def streaming_ingest_batch_fn(
             raise RuntimeError(
                 f"injected crash before commit of batch {batch_id}"
             )
-        tmp = marker + ".tmp"
-        open(tmp, "w").close()
-        os.replace(tmp, marker)  # commit point
-        # GC: keep the newest `retain_versions` grain versions — the
-        # reader-consistency window (a reader that resolved an older
-        # committed version keeps its directory for that many commits)
-        for grain in CHAIN:
-            gpath = paths[f"meter_samples_{grain}"]
-            vers = sorted(
-                int(d[2:]) for d in os.listdir(gpath) if d.startswith("v=")
-            )
-            for v in vers[:-retain_versions]:
-                shutil.rmtree(os.path.join(gpath, f"v={v}"), ignore_errors=True)
-        # prune markers to the same horizon; the retained max marker is
-        # the high-watermark that carries the whole committed set
-        committed = _committed_batches(commits_dir)
-        for b in committed[:-retain_versions]:
-            try:
-                os.remove(os.path.join(commits_dir, str(b)))
-            except OSError:
-                pass
+        _commit(commits_dir, batch_id, list(grain_paths.values()), retain_versions)
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
             compact_stream_tables(
                 spark, paths, commits_dir, keep_batches=compact_keep_batches
@@ -593,7 +565,6 @@ def compact_stream_tables(
     are never double-read. At real scale this runs as a scheduled
     maintenance job; the runner inlines it every ``compact_every``
     commits."""
-    import os
 
     hw = _high_watermark(commits_dir)
     if hw is None:
@@ -648,7 +619,6 @@ def read_stream_table(
     partially-written in-flight ``batch=`` dir is never touched, so a
     crash mid-batch is invisible to readers here exactly as it is for
     grains; grain tables resolve to the latest COMMITTED version."""
-    import os
 
     path = paths[table]
     hw = _high_watermark(commits_dir)
@@ -694,7 +664,7 @@ def run_bounded_streaming_ingest(
     already holds a committed write (``_SUCCESS``), so bench.py's
     trigger-size sweep pays the big-stream generation once, not once
     per curve point (the caller deletes it)."""
-
+    from ..operators.ingest import TABLES
     from ..schemas import METER_SAMPLES
     from ..sources.meter_generator import transmissions
 
@@ -716,27 +686,13 @@ def run_bounded_streaming_ingest(
             .option("maxFilesPerTrigger", max_files_per_trigger)
             .parquet(stage)
         )
-        paths = {
-            t: f"{out_dir}/{t}"
-            for t in (
-                "meter_samples",
-                "meter_samples_second",
-                "meter_samples_minute",
-                "meter_samples_hour",
-                "meter_samples_day",
-            )
-        }
+        paths = {t: f"{out_dir}/{t}" for t in TABLES}
         commits_dir = f"{out_dir}/_commits"
-        with tempfile.TemporaryDirectory(prefix="ingest_ckpt_") as ckpt:
-            q = (
-                stream.writeStream.foreachBatch(
-                    streaming_ingest_batch_fn(paths, commits_dir)
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+        _drain(
+            stream.writeStream.foreachBatch(
+                streaming_ingest_batch_fn(paths, commits_dir)
             )
-            q.awaitTermination()
+        )
         return paths, commits_dir
     finally:
         # the staged raw input is only read by the (now finished)
@@ -801,18 +757,13 @@ def run_bounded_sessions(
     """Run the streaming sessionization to completion and return the
     final session table (complete mode: every closed + open session)."""
     stream = bounded_events_stream(spark, sf_dir)
-    sessions = session_rollup(stream, gap)
     name = f"stream_sessions_{_slug(sf_dir, gap)}"
-    with tempfile.TemporaryDirectory(prefix="sess_ckpt_") as ckpt:
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        session_rollup(stream, gap)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+    )
     return spark.table(name)
 
 
@@ -834,18 +785,10 @@ def run_bounded_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums make the result independent of micro-batch arrival order."""
     from ..schemas import load_table
 
-    stage = tempfile.mkdtemp(prefix="events_enrich_stream_")
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "event_type", "value"
+    stream = bounded_events_stream(
+        spark, sf_dir, columns=("user_id", "ts", "event_id", "event_type", "value")
     )
-    ev.write.mode("overwrite").parquet(stage)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(stage)
-    )
-    profile = ev.groupBy("user_id").agg(
+    profile = load_table(spark, sf_dir, "events").groupBy("user_id").agg(
         F.count("*").alias("user_n"),
         F.sum(F.col("value").cast("decimal(18,6)"))
         .cast("double")
@@ -868,16 +811,7 @@ def run_bounded_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = f"stream_enrich_{_slug(sf_dir)}"
-    with tempfile.TemporaryDirectory(prefix="enrich_ckpt_") as ckpt:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(agg.writeStream.format("memory").queryName(name).outputMode("complete"))
     return spark.table(name)
 
 
@@ -902,24 +836,11 @@ def run_bounded_interval_join(
     append-mode semantics, correctly!) drop "late" rows and make the
     result depend on file order — a live deployment tunes the delay to
     its real lateness, which also bounds the state store."""
-    from ..schemas import load_table
-
-    stage = tempfile.mkdtemp(prefix="events_typed_stream_")
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "event_type", "value"
+    events = bounded_events_stream(
+        spark, sf_dir, columns=("user_id", "ts", "event_id", "event_type", "value")
     )
-    ev.write.mode("overwrite").parquet(stage)
-
-    def _reader() -> DataFrame:
-        return (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 8)
-            .parquet(stage)
-        )
-
     clicks = (
-        _reader().filter(F.col("event_type") == "click")
+        events.filter(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user"),
             F.col("ts").alias("click_ts"),
@@ -928,7 +849,7 @@ def run_bounded_interval_join(
         .withWatermark("click_ts", "3650 days")
     )
     purchases = (
-        _reader().filter(F.col("event_type") == "purchase")
+        events.filter(F.col("event_type") == "purchase")
         .select(
             "user_id",
             F.col("ts").alias("purchase_ts"),
@@ -946,21 +867,7 @@ def run_bounded_interval_join(
         ),
     ).select("user_id", "purchase_id", "purchase_ts", "purchase_value", "click_id", "click_ts")
     name = f"stream_ssjoin_{_slug(sf_dir, window)}"
-    try:
-        with tempfile.TemporaryDirectory(prefix="ssjoin_ckpt_") as ckpt:
-            q = (
-                joined.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        # the memory sink owns the rows now; the staged copy is done
-
-        shutil.rmtree(stage, ignore_errors=True)
+    _drain(joined.writeStream.format("memory").queryName(name).outputMode("append"))
     return spark.table(name)
 
 
@@ -981,8 +888,7 @@ def run_late_data_rollup(
     a window is emitted only once its end < watermark, and rows arriving
     behind the watermark are dropped — the assertion surface for the
     late-data tests."""
-    import os as _os
-    import time as _time
+    import time
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -1009,8 +915,7 @@ def run_late_data_rollup(
         )
         path = f"{stage}/batch_{i:03d}.parquet"
         pq.write_table(tbl, path)
-        _os.utime(path, (1_000_000 + i, 1_000_000 + i))
-        _time.sleep(0.01)
+        time.sleep(0.01)
 
     stream = (
         spark.readStream.schema(METER_SAMPLES_SECOND)
@@ -1025,16 +930,7 @@ def run_late_data_rollup(
         .select("said", F.col("w.start").alias("datetime"), "joules")
     )
     name = f"stream_late_{_slug(stage, delay, grain)}"
-    with tempfile.TemporaryDirectory(prefix="late_ckpt_") as ckpt:
-        q = (
-            rollup.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(rollup.writeStream.format("memory").queryName(name).outputMode("append"))
     return spark.table(name)
 
 
@@ -1044,19 +940,33 @@ def run_bounded_cumulative(
     """Drive the stateful counter over the bounded stream and return
     every emitted checkpoint row (memory sink, update mode)."""
     stream, _ = bounded_second_stream(spark, num_meters, seconds)
-    counted = cumulative_energy_stream(stream)
     name = f"stream_cumulative_{_slug(num_meters, seconds)}"
-    with tempfile.TemporaryDirectory(prefix="meter_ckpt_") as ckpt:
-        q = (
-            counted.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        cumulative_energy_stream(stream)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("update")
+    )
     return spark.table(name)
+
+
+#: pinned state schemas of the versioned sketch/count sinks below —
+#: shared by each sink's committed-state read and its harness's final
+#: read (no schema-inference job per micro-batch)
+_SKETCH_SCHEMA = "day timestamp, user_sketch binary"
+_CMS_SCHEMA = "day date, r int, c int, cnt long"
+_QSK_SCHEMA = "day timestamp, h bigint, v bigint"
+_KMV_SCHEMA = "day timestamp, h bigint"
+_PSI_SCHEMA = "bucket bigint, c_ref bigint, c_cur bigint"
+_AUC_SCHEMA = "score bigint, cnt bigint, pos bigint"
+_MG_SCHEMA = "user_id long, cnt long"
+_NB_SCHEMAS = {
+    "wl": "lang string, tok string, cnt bigint",
+    "dl": "lang string, d_l bigint",
+}
+_CHUNK_LEDGER_SCHEMA = (
+    "chunk_hash string, first_doc_id bigint, n_occurrences bigint"
+)
 
 
 def sketch_rollup_batch_fn(table_dir: str, commits_dir: str):
@@ -1066,36 +976,19 @@ def sketch_rollup_batch_fn(table_dir: str, commits_dir: str):
     version of the day-sketch table — the counter-merge protocol of
     :func:`streaming_ingest_batch_fn` applied to mergeable Datasketches
     state instead of additive counters, maintaining a metric plain
-    counters cannot (distinct users). Exactly-once by the same
-    argument: a replayed batch re-reads the same committed base and
-    overwrites its own version directory; the atomic marker is the
-    commit point."""
-    import os
-
-    os.makedirs(commits_dir, exist_ok=True)
-
-    def fn(batch: DataFrame, batch_id: int) -> None:
-        hw = _high_watermark(commits_dir)
-        if hw is not None and batch_id <= hw:
-            return  # replayed, fully applied
-        sk = batch.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
+    counters cannot (distinct users). Exactly-once by the module's
+    commit protocol (:func:`versioned_merge_fn`)."""
+    return versioned_merge_fn(
+        table_dir,
+        commits_dir,
+        _SKETCH_SCHEMA,
+        lambda b: b.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
             F.hll_sketch_agg("user_id").alias("user_sketch")
-        )
-        if hw is not None:
-            prev = batch.sparkSession.read.schema(
-                "day timestamp, user_sketch binary"
-            ).parquet(f"{table_dir}/v={hw}")
-            sk = (
-                prev.unionByName(sk)
-                .groupBy("day")
-                .agg(F.hll_union_agg("user_sketch").alias("user_sketch"))
-            )
-        sk.write.mode("overwrite").parquet(f"{table_dir}/v={batch_id}")
-        tmp = os.path.join(commits_dir, f"{batch_id}.tmp")
-        open(tmp, "w").close()
-        os.replace(tmp, os.path.join(commits_dir, str(batch_id)))
-
-    return fn
+        ),
+        lambda prev, sk: prev.unionByName(sk)
+        .groupBy("day")
+        .agg(F.hll_union_agg("user_sketch").alias("user_sketch")),
+    )
 
 
 def scd2_merge(
@@ -1158,27 +1051,15 @@ def scd2_batch_fn(
     payload_cols: list[str],
 ):
     """foreachBatch body maintaining an SCD2 HISTORY table from an
-    ordered change stream — the counter-merge versioned protocol
-    (:func:`streaming_ingest_batch_fn`) applied to dimension
-    versioning: per micro-batch, each affected key's committed OPEN
-    version is carried into the version-chaining window together with
-    the batch's events (operators.cdc.versions_from_stream), so
-    updates close the open version and open a new one, deletes close
-    without opening, and closed history rows are never edited.
-
-    Exactly-once by the same argument as the grain merges: a replayed
-    batch re-reads the same committed base version and overwrites its
-    own ``v=<batch_id>`` directory; the atomic marker is the commit
-    point, so a crash before the marker leaves the previous version
-    authoritative. Precondition (same as apply_changelog): the feed
-    delivers each key's events in STRICTLY increasing seq order across
-    batches — the log-offset guarantee of a real changelog source.
-    Defensively, batch rows whose seq is <= the carried open version's
-    valid_from_seq are dropped before chaining: under at-least-once
-    redelivery a NEW batch_id can replay an already-applied seq, which
-    would tie with the carried row in the chaining window and make
-    lead() over the tie nondeterministic (zero-width or duplicate
-    versions). The drop makes redelivered events idempotent no-ops.
+    ordered change stream — :func:`scd2_merge` applied per micro-batch
+    under the module's commit protocol (:func:`versioned_merge_fn`):
+    updates close the committed open version and open a new one,
+    deletes close without opening, and closed history rows are never
+    edited. Precondition (same as apply_changelog): the feed delivers
+    each key's events in STRICTLY increasing seq order across batches
+    — the log-offset guarantee of a real changelog source; an
+    already-applied seq redelivered under a NEW batch id is dropped by
+    :func:`scd2_merge`'s at-least-once guard.
 
     Scale: this fixture rewrites the full history per version (like
     the grain tables); the production shape is
@@ -1186,28 +1067,13 @@ def scd2_batch_fn(
     key bucket on a snapshot-manifest table and only affected buckets
     rewrite — untouched buckets carry forward by manifest reference,
     the same economics as the IVF layout."""
-    import os
-
-    os.makedirs(commits_dir, exist_ok=True)
-
-    def fn(batch: DataFrame, batch_id: int) -> None:
-        hw = _high_watermark(commits_dir)
-        if hw is not None and batch_id <= hw:
-            return  # replayed, fully applied
-        spark = batch.sparkSession
-        if hw is not None:
-            prev = spark.read.schema(history_schema).parquet(
-                f"{table_dir}/v={hw}"
-            )
-        else:
-            prev = spark.createDataFrame([], history_schema)
-        hist = scd2_merge(prev, batch, key_col, payload_cols)
-        hist.write.mode("overwrite").parquet(f"{table_dir}/v={batch_id}")
-        tmp = os.path.join(commits_dir, f"{batch_id}.tmp")
-        open(tmp, "w").close()
-        os.replace(tmp, os.path.join(commits_dir, str(batch_id)))
-
-    return fn
+    return versioned_merge_fn(
+        table_dir,
+        commits_dir,
+        history_schema,
+        lambda b: b,
+        lambda prev, b: scd2_merge(prev, b, key_col, payload_cols),
+    )
 
 
 _SCD2_FEED_SCHEMA = (
@@ -1220,14 +1086,11 @@ _SCD2_HISTORY_SCHEMA = (
 )
 
 
-def _stage_scd2_feed(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the orders changelog as THREE strictly-ordered micro-batch
-    files (snapshot seeds at seq 0, then the seq-1 tranche — updates
-    and tombstones — then seq-2); file order is pinned by name AND
-    mtime so the file source replays the feed in seq order. Shared by
-    the full-rewrite and bucket-partitioned SCD2 runners."""
-    import os
-
+def _stage_scd2_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The orders changelog as a file stream of THREE strictly-ordered
+    micro-batches: snapshot seeds at seq 0, then the seq-1 tranche
+    (updates and tombstones), then seq-2 (:func:`_stage_ordered_files`).
+    Shared by the full-rewrite and bucket-partitioned SCD2 runners."""
     from ..plans.tpch_queries import _orders_snapshot_and_changelog
 
     snap, changes = _orders_snapshot_and_changelog(spark, sf_dir)
@@ -1238,27 +1101,19 @@ def _stage_scd2_feed(spark: SparkSession, sf_dir: str) -> str:
         F.lit(0).alias("seq"),
         F.lit("u").alias("op"),
     )
-    tranches = [
-        feed0,
-        changes.filter(F.col("seq") == 1),
-        changes.filter(F.col("seq") == 2),
-    ]
-    stage = tempfile.mkdtemp(prefix="scd2_stream_in_")
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    in_dir = os.path.join(stage, "in")
-    os.makedirs(in_dir)
-    for i, df in enumerate(tranches):
-        tmp = os.path.join(stage, f"tranche{i}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.endswith(".parquet") and not f.startswith("_")
-        )
-        dst = os.path.join(in_dir, f"{i:03d}.parquet")
-        os.replace(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        shutil.rmtree(tmp, ignore_errors=True)
-    return in_dir
+    in_dir = _stage_ordered_files(
+        "scd2_stream_in_",
+        [
+            feed0,
+            changes.filter(F.col("seq") == 1),
+            changes.filter(F.col("seq") == 2),
+        ],
+    )
+    return (
+        spark.readStream.schema(_SCD2_FEED_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
 
 
 def run_bounded_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1268,38 +1123,23 @@ def run_bounded_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     the streaming maintenance must converge to exactly the history a
     one-shot batch build produces, which is the streaming≡batch
     argument used for every rollup in this module."""
-    import os
-
-    in_dir = _stage_scd2_feed(spark, sf_dir)
+    stream = _stage_scd2_feed(spark, sf_dir)
     out = tempfile.mkdtemp(prefix="scd2_stream_out_")
     atexit.register(shutil.rmtree, out, ignore_errors=True)
     table_dir = os.path.join(out, "orders_history")
     commits = os.path.join(out, "_commits")
-    stream = (
-        spark.readStream.schema(_SCD2_FEED_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    with tempfile.TemporaryDirectory(prefix="scd2_ckpt_") as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(
-                scd2_batch_fn(
-                    table_dir,
-                    commits,
-                    _SCD2_HISTORY_SCHEMA,
-                    "o_orderkey",
-                    ["o_orderkey", "o_orderstatus", "o_totalprice"],
-                )
+    _drain(
+        stream.writeStream.foreachBatch(
+            scd2_batch_fn(
+                table_dir,
+                commits,
+                _SCD2_HISTORY_SCHEMA,
+                "o_orderkey",
+                ["o_orderkey", "o_orderstatus", "o_totalprice"],
             )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
-    hw = _high_watermark(commits)
-    return spark.read.schema(_SCD2_HISTORY_SCHEMA).parquet(
-        f"{table_dir}/v={hw}"
     )
+    return _read_committed(spark, table_dir, commits, _SCD2_HISTORY_SCHEMA)
 
 
 #: key-bucket count for the bucketed SCD2 fixture. At 100 TB this is
@@ -1373,11 +1213,9 @@ def run_bounded_scd2_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     committed history read from the snapshot manifest — gated by the
     same batch oracle, so full-rewrite, bucketed-partial-rewrite, and
     one-shot batch builds are all pinned to one truth."""
-    import os
-
     from ..sources.snapshot import SnapshotTable
 
-    in_dir = _stage_scd2_feed(spark, sf_dir)
+    stream = _stage_scd2_feed(spark, sf_dir)
     out = tempfile.mkdtemp(prefix="scd2_bucketed_out_")
     atexit.register(shutil.rmtree, out, ignore_errors=True)
     table = SnapshotTable(
@@ -1385,25 +1223,15 @@ def run_bounded_scd2_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         _SCD2_BUCKETED_SCHEMA,
         SCD2_N_BUCKETS,
     )
-    stream = (
-        spark.readStream.schema(_SCD2_FEED_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    with tempfile.TemporaryDirectory(prefix="scd2b_ckpt_") as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(
-                scd2_bucketed_batch_fn(
-                    table,
-                    "o_orderkey",
-                    ["o_orderkey", "o_orderstatus", "o_totalprice"],
-                )
+    _drain(
+        stream.writeStream.foreachBatch(
+            scd2_bucketed_batch_fn(
+                table,
+                "o_orderkey",
+                ["o_orderkey", "o_orderstatus", "o_totalprice"],
             )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
+    )
     return table.read(spark).drop("bucket")
 
 
@@ -1419,8 +1247,6 @@ def run_bounded_sketch_rollup(
     pre-aggregation economics for distinct metrics: each event is
     folded into a fixed-size sketch once, any coarser window is a union
     of sketches — raw is never rescanned."""
-    import os
-
     from ..schemas import load_table
 
     ev = load_table(spark, sf_dir, "events").select("ts", "user_id")
@@ -1437,20 +1263,12 @@ def run_bounded_sketch_rollup(
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{stage}/in")
         )
-        with tempfile.TemporaryDirectory(prefix="sketch_ckpt_") as ckpt:
-            q = (
-                stream.writeStream.foreachBatch(
-                    sketch_rollup_batch_fn(table_dir, commits)
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+        _drain(
+            stream.writeStream.foreachBatch(
+                sketch_rollup_batch_fn(table_dir, commits)
             )
-            q.awaitTermination()
-        hw = _high_watermark(commits)
-        stored = spark.read.schema("day timestamp, user_sketch binary").parquet(
-            f"{table_dir}/v={hw}"
         )
+        stored = _read_committed(spark, table_dir, commits, _SKETCH_SCHEMA)
         weekly_est = stored.groupBy(
             F.date_trunc("week", "day").cast("date").alias("week")
         ).agg(
@@ -1485,40 +1303,19 @@ def cms_rollup_batch_fn(table_dir: str, commits_dir: str):
     dual (:func:`sketch_rollup_batch_fn`, whose estimate bytes are
     engine-specific) the maintained state is bit-reproducible: the
     final estimates equal the batch CMS query exactly, and the DuckDB
-    oracle gates them by full value hash. Exactly-once by the same
-    argument: a replayed batch re-reads the same committed base and
-    overwrites its own version directory; the atomic marker is the
-    commit point."""
-    import os
-
+    oracle gates them by full value hash. Exactly-once by the module's
+    commit protocol (:func:`versioned_merge_fn`)."""
     from ..operators.sketches import cms_build
 
-    os.makedirs(commits_dir, exist_ok=True)
-
-    def fn(batch: DataFrame, batch_id: int) -> None:
-        hw = _high_watermark(commits_dir)
-        if hw is not None and batch_id <= hw:
-            return  # replayed, fully applied
-        grid = cms_build(
-            batch.withColumn("day", F.to_date("ts")),
-            "user_id",
-            group_cols=("day",),
-        )
-        if hw is not None:
-            prev = batch.sparkSession.read.schema(
-                "day date, r int, c int, cnt long"
-            ).parquet(f"{table_dir}/v={hw}")
-            grid = (
-                prev.unionByName(grid)
-                .groupBy("day", "r", "c")
-                .agg(F.sum("cnt").cast("long").alias("cnt"))
-            )
-        grid.write.mode("overwrite").parquet(f"{table_dir}/v={batch_id}")
-        tmp = os.path.join(commits_dir, f"{batch_id}.tmp")
-        open(tmp, "w").close()
-        os.replace(tmp, os.path.join(commits_dir, str(batch_id)))
-
-    return fn
+    return versioned_merge_fn(
+        table_dir,
+        commits_dir,
+        _CMS_SCHEMA,
+        lambda b: cms_build(
+            b.withColumn("day", F.to_date("ts")), "user_id", group_cols=("day",)
+        ),
+        _sum_merge(("day", "r", "c"), ("cnt",)),
+    )
 
 
 def run_bounded_cms_rollup(
@@ -1533,8 +1330,6 @@ def run_bounded_cms_rollup(
     both run against the identical full-value-hash DuckDB oracle. At
     100 TB: every event folds into a fixed 4×1024-per-day grid once;
     estimates never rescan raw."""
-    import os
-
     from ..operators.sketches import cms_estimate, cms_merge
     from ..schemas import load_table
 
@@ -1552,21 +1347,10 @@ def run_bounded_cms_rollup(
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{stage}/in")
         )
-        with tempfile.TemporaryDirectory(prefix="cms_ckpt_") as ckpt:
-            q = (
-                stream.writeStream.foreachBatch(
-                    cms_rollup_batch_fn(table_dir, commits)
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        hw = _high_watermark(commits)
-        stored = spark.read.schema("day date, r int, c int, cnt long").parquet(
-            f"{table_dir}/v={hw}"
+        _drain(
+            stream.writeStream.foreachBatch(cms_rollup_batch_fn(table_dir, commits))
         )
-        grid = cms_merge(stored)
+        grid = cms_merge(_read_committed(spark, table_dir, commits, _CMS_SCHEMA))
         top = (
             ev.groupBy("user_id")
             .agg(F.count("*").cast("long").alias("exact_count"))
@@ -1664,8 +1448,6 @@ def run_bounded_cusum(
     strictly increasing per user across emissions, so max-by picks the
     last). Gated against the identical recursive-CTE oracle as the
     batch fold — streaming≡batch, the module's standing argument."""
-    import os
-
     from pyspark.sql import Window as W
 
     from ..schemas import load_table
@@ -1688,25 +1470,13 @@ def run_bounded_cusum(
             W.orderBy("ts", "event_id")
         ),
     )
-    stage = tempfile.mkdtemp(prefix="cusum_stream_in_")
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    in_dir = os.path.join(stage, "in")
-    os.makedirs(in_dir)
-    for i in range(1, n_slices + 1):
-        tmp = os.path.join(stage, f"slice{i}")
-        sliced.filter(F.col("slice") == i).drop("slice").coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
-        part = next(
-            f
-            for f in os.listdir(tmp)
-            if f.endswith(".parquet") and not f.startswith("_")
-        )
-        dst = os.path.join(in_dir, f"{i:03d}.parquet")
-        os.replace(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        shutil.rmtree(tmp, ignore_errors=True)
-
+    in_dir = _stage_ordered_files(
+        "cusum_stream_in_",
+        [
+            sliced.filter(F.col("slice") == i).drop("slice")
+            for i in range(1, n_slices + 1)
+        ],
+    )
     stream = (
         spark.readStream.schema(
             "user_id bigint, ts timestamp, event_id bigint, v_micro bigint"
@@ -1715,17 +1485,12 @@ def run_bounded_cusum(
         .parquet(in_dir)
     )
     name = f"stream_cusum_{k_micro}_{h_micro}"
-    with tempfile.TemporaryDirectory(prefix="cusum_ckpt_") as ckpt:
-        q = (
-            cusum_stream(stream, k_micro, h_micro)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        cusum_stream(stream, k_micro, h_micro)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("update")
+    )
     emitted = spark.table(name)
     final = emitted.groupBy("user_id").agg(
         F.max(
@@ -1754,46 +1519,29 @@ def quantile_sketch_rollup_batch_fn(
     COMMITTED day sketches by union + re-take-k — mergeability
     (operators.sketches.quantile_sample_sketch) guarantees the result
     equals the one-pass sketch of everything seen. Exactly-once by the
-    same argument as every grain merge: replayed batches re-read the
-    same committed base and overwrite their own ``v=<batch_id>``
-    directory; the atomic marker is the commit point. Sketch state is
-    O(days × k) rows regardless of stream history."""
-    import os
+    module's commit protocol (:func:`versioned_merge_fn`). Sketch state
+    is O(days × k) rows regardless of stream history."""
+    from pyspark.sql import Window as W
 
     from ..operators.sketches import kmv_hash_expr
 
-    os.makedirs(commits_dir, exist_ok=True)
-    from pyspark.sql import Window as W
-
     wday = W.partitionBy("day").orderBy("h", "v")
-
-    def fn(batch: DataFrame, batch_id: int) -> None:
-        hw = _high_watermark(commits_dir)
-        if hw is not None and batch_id <= hw:
-            return  # replayed, fully applied
-        sk = batch.select(
+    return versioned_merge_fn(
+        table_dir,
+        commits_dir,
+        _QSK_SCHEMA,
+        lambda b: b.select(
             F.date_trunc("day", "ts").alias("day"),
             F.expr(kmv_hash_expr("CAST(event_id AS STRING)")).alias("h"),
             F.expr(
                 "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)"
             ).alias("v"),
-        )
-        if hw is not None:
-            prev = batch.sparkSession.read.schema(
-                "day timestamp, h bigint, v bigint"
-            ).parquet(f"{table_dir}/v={hw}")
-            sk = prev.unionByName(sk)
-        pruned = (
-            sk.withColumn("rn", F.row_number().over(wday))
-            .filter(F.col("rn") <= k)
-            .drop("rn")
-        )
-        pruned.write.mode("overwrite").parquet(f"{table_dir}/v={batch_id}")
-        tmp = os.path.join(commits_dir, f"{batch_id}.tmp")
-        open(tmp, "w").close()
-        os.replace(tmp, os.path.join(commits_dir, str(batch_id)))
-
-    return fn
+        ),
+        lambda prev, sk: prev.unionByName(sk)
+        .withColumn("rn", F.row_number().over(wday))
+        .filter(F.col("rn") <= k)
+        .drop("rn"),
+    )
 
 
 def run_bounded_quantile_rollup(
@@ -1806,8 +1554,6 @@ def run_bounded_quantile_rollup(
     discipline). Gated against a DuckDB oracle drawing the identical
     per-day hash sample — streaming maintenance ≡ one-pass sketch, by
     mergeability."""
-    import os
-
     from ..schemas import load_table
 
     out = tempfile.mkdtemp(prefix="qsk_stream_out_")
@@ -1815,20 +1561,12 @@ def run_bounded_quantile_rollup(
     table_dir = os.path.join(out, "day_sketches")
     commits = os.path.join(out, "_commits")
     stream = bounded_events_stream(spark, sf_dir)
-    with tempfile.TemporaryDirectory(prefix="qsk_ckpt_") as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(
-                quantile_sketch_rollup_batch_fn(table_dir, commits, k)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    _drain(
+        stream.writeStream.foreachBatch(
+            quantile_sketch_rollup_batch_fn(table_dir, commits, k)
         )
-        q.awaitTermination()
-    hw = _high_watermark(commits)
-    sk = spark.read.schema("day timestamp, h bigint, v bigint").parquet(
-        f"{table_dir}/v={hw}"
     )
+    sk = _read_committed(spark, table_dir, commits, _QSK_SCHEMA)
     est = sk.groupBy("day").agg(
         F.count("*").cast("int").alias("n_sample"),
         F.expr("percentile(v, 0.5)").alias("est_p50_micro"),
@@ -1859,45 +1597,31 @@ def kmv_rollup_batch_fn(table_dir: str, commits_dir: str, k: int = 256):
     gated, unlike HLL's bound-pinned oracles): per micro-batch, each
     day's k smallest distinct user-day hashes from the arriving events
     merge with the last COMMITTED sketches by union + distinct +
-    re-take-k. Exactly-once by the commit-log protocol; state is
-    O(days × k) int64s."""
-    import os
-
+    re-take-k. Exactly-once by the module's commit protocol
+    (:func:`versioned_merge_fn`); state is O(days × k) int64s."""
     from pyspark.sql import Window as W
 
     from ..operators.sketches import kmv_hash_expr
 
-    os.makedirs(commits_dir, exist_ok=True)
     wday = W.partitionBy("day").orderBy("h")
-
-    def fn(batch: DataFrame, batch_id: int) -> None:
-        hw = _high_watermark(commits_dir)
-        if hw is not None and batch_id <= hw:
-            return  # replayed, fully applied
-        key = (
-            "CONCAT(CAST(user_id AS STRING), ':',"
-            " CAST(CAST(ts AS DATE) AS STRING))"
-        )
-        sk = batch.select(
+    key = (
+        "CONCAT(CAST(user_id AS STRING), ':',"
+        " CAST(CAST(ts AS DATE) AS STRING))"
+    )
+    return versioned_merge_fn(
+        table_dir,
+        commits_dir,
+        _KMV_SCHEMA,
+        lambda b: b.select(
             F.date_trunc("day", "ts").alias("day"),
             F.expr(kmv_hash_expr(key)).alias("h"),
-        ).distinct()
-        if hw is not None:
-            prev = batch.sparkSession.read.schema(
-                "day timestamp, h bigint"
-            ).parquet(f"{table_dir}/v={hw}")
-            sk = prev.unionByName(sk).distinct()
-        pruned = (
-            sk.withColumn("rn", F.row_number().over(wday))
-            .filter(F.col("rn") <= k)
-            .drop("rn")
-        )
-        pruned.write.mode("overwrite").parquet(f"{table_dir}/v={batch_id}")
-        tmp = os.path.join(commits_dir, f"{batch_id}.tmp")
-        open(tmp, "w").close()
-        os.replace(tmp, os.path.join(commits_dir, str(batch_id)))
-
-    return fn
+        ).distinct(),
+        lambda prev, sk: prev.unionByName(sk)
+        .distinct()
+        .withColumn("rn", F.row_number().over(wday))
+        .filter(F.col("rn") <= k)
+        .drop("rn"),
+    )
 
 
 def run_bounded_kmv_rollup(
@@ -1909,8 +1633,6 @@ def run_bounded_kmv_rollup(
     count (query-time, the KMV discipline). By mergeability the final
     sketch equals the one-pass per-day sketch, which is what the
     serial oracle draws."""
-    import os
-
     from ..operators.sketches import kmv_estimate_col
     from ..schemas import load_table
 
@@ -1919,20 +1641,10 @@ def run_bounded_kmv_rollup(
     table_dir = os.path.join(out, "day_sketches")
     commits = os.path.join(out, "_commits")
     stream = bounded_events_stream(spark, sf_dir)
-    with tempfile.TemporaryDirectory(prefix="kmv_ckpt_") as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(
-                kmv_rollup_batch_fn(table_dir, commits, k)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    hw = _high_watermark(commits)
-    sk = spark.read.schema("day timestamp, h bigint").parquet(
-        f"{table_dir}/v={hw}"
+    _drain(
+        stream.writeStream.foreachBatch(kmv_rollup_batch_fn(table_dir, commits, k))
     )
+    sk = _read_committed(spark, table_dir, commits, _KMV_SCHEMA)
     est = sk.groupBy("day").agg(
         F.count("*").alias("n_sk"), F.max("h").alias("max_h")
     )
@@ -1966,38 +1678,19 @@ def psi_counts_batch_fn(table_dir: str, commits_dir: str):
     conditional bucket counts (plans.analytics_queries.
     psi_bucket_counts — the SAME one-scan stage the batch query runs)
     merge ADDITIVELY with the last committed counts. Exactly-once by
-    the commit-log protocol; counts are additive int64s, so replayed
-    batches must not double-count — the high-watermark guard is the
-    correctness, not just an optimization. State: ≤ 10 rows."""
-    import os
+    the module's commit protocol (:func:`versioned_merge_fn`); counts
+    are additive int64s, so replayed batches must not double-count —
+    the high-watermark guard is the correctness, not just an
+    optimization. State: ≤ 10 rows."""
+    from ..plans.analytics_queries import psi_bucket_counts
 
-    os.makedirs(commits_dir, exist_ok=True)
-
-    def fn(batch: DataFrame, batch_id: int) -> None:
-        from ..plans.analytics_queries import psi_bucket_counts
-
-        hw = _high_watermark(commits_dir)
-        if hw is not None and batch_id <= hw:
-            return  # replayed, fully applied
-        cc = psi_bucket_counts(batch)
-        if hw is not None:
-            prev = batch.sparkSession.read.schema(
-                "bucket bigint, c_ref bigint, c_cur bigint"
-            ).parquet(f"{table_dir}/v={hw}")
-            cc = (
-                prev.unionByName(cc)
-                .groupBy("bucket")
-                .agg(
-                    F.sum("c_ref").cast("long").alias("c_ref"),
-                    F.sum("c_cur").cast("long").alias("c_cur"),
-                )
-            )
-        cc.write.mode("overwrite").parquet(f"{table_dir}/v={batch_id}")
-        tmp = os.path.join(commits_dir, f"{batch_id}.tmp")
-        open(tmp, "w").close()
-        os.replace(tmp, os.path.join(commits_dir, str(batch_id)))
-
-    return fn
+    return versioned_merge_fn(
+        table_dir,
+        commits_dir,
+        _PSI_SCHEMA,
+        psi_bucket_counts,
+        _sum_merge(("bucket",), ("c_ref", "c_cur")),
+    )
 
 
 def auc_scores_batch_fn(table_dir: str, commits_dir: str):
@@ -2005,39 +1698,19 @@ def auc_scores_batch_fn(table_dir: str, commits_dir: str):
     micro-batch the batch's score-level (cnt, pos) collapse
     (plans.events_queries.model_scores_by_score — the SAME stage the
     batch AUC/PR-AUC/KS queries run) merges ADDITIVELY with the last
-    committed table. Exactly-once by the commit-log protocol — counts
-    are additive int64s, so the high-watermark replay guard IS the
-    correctness. State: distinct-score-sized (value-range bounded),
-    never event-sized."""
-    import os
+    committed table. Exactly-once by the module's commit protocol
+    (:func:`versioned_merge_fn`) — counts are additive int64s, so the
+    high-watermark replay guard IS the correctness. State:
+    distinct-score-sized (value-range bounded), never event-sized."""
+    from ..plans.events_queries import model_scores_by_score
 
-    os.makedirs(commits_dir, exist_ok=True)
-
-    def fn(batch: DataFrame, batch_id: int) -> None:
-        from ..plans.events_queries import model_scores_by_score
-
-        hw = _high_watermark(commits_dir)
-        if hw is not None and batch_id <= hw:
-            return  # replayed, fully applied
-        bs = model_scores_by_score(batch)
-        if hw is not None:
-            prev = batch.sparkSession.read.schema(
-                "score bigint, cnt bigint, pos bigint"
-            ).parquet(f"{table_dir}/v={hw}")
-            bs = (
-                prev.unionByName(bs)
-                .groupBy("score")
-                .agg(
-                    F.sum("cnt").cast("long").alias("cnt"),
-                    F.sum("pos").cast("long").alias("pos"),
-                )
-            )
-        bs.write.mode("overwrite").parquet(f"{table_dir}/v={batch_id}")
-        tmp = os.path.join(commits_dir, f"{batch_id}.tmp")
-        open(tmp, "w").close()
-        os.replace(tmp, os.path.join(commits_dir, str(batch_id)))
-
-    return fn
+    return versioned_merge_fn(
+        table_dir,
+        commits_dir,
+        _AUC_SCHEMA,
+        model_scores_by_score,
+        _sum_merge(("score",), ("cnt", "pos")),
+    )
 
 
 def run_bounded_model_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2048,8 +1721,6 @@ def run_bounded_model_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     additive and applied exactly-once, so the committed state EQUALS
     the batch collapse and the report is gated by the IDENTICAL
     oracle."""
-    import os
-
     from ..plans.events_queries import auc_from_by_score
 
     out = tempfile.mkdtemp(prefix="auc_stream_out_")
@@ -2059,21 +1730,12 @@ def run_bounded_model_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = bounded_events_stream(
         spark, sf_dir, columns=("user_id", "ts", "event_type", "value")
     )
-    with tempfile.TemporaryDirectory(prefix="auc_ckpt_") as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(
-                auc_scores_batch_fn(table_dir, commits)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    hw = _high_watermark(commits)
-    by_score = spark.read.schema(
-        "score bigint, cnt bigint, pos bigint"
-    ).parquet(f"{table_dir}/v={hw}")
-    return auc_from_by_score(by_score)
+    _drain(
+        stream.writeStream.foreachBatch(auc_scores_batch_fn(table_dir, commits))
+    )
+    return auc_from_by_score(
+        _read_committed(spark, table_dir, commits, _AUC_SCHEMA)
+    )
 
 
 def run_bounded_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2084,8 +1746,6 @@ def run_bounded_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     additive and applied exactly-once, so the committed table EQUALS
     the batch one-scan counts and the report is gated by the
     IDENTICAL oracle."""
-    import os
-
     from ..plans.analytics_queries import psi_from_counts
 
     out = tempfile.mkdtemp(prefix="psi_stream_out_")
@@ -2093,29 +1753,19 @@ def run_bounded_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     table_dir = os.path.join(out, "bucket_counts")
     commits = os.path.join(out, "_commits")
     stream = bounded_events_stream(spark, sf_dir)
-    with tempfile.TemporaryDirectory(prefix="psi_ckpt_") as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(
-                psi_counts_batch_fn(table_dir, commits)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    hw = _high_watermark(commits)
-    cc = spark.read.schema(
-        "bucket bigint, c_ref bigint, c_cur bigint"
-    ).parquet(f"{table_dir}/v={hw}")
-    return psi_from_counts(spark, cc)
+    _drain(
+        stream.writeStream.foreachBatch(psi_counts_batch_fn(table_dir, commits))
+    )
+    return psi_from_counts(
+        spark, _read_committed(spark, table_dir, commits, _PSI_SCHEMA)
+    )
 
 
 def mg_rollup_batch_fn(table_dir: str, commits_dir: str, k: int):
     """foreachBatch body for a streaming-maintained Misra–Gries heavy
     hitter summary over ``user_id`` — the live dual of
-    operators.sketches.misra_gries_candidates, under the exactly-once
-    commit-log protocol (versioned state dirs + atomic marker,
-    :func:`streaming_ingest_batch_fn`).
+    operators.sketches.misra_gries_candidates, under the module's
+    exactly-once commit protocol (:func:`versioned_merge_fn`).
 
     Per micro-batch: exact batch counts (one partial-agg groupBy) merge
     with the last COMMITTED summary, then the MG merge step — subtract
@@ -2126,26 +1776,11 @@ def mg_rollup_batch_fn(table_dir: str, commits_dir: str, k: int):
     present. The subtraction threshold is a one-row broadcast
     (sort-desc/limit(k+1) over a ≤ k+distinct(batch) frame), so state
     never exceeds k rows no matter the stream length — the fixed-size
-    property every streaming sketch here shares. Replays re-read the
-    same committed base and overwrite their own version dir: idempotent."""
-    os.makedirs(commits_dir, exist_ok=True)
+    property every streaming sketch here shares."""
+    summed = _sum_merge(("user_id",), ("cnt",))
 
-    def fn(batch: DataFrame, batch_id: int) -> None:
-        hw = _high_watermark(commits_dir)
-        if hw is not None and batch_id <= hw:
-            return  # replayed, fully applied
-        counts = batch.groupBy("user_id").agg(
-            F.count("*").cast("long").alias("cnt")
-        )
-        if hw is not None:
-            prev = batch.sparkSession.read.schema(
-                "user_id long, cnt long"
-            ).parquet(f"{table_dir}/v={hw}")
-            counts = (
-                prev.unionByName(counts)
-                .groupBy("user_id")
-                .agg(F.sum("cnt").cast("long").alias("cnt"))
-            )
+    def merge(prev: DataFrame, counts: DataFrame) -> DataFrame:
+        counts = summed(prev, counts)
         # MG cap: subtract the (k+1)-th largest count (0 when ≤ k keys)
         kth = (
             counts.orderBy(F.desc("cnt"), "user_id")
@@ -2157,17 +1792,19 @@ def mg_rollup_batch_fn(table_dir: str, commits_dir: str, k: int):
                 .alias("sub")
             )
         )
-        summary = (
+        return (
             counts.crossJoin(F.broadcast(kth))
             .select("user_id", (F.col("cnt") - F.col("sub")).alias("cnt"))
             .filter(F.col("cnt") > 0)
         )
-        summary.write.mode("overwrite").parquet(f"{table_dir}/v={batch_id}")
-        tmp = os.path.join(commits_dir, f"{batch_id}.tmp")
-        open(tmp, "w").close()
-        os.replace(tmp, os.path.join(commits_dir, str(batch_id)))
 
-    return fn
+    return versioned_merge_fn(
+        table_dir,
+        commits_dir,
+        _MG_SCHEMA,
+        lambda b: b.groupBy("user_id").agg(F.count("*").cast("long").alias("cnt")),
+        merge,
+    )
 
 
 def run_bounded_mg_heavy_hitters(
@@ -2186,6 +1823,7 @@ def run_bounded_mg_heavy_hitters(
     folds into a ≤ inv_support-row summary once; the verify pass
     shuffles candidate keys only."""
     from ..schemas import load_table
+    from ..schemas import load_table
 
     ev = load_table(spark, sf_dir, "events").select("user_id")
     stage = tempfile.mkdtemp(prefix="mg_stream_in_")
@@ -2201,22 +1839,14 @@ def run_bounded_mg_heavy_hitters(
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{stage}/in")
         )
-        with tempfile.TemporaryDirectory(prefix="mg_ckpt_") as ckpt:
-            q = (
-                stream.writeStream.foreachBatch(
-                    mg_rollup_batch_fn(table_dir, commits, k=inv_support)
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+        _drain(
+            stream.writeStream.foreachBatch(
+                mg_rollup_batch_fn(table_dir, commits, k=inv_support)
             )
-            q.awaitTermination()
-        hw = _high_watermark(commits)
-        candidates = (
-            spark.read.schema("user_id long, cnt long")
-            .parquet(f"{table_dir}/v={hw}")
-            .select("user_id")
         )
+        candidates = _read_committed(
+            spark, table_dir, commits, _MG_SCHEMA
+        ).select("user_id")
         total = ev.agg(F.count("*").alias("total"))
         res = (
             ev.join(F.broadcast(candidates), "user_id")
@@ -2334,51 +1964,36 @@ def nb_counts_batch_fn(table_dir: str, commits_dir: str):
     multinomial counts and (lang, d_l) prior counts
     (plans.text_queries.nb_train_counts / nb_doc_counts — the SAME
     stages the batch classifier runs) merge ADDITIVELY with the last
-    committed state. Exactly-once by the commit-log protocol — counts
-    are additive int64s, so the high-watermark replay guard IS the
-    correctness (a replayed batch must not double-count a word).
-    State: vocab×class-sized plus one row per class, never
+    committed state, as the two versioned tables ``<table_dir>/wl`` and
+    ``<table_dir>/dl`` under ONE marker of the module's commit protocol
+    — counts are additive int64s, so the high-watermark replay guard
+    IS the correctness (a replayed batch must not double-count a
+    word). State: vocab×class-sized plus one row per class, never
     corpus-sized."""
-    import os
+    from ..plans.text_queries import nb_doc_counts, nb_split_docs, nb_train_counts
 
     os.makedirs(commits_dir, exist_ok=True)
+    tables = {
+        "wl": (nb_train_counts, _sum_merge(("lang", "tok"), ("cnt",))),
+        "dl": (nb_doc_counts, _sum_merge(("lang",), ("d_l",))),
+    }
 
     def fn(batch: DataFrame, batch_id: int) -> None:
-        from ..plans.text_queries import (
-            nb_doc_counts,
-            nb_split_docs,
-            nb_train_counts,
-        )
-
         hw = _high_watermark(commits_dir)
         if hw is not None and batch_id <= hw:
             return  # replayed, fully applied
         train = nb_split_docs(batch).where(~F.col("is_test"))
-        wl = nb_train_counts(train)
-        dl = nb_doc_counts(train)
-        if hw is not None:
-            spark = batch.sparkSession
-            prev_wl = spark.read.schema(
-                "lang string, tok string, cnt bigint"
-            ).parquet(f"{table_dir}/wl/v={hw}")
-            wl = (
-                prev_wl.unionByName(wl)
-                .groupBy("lang", "tok")
-                .agg(F.sum("cnt").cast("long").alias("cnt"))
+        for name, (counts, merge) in tables.items():
+            prev = _read_committed(
+                batch.sparkSession,
+                f"{table_dir}/{name}",
+                commits_dir,
+                _NB_SCHEMAS[name],
             )
-            prev_dl = spark.read.schema(
-                "lang string, d_l bigint"
-            ).parquet(f"{table_dir}/dl/v={hw}")
-            dl = (
-                prev_dl.unionByName(dl)
-                .groupBy("lang")
-                .agg(F.sum("d_l").cast("long").alias("d_l"))
+            merge(prev, counts(train)).write.mode("overwrite").parquet(
+                f"{table_dir}/{name}/v={batch_id}"
             )
-        wl.write.mode("overwrite").parquet(f"{table_dir}/wl/v={batch_id}")
-        dl.write.mode("overwrite").parquet(f"{table_dir}/dl/v={batch_id}")
-        tmp = os.path.join(commits_dir, f"{batch_id}.tmp")
-        open(tmp, "w").close()
-        os.replace(tmp, os.path.join(commits_dir, str(batch_id)))
+        _commit(commits_dir, batch_id, [f"{table_dir}/{t}" for t in tables])
 
     return fn
 
@@ -2392,8 +2007,6 @@ def run_bounded_nb_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     are additive and applied exactly-once, so the committed model
     EQUALS the batch aggregation and the confusion matrix is gated by
     the IDENTICAL oracle."""
-    import os
-
     from ..plans.text_queries import nb_confusion_from_counts, nb_split_docs
     from ..schemas import load_table
 
@@ -2402,22 +2015,12 @@ def run_bounded_nb_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     table_dir = os.path.join(out, "model")
     commits = os.path.join(out, "_commits")
     stream = bounded_documents_stream(spark, sf_dir)
-    with tempfile.TemporaryDirectory(prefix="nb_ckpt_") as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(
-                nb_counts_batch_fn(table_dir, commits)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    hw = _high_watermark(commits)
-    wl = spark.read.schema("lang string, tok string, cnt bigint").parquet(
-        f"{table_dir}/wl/v={hw}"
+    _drain(
+        stream.writeStream.foreachBatch(nb_counts_batch_fn(table_dir, commits))
     )
-    dl = spark.read.schema("lang string, d_l bigint").parquet(
-        f"{table_dir}/dl/v={hw}"
+    wl, dl = (
+        _read_committed(spark, f"{table_dir}/{t}", commits, _NB_SCHEMAS[t])
+        for t in ("wl", "dl")
     )
     test = nb_split_docs(load_table(spark, sf_dir, "documents")).where(
         F.col("is_test")
@@ -2433,46 +2036,30 @@ def chunk_ledger_batch_fn(table_dir: str, commits_dir: str):
     (first_doc_id = MIN, n_occurrences = SUM) — merges with the last
     committed ledger. MIN and SUM are both order-free and batch-split-
     free, so the drained ledger EQUALS the batch derivation no matter
-    how the corpus was micro-batched; exactly-once by the commit-log
-    protocol (a replayed batch must not double-count a chunk). This is
-    the production "ingest only what's new" shape: a chunk already in
-    the ledger is a known duplicate the moment it arrives."""
-    import os
+    how the corpus was micro-batched; exactly-once by the module's
+    commit protocol (:func:`versioned_merge_fn` — a replayed batch must
+    not double-count a chunk). This is the production "ingest only
+    what's new" shape: a chunk already in the ledger is a known
+    duplicate the moment it arrives."""
+    from ..plans.text_queries import content_defined_chunks
 
-    os.makedirs(commits_dir, exist_ok=True)
-
-    def fn(batch: DataFrame, batch_id: int) -> None:
-        from ..plans.text_queries import content_defined_chunks
-
-        hw = _high_watermark(commits_dir)
-        if hw is not None and batch_id <= hw:
-            return  # replayed, fully applied
-        led = (
-            content_defined_chunks(batch)
-            .groupBy("chunk_hash")
-            .agg(
-                F.min("doc_id").cast("long").alias("first_doc_id"),
-                F.count("*").cast("long").alias("n_occurrences"),
-            )
-        )
-        if hw is not None:
-            prev = batch.sparkSession.read.schema(
-                "chunk_hash string, first_doc_id bigint, n_occurrences bigint"
-            ).parquet(f"{table_dir}/v={hw}")
-            led = (
-                prev.unionByName(led)
-                .groupBy("chunk_hash")
-                .agg(
-                    F.min("first_doc_id").cast("long").alias("first_doc_id"),
-                    F.sum("n_occurrences").cast("long").alias("n_occurrences"),
-                )
-            )
-        led.write.mode("overwrite").parquet(f"{table_dir}/v={batch_id}")
-        tmp = os.path.join(commits_dir, f"{batch_id}.tmp")
-        open(tmp, "w").close()
-        os.replace(tmp, os.path.join(commits_dir, str(batch_id)))
-
-    return fn
+    return versioned_merge_fn(
+        table_dir,
+        commits_dir,
+        _CHUNK_LEDGER_SCHEMA,
+        lambda b: content_defined_chunks(b)
+        .groupBy("chunk_hash")
+        .agg(
+            F.min("doc_id").cast("long").alias("first_doc_id"),
+            F.count("*").cast("long").alias("n_occurrences"),
+        ),
+        lambda prev, led: prev.unionByName(led)
+        .groupBy("chunk_hash")
+        .agg(
+            F.min("first_doc_id").cast("long").alias("first_doc_id"),
+            F.sum("n_occurrences").cast("long").alias("n_occurrences"),
+        ),
+    )
 
 
 def run_bounded_chunk_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2487,20 +2074,10 @@ def run_bounded_chunk_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = bounded_documents_stream(
         spark, sf_dir, columns=("doc_id", "text")
     )
-    with tempfile.TemporaryDirectory(prefix="ledger_ckpt_") as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(
-                chunk_ledger_batch_fn(table_dir, commits)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    hw = _high_watermark(commits)
-    return spark.read.schema(
-        "chunk_hash string, first_doc_id bigint, n_occurrences bigint"
-    ).parquet(f"{table_dir}/v={hw}")
+    _drain(
+        stream.writeStream.foreachBatch(chunk_ledger_batch_fn(table_dir, commits))
+    )
+    return _read_committed(spark, table_dir, commits, _CHUNK_LEDGER_SCHEMA)
 
 
 #: chunk-hash bucket count for the bucketed ledger. The ledger is the
@@ -2653,8 +2230,6 @@ def run_bounded_chunk_ledger_lsm(
     expire the pre-drain time-travel window, vacuum the folded delta
     files, and return the final ledger — gated by the same batch
     oracle as both twins."""
-    import os
-
     from ..sources.snapshot import SnapshotTable
 
     out = tempfile.mkdtemp(prefix="chunk_ledger_lsm_out_")
@@ -2667,16 +2242,7 @@ def run_bounded_chunk_ledger_lsm(
     stream = bounded_documents_stream(
         spark, sf_dir, columns=("doc_id", "text")
     )
-    with tempfile.TemporaryDirectory(prefix="ledgerlsm_ckpt_") as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(
-                chunk_ledger_lsm_batch_fn(table)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(stream.writeStream.foreachBatch(chunk_ledger_lsm_batch_fn(table)))
     return finalize_chunk_ledger_lsm(spark, table)
 
 
@@ -2690,10 +2256,9 @@ def finalize_chunk_ledger_lsm(spark: SparkSession, table) -> DataFrame:
     MIN/SUM fold is idempotent on folded rows, so applying it here is
     correct whatever the compaction state."""
     hw = table.latest()
+    hw = table.latest()
     if hw is None:  # zero micro-batches: empty corpus, empty ledger
-        return spark.createDataFrame(
-            [], "chunk_hash string, first_doc_id bigint, n_occurrences bigint"
-        )
+        return spark.createDataFrame([], _CHUNK_LEDGER_SCHEMA)
     table.compact(spark, hw + 1, fold=ledger_merge)
     table.expire(keep_from=hw + 1)
     table.vacuum()
@@ -2734,15 +2299,13 @@ def snapshot_view_batch_fn(table, view_dir: str, commits_dir: str):
     is exact because the partials are Abelian — so the consumer never
     depends on one-file-per-trigger delivery.
 
-    Exactly-once under the commit-log protocol keyed on the APPLIED
-    SOURCE SNAPSHOT id (not the micro-batch id): a redelivered or
-    poisoned replay of an already-applied snapshot id is a no-op.
+    Exactly-once under the module's commit protocol keyed on the
+    APPLIED SOURCE SNAPSHOT id (not the micro-batch id): a redelivered
+    or poisoned replay of an already-applied snapshot id is a no-op.
 
     Scale: the downstream view of a 100 TB table refreshes per
     trigger by reading O(changed buckets); the full-table aggregation
     runs exactly once, at seed."""
-    import os
-
     os.makedirs(commits_dir, exist_ok=True)
 
     def fn(batch: DataFrame, batch_id: int) -> None:
@@ -2757,9 +2320,7 @@ def snapshot_view_batch_fn(table, view_dir: str, commits_dir: str):
             return  # replayed (possibly poisoned) ids: already folded
         target = max(targets)
         spark = batch.sparkSession
-        prev = spark.read.schema(_SNAPSHOT_VIEW_SCHEMA).parquet(
-            f"{view_dir}/v={applied}"
-        )
+        prev = _read_committed(spark, view_dir, commits_dir, _SNAPSHOT_VIEW_SCHEMA)
         cb = table.changed_buckets(applied, target)
         minus = _snapshot_view_partials(
             table.read(spark, as_of=applied, buckets=cb), -1
@@ -2778,9 +2339,7 @@ def snapshot_view_batch_fn(table, view_dir: str, commits_dir: str):
             .where(F.col("n_orders") > 0)
         )
         refreshed.write.mode("overwrite").parquet(f"{view_dir}/v={target}")
-        tmp = os.path.join(commits_dir, f"{target}.tmp")
-        open(tmp, "w").close()
-        os.replace(tmp, os.path.join(commits_dir, str(target)))
+        _commit(commits_dir, target, [view_dir])
 
     return fn
 
@@ -2797,8 +2356,6 @@ def run_bounded_snapshot_view(
     :func:`snapshot_view_batch_fn`, and return the maintained view at
     the final applied snapshot — gated against the oracle that
     aggregates the final table state directly."""
-    import os
-
     from ..schemas import load_table
     from ..sources.snapshot import SnapshotTable, bucket_of
 
@@ -2855,7 +2412,7 @@ def run_bounded_snapshot_view(
     _snapshot_view_partials(table.read(spark, as_of=0), 1).write.mode(
         "overwrite"
     ).parquet(f"{view_dir}/v=0")
-    open(os.path.join(commits, "0"), "w").close()
+    _commit(commits, 0, [view_dir])
     # the change feed: one trigger file per published snapshot id
     feed = os.path.join(out, "feed")
     os.makedirs(feed, exist_ok=True)
@@ -2867,25 +2424,17 @@ def run_bounded_snapshot_view(
         .option("maxFilesPerTrigger", 1)
         .load(feed)
     )
-    with tempfile.TemporaryDirectory(prefix="snapview_ckpt_") as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(
-                snapshot_view_batch_fn(table, view_dir, commits)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    _drain(
+        stream.writeStream.foreachBatch(
+            snapshot_view_batch_fn(table, view_dir, commits)
         )
-        q.awaitTermination()
-    applied = _high_watermark(commits)
-    return (
-        spark.read.schema(_SNAPSHOT_VIEW_SCHEMA)
-        .parquet(f"{view_dir}/v={applied}")
-        .select(
-            "o_orderstatus",
-            "n_orders",
-            F.col("sum_dec").cast("double").alias("sum_totalprice"),
-        )
+    )
+    return _read_committed(
+        spark, view_dir, commits, _SNAPSHOT_VIEW_SCHEMA
+    ).select(
+        "o_orderstatus",
+        "n_orders",
+        F.col("sum_dec").cast("double").alias("sum_totalprice"),
     )
 
 
@@ -2897,8 +2446,6 @@ def run_bounded_chunk_ledger_bucketed(
     return the final committed ledger read from the snapshot manifest
     — same oracle as the full-rewrite twin, so the partial-rewrite
     economics change nothing about the answer."""
-    import os
-
     from ..sources.snapshot import SnapshotTable
 
     out = tempfile.mkdtemp(prefix="chunk_ledger_bucketed_out_")
@@ -2911,14 +2458,5 @@ def run_bounded_chunk_ledger_bucketed(
     stream = bounded_documents_stream(
         spark, sf_dir, columns=("doc_id", "text")
     )
-    with tempfile.TemporaryDirectory(prefix="ledgerb_ckpt_") as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(
-                chunk_ledger_bucketed_batch_fn(table)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(stream.writeStream.foreachBatch(chunk_ledger_bucketed_batch_fn(table)))
     return table.read(spark).drop("bucket")

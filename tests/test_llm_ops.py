@@ -1745,6 +1745,37 @@ def test_monotone_money_key_bounds_from_same_agg(spark):
     assert sorted(keys) == sorted(keys2)
 
 
+def test_monotone_money_key_single_bucket_has_no_bounds(spark):
+    """n_bounds=1 asks for one bucket: the three-tuple form with no
+    boundaries, not a lookup of the quantile column the one-row agg
+    never computed."""
+    from cassaforte_meter_transmission_gen_spark.plans.compat import (
+        monotone_money_key,
+    )
+
+    df = spark.createDataFrame(
+        [(i, float(i % 7) + 0.5) for i in range(20)], "k long, money double"
+    )
+    _key, n, bounds = monotone_money_key(df, "money", "k", 1)
+    assert (n, bounds) == (20, [])
+
+
+def test_global_running_totals_rejects_mismatched_columns(spark):
+    """One output column per value column: a length mismatch raises
+    ValueError up front instead of an IndexError mid-build or a
+    silently dropped output column."""
+    import pytest
+
+    from cassaforte_meter_transmission_gen_spark.operators.packing import (
+        global_running_totals,
+    )
+
+    df = spark.createDataFrame([(1, 2, 3)], "id int, a int, b int")
+    for value_cols, out_cols in ((["a", "b"], ["ca"]), (["a"], ["ca", "cb"])):
+        with pytest.raises(ValueError, match="out_cols"):
+            global_running_totals(df, "id", value_cols, out_cols)
+
+
 def test_spread_small_scan_sizes_tasks_by_bytes(spark, sf_small, tmp_path):
     """The r15 task right-sizing: a small single-file scan spreads to a
     bytes-derived count (floored, capped at default parallelism), not
@@ -1761,10 +1792,10 @@ def test_spread_small_scan_sizes_tasks_by_bytes(spark, sf_small, tmp_path):
     df = spark.read.parquet(path)
     spread = spread_small_scan(df)
     got = spread.rdd.getNumPartitions()
+    # the data files the scan reads, as production sizes them — not the
+    # .crc/_SUCCESS side files in the same directory
     total = sum(
-        os.path.getsize(os.path.join(r, f))
-        for r, _, fs in os.walk(path)
-        for f in fs
+        os.path.getsize(f.removeprefix("file://")) for f in df.inputFiles()
     )
     par = spark.sparkContext.defaultParallelism
     want = min(par, max(min(SPREAD_MIN_TASKS, par),

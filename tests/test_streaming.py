@@ -5,6 +5,7 @@ counter tables with Structured Streaming aggregation."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cassaforte_meter_transmission_gen_spark.operators.rollups import rollup_chain
@@ -659,44 +660,6 @@ def test_streaming_dedup_suppresses_retry_duplicates(spark):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
-def test_transform_with_state_counter_matches_v1_and_batch(spark):
-    """T4 on Spark 4's transformWithState API (RocksDB-backed state):
-    the StatefulProcessor counter must converge to the same per-meter
-    lifetime totals as both the applyInPandasWithState operator and the
-    batch sum. Skipped where the protocol's protobuf dependency is not
-    installed (this sandbox) — the gate itself is asserted either way."""
-    import pytest
-
-    from cassaforte_meter_transmission_gen_spark.streaming.pipeline import (
-        run_bounded_cumulative_v2,
-        transform_with_state_available,
-    )
-
-    if not transform_with_state_available():
-        with pytest.raises(ImportError):
-            import google.protobuf.descriptor  # noqa: F401
-        pytest.skip(
-            "transformWithStateInPandas (Spark >= 4.0.0, present in this"
-            " runtime's 4.1.x) additionally needs the google.protobuf"
-            " package for its state-server protocol — not installed here;"
-            " `pip install protobuf` unskips this test unchanged"
-        )
-
-    emitted = run_bounded_cumulative_v2(spark, num_meters=3, seconds=1800).collect()
-    final: dict[int, int] = {}
-    for r in emitted:
-        final[r["said"]] = max(final.get(r["said"], 0), r["cumulative_joules"])
-    batch = {
-        r["said"]: r["total"]
-        for r in meter_samples_second(spark, num_meters=3, seconds=1800)
-        .groupBy("said")
-        .agg(F.sum("joules").cast("long").alias("total"))
-        .collect()
-    }
-    assert final == batch
-    assert len(emitted) > len(final)  # state actually carried across batches
-
-
 def test_read_stream_table_refuses_uncommitted_state(spark, tmp_path):
     """Before any commit marker exists, every table read must refuse
     loudly (FileNotFoundError) rather than return partial data — even
@@ -1093,3 +1056,148 @@ def test_auc_scores_replay_is_exactly_once(spark, tmp_path):
         .collect()
     }
     assert got == {10: (3, 2), 42: (2, 1)}
+
+
+def _crash_sink(spark, sink, root):
+    """(make_fn, read_state, commits_dir) for one sink of the commit
+    protocol under ``root``: the five-table ingest (retaining one
+    version, so the GC after commit deletes something at batch 1) or
+    the CMS versioned sink, whose state is bit-reproducible."""
+    from cassaforte_meter_transmission_gen_spark.operators.ingest import TABLES
+    from cassaforte_meter_transmission_gen_spark.streaming.pipeline import (
+        _read_committed,
+        cms_rollup_batch_fn,
+        read_stream_table,
+        streaming_ingest_batch_fn,
+    )
+
+    commits = f"{root}/_commits"
+    if sink == "ingest":
+        paths = {t: f"{root}/{t}" for t in TABLES}
+        return (
+            lambda: streaming_ingest_batch_fn(paths, commits, retain_versions=1),
+            lambda: {
+                t: sorted(
+                    map(
+                        tuple,
+                        read_stream_table(spark, paths, t, commits)
+                        .drop("watts")
+                        .collect(),
+                    )
+                )
+                for t in TABLES
+            },
+            commits,
+        )
+    table = f"{root}/day_grids"
+    return (
+        lambda: cms_rollup_batch_fn(table, commits),
+        lambda: sorted(
+            map(
+                tuple,
+                _read_committed(
+                    spark, table, commits, "day date, r int, c int, cnt long"
+                ).collect(),
+            )
+        ),
+        commits,
+    )
+
+
+def _crash_batches(spark, sink):
+    from cassaforte_meter_transmission_gen_spark.sources.meter_generator import (
+        T0_EPOCH,
+        transmissions,
+    )
+
+    if sink == "ingest":
+        return [
+            transmissions(spark, num_meters=2, seconds=60, t0_epoch=T0_EPOCH + 60 * i)
+            for i in range(2)
+        ]
+    return [
+        spark.createDataFrame(
+            [("2024-01-01 00:00:00", u) for u in users], "ts string, user_id long"
+        ).select(F.col("ts").cast("timestamp").alias("ts"), "user_id")
+        for users in (range(0, 100), range(100, 200))
+    ]
+
+
+_CRASH_STEPS = [
+    ("ingest", "parquet", "meter_samples/batch=1"),
+    ("ingest", "parquet", "meter_samples_second/batch=1"),
+    ("ingest", "parquet", "meter_samples_minute/v=1"),
+    ("ingest", "parquet", "meter_samples_hour/v=1"),
+    ("ingest", "parquet", "meter_samples_day/v=1"),
+    ("ingest", "replace", "marker"),
+    ("ingest", "rmtree", "gc"),
+    ("cms", "parquet", "day_grids/v=1"),
+    ("cms", "replace", "marker"),
+]
+
+
+@pytest.mark.parametrize(
+    "sink,patch,target",
+    _CRASH_STEPS,
+    ids=[f"{s}-{t.replace('/', '-')}" for s, _, t in _CRASH_STEPS],
+)
+def test_crash_at_every_commit_step_replays_exactly_once(
+    spark, tmp_path, monkeypatch, sink, patch, target
+):
+    """The commit protocol under a crash at EACH durable step of batch
+    1 — after one of its table writes, instead of the marker's
+    ``os.replace``, or in the GC after the marker. Readers must see
+    exactly the batches ≤ the high watermark, and replaying batch 1
+    through a fresh fn must leave every table equal to an
+    uninterrupted run."""
+    import os
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from cassaforte_meter_transmission_gen_spark.streaming.pipeline import (
+        _high_watermark,
+    )
+
+    batches = _crash_batches(spark, sink)
+    make, read, _ = _crash_sink(spark, sink, str(tmp_path / "reference"))
+    ref_fn, want = make(), []
+    for i, b in enumerate(batches):
+        ref_fn(b, i)
+        want.append(read())
+
+    make, read, commits = _crash_sink(spark, sink, str(tmp_path / "crashed"))
+    make()(batches[0], 0)
+    if patch == "parquet":
+        real_parquet = DataFrameWriter.parquet
+
+        def parquet(self, path, *args, **kwargs):
+            real_parquet(self, path, *args, **kwargs)
+            if path.endswith(target):
+                raise RuntimeError(f"injected crash after writing {target}")
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    elif patch == "replace":
+        real_replace = os.replace
+
+        def replace(src, dst):
+            if os.path.dirname(dst) == commits:
+                raise RuntimeError("injected crash before the marker")
+            return real_replace(src, dst)
+
+        monkeypatch.setattr(os, "replace", replace)
+    else:
+
+        def rmtree(*args, **kwargs):
+            raise RuntimeError("injected crash in the GC after commit")
+
+        monkeypatch.setattr(shutil, "rmtree", rmtree)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        make()(batches[1], 1)
+    monkeypatch.undo()
+
+    hw = _high_watermark(commits)
+    assert hw == (1 if patch == "rmtree" else 0)
+    assert read() == want[hw]
+    make()(batches[1], 1)
+    assert read() == want[1]
