@@ -37,6 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from cassaforte_meter_transmission_gen_spark.plans import REGISTRY  # noqa: E402
 from cassaforte_meter_transmission_gen_spark.session import get_spark  # noqa: E402
+from parity_report import REPO, _infer_round  # noqa: E402
 
 #: headline set: the reference's own pipeline (generator → joules →
 #: rollups → report) plus the heaviest catalog shapes per family.
@@ -159,23 +160,12 @@ def _scan_metrics(node, out: list) -> None:
 
 
 def _detail_path() -> str:
-    """BENCH_DETAIL_r{N}.json beside this script, N = round in
-    progress (max committed BENCH_r* + 1), matching parity_report.py's
-    inference; $SPARK_GRAFT_BENCH_DETAIL overrides."""
-    override = os.environ.get("SPARK_GRAFT_BENCH_DETAIL")
-    if override:
-        return override
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
-        if (m := re.search(r"BENCH_r(\d+)\.json$", p))
-    ]
-    rnd = (max(rounds) + 1) if rounds else 1
-    return os.path.join(here, f"BENCH_DETAIL_r{rnd:02d}.json")
+    """BENCH_DETAIL_r{N}.json beside this script, N = the round in
+    progress (parity_report._infer_round); $SPARK_GRAFT_BENCH_DETAIL
+    overrides."""
+    return os.environ.get("SPARK_GRAFT_BENCH_DETAIL") or os.path.join(
+        REPO, f"BENCH_DETAIL_r{_infer_round():02d}.json"
+    )
 
 
 def main() -> None:
@@ -768,43 +758,32 @@ def main() -> None:
     # artifact is self-labelling rather than procedurally avoided.
     parity_fresh: dict = {"checked": False}
     try:
-        # round inferred from committed BENCH_r*.json directly (the
-        # detail path may be overridden to a round-less local name)
-        import glob as _glob
-        import re as _re
-
-        here = os.path.dirname(os.path.abspath(__file__))
-        rounds = [
-            int(m.group(1))
-            for p in _glob.glob(os.path.join(here, "BENCH_r*.json"))
-            if (m := _re.search(r"BENCH_r(\d+)\.json$", p))
-        ]
-        rnd = (max(rounds) + 1) if rounds else 1
-        if rnd:
-            ppath = os.path.join(here, f"PARITY_r{rnd:02d}.json")
-            if not os.path.exists(ppath):
-                parity_fresh = {
-                    "checked": True,
-                    "fresh": False,
-                    "reason": f"{os.path.basename(ppath)} missing",
-                }
-            else:
-                with open(ppath) as f:
-                    pj = json.load(f)
-                missing = sorted(set(REGISTRY) - set(pj.get("queries", {})))
-                extra = sorted(set(pj.get("queries", {})) - set(REGISTRY))
-                fails = pj.get("fail", -1)
-                parity_fresh = {
-                    "checked": True,
-                    "fresh": not missing and not extra and fails == 0,
-                    "registry_total": len(REGISTRY),
-                    "artifact_total": pj.get("total"),
-                    "artifact_fail": fails,
-                }
-                if missing:
-                    parity_fresh["missing_from_artifact"] = missing[:20]
-                if extra:
-                    parity_fresh["stale_in_artifact"] = extra[:20]
+        # round inferred from committed BENCH_r*.json, not from the
+        # detail path (which may be overridden to a round-less name)
+        ppath = os.path.join(REPO, f"PARITY_r{_infer_round():02d}.json")
+        if not os.path.exists(ppath):
+            parity_fresh = {
+                "checked": True,
+                "fresh": False,
+                "reason": f"{os.path.basename(ppath)} missing",
+            }
+        else:
+            with open(ppath) as f:
+                pj = json.load(f)
+            missing = sorted(set(REGISTRY) - set(pj.get("queries", {})))
+            extra = sorted(set(pj.get("queries", {})) - set(REGISTRY))
+            fails = pj.get("fail", -1)
+            parity_fresh = {
+                "checked": True,
+                "fresh": not missing and not extra and fails == 0,
+                "registry_total": len(REGISTRY),
+                "artifact_total": pj.get("total"),
+                "artifact_fail": fails,
+            }
+            if missing:
+                parity_fresh["missing_from_artifact"] = missing[:20]
+            if extra:
+                parity_fresh["stale_in_artifact"] = extra[:20]
         if parity_fresh.get("checked") and not parity_fresh.get("fresh", True):
             print(
                 f"WARNING: parity artifact stale vs live registry: "

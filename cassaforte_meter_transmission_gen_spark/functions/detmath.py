@@ -37,6 +37,8 @@ from __future__ import annotations
 
 import math
 
+from .sqltext import sql_double_lit
+
 #: repr-exact double of ln 2 — shared literal, never recomputed
 LN2 = 0.6931471805599453
 assert repr(math.log(2.0)) == repr(LN2)
@@ -80,13 +82,6 @@ def det_ln(x: float) -> float:
     return (e * LN2) + ((2.0 * t) * s)
 
 
-def _dl(x: float) -> str:
-    """Exact double literal valid in BOTH Spark SQL and DuckDB:
-    string→double casts are correctly rounded in each, and repr
-    round-trips every float64."""
-    return f"CAST('{x!r}' AS DOUBLE)"
-
-
 def det_ln_ctes(tag: str, x_expr: str, src: str, out_col: str) -> str:
     """CTE chain computing :func:`det_ln` of ``x_expr`` (evaluated
     over the one-row CTE ``src``) into ``{tag}l({out_col})`` — pure
@@ -95,21 +90,24 @@ def det_ln_ctes(tag: str, x_expr: str, src: str, out_col: str) -> str:
     named ``{tag}l``."""
     e_case = (
         "CASE "
-        + " ".join(f"WHEN x >= {_dl(pw)} THEN {p}" for p, pw in _POWS)
+        + " ".join(f"WHEN x >= {sql_double_lit(pw)} THEN {p}" for p, pw in _POWS)
         + " ELSE 0 END"
     )
     p_case = (
         "CASE "
-        + " ".join(f"WHEN x >= {_dl(pw)} THEN {_dl(pw)}" for p, pw in _POWS)
-        + f" ELSE {_dl(1.0)} END"
+        + " ".join(
+            f"WHEN x >= {sql_double_lit(pw)} THEN {sql_double_lit(pw)}"
+            for p, pw in _POWS
+        )
+        + f" ELSE {sql_double_lit(1.0)} END"
     )
-    horner = _dl(_COEFFS[DET_LN_TERMS - 1])
+    horner = sql_double_lit(_COEFFS[DET_LN_TERMS - 1])
     for k in range(DET_LN_TERMS - 2, -1, -1):
-        horner = f"({_dl(_COEFFS[k])} + ((tt * tt) * {horner}))"
+        horner = f"({sql_double_lit(_COEFFS[k])} + ((tt * tt) * {horner}))"
     return f"""{tag}x AS (SELECT ({x_expr}) AS x FROM {src}),
 {tag}r AS (SELECT x, {e_case} AS e, x / ({p_case}) AS m FROM {tag}x),
-{tag}t AS (SELECT e, ((m - {_dl(1.0)}) / (m + {_dl(1.0)})) AS tt FROM {tag}r),
-{tag}l AS (SELECT ((e * {_dl(LN2)}) + (({_dl(2.0)} * tt) * {horner}))
+{tag}t AS (SELECT e, ((m - {sql_double_lit(1.0)}) / (m + {sql_double_lit(1.0)})) AS tt FROM {tag}r),
+{tag}l AS (SELECT ((e * {sql_double_lit(LN2)}) + (({sql_double_lit(2.0)} * tt) * {horner}))
              AS {out_col} FROM {tag}t),"""
 
 
@@ -124,20 +122,26 @@ def det_ln_stage_exprs() -> dict[str, str]:
     at every level."""
     e_case = (
         "CASE "
-        + " ".join(f"WHEN x >= {_dl(pw)} THEN {p}" for p, pw in _POWS)
+        + " ".join(f"WHEN x >= {sql_double_lit(pw)} THEN {p}" for p, pw in _POWS)
         + " ELSE 0 END"
     )
     p_case = (
         "CASE "
-        + " ".join(f"WHEN x >= {_dl(pw)} THEN {_dl(pw)}" for p, pw in _POWS)
-        + f" ELSE {_dl(1.0)} END"
+        + " ".join(
+            f"WHEN x >= {sql_double_lit(pw)} THEN {sql_double_lit(pw)}"
+            for p, pw in _POWS
+        )
+        + f" ELSE {sql_double_lit(1.0)} END"
     )
-    horner = _dl(_COEFFS[DET_LN_TERMS - 1])
+    horner = sql_double_lit(_COEFFS[DET_LN_TERMS - 1])
     for k in range(DET_LN_TERMS - 2, -1, -1):
-        horner = f"({_dl(_COEFFS[k])} + ((tt * tt) * {horner}))"
+        horner = f"({sql_double_lit(_COEFFS[k])} + ((tt * tt) * {horner}))"
     return {
         "e": e_case,
         "m": f"x / ({p_case})",
-        "tt": f"((m - {_dl(1.0)}) / (m + {_dl(1.0)}))",
-        "ln": f"((e * {_dl(LN2)}) + (({_dl(2.0)} * tt) * {horner}))",
+        "tt": f"((m - {sql_double_lit(1.0)}) / (m + {sql_double_lit(1.0)}))",
+        "ln": (
+            f"((e * {sql_double_lit(LN2)})"
+            f" + (({sql_double_lit(2.0)} * tt) * {horner}))"
+        ),
     }

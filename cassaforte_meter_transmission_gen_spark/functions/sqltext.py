@@ -43,3 +43,10 @@ def safe_ident(name: str) -> str:
     if not _IDENT.match(name):
         raise ValueError(f"not a plain SQL identifier: {name!r}")
     return name
+
+
+def sql_double_lit(x: float) -> str:
+    """Exact double literal valid in BOTH Spark SQL and DuckDB:
+    string→double casts are correctly rounded in each, and repr
+    round-trips every finite float64."""
+    return f"CAST('{x!r}' AS DOUBLE)"

@@ -2,16 +2,25 @@
 (BASELINE.json north star): tokenization, normalization, shingling,
 portable hashing, rolling fingerprints, language-ID heuristics.
 
-Everything here is a JVM-side column expression (no Python UDFs): the
-hot path at 100 TB is hashing/shingling every document, and these stay
-inside WholeStageCodegen.
+Everything here is a JVM-side expression (no Python UDFs): the hot path
+at 100 TB is hashing/shingling every document, and these stay inside
+WholeStageCodegen.
+
+Each cross-engine expression has ONE definition: the ``*_sql`` function
+that emits it as Spark SQL text. Plans use it through ``F.expr`` or
+``selectExpr`` — one server-side parse per projection instead of one
+blocking py4j round trip per Column node (measured:
+dedup_minhash_lsh_pairs 2464 trips, pipeline_training_prep 1745 when
+these were built through the Column API). The DuckDB oracles keep their
+own text: they are the reference the parity gate checks this text
+against.
 
 Two hash families:
-- ``tok_hash_portable``: md5-based 60-bit hash reproducible in ANSI SQL
-  (DuckDB: ``CAST('0x' || substr(md5(x),1,15) AS BIGINT)``) — used by
-  oracle-gated queries.
-- ``tok_hash_fast``: xxhash64 — the production path (≈10× cheaper than
-  md5); same pipeline shape, engine-specific values.
+- :func:`tok_hash_portable_sql`: md5-based 60-bit hash reproducible in
+  ANSI SQL (DuckDB: ``CAST('0x' || substr(md5(x),1,15) AS BIGINT)``) —
+  used by oracle-gated queries.
+- :func:`tok_hash_fast_sql`: xxhash64 — the production path (≈10×
+  cheaper than md5); same pipeline shape, engine-specific values.
 """
 
 from __future__ import annotations
@@ -28,42 +37,32 @@ ROLLING_BASE = 31
 ROLLING_PREFIX = 64
 
 
-def tokens(text: Column) -> Column:
+def tokens_sql(text_sql: str) -> str:
     """Whitespace tokens (corpus is single-space separated; ``\\s+``
     regex kept for robustness — identical to the oracle's splitter)."""
-    return F.split(text, r"\s+")
-
-
-# --- SQL-string twins (r14, guide §1.2 via the round-4 lesson) ---
-#
-# Plan BUILD time is driver-side py4j latency: every Column method call
-# is a blocking round trip, and the expression-heavy builders below pay
-# hundreds per query (measured: dedup_minhash_lsh_pairs 2464 trips,
-# pipeline_training_prep 1745 — the trip count is deterministic, so it
-# is the honest metric on a contended box). Each ``*_sql`` twin emits
-# the SAME expression tree as its Column sibling as ONE server-parsed
-# string, so a whole projection costs one selectExpr round trip.
-# Results are bit-identical (same functions, same literals — the only
-# plan diff is struct FIELD NAMES inside arrays_zip, which never reach
-# output schemas); the DuckDB parity gate re-verifies every consumer.
-
-
-def tokens_sql(text_sql: str) -> str:
-    """SQL-string twin of :func:`tokens`."""
     return f"split({text_sql}, '\\\\s+')"
 
 
 def normalize_text_sql(text_sql: str) -> str:
-    """SQL-string twin of :func:`normalize_text`."""
+    """Canonical form for exact dedup: lowercase, collapse whitespace,
+    trim."""
     return f"trim(regexp_replace(lower({text_sql}), '\\\\s+', ' '))"
 
 
 def word_shingles_sql(toks_sql: str, n: int = 3) -> str:
-    """SQL-string twin of :func:`word_shingles`: same slice/arrays_zip/
-    concat_ws tree (the capture-free HOF form — see the Column twin's
-    docstring for why). arrays_zip struct fields are positional ('0',
-    '1', …) in SQL where the Column form aliases t0/t1/… — internal
-    names only, the emitted shingle strings are identical."""
+    """Distinct word n-gram shingles (classic near-dup unit). Empty for
+    docs shorter than n tokens.
+
+    Built as arrays_zip of the token array against its own shifted
+    slices, with the per-shingle lambda touching ONLY its struct
+    element — the earlier sequence+element_at(toks, i+j) form CAPTURED
+    the outer token expression inside the interpreted HOF lambda, and
+    when ``toks`` arrives as an inline ``split(text)`` the capture
+    re-evaluates the regex split per element reference (3·|shingles|
+    splits per row — profiled ~2 ms/row at sf0.1, the dominant cost of
+    every shingle-consuming plan). Same shingle strings in the same
+    order, so every MinHash/LSH/span oracle is unchanged. The
+    arrays_zip struct fields are positional ('0', '1', …)."""
     win = f"(size({toks_sql}) - {n - 1})"
     slices = ", ".join(
         f"slice({toks_sql}, {i + 1}, {win})" for i in range(n)
@@ -77,75 +76,14 @@ def word_shingles_sql(toks_sql: str, n: int = 3) -> str:
 
 
 def tok_hash_portable_sql(s_sql: str) -> str:
-    """SQL-string twin of :func:`tok_hash_portable`."""
+    """60-bit hash from the md5 hex prefix — bit-identical in DuckDB
+    (``CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)``)."""
     return f"CAST(conv(substring(md5({s_sql}), 1, 15), 16, 10) AS BIGINT)"
 
 
 def tok_hash_fast_sql(s_sql: str) -> str:
-    """SQL-string twin of :func:`tok_hash_fast`."""
-    return f"xxhash64({s_sql})"
-
-
-def lang_hits_sql(toks_sql: str, lang: str) -> str:
-    """SQL-string twin of :func:`lang_hits`."""
-    markers = ", ".join(f"'{w}'" for w in LANG_MARKERS[lang])
-    return (
-        f"size(filter({toks_sql}, t -> array_contains(array({markers}), t)))"
-    )
-
-
-def predicted_lang_sql(hits: dict[str, str]) -> str:
-    """SQL-string twin of :func:`predicted_lang` over per-language hit
-    EXPRESSION STRINGS — same CASE chain, same tie-break order."""
-    langs = list(LANG_MARKERS)
-    expr = "'und'"
-    for lang in reversed(langs):
-        conds = [f"{hits[lang]} > 0"] + [
-            f"{hits[lang]} >= {hits[other]}" for other in langs if other != lang
-        ]
-        expr = f"CASE WHEN {' AND '.join(conds)} THEN '{lang}' ELSE {expr} END"
-    return expr
-
-
-def normalize_text(text: Column) -> Column:
-    """Canonical form for exact dedup: lowercase, collapse whitespace,
-    trim."""
-    return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
-
-
-def word_shingles(toks: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (classic near-dup unit). Empty for
-    docs shorter than n tokens.
-
-    Built as arrays_zip of the token array against its own shifted
-    slices, with the per-shingle lambda touching ONLY its struct
-    element — the earlier sequence+element_at(toks, i+j) form CAPTURED
-    the outer token expression inside the interpreted HOF lambda, and
-    when ``toks`` arrives as an inline ``split(text)`` the capture
-    re-evaluates the regex split per element reference (3·|shingles|
-    splits per row — profiled ~2 ms/row at sf0.1, the dominant cost of
-    every shingle-consuming plan). Same shingle strings in the same
-    order, so every MinHash/LSH/span oracle is unchanged."""
-    win = F.size(toks) - (n - 1)
-    zipped = F.arrays_zip(
-        *[F.slice(toks, i + 1, win).alias(f"t{i}") for i in range(n)]
-    )
-    grams = F.transform(
-        zipped,
-        lambda s: F.concat_ws(" ", *[s[f"t{i}"] for i in range(n)]),
-    )
-    empty = F.array().cast("array<string>")
-    return F.array_distinct(F.when(F.size(toks) >= n, grams).otherwise(empty))
-
-
-def tok_hash_portable(s: Column) -> Column:
-    """60-bit hash from the md5 hex prefix — bit-identical in DuckDB."""
-    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-
-
-def tok_hash_fast(s: Column) -> Column:
     """Production 64-bit hash (xxhash64, engine-native)."""
-    return F.xxhash64(s)
+    return f"xxhash64({s_sql})"
 
 
 def rolling_fingerprint(text: Column, prefix: int = ROLLING_PREFIX) -> Column:
@@ -171,24 +109,24 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 
-def lang_hits(toks: Column, lang: str) -> Column:
+def lang_hits_sql(toks_sql: str, lang: str) -> str:
     """Count of tokens that are marker words for ``lang``."""
-    markers = F.array(*[F.lit(w) for w in LANG_MARKERS[lang]])
-    return F.size(F.filter(toks, lambda t: F.array_contains(markers, t)))
+    markers = ", ".join(f"'{w}'" for w in LANG_MARKERS[lang])
+    return (
+        f"size(filter({toks_sql}, t -> array_contains(array({markers}), t)))"
+    )
 
 
-def predicted_lang(hit_cols: dict[str, Column]) -> Column:
-    """Argmax over language hit counts, first-in-priority-order wins
-    ties (en, de, es, fr, zh): a CASE chain where each branch requires
-    hits > 0 and hits >= every other language — a literal
-    transliteration of the oracle SQL."""
+def predicted_lang_sql(hits: dict[str, str]) -> str:
+    """Argmax over per-language hit EXPRESSION STRINGS, first in
+    priority order wins ties (en, de, es, fr, zh): a CASE chain where
+    each branch requires hits > 0 and hits >= every other language — a
+    literal transliteration of the oracle SQL."""
     langs = list(LANG_MARKERS)
-    expr = None
+    expr = "'und'"
     for lang in reversed(langs):
-        cond = hit_cols[lang] > 0
-        for other in langs:
-            if other != lang:
-                cond = cond & (hit_cols[lang] >= hit_cols[other])
-        branch = F.when(cond, F.lit(lang))
-        expr = branch.otherwise(expr) if expr is not None else branch.otherwise(F.lit("und"))
+        conds = [f"{hits[lang]} > 0"] + [
+            f"{hits[lang]} >= {hits[other]}" for other in langs if other != lang
+        ]
+        expr = f"CASE WHEN {' AND '.join(conds)} THEN '{lang}' ELSE {expr} END"
     return expr

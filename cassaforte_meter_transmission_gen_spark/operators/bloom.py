@@ -23,7 +23,7 @@ the same shape automatically. The point of this operator is the
 explicit, testable, engine-portable form of that optimization.
 
 Hashing: the md5-portable 60-bit hash (functions.text
-.tok_hash_portable) split into two bit positions (k=2) with SHIFTS —
+.tok_hash_portable_sql) split into two bit positions (k=2) with SHIFTS —
 n_bits is a power of two, so every step is exact integer arithmetic
 (no double division anywhere near the 60-bit hash)."""
 
@@ -32,10 +32,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import tok_hash_fast_sql, tok_hash_portable_sql
+
 #: default filter width: 64 Kbit = 1024 longs ≈ 8 KB of literals;
 #: for n keys choose m ≥ ~16n to keep the k=2 FPR under ~1%
 BLOOM_BITS = 65536
-BLOOM_WORDS = BLOOM_BITS // 64
 
 
 def _log2(n_bits: int) -> int:
@@ -63,13 +64,10 @@ def _pos_sqls(
     probe use the same family (the shared SQL here guarantees it)."""
     lb = _log2(n_bits)
     if hash_family == "portable":
-        h = (
-            f"CAST(CONV(SUBSTRING(MD5(CAST({key_sql} AS STRING)), 1, 15),"
-            f" 16, 10) AS BIGINT)"
-        )
+        h = tok_hash_portable_sql(f"CAST({key_sql} AS STRING)")
         return f"({h} % {n_bits})", f"(SHIFTRIGHT({h}, {lb}) % {n_bits})"
     if hash_family == "fast":
-        h = f"XXHASH64(CAST({key_sql} AS STRING))"
+        h = tok_hash_fast_sql(f"CAST({key_sql} AS STRING)")
         mask = n_bits - 1
         return f"({h} & {mask})", f"(SHIFTRIGHT({h}, {lb}) & {mask})"
     raise ValueError(f"unknown hash_family {hash_family!r}")

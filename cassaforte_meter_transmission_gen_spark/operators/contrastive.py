@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import tok_hash_portable
+from ..functions.text import tok_hash_portable_sql
 from .similarity import brute_force_topk
 
 #: expected negative-pool survivors per anchor after the hash
@@ -67,11 +67,9 @@ def contrastive_triplets(
     )
     a = anchors.select(F.col(id_col).alias("anchor_id"))
     cand = vectors.select(F.col(id_col).alias("cand_id"))
-    pri = tok_hash_portable(
-        F.concat(
-            F.col("anchor_id").cast("string"),
-            F.lit(":"),
-            F.col("cand_id").cast("string"),
+    pri = F.expr(
+        tok_hash_portable_sql(
+            "concat(CAST(anchor_id AS STRING), ':', CAST(cand_id AS STRING))"
         )
     )
     pool = (

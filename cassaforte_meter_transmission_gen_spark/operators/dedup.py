@@ -32,20 +32,16 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.spread import spread_small_scan
 
 from ..functions.text import (
     MINHASH_PRIME,
-    tok_hash_fast,
     tok_hash_fast_sql,
-    tok_hash_portable,
     tok_hash_portable_sql,
-    tokens,
     tokens_sql,
-    word_shingles,
     word_shingles_sql,
 )
 
@@ -90,10 +86,10 @@ def _shingled(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     # shingle expression into the Filter and re-evaluate it in the
     # Project above (codegen CSE works within one collapsed Project but
     # not across Filter/Generate operators — measured 5× on sf0.1).
-    # size(tokens) >= n  ⟺  size(shingles) > 0 (word_shingles contract).
-    # Built as server-parsed SQL strings (r14): the Column form paid
-    # ~100 py4j round trips of pure driver latency per build — same
-    # expression tree, two round trips (see functions.text *_sql twins).
+    # size(tokens) >= n  ⟺  size(shingles) > 0 (word_shingles_sql
+    # contract). Built as server-parsed SQL strings (r14): the Column
+    # form paid ~100 py4j round trips of pure driver latency per build
+    # — same expression tree, two round trips (see functions.text).
     toks = tokens_sql(f"`{text_col}`")
     return (
         _spread(df)
@@ -411,26 +407,24 @@ def embedding_cosine_duplicates(
     baseline; use :func:`embedding_cosine_duplicates_lsh` at scale.
 
     Returns (dup_a, dup_b, cosine)."""
-    from .similarity import cosine_pre, l2_norm
+    from .similarity import cosine_pre_sql, l2_norm_sql
 
     a = vectors.select(
         F.col(id_col).alias("dup_a"),
         F.col(vec_col).alias("va"),
-        l2_norm(F.col(vec_col)).alias("na"),
+        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("na"),
     )
     b = vectors.select(
         F.col(id_col).alias("dup_b"),
         F.col(vec_col).alias("vb"),
-        l2_norm(F.col(vec_col)).alias("nb"),
+        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("nb"),
     )
     return (
         a.join(b, F.col("dup_a") < F.col("dup_b"))
         .select(
             "dup_a",
             "dup_b",
-            cosine_pre(
-                F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-            ).alias("cosine"),
+            F.expr(cosine_pre_sql("va", "vb", "na", "nb")).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )
@@ -505,18 +499,18 @@ def embedding_cosine_duplicates_lsh(
     while pruning candidates to ≈ 16·0.5⁸ ≈ 6% of pairs — that is the
     100 TB configuration for the real regime (measured exponent 0.89
     at 1×→10×: see :func:`embedding_cosine_lsh_stats`)."""
-    from .similarity import cosine_pre, l2_norm
+    from .similarity import cosine_pre_sql, l2_norm_sql
 
     cand = _lsh_candidate_pairs(vectors, n_tables, n_planes, id_col, vec_col, dim)
     va = vectors.select(
         F.col(id_col).alias("dup_a"),
         F.col(vec_col).alias("va"),
-        l2_norm(F.col(vec_col)).alias("na"),
+        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("na"),
     )
     vb = vectors.select(
         F.col(id_col).alias("dup_b"),
         F.col(vec_col).alias("vb"),
-        l2_norm(F.col(vec_col)).alias("nb"),
+        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("nb"),
     )
     return (
         cand.join(va, "dup_a")
@@ -524,9 +518,7 @@ def embedding_cosine_duplicates_lsh(
         .select(
             "dup_a",
             "dup_b",
-            cosine_pre(
-                F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-            ).alias("cosine"),
+            F.expr(cosine_pre_sql("va", "vb", "na", "nb")).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )
@@ -563,18 +555,18 @@ def embedding_cosine_lsh_stats(
     aggregation) — a separate ``matches`` subtree would recompute the
     signature/bucket/distinct chain a second time (measured ≈ 2× the
     whole query)."""
-    from .similarity import cosine_pre, l2_norm
+    from .similarity import cosine_pre_sql, l2_norm_sql
 
     cand = _lsh_candidate_pairs(vectors, n_tables, n_planes, id_col, vec_col, dim)
     va = vectors.select(
         F.col(id_col).alias("dup_a"),
         F.col(vec_col).alias("va"),
-        l2_norm(F.col(vec_col)).alias("na"),
+        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("na"),
     )
     vb = vectors.select(
         F.col(id_col).alias("dup_b"),
         F.col(vec_col).alias("vb"),
-        l2_norm(F.col(vec_col)).alias("nb"),
+        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("nb"),
     )
     cand_stats = (
         cand.join(va, "dup_a")
@@ -583,7 +575,7 @@ def embedding_cosine_lsh_stats(
             F.count("*").alias("n_candidates"),
             F.sum(
                 (
-                    cosine_pre(F.col("va"), F.col("vb"), F.col("na"), F.col("nb"))
+                    F.expr(cosine_pre_sql("va", "vb", "na", "nb"))
                     >= threshold
                 ).cast("long")
             ).alias("n_matches"),
@@ -660,9 +652,9 @@ def semantic_duplicates_clustered(
     config, so the artifact is bit-identical to training here)."""
     from .similarity import (
         assign_to_centroid,
-        cosine_pre,
+        cosine_pre_sql,
         kmeans_centroids,
-        l2_norm,
+        l2_norm_sql,
     )
 
     # The argmin-over-centroids assignment is the CPU-heavy per-row
@@ -711,12 +703,12 @@ def semantic_duplicates_clustered(
     va = vectors.alias("sem_va").select(
         F.col(id_col).alias("dup_a"),
         F.col(vec_col).alias("va"),
-        l2_norm(F.col(vec_col)).alias("na"),
+        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("na"),
     )
     vb = vectors.alias("sem_vb").select(
         F.col(id_col).alias("dup_b"),
         F.col(vec_col).alias("vb"),
-        l2_norm(F.col(vec_col)).alias("nb"),
+        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("nb"),
     )
     return (
         cand.join(va, "dup_a")
@@ -724,9 +716,7 @@ def semantic_duplicates_clustered(
         .select(
             "dup_a",
             "dup_b",
-            cosine_pre(
-                F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-            ).alias("cosine"),
+            F.expr(cosine_pre_sql("va", "vb", "na", "nb")).alias("cosine"),
         )
         .filter(F.col("cosine") >= F.lit(threshold))
     )

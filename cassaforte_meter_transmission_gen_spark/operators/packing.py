@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import sql_double_lit
+
 
 def global_running_total(
     df: DataFrame,
@@ -119,7 +121,7 @@ def global_running_totals(
         # array cost ~70 py4j round trips per call; the string-cast
         # literals round-trip exactly (repr ↔ parse is lossless for
         # finite doubles), so the plan is byte-identical.
-        arr = ", ".join(f"CAST('{float(b)!r}' AS DOUBLE)" for b in bounds)
+        arr = ", ".join(sql_double_lit(float(b)) for b in bounds)
         pid = F.expr(
             f"size(filter(array({arr}), "
             f"b -> b < CAST(`{order_col}` AS DOUBLE)))"

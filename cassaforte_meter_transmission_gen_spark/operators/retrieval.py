@@ -35,16 +35,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..functions.detmath import det_ln
-from ..functions.sqltext import sql_str_lit
+from ..functions.sqltext import sql_double_lit, sql_str_lit
 
 #: Okapi BM25 defaults (Robertson et al.); repr-exact on both engines
 BM25_K1 = 1.2
 BM25_B = 0.75
-
-
-def _dl(x: float) -> str:
-    """Exact double literal valid in both Spark SQL and DuckDB."""
-    return f"CAST('{x!r}' AS DOUBLE)"
 
 
 def _toks_sql(text_col: str) -> str:
@@ -60,10 +55,10 @@ def bm25_score_sql(idfs: list[str], avgdl: str, k1: float, b: float) -> str:
     ``idfs``/``avgdl`` are SQL snippets: repr literals on the Spark
     side (driver-computed), column references in the oracle (SQL-
     computed via the det-ln CTE chain) — same bits either way."""
-    k1p1 = _dl(k1 + 1.0)
-    k1l = _dl(k1)
-    omb = _dl(1.0 - b)
-    bl = _dl(b)
+    k1p1 = sql_double_lit(k1 + 1.0)
+    k1l = sql_double_lit(k1)
+    omb = sql_double_lit(1.0 - b)
+    bl = sql_double_lit(b)
     terms = [
         f"(({idf}) * ((CAST(tf_{i} AS DOUBLE) * {k1p1})"
         f" / (CAST(tf_{i} AS DOUBLE) + ({k1l} * ({omb} + ({bl}"
@@ -114,7 +109,7 @@ def bm25_topk(
     avgdl = float(int(st["sdl"])) / float(n)
     # same expression structure as the oracle's idf-input CTE
     idfs = [
-        _dl(
+        sql_double_lit(
             det_ln(
                 ((float(n - int(st[f"df_{i}"])) + 0.5)
                  / (float(int(st[f"df_{i}"])) + 0.5)) + 1.0
@@ -124,7 +119,7 @@ def bm25_topk(
     ]
     scored = dtf.select(
         "doc_id",
-        F.expr(bm25_score_sql(idfs, _dl(avgdl), k1, b)).alias("score"),
+        F.expr(bm25_score_sql(idfs, sql_double_lit(avgdl), k1, b)).alias("score"),
     )
     top = scored.orderBy(F.desc("score"), "doc_id").limit(k)
     w = W.orderBy(F.desc("score"), "doc_id")

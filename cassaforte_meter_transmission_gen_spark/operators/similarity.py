@@ -81,11 +81,17 @@ def train_sample_sql(id_col: str, denom: int, floor_ids: int) -> str:
     )
 
 
-def _as_double(arr: Column) -> Column:
-    return F.transform(arr, lambda x: x.cast("double"))
+# Each fold below is defined ONCE, as server-parsed SQL text: Column/
+# lambda builders paid ~15 blocking py4j round trips per fold during
+# plan BUILD, which dominated driver latency on fold-heavy projections
+# (see functions.text). Plans use the text through F.expr/selectExpr.
 
 
-def dot(a: Column, b: Column) -> Column:
+def _as_double_sql(a: str) -> str:
+    return f"transform({a}, x -> CAST(x AS DOUBLE))"
+
+
+def dot_sql(a: str, b: str) -> str:
     """Sequential-fold dot product (bit-reproducible in the oracle).
 
     Kept as a higher-order-function fold deliberately: expanding the
@@ -94,36 +100,6 @@ def dot(a: Column, b: Column) -> Column:
     transforms + codegen on those measured 4-8× SLOWER end-to-end at
     sf0.1 than the interpreted fold. The fold's interpretation overhead
     is the cheaper side of that trade."""
-    return F.aggregate(
-        F.zip_with(_as_double(a), _as_double(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(_as_double(a), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-# SQL-string twins (r14): same expression trees as the Column helpers
-# above, emitted as one server-parsed string — the Column/lambda forms
-# pay ~15 blocking py4j round trips per fold during plan BUILD, which
-# dominates driver latency on fold-heavy projections (see
-# functions.text for the pattern rationale).
-
-
-def _as_double_sql(a: str) -> str:
-    return f"transform({a}, x -> CAST(x AS DOUBLE))"
-
-
-def dot_sql(a: str, b: str) -> str:
-    """SQL-string twin of :func:`dot` (same sequential fold)."""
     return (
         f"aggregate(zip_with({_as_double_sql(a)}, {_as_double_sql(b)}, "
         f"(x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
@@ -131,7 +107,6 @@ def dot_sql(a: str, b: str) -> str:
 
 
 def l2_norm_sql(a: str) -> str:
-    """SQL-string twin of :func:`l2_norm`."""
     return (
         f"sqrt(aggregate({_as_double_sql(a)}, CAST(0.0 AS DOUBLE), "
         f"(acc, x) -> acc + x * x))"
@@ -139,20 +114,15 @@ def l2_norm_sql(a: str) -> str:
 
 
 def cosine_pre_sql(a: str, b: str, na: str, nb: str) -> str:
-    """SQL-string twin of :func:`cosine_pre`."""
+    """Cosine with PRE-COMPUTED norms ``na``/``nb`` (from
+    :func:`l2_norm_sql`): norms are computed once per VECTOR before a
+    join instead of once per PAIR after it, so a near-quadratic
+    candidate verify does one fold per pair (the dot) instead of three.
+    Measured bench-to-bench at sf0.1 (2M candidate pairs): LSH dedup
+    6.6 → 4.5 s, semantic dedup 6.3 → 4.7 s; on the small-candidate ANN
+    paths the saving is inside run-to-run noise — it grows with
+    candidate volume."""
     return f"{dot_sql(a, b)} / ({na} * {nb})"
-
-
-def cosine_pre(a: Column, b: Column, na: Column, nb: Column) -> Column:
-    """Cosine with PRE-COMPUTED norms — bit-identical to :func:`cosine`
-    (same fold produces ``na``/``nb``, same division order), but norms
-    are computed once per VECTOR before a join instead of once per
-    PAIR after it: a near-quadratic candidate verify does one fold per
-    pair (the dot) instead of three. Measured bench-to-bench at sf0.1
-    (2M candidate pairs): LSH dedup 6.6 → 4.5 s, semantic dedup
-    6.3 → 4.7 s; on the small-candidate ANN paths the saving is inside
-    run-to-run noise — it grows with candidate volume."""
-    return dot(a, b) / (na * nb)
 
 
 def brute_force_topk(
@@ -210,36 +180,14 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 20130101) -> list[list[floa
     ]
 
 
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id under the given hyperplanes (fold-form
-    projections — see the expression-depth note on :func:`dot`).
-
-    Column-API form, kept as the semantic definition; the hot path
-    (:func:`_bucket_keys`) builds the bit-identical expression as ONE
-    server-parsed SQL string instead — constructing it plane-by-plane
-    through the Column API costs one py4j round trip per literal
-    (tables × planes × dim of them: measured 18.7 s of pure DRIVER time
-    for the 16×8×64 config before any execution)."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        proj = F.aggregate(
-            F.zip_with(
-                _as_double(vec),
-                F.array(*[F.lit(x) for x in p]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(proj >= 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
-    return bucket
-
-
 def _buckets_sql(vec_col: str, tables: list[list[list[float]]]) -> str:
     """The whole (table_idx, bucket) array as one SQL expression string
-    — bit-identical to :func:`lsh_bucket` per table (same ascending
-    fold order, same bit weights; ``repr`` round-trips every float64
-    exactly), but parsed server-side in one call. The unrolled shape is
+    — per table, the sign bits of the ascending-order fold projections
+    onto each hyperplane, bit ``i`` for plane ``i`` (``repr``
+    round-trips every float64 exactly), parsed server-side in one call
+    (built plane-by-plane through the Column API it cost one py4j round
+    trip per literal: 18.7 s of pure DRIVER time for the 16×8×64 config
+    before any execution). The unrolled shape is
     deliberate: it stays inside WholeStageCodegen, where the
     higher-order-function alternative (planes as a nested array
     literal) executes interpreted and measured ~2× slower."""
@@ -318,12 +266,12 @@ def lsh_topk(
     qv = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
-        l2_norm(F.col(vec_col)).alias("q_nrm"),
+        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("q_nrm"),
     )
     cv = vectors.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
-        l2_norm(F.col(vec_col)).alias("c_nrm"),
+        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("c_nrm"),
     )
     scored = (
         cand.join(F.broadcast(qv), "query_id")
@@ -331,9 +279,7 @@ def lsh_topk(
         .select(
             "query_id",
             "neighbor_id",
-            cosine_pre(
-                F.col("q_vec"), F.col("c_vec"), F.col("q_nrm"), F.col("c_nrm")
-            ).alias("cosine"),
+            F.expr(cosine_pre_sql("q_vec", "c_vec", "q_nrm", "c_nrm")).alias("cosine"),
         )
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
@@ -350,35 +296,31 @@ def lsh_topk(
 INT8_EPS = 1e-30
 
 
-def _maxabs(vec: Column) -> Column:
-    """max |x| as a sequential fold (greatest is associative, but the
-    fold ORDER still mirrors the oracle's list_reduce exactly)."""
-    return F.aggregate(
-        _as_double(vec), F.lit(0.0), lambda acc, x: F.greatest(acc, F.abs(x))
-    )
-
-
 def _int8_prep(df: DataFrame, prefix: str, id_col: str, vec_col: str) -> DataFrame:
     """Per-vector scalar quantization: codes = floor(x / scale) with
     scale = greatest(max |x|, eps) / 127 — floor, never round():
     round()'s half-way ties split Spark's HALF_UP from DuckDB's
-    HALF_EVEN. Emits ({prefix}_id, {prefix}_q, {prefix}_scale,
-    {prefix}_nrm) — the NARROW quantized form; full vectors re-attach
-    by id only for the rerank band."""
-    scaled = df.select(
-        F.col(id_col).alias(f"{prefix}_id"),
-        F.col(vec_col).alias(f"{prefix}_vec"),
-        (
-            F.greatest(_maxabs(F.col(vec_col)), F.lit(INT8_EPS)) / F.lit(127.0)
-        ).alias(f"{prefix}_scale"),
-        l2_norm(F.col(vec_col)).alias(f"{prefix}_nrm"),
+    HALF_EVEN. max |x| is a sequential fold (greatest is associative,
+    but the fold ORDER still mirrors the oracle's list_reduce exactly).
+    Emits ({prefix}_id, {prefix}_q, {prefix}_scale, {prefix}_nrm) — the
+    NARROW quantized form; full vectors re-attach by id only for the
+    rerank band."""
+    v = f"`{vec_col}`"
+    maxabs = (
+        f"aggregate({_as_double_sql(v)}, CAST(0.0 AS DOUBLE), "
+        "(acc, x) -> greatest(acc, abs(x)))"
     )
-    return scaled.select(
+    scaled = df.selectExpr(
+        f"`{id_col}` AS {prefix}_id",
+        f"{v} AS {prefix}_vec",
+        f"greatest({maxabs}, {_sdlit(INT8_EPS)}) / {_sdlit(127.0)}"
+        f" AS {prefix}_scale",
+        f"{l2_norm_sql(v)} AS {prefix}_nrm",
+    )
+    return scaled.selectExpr(
         f"{prefix}_id",
-        F.transform(
-            _as_double(F.col(f"{prefix}_vec")),
-            lambda x: F.floor(x / F.col(f"{prefix}_scale")).cast("long"),
-        ).alias(f"{prefix}_q"),
+        f"transform({_as_double_sql(f'{prefix}_vec')},"
+        f" x -> CAST(floor(x / {prefix}_scale) AS BIGINT)) AS {prefix}_q",
         f"{prefix}_scale",
         f"{prefix}_nrm",
     )
@@ -651,7 +593,7 @@ def ivf_topk(
     cands = assign_to_centroid(vectors, centroids, vec_col).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
-        l2_norm(F.col(vec_col)).alias("c_nrm"),
+        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("c_nrm"),
         "cluster_id",
     )
     probed = (
@@ -659,7 +601,7 @@ def ivf_topk(
         .select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("q_vec"),
-            l2_norm(F.col(vec_col)).alias("q_nrm"),
+            F.expr(l2_norm_sql(f"`{vec_col}`")).alias("q_nrm"),
             F.explode("probe_ids").alias("cluster_id"),
         )
     )
@@ -669,9 +611,7 @@ def ivf_topk(
         .select(
             "query_id",
             "neighbor_id",
-            cosine_pre(
-                F.col("q_vec"), F.col("c_vec"), F.col("q_nrm"), F.col("c_nrm")
-            ).alias("cosine"),
+            F.expr(cosine_pre_sql("q_vec", "c_vec", "q_nrm", "c_nrm")).alias("cosine"),
         )
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
@@ -801,8 +741,8 @@ def _sdlit(x: float) -> str:
 
 def _svec_sql(vec_col: str, lo: int, n: int) -> str:
     """SQL text for the ``n``-element double subvector at 1-based
-    offset ``lo`` — same expression F.slice(_as_double(col)) builds."""
-    return f"slice(transform({vec_col}, x -> CAST(x AS DOUBLE)), {lo}, {n})"
+    offset ``lo``."""
+    return f"slice({_as_double_sql(vec_col)}, {lo}, {n})"
 
 
 def _cents_sql(book: list[list[float]]) -> str:
@@ -948,12 +888,12 @@ def _exact_rerank_topk(
     qv = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
-        l2_norm(F.col(vec_col)).alias("qr_nrm"),
+        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("qr_nrm"),
     )
     cv = vectors.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
-        l2_norm(F.col(vec_col)).alias("cr_nrm"),
+        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("cr_nrm"),
     )
     rescored = (
         band.join(F.broadcast(qv), "query_id")
@@ -961,8 +901,8 @@ def _exact_rerank_topk(
         .select(
             "query_id",
             "neighbor_id",
-            cosine_pre(
-                F.col("q_vec"), F.col("c_vec"), F.col("qr_nrm"), F.col("cr_nrm")
+            F.expr(
+                cosine_pre_sql("q_vec", "c_vec", "qr_nrm", "cr_nrm")
             ).alias("cosine"),
         )
     )
@@ -1040,7 +980,7 @@ def pq_topk(
 
     q = queries.select(
         F.col(id_col).alias("query_id"),
-        l2_norm(F.col(vec_col)).alias("q_nrm"),
+        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("q_nrm"),
         *_adc_query_cols(books, sub, vec_col),
     )
     approx = (
@@ -1158,7 +1098,7 @@ def ivfpq_topk(
     # one row per (query, probed cell) — broadcast to the cell join
     q = assign_probes(queries, centroids, n_probes, vec_col).select(
         F.col(id_col).alias("query_id"),
-        l2_norm(F.col(vec_col)).alias("q_nrm"),
+        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("q_nrm"),
         *_adc_query_cols(books, sub, vec_col),
         F.explode("probe_ids").alias("cluster_id"),
     )

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import tok_hash_portable_sql
+
 CMS_DEPTH = 4
 CMS_WIDTH = 1024  # power of two; expected collision mass ≈ N/width
 
@@ -38,11 +40,8 @@ def _cms_col_sql(row: int, key_sql: str, width: int) -> str:
     """Counter column for hash row ``row``: the md5-portable 60-bit
     hash of 'row:key', reduced mod width — one independent hash
     function per grid row, reproducible across engines."""
-    return (
-        f"CAST(CAST(CONV(SUBSTRING(MD5('{row}:' ||"
-        f" CAST({key_sql} AS STRING)), 1, 15), 16, 10) AS BIGINT)"
-        f" % {width} AS INT)"
-    )
+    h = tok_hash_portable_sql(f"'{row}:' || CAST({key_sql} AS STRING)")
+    return f"CAST({h} % {width} AS INT)"
 
 
 def cms_build(
@@ -130,10 +129,7 @@ def kmv_hash_expr(key_sql: str) -> str:
     """The md5-portable 60-bit hash of the key expression — the same
     construction as the CMS rows (one engine-reproducible uniform hash),
     minus the row prefix: KMV needs a single hash function."""
-    return (
-        f"CAST(CONV(SUBSTRING(MD5(CAST({key_sql} AS STRING)), 1, 15),"
-        " 16, 10) AS BIGINT)"
-    )
+    return tok_hash_portable_sql(f"CAST({key_sql} AS STRING)")
 
 
 def kmv_sketch(df: DataFrame, key_sql: str, k: int = KMV_K) -> DataFrame:

@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens_sql
+
 #: default number of merge rules learned by the catalog query — small
 #: because each merge is one full pass over the vocab table; real
 #: tokenizers run tens of thousands of merges with the identical shape
@@ -417,7 +419,7 @@ def bpe_encode_doc_lengths(
         F.count("*").cast("long").alias("n_pieces")
     )
     words = docs.select(
-        id_col, F.explode(F.split(F.col(text_col), r"\s+")).alias("word")
+        id_col, F.explode(F.expr(tokens_sql(f"`{text_col}`"))).alias("word")
     ).filter(F.col("word") != "")
     return (
         words.join(wlen, "word")

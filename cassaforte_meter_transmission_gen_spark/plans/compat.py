@@ -21,11 +21,6 @@ def dec_sum(col: Column) -> Column:
     return F.sum(col.cast(DEC)).cast("double")
 
 
-def dec_avg(col: Column) -> Column:
-    """Exact-sum average → double (sum_decimal / count)."""
-    return (F.sum(col.cast(DEC)).cast("double") / F.count(col)).alias("avg")
-
-
 def sql_dec_sum(expr: str) -> str:
     """DuckDB text mirror of :func:`dec_sum`."""
     return f"CAST(SUM(CAST({expr} AS DECIMAL(18,6))) AS DOUBLE)"

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.energy import SAMPLE_RATE, SAW_PERIOD
+from ..functions.sqltext import sql_double_lit
+from ..functions.text import tok_hash_portable_sql
 from ..functions.timeutil import hhmmss
 from ..operators.rollups import rollup_chain, rollup_from_second
 from ..sources.meter_generator import (
@@ -429,8 +431,7 @@ EWMA_WEIGHTS = [EWMA_DECAY**k for k in range(EWMA_LAGS)]
 
 def _ewma_oracle_sql() -> str:
     terms = " + ".join(
-        f"CAST('{w!r}' AS DOUBLE)"
-        f" * COALESCE(lag(joules, {k}) OVER"
+        f"{sql_double_lit(w)} * COALESCE(lag(joules, {k}) OVER"
         " (PARTITION BY said ORDER BY datetime), 0)"
         for k, w in enumerate(EWMA_WEIGHTS)
     )
@@ -515,6 +516,27 @@ grid AS (
   CROSS JOIN range(0, {GAPFILL_MINUTES}) u(b)
 )"""
 
+#: minute-bucket index of ``datetime`` since T0 (the grid's ``b``)
+_GAPFILL_MINUTE_IDX_SQL = (
+    f"CAST(floor((CAST(datetime AS BIGINT) - {T0_EPOCH}) / 60) AS INT)"
+)
+
+
+def _gapfill_observed(spark: SparkSession) -> DataFrame:
+    """The sparse minute input every gap-fill query reads: the minute
+    rollup minus the buckets whose md5-portable hash of
+    ``said:minute-index`` is 0 mod GAPFILL_DROP_MOD — the same
+    predicate as the ``obs`` CTE of GAPFILL_BASE_SQL, so the sparse
+    input is bit-identical in both engines."""
+    key = (
+        "concat(CAST(said AS STRING), ':',"
+        f" CAST({_GAPFILL_MINUTE_IDX_SQL} AS STRING))"
+    )
+    minute = rollup_from_second(meter_samples_second(spark), "minute")
+    return minute.filter(
+        f"{tok_hash_portable_sql(key)} % {GAPFILL_DROP_MOD} != 0"
+    )
+
 
 @register(
     "meter_gapfill_locf_minute",
@@ -539,20 +561,9 @@ def meter_gapfill_locf_minute(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact integer arithmetic. Scale: grid exploded per meter
     (never collected), one equi left join, one said-partitioned
     window."""
-    from ..functions.text import tok_hash_portable
-    from ..operators.rollups import gapfill_locf, rollup_from_second
+    from ..operators.rollups import gapfill_locf
 
-    minute = rollup_from_second(meter_samples_second(spark), "minute")
-    m_idx = (
-        F.floor((F.col("datetime").cast("long") - T0_EPOCH) / 60)
-        .cast("int")
-    )
-    key = F.concat(
-        F.col("said").cast("string"), F.lit(":"), m_idx.cast("string")
-    )
-    observed = minute.filter(
-        tok_hash_portable(key) % GAPFILL_DROP_MOD != 0
-    )
+    observed = _gapfill_observed(spark)
     saids = spark.range(DEFAULT_NUM_METERS).select(
         (F.col("id") + DEFAULT_START_SAID).cast("int").alias("said")
     )
@@ -604,20 +615,9 @@ def meter_gapfill_interpolate_minute(
     shape; the fixed-order double arithmetic (diff, scale, divide,
     add) is shared with the oracle so the interpolated values
     hash-match bit for bit."""
-    from ..functions.text import tok_hash_portable
-    from ..operators.rollups import gapfill_interpolate, rollup_from_second
+    from ..operators.rollups import gapfill_interpolate
 
-    minute = rollup_from_second(meter_samples_second(spark), "minute")
-    m_idx = (
-        F.floor((F.col("datetime").cast("long") - T0_EPOCH) / 60)
-        .cast("int")
-    )
-    key = F.concat(
-        F.col("said").cast("string"), F.lit(":"), m_idx.cast("string")
-    )
-    observed = minute.filter(
-        tok_hash_portable(key) % GAPFILL_DROP_MOD != 0
-    )
+    observed = _gapfill_observed(spark)
     saids = spark.range(DEFAULT_NUM_METERS).select(
         (F.col("id") + DEFAULT_START_SAID).cast("int").alias("said")
     )
@@ -650,20 +650,9 @@ def meter_transmission_gap_report(spark: SparkSession, sf_dir: str) -> DataFrame
     per-meter aggregation; integer-only outputs, fully value-hashed."""
     from pyspark.sql import Window
 
-    from ..functions.text import tok_hash_portable
-    from ..operators.rollups import rollup_from_second
-
-    minute = rollup_from_second(meter_samples_second(spark), "minute")
-    m_idx = (
-        F.floor((F.col("datetime").cast("long") - T0_EPOCH) / 60)
-        .cast("int")
+    observed = _gapfill_observed(spark).selectExpr(
+        "said", f"{_GAPFILL_MINUTE_IDX_SQL} AS b"
     )
-    key = F.concat(
-        F.col("said").cast("string"), F.lit(":"), m_idx.cast("string")
-    )
-    observed = minute.filter(
-        tok_hash_portable(key) % GAPFILL_DROP_MOD != 0
-    ).select("said", m_idx.alias("b"))
     w = Window.partitionBy("said").orderBy("b")
     lagged = observed.select(
         "said", (F.col("b") - F.lag("b").over(w)).alias("gap")

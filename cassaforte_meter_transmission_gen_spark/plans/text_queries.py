@@ -20,15 +20,13 @@ from ..functions.text import (
     ROLLING_BASE,
     ROLLING_MOD,
     ROLLING_PREFIX,
-    lang_hits,
     lang_hits_sql,
-    normalize_text,
     normalize_text_sql,
-    predicted_lang,
     predicted_lang_sql,
     rolling_fingerprint,
-    tokens,
+    tok_hash_portable_sql,
     tokens_sql,
+    word_shingles_sql,
 )
 from ..operators.dedup import (
     MINHASH_A,
@@ -75,7 +73,7 @@ def text_stats_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting + basic document statistics (all JVM built-ins:
     split/size/array_distinct/aggregate)."""
     d = _docs(spark, sf_dir)
-    toks = tokens(F.col("text"))
+    toks = F.expr(tokens_sql("text"))
     return d.select(
         "doc_id",
         "n_chars",
@@ -118,7 +116,7 @@ def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     with. One regexp_extract_all per row, JVM-side, no shuffle."""
     d = _docs(spark, sf_dir)
     bpe = F.expr(f"regexp_extract_all(text, '{_BPE_RE}', 0)")
-    ws = tokens(F.col("text"))
+    ws = F.expr(tokens_sql("text"))
     return d.select(
         "doc_id",
         F.size(bpe).cast("int").alias("n_bpe_tokens"),
@@ -142,7 +140,7 @@ def text_token_top50(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus token frequencies, top 50 (explode → count → top-k)."""
     d = _docs(spark, sf_dir)
     return (
-        d.select(F.explode(tokens(F.col("text"))).alias("tok"))
+        d.select(F.explode(F.expr(tokens_sql("text"))).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").alias("n"))
         .orderBy(F.desc("n"), "tok")
@@ -176,7 +174,7 @@ FROM documents GROUP BY 1
 def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on normalized text (lowercase, collapsed
     whitespace) — catches trivially-reformatted copies."""
-    d = _docs(spark, sf_dir).withColumn("text", normalize_text(F.col("text")))
+    d = _docs(spark, sf_dir).withColumn("text", F.expr(normalize_text_sql("text")))
     return exact_duplicates(d)
 
 
@@ -208,10 +206,9 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     expensive model-based scoring. Exact int/int arithmetic keeps the
     doubles bit-identical to the oracle."""
     d = _docs(spark, sf_dir)
-    toks = tokens(F.col("text"))
-    en = F.array(*[F.lit(w) for w in LANG_MARKERS["en"]])
+    toks = F.expr(tokens_sql("text"))
     stop_ratio = (
-        F.size(F.filter(toks, lambda w: F.array_contains(en, w))).cast("double")
+        F.expr(lang_hits_sql(tokens_sql("text"), "en")).cast("double")
         / F.size(toks)
     )
     vowel_ratio = (
@@ -232,7 +229,10 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _langid_sql() -> str:
+def _langid_oracle_parts() -> tuple[str, str]:
+    """DuckDB text shared by the language-ID oracles: the per-language
+    ``<lang>_hits`` columns over ``toks`` and the CASE chain over them
+    (same tie-break order as functions.text.predicted_lang_sql)."""
     hits = ",\n         ".join(
         f"len(list_filter(toks, w -> w IN ({', '.join(repr(w) for w in ws)}))) AS {lang}_hits"
         for lang, ws in LANG_MARKERS.items()
@@ -245,6 +245,11 @@ def _langid_sql() -> str:
         ]
         branches.append(f"WHEN {' AND '.join(conds)} THEN '{lang}'")
     case = "CASE " + " ".join(branches) + " ELSE 'und' END"
+    return hits, case
+
+
+def _langid_sql() -> str:
+    hits, case = _langid_oracle_parts()
     return f"""
 WITH t AS (
   SELECT doc_id, lang, regexp_split_to_array(text, '\\s+') AS toks FROM documents
@@ -264,10 +269,10 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-voting language ID (n-gram-free heuristic) evaluated as
     a confusion matrix against the labeled ``lang`` column."""
     d = _docs(spark, sf_dir)
-    toks = tokens(F.col("text"))
-    hit_cols = {lang: lang_hits(toks, lang) for lang in LANG_MARKERS}
+    toks = tokens_sql("text")
+    hits = {lang: lang_hits_sql(toks, lang) for lang in LANG_MARKERS}
     return (
-        d.select("lang", predicted_lang(hit_cols).alias("predicted_lang"))
+        d.selectExpr("lang", f"{predicted_lang_sql(hits)} AS predicted_lang")
         .groupBy("lang", "predicted_lang")
         .agg(F.count("*").alias("n_docs"))
     )
@@ -458,10 +463,9 @@ def text_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair join is deliberate and bounded — at scale this runs on samples
     while MinHash handles the full corpus."""
     d = _docs(spark, sf_dir).filter(F.col("doc_id") < 40)
-    toks = tokens(F.col("text"))
-    from ..functions.text import word_shingles
-
-    sh = d.select("doc_id", word_shingles(toks).alias("s")).filter(F.size("s") > 0)
+    sh = d.selectExpr(
+        "doc_id", f"{word_shingles_sql(tokens_sql('text'))} AS s"
+    ).filter(F.size("s") > 0)
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("s_a"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("s_b"))
     inter = F.size(F.array_intersect("s_a", "s_b"))
@@ -700,18 +704,7 @@ def tvf_python_udtf_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _training_prep_sql() -> str:
     en = ",".join(repr(w) for w in LANG_MARKERS["en"])
-    hits = ",\n         ".join(
-        f"len(list_filter(toks, w -> w IN ({', '.join(repr(w) for w in ws)}))) AS {lang}_hits"
-        for lang, ws in LANG_MARKERS.items()
-    )
-    langs = list(LANG_MARKERS)
-    branches = []
-    for lang in langs:
-        conds = [f"{lang}_hits > 0"] + [
-            f"{lang}_hits >= {o}_hits" for o in langs if o != lang
-        ]
-        branches.append(f"WHEN {' AND '.join(conds)} THEN '{lang}'")
-    case = "CASE " + " ".join(branches) + " ELSE 'und' END"
+    hits, case = _langid_oracle_parts()
     return f"""
 WITH d AS (
   SELECT doc_id, text,
@@ -791,10 +784,8 @@ def pipeline_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
     toks = tokens_sql("text")
-    en = ", ".join(f"'{w}'" for w in LANG_MARKERS["en"])
     stop_ratio = (
-        f"CAST(size(filter({toks}, w -> array_contains(array({en}), w)))"
-        f" AS DOUBLE) / size({toks})"
+        f"CAST({lang_hits_sql(toks, 'en')} AS DOUBLE) / size({toks})"
     )
     vowel_ratio = (
         "CAST(length(text) - length(regexp_replace(text, '[aeiou]', ''))"
@@ -884,8 +875,7 @@ def text_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot give at 100 TB. Narrow filter, no shuffle."""
     d = _docs(spark, sf_dir)
     bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("long")
+        F.expr(tok_hash_portable_sql("CAST(doc_id AS STRING)"))
         % 100
     )
     return (
@@ -988,14 +978,12 @@ def text_benchmark_decontamination(spark: SparkSession, sf_dir: str) -> DataFram
     explode of its shingles filtered through that broadcast — no
     shuffle proportional to the corpus, no pairwise join. At 100 TB
     this is a map-side semi-join over the training scan."""
-    from ..functions.text import word_shingles
-
     d = _docs(spark, sf_dir)
-    sh = d.filter(F.size(tokens(F.col("text"))) >= 5).select(
+    sh = d.filter(F.size(F.expr(tokens_sql("text"))) >= 5).select(
         "doc_id",
-        F.explode(word_shingles(tokens(F.col("text")), 5)).alias("s"),
+        F.explode(F.expr(word_shingles_sql(tokens_sql("text"), 5))).alias("s"),
     )
-    h = F.conv(F.substring(F.md5(F.col("s")), 1, 15), 16, 10).cast("long")
+    h = F.expr(tok_hash_portable_sql("s"))
     bench = (
         sh.filter(F.col("doc_id") < 20)
         .select(F.col("doc_id").alias("bench_doc"), h.alias("h"))
@@ -1053,7 +1041,7 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's 1-indexed lists; both engines guard the <2-token edge
     identically (Spark's sequence(1, 0) would DESCEND, not empty)."""
     d = _docs(spark, sf_dir)
-    t = d.select("doc_id", tokens(F.col("text")).alias("toks"))
+    t = d.select("doc_id", F.expr(tokens_sql("text")).alias("toks"))
     bg = F.when(F.size("toks") < 2, F.array().cast("array<string>")).otherwise(
         F.expr(
             "transform(sequence(1, size(toks) - 1),"
@@ -1115,10 +1103,7 @@ def text_per_stratum_fixed_sample(spark: SparkSession, sf_dir: str) -> DataFrame
     approximate stratum counts, then this exact rank over the
     survivors."""
     d = _docs(spark, sf_dir)
-    hkey = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("long")
-    )
+    hkey = F.expr(tok_hash_portable_sql("CAST(doc_id AS STRING)"))
     w = Window.partitionBy("lang").orderBy("hkey", "doc_id")
     return (
         d.select("doc_id", "lang", hkey.alias("hkey"))
@@ -1224,8 +1209,7 @@ def text_lang_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang", F.expr("(min_cnt * 10000) DIV cnt").alias("thr")
     )
     b = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("long")
+        F.expr(tok_hash_portable_sql("CAST(doc_id AS STRING)"))
         % 10000
     )
     return (
@@ -1304,7 +1288,7 @@ def dedup_duplicated_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, pos) against the flagged fps."""
     d = _docs(spark, sf_dir)
     W = SPAN_WINDOW
-    toks = d.select("doc_id", tokens(F.col("text")).alias("toks")).filter(
+    toks = d.select("doc_id", F.expr(tokens_sql("text")).alias("toks")).filter(
         F.size("toks") >= W
     )
     spans = toks.select(
@@ -1408,7 +1392,7 @@ def text_source_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     s = d.groupBy("source").agg(
         F.count("*").alias("n_docs"),
-        F.sum(F.size(tokens(F.col("text")))).cast("long").alias("n_tokens"),
+        F.sum(F.size(F.expr(tokens_sql("text")))).cast("long").alias("n_tokens"),
     )
     w = s.withColumn(
         "weight_ppm",
@@ -1469,7 +1453,7 @@ def pipeline_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame
     return (
         d.select(
             split.alias("split"),
-            F.size(tokens(F.col("text"))).alias("n_toks"),
+            F.size(F.expr(tokens_sql("text"))).alias("n_toks"),
             "n_chars",
             "doc_id",
         )
@@ -1520,7 +1504,7 @@ def text_duplicated_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame
     pairs only, with map-side partial aggregation on each."""
     d = _docs(spark, sf_dir)
     W_ = SPAN_WINDOW
-    toks = d.select("doc_id", tokens(F.col("text")).alias("toks")).filter(
+    toks = d.select("doc_id", F.expr(tokens_sql("text")).alias("toks")).filter(
         F.size("toks") >= W_
     )
     w = toks.select(
@@ -1925,17 +1909,13 @@ def pipeline_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge exactly (the property a resumable 100 TB delivery needs:
     regenerate any shard independently and verify it byte-for-byte
     without re-reading the others)."""
-    from ..functions.text import tok_hash_portable
-
     d = _docs(spark, sf_dir)
     shard = (
         ((F.col("doc_id") % SHUFFLE_ID_MOD) * SHUFFLE_HASH_A)
         % SHUFFLE_HASH_MOD
     ) % N_SHARDS
-    row_fp = tok_hash_portable(
-        F.concat(
-            F.col("doc_id").cast("string"), F.lit(":"), F.md5(F.col("text"))
-        )
+    row_fp = F.expr(
+        tok_hash_portable_sql("concat(CAST(doc_id AS STRING), ':', md5(text))")
     )
     return (
         d.select(
@@ -2003,14 +1983,15 @@ def text_weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     projections; the top-k plans as TakeOrderedAndProject (per-partition
     heaps — no global sort at 100 TB)."""
     from ..functions.detmath import det_ln_stage_exprs
-    from ..functions.text import tok_hash_portable
 
     st = det_ln_stage_exprs()
     d = load_table(spark, sf_dir, "documents")
     h = d.select(
         "doc_id",
         "n_chars",
-        (tok_hash_portable(F.col("doc_id").cast("string")) % ES_SAMPLE_MOD).alias("hv"),
+        (
+            F.expr(tok_hash_portable_sql("CAST(doc_id AS STRING)")) % ES_SAMPLE_MOD
+        ).alias("hv"),
     )
     hx = h.selectExpr(
         "doc_id",
@@ -2097,7 +2078,7 @@ def text_unigram_logprob_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     st = det_ln_stage_exprs()
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
+    toks = d.select("doc_id", F.explode(F.expr(tokens_sql("text"))).alias("tok"))
     vocab = toks.groupBy("tok").agg(F.count("*").alias("cnt"))
     total = int(vocab.agg(F.sum("cnt")).collect()[0][0])
     vx = vocab.selectExpr(
@@ -2180,7 +2161,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     st = det_ln_stage_exprs()
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
+    toks = d.select("doc_id", F.explode(F.expr(tokens_sql("text"))).alias("tok"))
     tf = toks.groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
     df = tf.groupBy("tok").agg(F.count("*").alias("df"))
     n_docs = int(toks.select("doc_id").distinct().count())
@@ -2312,11 +2293,10 @@ def text_bigram_logprob_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     an LM weights every occurrence); docs under 2 tokens are excluded
     by construction."""
     from ..functions.detmath import det_ln_stage_exprs
-    from ..functions.text import tokens
 
     st = det_ln_stage_exprs()
     d = load_table(spark, sf_dir, "documents")
-    tk = d.select("doc_id", tokens(F.col("text")).alias("toks")).filter(
+    tk = d.select("doc_id", F.expr(tokens_sql("text")).alias("toks")).filter(
         F.size("toks") >= 2
     )
     t = tk.select(
@@ -2404,7 +2384,7 @@ def text_inverted_index_postings(
     has no retrieval surface (core.clj); §2.10 retrieval family."""
     d = _docs(spark, sf_dir)
     tok = d.select(
-        "doc_id", F.explode(tokens(F.col("text"))).alias("term")
+        "doc_id", F.explode(F.expr(tokens_sql("text"))).alias("term")
     )
     per_doc = tok.groupBy("term", "doc_id").agg(
         F.count("*").cast("long").alias("tf")
@@ -2456,7 +2436,7 @@ def pipeline_feature_hashing_sparse(
     makes it the 100 TB-friendly featurizer.
 
     Deterministic: the bucket is the md5-prefix hash both engines
-    compute bit-identically (functions.text.tok_hash_portable — the
+    compute bit-identically (functions.text.tok_hash_portable_sql — the
     same hash every sampler/shard assignment in the catalog uses), so
     the triples are value-hash gated exactly. The gated query samples
     every 20th document to keep the compared row set bounded; the full
@@ -2466,17 +2446,15 @@ def pipeline_feature_hashing_sparse(
     Scale: explode → groupBy(doc_id, feature_id) partial-aggregates
     map-side; the shuffle carries int64 triples, never text. Output is
     the sparse COO layout the packing writer shards by doc_id."""
-    from ..functions.text import tok_hash_portable
-
     d = _docs(spark, sf_dir).filter(
         F.col("doc_id") % FEATHASH_STRIDE == 0
     )
     tok = d.select(
-        "doc_id", F.explode(tokens(F.col("text"))).alias("term")
+        "doc_id", F.explode(F.expr(tokens_sql("text"))).alias("term")
     )
     return tok.select(
         "doc_id",
-        (tok_hash_portable(F.col("term")) % FEATHASH_DIM).alias(
+        (F.expr(tok_hash_portable_sql("term")) % FEATHASH_DIM).alias(
             "feature_id"
         ),
     ).groupBy("doc_id", "feature_id").agg(
@@ -2875,7 +2853,7 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     st = det_ln_stage_exprs()
     d = _docs(spark, sf_dir)
-    t = d.select(tokens(F.col("text")).alias("toks"))
+    t = d.select(F.expr(tokens_sql("text")).alias("toks"))
     bg = t.selectExpr(
         "explode(arrays_zip(slice(toks, 1, size(toks) - 1),"
         " slice(toks, 2, size(toks) - 1))) AS p"
@@ -3215,14 +3193,12 @@ def pipeline_group_aware_split_leakage(
     Scale shape: one scan projects (doc_id, fp, two pure-arithmetic
     split labels); one fingerprint groupBy with two small DISTINCTs
     inside bounded groups; a one-row summary aggregate."""
-    from ..functions.text import tok_hash_portable
-
     d = _docs(spark, sf_dir)
     naive_pct = (
         ((F.col("doc_id") % SHUFFLE_ID_MOD) * SPLIT_HASH_A) % SHUFFLE_HASH_MOD
     ) % 100
     fp = F.md5(F.substring("text", 1, 64))
-    aware_pct = tok_hash_portable(F.col("fp")) % 100
+    aware_pct = F.expr(tok_hash_portable_sql("fp")) % 100
     s = d.select(fp.alias("fp"), naive_pct.alias("naive_pct")).select(
         "fp",
         F.when(F.col("naive_pct") < 80, F.lit("train"))
@@ -3389,12 +3365,11 @@ def text_zipf_rank_frequency_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     from ..functions.detmath import det_ln_stage_exprs
-    from ..functions.text import tokens
 
     st = det_ln_stage_exprs()
     d = _docs(spark, sf_dir)
     top = (
-        d.select(F.explode(tokens(F.col("text"))).alias("tok"))
+        d.select(F.explode(F.expr(tokens_sql("text"))).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").alias("n"))
         .orderBy(F.desc("n"), "tok")
@@ -3854,7 +3829,7 @@ def text_chunk_sliding_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage whose cost is the regexp split it already shares with every
     token-level query."""
     d = _docs(spark, sf_dir).select(
-        "doc_id", tokens(F.col("text")).alias("toks")
+        "doc_id", F.expr(tokens_sql("text")).alias("toks")
     )
     s = d.select(
         "doc_id",
@@ -3943,16 +3918,14 @@ def content_defined_chunks(docs: DataFrame) -> DataFrame:
     the streaming incremental-dedup ledger (which chunks each
     micro-batch with this exact plan, so the streamed ledger is
     definitionally the batch derivation)."""
-    from ..functions.text import tok_hash_portable
-
-    d = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
+    d = docs.select("doc_id", F.expr(tokens_sql("text")).alias("toks"))
     t = d.select(
         "doc_id", F.posexplode("toks").alias("pos", "tok")
     )
     b = t.withColumn(
         "cut_after",
         F.when(
-            tok_hash_portable(F.col("tok")) % CDC_BOUNDARY_MOD == 0, 1
+            F.expr(tok_hash_portable_sql("tok")) % CDC_BOUNDARY_MOD == 0, 1
         ).otherwise(0),
     )
     w = (
@@ -4073,7 +4046,7 @@ def text_chi2_token_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     output bounded by classes × K."""
     d = _docs(spark, sf_dir)
     pres = d.select(
-        "doc_id", "lang", F.explode(tokens(F.col("text"))).alias("tok")
+        "doc_id", "lang", F.explode(F.expr(tokens_sql("text"))).alias("tok")
     ).distinct()
     a = pres.groupBy("tok", "lang").agg(F.count("*").cast("long").alias("a"))
     dfreq = a.groupBy("tok").agg(F.sum("a").cast("long").alias("df"))
@@ -4258,11 +4231,9 @@ def text_naive_bayes_langid_confusion(
 def nb_split_docs(docs: DataFrame) -> DataFrame:
     """The NB train/test splitter: portable doc_id hash mod
     NB_SPLIT_MOD, bucket 0 held out (adds ``is_test``)."""
-    from ..functions.text import tok_hash_portable
-
     return docs.withColumn(
         "is_test",
-        tok_hash_portable(F.col("doc_id").cast("string")) % NB_SPLIT_MOD == 0,
+        F.expr(tok_hash_portable_sql("CAST(doc_id AS STRING)")) % NB_SPLIT_MOD == 0,
     )
 
 
@@ -4272,7 +4243,7 @@ def nb_train_counts(train: DataFrame) -> DataFrame:
     Additivity is what lets the streaming twin maintain this table per
     micro-batch under the exactly-once commit-log protocol."""
     ttoks = train.select(
-        "lang", F.explode(tokens(F.col("text"))).alias("tok")
+        "lang", F.explode(F.expr(tokens_sql("text"))).alias("tok")
     )
     return ttoks.groupBy("lang", "tok").agg(
         F.count("*").cast("long").alias("cnt")
@@ -4324,7 +4295,7 @@ def nb_confusion_from_counts(
     etoks = test.select(
         "doc_id",
         F.col("lang").alias("actual_lang"),
-        F.explode(tokens(F.col("text"))).alias("tok"),
+        F.explode(F.expr(tokens_sql("text"))).alias("tok"),
     )
     edocs = etoks.groupBy("doc_id", "actual_lang").agg(
         F.count("*").cast("long").alias("n_tokens")

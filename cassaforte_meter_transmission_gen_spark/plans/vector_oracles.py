@@ -27,6 +27,7 @@ from __future__ import annotations
 import functools
 import re
 
+from ..functions.sqltext import sql_double_lit
 from ..operators.similarity import KMEANS_SCALE, hyperplanes
 
 
@@ -61,11 +62,6 @@ NORM = (
 )
 
 
-def _dlit(x: float) -> str:
-    """Exact double literal (string→double is correctly rounded)."""
-    return f"CAST('{x!r}' AS DOUBLE)"
-
-
 def _cosine(a: str, b: str) -> str:
     return (
         f"{DOT.format(a=a, b=b)}"
@@ -75,8 +71,8 @@ def _cosine(a: str, b: str) -> str:
 
 def _plane_proj(v: str, plane: list[float]) -> str:
     """Sequential-fold projection of ``v`` onto a hyperplane literal —
-    mirrors operators.similarity.lsh_bucket's per-plane aggregate."""
-    lst = "[" + ", ".join(_dlit(x) for x in plane) + "]"
+    mirrors operators.similarity._buckets_sql's per-plane aggregate."""
+    lst = "[" + ", ".join(sql_double_lit(x) for x in plane) + "]"
     return (
         "list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
         f" list_transform(range(1, {DIM + 1}),"
@@ -86,7 +82,7 @@ def _plane_proj(v: str, plane: list[float]) -> str:
 
 
 def _bucket(v: str, planes: list[list[float]]) -> str:
-    """Sign-bit bucket id — mirrors lsh_bucket's bit accumulation."""
+    """Sign-bit bucket id — mirrors _buckets_sql's bit accumulation."""
     bits = [
         f"CASE WHEN {_plane_proj(v, p)} >= 0 THEN {1 << i} ELSE 0 END"
         for i, p in enumerate(planes)
@@ -268,7 +264,7 @@ def _kmeans_chain(
         train_sample_sql,
     )
 
-    s = _dlit(KMEANS_SCALE)
+    s = sql_double_lit(KMEANS_SCALE)
     p = prefix
     parts: list[str] = []
     if train_sample_denom is None:
@@ -420,7 +416,7 @@ scored AS (
   JOIN eb ON eb.vec_id = b.vec_id
 )
 SELECT dup_a, dup_b, cosine FROM scored
-WHERE cosine >= {_dlit(threshold)}""")
+WHERE cosine >= {sql_double_lit(threshold)}""")
     return "\n".join(parts)
 
 
@@ -445,8 +441,8 @@ def _int8_topk_prep_cte() -> str:
     return f"""q8 AS (
   SELECT vec_id, v,
          list_transform(v, x -> CAST(floor(x / (greatest({_q_maxabs('v')},
-           {_dlit(INT8_EPS)}) / {_dlit(127.0)})) AS BIGINT)) AS qv,
-         greatest({_q_maxabs('v')}, {_dlit(INT8_EPS)}) / {_dlit(127.0)} AS qscale,
+           {sql_double_lit(INT8_EPS)}) / {sql_double_lit(127.0)})) AS BIGINT)) AS qv,
+         greatest({_q_maxabs('v')}, {sql_double_lit(INT8_EPS)}) / {sql_double_lit(127.0)} AS qscale,
          {NORM.format(v='v')} AS nrm
   FROM e
 )"""

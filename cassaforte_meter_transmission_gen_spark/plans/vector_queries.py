@@ -13,7 +13,7 @@ import pandas as pd  # module-level: pandas_udf type hints must resolve
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.similarity import brute_force_topk, l2_norm, lsh_topk
+from ..operators.similarity import brute_force_topk, l2_norm_sql, lsh_topk
 from ..schemas import load_table
 from . import vector_oracles
 from .catalog import register
@@ -48,7 +48,7 @@ def vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector L2 norm — JVM-side fold over the array column, no
     explode, no shuffle."""
     e = _emb(spark, sf_dir)
-    return e.select("vec_id", "label", l2_norm(F.col("embedding")).alias("l2_norm"))
+    return e.selectExpr("vec_id", "label", f"{l2_norm_sql('embedding')} AS l2_norm")
 
 
 @register(

@@ -30,15 +30,6 @@ METER_SAMPLES_SECOND = T.StructType(
     ]
 )
 
-# minute / hour / day share one shape; COUNTER → LongType sum.
-METER_SAMPLES_GRAIN = T.StructType(
-    [
-        T.StructField("said", T.IntegerType(), False),
-        T.StructField("datetime", T.TimestampType(), False),
-        T.StructField("joules", T.LongType(), False),
-    ]
-)
-
 # --- Group B: driver corpus ---
 
 CORPUS_TABLES = (

@@ -28,17 +28,27 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
+#: the confs results depend on: :func:`configure` raises when one of
+#: these cannot be set instead of silently running without it
+_REQUIRED_CONFS = (
+    "spark.sql.session.timeZone",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+
 
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply the engine's runtime confs to an externally-owned session."""
+    """Apply the engine's runtime confs to an externally-owned session.
+
+    The AQE and Arrow confs are optional (the engine still functions
+    without them, only slower), so a failure to set one is tolerated;
+    a failure to set one of ``_REQUIRED_CONFS`` raises, because
+    parity with the oracle depends on it."""
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            # Non-settable on this build — engine still functions; UTC
-            # only matters for oracle comparison, which the driver runs
-            # on sessions where this succeeds.
-            pass
+        except Exception as e:
+            if k in _REQUIRED_CONFS:
+                raise RuntimeError(f"cannot set required conf {k}={v}") from e
     return spark
 
 

@@ -298,13 +298,17 @@ def bounded_second_stream(
 ) -> tuple[DataFrame, str]:
     """Deterministic bounded stream for tests/oracle checks: stage the
     batch-generated second-grain table as parquet, then re-read it as a
-    file stream (schema-pinned). Returns (stream, staged_path)."""
+    file stream (schema-pinned). Returns (stream, staged_path).
+
+    Staged as at least 32 files whatever the core count (files are
+    capped at 1/32 of the known row count), so a drain at 8 files per
+    trigger always spans several micro-batches."""
     stage = stage_dir or tempfile.mkdtemp(prefix="meter_stream_")
     if stage_dir is None:  # only reclaim dirs this function created
         atexit.register(shutil.rmtree, stage, ignore_errors=True)
     meter_samples_second(spark, num_meters=num_meters, seconds=seconds).write.mode(
         "overwrite"
-    ).parquet(stage)
+    ).option("maxRecordsPerFile", -(-num_meters * seconds // 32)).parquet(stage)
     stream = (
         spark.readStream.schema(METER_SAMPLES_SECOND)
         .option("maxFilesPerTrigger", 8)

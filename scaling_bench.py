@@ -44,6 +44,7 @@ from cassaforte_meter_transmission_gen_spark.session import get_spark  # noqa: E
 from cassaforte_meter_transmission_gen_spark.sources.scaling import (  # noqa: E402
     stage_scaled_corpus,
 )
+from parity_report import REPO, _infer_round  # noqa: E402
 
 BASE_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 STAGE_ROOT = os.environ.get(
@@ -53,20 +54,6 @@ STAGE_ROOT = os.environ.get(
 #: growth-ratio acceptance band for a 10× corpus: near-linear plus
 #: fixed overhead (the judge's "≤ ~12×/10×" bar)
 LINEAR_RATIO_CAP = 12.0
-
-
-def _round_out_path() -> str:
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
-        if (m := re.search(r"BENCH_r(\d+)\.json$", p))
-    ]
-    rnd = (max(rounds) + 1) if rounds else 1
-    return os.path.join(here, f"SCALING_r{rnd:02d}.json")
 
 
 def main() -> None:
@@ -84,7 +71,9 @@ def main() -> None:
     args = ap.parse_args()
     scales = sorted({int(s) for s in args.scales.split(",") if s})
     queries = [q for q in args.queries.split(",") if q]
-    out_path = args.out or _round_out_path()
+    out_path = args.out or os.path.join(
+        REPO, f"SCALING_r{_infer_round():02d}.json"
+    )
 
     corpora: dict[int, dict] = {}
     for k in scales:

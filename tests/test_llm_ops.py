@@ -750,11 +750,11 @@ def test_shard_manifest_detects_tamper_and_merges(spark, sf_small):
             % tq.SHUFFLE_HASH_MOD
         ) % tq.N_SHARDS
         from cassaforte_meter_transmission_gen_spark.functions.text import (
-            tok_hash_portable,
+            tok_hash_portable_sql,
         )
 
-        fp = tok_hash_portable(
-            F.concat(F.col("doc_id").cast("string"), F.lit(":"), F.md5("text"))
+        fp = F.expr(
+            tok_hash_portable_sql("concat(CAST(doc_id AS STRING), ':', md5(text))")
         )
         return {
             r["shard_id"]: (r["n_docs"], r["fp"])
@@ -1020,14 +1020,14 @@ def test_prefix_filter_candidates_prune_vs_all_pairs(spark, sf_small):
     from pyspark.sql import functions as F
 
     from cassaforte_meter_transmission_gen_spark.functions.text import (
-        tokens,
-        word_shingles,
+        tokens_sql,
+        word_shingles_sql,
     )
 
     docs = spark.read.parquet(f"{sf_small}/documents.parquet")
     sh = docs.select(
         F.col("doc_id").alias("did"),
-        word_shingles(tokens(F.col("text"))).alias("s"),
+        F.expr(word_shingles_sql(tokens_sql("text"))).alias("s"),
     ).filter(F.size("s") > 0)
     n = sh.count()
     ex = sh.select(

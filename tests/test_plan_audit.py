@@ -916,10 +916,10 @@ def test_pmi_bigram_extraction_shuffle_free(spark, sf_small):
     survivor joins may exchange."""
     from pyspark.sql import functions as F
 
-    from cassaforte_meter_transmission_gen_spark.functions.text import tokens
+    from cassaforte_meter_transmission_gen_spark.functions.text import tokens_sql
 
     docs = spark.read.parquet(f"{sf_small}/documents.parquet")
-    bg = docs.select(tokens(F.col("text")).alias("toks")).selectExpr(
+    bg = docs.select(F.expr(tokens_sql("text")).alias("toks")).selectExpr(
         "explode(arrays_zip(slice(toks, 1, size(toks) - 1),"
         " slice(toks, 2, size(toks) - 1))) AS p"
     )

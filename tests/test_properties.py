@@ -582,3 +582,87 @@ def test_split_assignment_stable_under_corpus_growth(prefix_n):
     full = {d: split_of(d) for d in range(1000)}
     prefix = {d: split_of(d) for d in range(prefix_n)}
     assert all(full[d] == s for d, s in prefix.items())
+
+
+# ------------------------------------- single cross-engine definitions
+
+#: strings both engines hash from the same UTF-8 bytes: no surrogates
+#: (not encodable) and no control characters (DuckDB rejects NUL)
+_PORTABLE_TEXT = st.text(
+    alphabet=st.characters(blacklist_categories=("Cs", "Cc")), max_size=40
+)
+
+
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(st.lists(_PORTABLE_TEXT, min_size=1, max_size=50))
+def test_tok_hash_portable_sql_matches_duckdb_and_hashlib(spark, strs):
+    """functions.text.tok_hash_portable_sql is the one Spark-side
+    definition of the md5-portable hash: evaluated in Spark it equals
+    DuckDB's ``CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)`` (the
+    oracles' spelling) and a hashlib model, for arbitrary strings."""
+    import hashlib
+
+    import duckdb
+
+    from cassaforte_meter_transmission_gen_spark.functions.text import (
+        tok_hash_portable_sql,
+    )
+
+    df = spark.createDataFrame([(i, s) for i, s in enumerate(strs)], "i int, s string")
+    got = {
+        r["i"]: r["h"]
+        for r in df.selectExpr("i", f"{tok_hash_portable_sql('s')} AS h").collect()
+    }
+    duck = dict(
+        duckdb.execute(
+            "SELECT i, CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)"
+            " FROM (SELECT unnest(?) AS i, unnest(?) AS s)",
+            [list(range(len(strs))), strs],
+        ).fetchall()
+    )
+    for i, s in enumerate(strs):
+        want = int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
+        assert got[i] == duck[i] == want, (s, got[i], duck[i], want)
+
+
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    st.lists(
+        st.lists(st.sampled_from(["a", "b", "cd"]), max_size=9),
+        min_size=1,
+        max_size=30,
+    ),
+    st.integers(1, 5),
+)
+def test_word_shingles_sql_matches_python_ngram_model(spark, docs, n):
+    """``word_shingles_sql(tokens_sql(text), n)`` is the distinct word
+    n-grams in first-occurrence order — empty for docs shorter than n
+    tokens (the empty doc splits to one empty token), repeated
+    shingles kept once. A 3-word alphabet forces repeats."""
+    import re
+
+    from cassaforte_meter_transmission_gen_spark.functions.text import (
+        tokens_sql,
+        word_shingles_sql,
+    )
+
+    texts = [" ".join(d) for d in docs]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    got = {
+        r["i"]: r["s"]
+        for r in df.selectExpr(
+            "i", f"{word_shingles_sql(tokens_sql('text'), n)} AS s"
+        ).collect()
+    }
+    for i, text in enumerate(texts):
+        toks = re.split(r"\s+", text)
+        grams = [" ".join(toks[j:j + n]) for j in range(len(toks) - n + 1)]
+        assert got[i] == list(dict.fromkeys(grams)), (text, n, got[i])

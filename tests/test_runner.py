@@ -194,3 +194,48 @@ def test_live_runner_compaction_keeps_readers_consistent(spark, tmp_path):
     # plus slack for the one-cycle deferred deletion
     n_dirs = sum(1 for d in os.listdir(second_path) if d.startswith("batch="))
     assert n_dirs <= 8 + 4 + 4, f"{n_dirs} batch dirs survived compaction"
+
+
+class _FailingConf:
+    """A session conf whose ``set`` raises for the listed keys."""
+
+    def __init__(self, failing):
+        self.failing = set(failing)
+        self.values = {}
+
+    def set(self, key, value):
+        if key in self.failing:
+            raise RuntimeError(f"cannot modify {key}")
+        self.values[key] = value
+
+
+class _FakeSession:
+    def __init__(self, failing):
+        self.conf = _FailingConf(failing)
+
+
+def test_configure_raises_when_a_parity_conf_cannot_be_set():
+    """UTC session time and nanos-as-long parquet reads are what oracle
+    parity depends on: ``configure`` must fail loudly when either cannot
+    be set, and still tolerate the optional AQE and Arrow confs."""
+    from cassaforte_meter_transmission_gen_spark.session import (
+        RUNTIME_CONFS,
+        configure,
+    )
+
+    optional = [
+        "spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+        "spark.sql.adaptive.skewJoin.enabled",
+        "spark.sql.execution.arrow.pyspark.enabled",
+    ]
+    s = configure(_FakeSession(optional))
+    assert s.conf.values == {
+        k: v for k, v in RUNTIME_CONFS.items() if k not in optional
+    }
+    for required in (
+        "spark.sql.session.timeZone",
+        "spark.sql.legacy.parquet.nanosAsLong",
+    ):
+        with pytest.raises(RuntimeError, match=required):
+            configure(_FakeSession([required]))

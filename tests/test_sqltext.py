@@ -1,14 +1,20 @@
 """SQL splice-point safety (functions.sqltext — ADVICE r7): escaped
-string literals agree across engines, identifiers validate loud, and a
-quote inside a BM25 query term is data, not syntax."""
+string literals agree across engines, exact double literals round-trip
+bit for bit, identifiers validate loud, and a quote inside a BM25 query
+term is data, not syntax."""
 
 from __future__ import annotations
 
+import struct
+
 import duckdb
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from cassaforte_meter_transmission_gen_spark.functions.sqltext import (
     safe_ident,
+    sql_double_lit,
     sql_str_lit,
 )
 
@@ -77,3 +83,22 @@ def test_bloom_and_cms_reject_expression_keys(spark, sf_small):
         bloom_build(orders, "o_orderkey + 1")
     with pytest.raises(ValueError):
         cms_build(orders, "o_orderkey); DROP")
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    st.lists(
+        st.floats(allow_nan=False, allow_infinity=False), min_size=1, max_size=50
+    )
+)
+def test_sql_double_lit_roundtrips_bit_exactly_in_both_engines(spark, xs):
+    """``sql_double_lit`` — the one exact double literal the generated
+    Spark text and the DuckDB oracles share — evaluates to the SAME
+    float64 bits as its input in both engines, for any finite double
+    (signed zero, subnormals and extremes included)."""
+    lits = ", ".join(f"{sql_double_lit(x)} AS v{i}" for i, x in enumerate(xs))
+    want = [struct.pack("<d", x) for x in xs]
+    from_spark = spark.sql(f"SELECT {lits}").head()
+    from_duck = duckdb.sql(f"SELECT {lits}").fetchone()
+    assert [struct.pack("<d", v) for v in from_spark] == want
+    assert [struct.pack("<d", v) for v in from_duck] == want

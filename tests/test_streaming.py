@@ -352,7 +352,9 @@ def test_restart_after_crash_is_exactly_once(spark, tmp_path):
 
     n_meters, seconds = 2, 600
     stage = str(tmp_path / "stage")
-    transmissions(spark, num_meters=n_meters, seconds=seconds).write.parquet(stage)
+    transmissions(
+        spark, num_meters=n_meters, seconds=seconds, slices=32
+    ).write.parquet(stage)
 
     def stream():
         return (
