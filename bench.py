@@ -225,6 +225,9 @@ def main() -> None:
     # a 100 TB deployment pays per query.
     import atexit
 
+    from cassaforte_meter_transmission_gen_spark.operators.similarity import (
+        IVFPQ_SUBSPACES,
+    )
     from cassaforte_meter_transmission_gen_spark.sources.ann_store import (
         ANN_STORE_ENV,
         trained_ivf_centroids,
@@ -242,7 +245,9 @@ def main() -> None:
         ("pq16_codebooks", lambda: trained_pq_codebooks(spark, sf_dir)),
         (
             "pq8_codebooks",
-            lambda: trained_pq_codebooks(spark, sf_dir, n_subspaces=8),
+            lambda: trained_pq_codebooks(
+                spark, sf_dir, n_subspaces=IVFPQ_SUBSPACES
+            ),
         ),
         # index-DATA builds (encode/assign scans, paid once per corpus
         # like the parameter training above): the serve queries read

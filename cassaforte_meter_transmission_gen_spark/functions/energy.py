@@ -26,7 +26,6 @@ SAW_PERIOD = 120
 
 #: golden value: sum(first 15000 of cycle 0..119) = 125 * 7140 = 892500,
 #: so every meter-second has joules = int(892500/15000) = 59 (BASELINE.md).
-TICK_SUM = 892500.0
 TICK_JOULES = 59
 
 

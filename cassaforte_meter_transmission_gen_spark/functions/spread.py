@@ -10,7 +10,9 @@ session's default parallelism BEFORE the heavy narrow work; the shuffle
 of the small raw rows is cheap relative to the compute it parallelizes.
 
 The gate is METADATA-only (``df.inputFiles()`` — a catalog listing —
-plus local file sizes): at 100 TB inputs arrive as many files and/or
+plus each file's length from its Hadoop ``FileSystem`` status, so any
+URI scheme — ``file:``, ``hdfs:``, object stores — is sized the same
+way): at 100 TB inputs arrive as many files and/or
 enough bytes that the scan splits by ``maxPartitionBytes`` on its own,
 so the helper is a structural no-op there — it exists purely to guard
 the small-file edge (guide §2.5 "input skew": one huge unsplittable
@@ -24,9 +26,7 @@ the same guard instead of re-deriving it.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 #: compressed input bytes per spread task. The spread exists for scans
 #: feeding CPU-DENSE narrow work (regexp tokenization, shingle/vector
@@ -51,6 +51,17 @@ SPREAD_TASK_BYTES = 64 << 10
 SPREAD_MIN_TASKS = 8
 
 
+def _input_bytes(spark: SparkSession, files: list[str]) -> int:
+    """Total length of ``files`` from their Hadoop FileSystem status."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    total = 0
+    for f in files:
+        path = jvm.org.apache.hadoop.fs.Path(f)
+        total += path.getFileSystem(conf).getFileStatus(path).getLen()
+    return total
+
+
 def spread_small_scan(df: DataFrame) -> DataFrame:
     """Repartition ``df`` iff it reads from fewer files than there are
     cores AND the bytes are too small for the scan to split on its own
@@ -59,8 +70,9 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
     from the input bytes (:data:`SPREAD_TASK_BYTES` per task, floored
     at :data:`SPREAD_MIN_TASKS`, capped at default parallelism) — see
     the constant's note for the measured task right-sizing rationale.
-    Non-file sources (in-memory test fixtures) get the full-parallelism
-    spread — they are small by construction and byte-less."""
+    Non-file sources (in-memory test fixtures) and files whose status
+    cannot be read get the full-parallelism spread — they are small by
+    construction and byte-less."""
     sc = df.sparkSession.sparkContext
     par = sc.defaultParallelism
     try:
@@ -69,15 +81,13 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
         files = []
     if len(files) >= par:
         return df
-    local = [f[7:] if f.startswith("file://") else None for f in files]
-    if files and all(p is not None for p in local):
-        try:
-            total = sum(os.path.getsize(p) for p in local)
-            if total >= par * (2 << 20):
-                return df
-            n = min(par, max(min(SPREAD_MIN_TASKS, par),
-                             -(-total // SPREAD_TASK_BYTES)))
-            return df.repartition(n)
-        except OSError:
-            pass
-    return df.repartition(par)
+    try:
+        total = _input_bytes(df.sparkSession, files) if files else None
+    except Exception:  # unreadable status: spread fully (as byte-less)
+        total = None
+    if total is None:
+        return df.repartition(par)
+    if total >= par * (2 << 20):
+        return df
+    n = min(par, max(min(SPREAD_MIN_TASKS, par), -(-total // SPREAD_TASK_BYTES)))
+    return df.repartition(n)

@@ -24,8 +24,11 @@ explode + groupBy shape shuffles one (doc_id, hash) row per shingle —
 at 100 TB that exchange dwarfs the actual hashing work, and measured
 16× slower even at sf0.1 (tests/test_plan_audit.py locks the shape).
 
-Hash family is pluggable (functions.text): md5-portable for the oracle
-gate, xxhash64 for production throughput.
+Signatures hash with the md5-portable 60-bit hash
+(functions.text.tok_hash_portable_sql), which the DuckDB oracles
+re-derive bit for bit. The embedding near-dup configurations (LSH
+tables × planes, k-means cells) are the shared constants of
+operators.similarity.
 """
 
 from __future__ import annotations
@@ -39,10 +42,20 @@ from ..functions.spread import spread_small_scan
 
 from ..functions.text import (
     MINHASH_PRIME,
-    tok_hash_fast_sql,
     tok_hash_portable_sql,
     tokens_sql,
     word_shingles_sql,
+)
+from .similarity import (
+    IVF_CLUSTERS,
+    LSH_DEDUP,
+    LSH_HI,
+    _bucket_keys,
+    _normed,
+    assign_to_centroid,
+    cosine_pre_sql,
+    kmeans_centroids,
+    lsh_tables,
 )
 
 # --- MinHash permutation constants (fixed seed; also embedded into the
@@ -61,14 +74,18 @@ SIMHASH_BITS = 60
 SIMHASH_BLOCKS = 4
 SIMHASH_BLOCK_BITS = SIMHASH_BITS // SIMHASH_BLOCKS  # 15
 
+#: word-shingle width of every shingle-set operator here
+SHINGLE_N = 3
 
-def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup groups: md5 fingerprint → (fingerprint, keeper id,
-    copy count). Keeper = min id (deterministic)."""
+
+def exact_duplicates(df: DataFrame) -> DataFrame:
+    """Exact dedup groups over a ``documents``-shaped frame (doc_id,
+    text): md5 fingerprint → (fingerprint, keeper id, copy count).
+    Keeper = min id (deterministic)."""
     return (
-        df.groupBy(F.md5(F.col(text_col)).alias("fingerprint"))
+        df.groupBy(F.md5(F.col("text")).alias("fingerprint"))
         .agg(
-            F.min(id_col).alias("keeper_id"),
+            F.min("doc_id").alias("keeper_id"),
             F.count("*").alias("n_copies"),
         )
     )
@@ -80,7 +97,7 @@ def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
 _spread = spread_small_scan
 
 
-def _shingled(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+def _shingled(df: DataFrame) -> DataFrame:
     # filter on token COUNT before projecting the shingle array: a
     # filter on size(shingles) would make Catalyst inline the whole
     # shingle expression into the Filter and re-evaluate it in the
@@ -90,39 +107,32 @@ def _shingled(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     # contract). Built as server-parsed SQL strings (r14): the Column
     # form paid ~100 py4j round trips of pure driver latency per build
     # — same expression tree, two round trips (see functions.text).
-    toks = tokens_sql(f"`{text_col}`")
+    toks = tokens_sql("`text`")
     return (
         _spread(df)
-        .where(f"size({toks}) >= {n}")
+        .where(f"size({toks}) >= {SHINGLE_N}")
         .selectExpr(
-            f"`{id_col}` AS doc_id",
-            f"{word_shingles_sql(toks, n)} AS shingles",
+            "`doc_id` AS doc_id",
+            f"{word_shingles_sql(toks, SHINGLE_N)} AS shingles",
         )
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    portable: bool = True,
-) -> DataFrame:
+def minhash_signatures(df: DataFrame) -> DataFrame:
     """(doc_id, m0..m{N_PERM-1}) minhash signature as one narrow
     per-row projection — see `_signatures_from_shingles` for why this
     deliberately avoids the explode + groupBy(min) shape."""
-    sh = _shingled(df, text_col, id_col, n)
-    return _signatures_from_shingles(sh, portable)
+    return _signatures_from_shingles(_shingled(df))
 
 
-def _signatures_from_shingles(sh: DataFrame, portable: bool) -> DataFrame:
+def _signatures_from_shingles(sh: DataFrame) -> DataFrame:
     # Per-row form: hash the shingle array once, then one array_min per
     # permutation — a single narrow Project, NO explode and NO shuffle.
     # Same values as the explode+groupBy(min) shape (min over the same
     # multiset), but the whole signature is computed inside one
     # WholeStageCodegen span where the hash array is CSE-shared; at
     # scale this removes the (doc_id, h)-keyed exchange entirely.
-    hash_sql = (tok_hash_portable_sql if portable else tok_hash_fast_sql)("s")
+    hash_sql = tok_hash_portable_sql("s")
     # whole projection as server-parsed strings in TWO selectExpr round
     # trips (r14; the Column/lambda form paid ~10 py4j trips per
     # permutation plus the hash-transform lambda); long arithmetic is
@@ -171,14 +181,7 @@ def _band_keys(sig: DataFrame) -> DataFrame:
     ).selectExpr("doc_id", "bk.band_idx AS band_idx", "bk.band_key AS band_key")
 
 
-def minhash_near_duplicates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.7,
-    portable: bool = True,
-) -> DataFrame:
+def minhash_near_duplicates(df: DataFrame, threshold: float = 0.7) -> DataFrame:
     """Verified near-duplicate pairs: LSH candidates (any shared band)
     → exact Jaccard on shingle sets → filter ≥ threshold.
 
@@ -192,9 +195,8 @@ def minhash_near_duplicates(
     # bench scale (steady 1.45 s persisted vs 1.11 s recomputed) and at
     # 100 TB would pin/spill multiples of the corpus for work a scan
     # re-derives in-pipeline.
-    sh = _shingled(df, text_col, id_col, n)
-    sig = _signatures_from_shingles(sh, portable)
-    bk = _band_keys(sig)
+    sh = _shingled(df)
+    bk = _band_keys(_signatures_from_shingles(sh))
     # Candidate pairs via groupBy-bucket instead of a band self-join:
     # the self-join shuffles the band keys twice AND recomputes the
     # N_PERM-permutation signature projection once per side (no
@@ -244,13 +246,7 @@ def minhash_near_duplicates(
 
 
 def minhash_incremental_duplicates(
-    corpus: DataFrame,
-    increment: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.7,
-    portable: bool = True,
+    corpus: DataFrame, increment: DataFrame, threshold: float = 0.7
 ) -> DataFrame:
     """INCREMENTAL near-dup: which NEW documents duplicate the existing
     corpus — the continuous-ingestion production shape. The increment's
@@ -268,12 +264,12 @@ def minhash_incremental_duplicates(
     drops to the candidate ids only.
 
     Returns (new_doc, corpus_doc, jaccard ≥ threshold)."""
-    sh_c = _shingled(corpus, text_col, id_col, n)
-    sh_i = _shingled(increment, text_col, id_col, n)
-    bk_c = _band_keys(_signatures_from_shingles(sh_c, portable)).withColumnRenamed(
+    sh_c = _shingled(corpus)
+    sh_i = _shingled(increment)
+    bk_c = _band_keys(_signatures_from_shingles(sh_c)).withColumnRenamed(
         "doc_id", "corpus_doc"
     )
-    bk_i = _band_keys(_signatures_from_shingles(sh_i, portable)).withColumnRenamed(
+    bk_i = _band_keys(_signatures_from_shingles(sh_i)).withColumnRenamed(
         "doc_id", "new_doc"
     )
     cand = (
@@ -301,12 +297,7 @@ def minhash_incremental_duplicates(
     ).where(f"jaccard >= CAST({threshold!r} AS DOUBLE)")
 
 
-def simhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    portable: bool = True,
-) -> DataFrame:
+def simhash_signatures(df: DataFrame) -> DataFrame:
     """(doc_id, simhash): per-token 60-bit hash, ±1 vote per bit,
     signature bit set where the vote is positive.
 
@@ -319,13 +310,13 @@ def simhash_signatures(
     array emits no rows); the filter tests token count, not the hashed
     array, to keep the expensive expression out of the Filter operator.
     """
-    hash_sql = (tok_hash_portable_sql if portable else tok_hash_fast_sql)("t")
-    toks = tokens_sql(f"`{text_col}`")
+    hash_sql = tok_hash_portable_sql("t")
+    toks = tokens_sql("`text`")
     hashed = (
         _spread(df)
         .where(f"size({toks}) > 0")
         .selectExpr(
-            f"`{id_col}` AS doc_id",
+            "`doc_id` AS doc_id",
             f"transform(array_distinct({toks}), t -> {hash_sql}) AS hs",
         )
     )
@@ -347,19 +338,13 @@ def simhash_signatures(
     return hashed.select("doc_id", F.expr(sim).alias("simhash"))
 
 
-def simhash_near_duplicates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    portable: bool = True,
-) -> DataFrame:
+def simhash_near_duplicates(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash: pigeonhole band join (hamming ≤ 3 ⇒
     ≥1 of 4 15-bit blocks identical), verified with bit_count(xor).
 
     Returns (doc_a, doc_b, hamming), doc_a < doc_b.
     """
-    sig = simhash_signatures(df, text_col, id_col, portable)
+    sig = simhash_signatures(df)
     mask = (1 << SIMHASH_BLOCK_BITS) - 1
     blocks = ", ".join(
         f"named_struct('block_idx', {b}, 'block_key', "
@@ -396,59 +381,48 @@ def simhash_near_duplicates(
 # --- embedding-cosine near-dup (the fourth dedup family) ---
 
 
-def embedding_cosine_duplicates(
-    vectors: DataFrame,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def _normed_a(vectors: DataFrame) -> DataFrame:
+    return _normed(vectors, "dup_a", "va", "na")
+
+
+def _normed_b(vectors: DataFrame) -> DataFrame:
+    return _normed(vectors, "dup_b", "vb", "nb")
+
+
+_COSINE_AB = cosine_pre_sql("va", "vb", "na", "nb")
+
+
+def embedding_cosine_duplicates(vectors: DataFrame, threshold: float = 0.4) -> DataFrame:
     """Exact embedding near-dup pairs: all (a < b) pairs with
     cosine(a, b) >= threshold. O(n²) self-join — the correctness
     baseline; use :func:`embedding_cosine_duplicates_lsh` at scale.
 
     Returns (dup_a, dup_b, cosine)."""
-    from .similarity import cosine_pre_sql, l2_norm_sql
-
-    a = vectors.select(
-        F.col(id_col).alias("dup_a"),
-        F.col(vec_col).alias("va"),
-        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("na"),
-    )
-    b = vectors.select(
-        F.col(id_col).alias("dup_b"),
-        F.col(vec_col).alias("vb"),
-        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("nb"),
-    )
     return (
-        a.join(b, F.col("dup_a") < F.col("dup_b"))
-        .select(
-            "dup_a",
-            "dup_b",
-            F.expr(cosine_pre_sql("va", "vb", "na", "nb")).alias("cosine"),
-        )
+        _normed_a(vectors).join(_normed_b(vectors), F.col("dup_a") < F.col("dup_b"))
+        .select("dup_a", "dup_b", F.expr(_COSINE_AB).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
 
 
-def _lsh_candidate_pairs(
-    vectors: DataFrame,
-    n_tables: int,
-    n_planes: int,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-) -> DataFrame:
-    """Narrow (dup_a, dup_b) candidate pairs under the hyperplane-LSH
-    bucket join — the shared candidate generator for the pairs form and
-    the stats form below. Ids only; vectors re-attach downstream."""
-    from .similarity import _bucket_keys, hyperplanes
+def _verified_pairs(cand: DataFrame, va: DataFrame, vb: DataFrame) -> DataFrame:
+    """(dup_a, dup_b, cosine) of narrow candidate id pairs, with the
+    normed vectors re-attached by one id equi-join per side."""
+    return (
+        cand.join(va, "dup_a")
+        .join(vb, "dup_b")
+        .select("dup_a", "dup_b", F.expr(_COSINE_AB).alias("cosine"))
+    )
 
-    tables = [
-        hyperplanes(dim, n_planes, seed=20130101 + 7919 * t)
-        for t in range(n_tables)
-    ]
-    left = _bucket_keys(vectors, "dup_a", tables, id_col, vec_col)
-    right = _bucket_keys(vectors, "dup_b", tables, id_col, vec_col)
+
+def _lsh_candidate_pairs(vectors: DataFrame, config: tuple[int, int]) -> DataFrame:
+    """Narrow (dup_a, dup_b) candidate pairs under the hyperplane-LSH
+    bucket join with ``config`` = (n_tables, n_planes) — the shared
+    candidate generator for the pairs form and the stats form below.
+    Ids only; vectors re-attach downstream."""
+    tables = lsh_tables(*config)
+    left = _bucket_keys(vectors, "dup_a", tables)
+    right = _bucket_keys(vectors, "dup_b", tables)
     # candidates stay NARROW (id pairs only) through the bucket join
     # and the distinct; vectors re-attach via one equi-join per side
     # afterwards (tiny dimension → AQE broadcasts locally; at scale a
@@ -463,26 +437,18 @@ def _lsh_candidate_pairs(
     )
 
 
-def embedding_cosine_duplicates_lsh(
-    vectors: DataFrame,
-    threshold: float = 0.4,
-    n_tables: int = 12,
-    n_planes: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> DataFrame:
+def embedding_cosine_duplicates_lsh(vectors: DataFrame, threshold: float = 0.4) -> DataFrame:
     """Scale path for embedding near-dup: random-hyperplane LSH buckets
     confine the candidate join (quadratic only within a bucket), then
     candidates are verified with the exact cosine — precision 1.0,
-    recall governed by n_tables × n_planes (same banding math as
+    recall governed by tables × planes (same banding math as
     MinHash LSH; at cosine ≥ 0.4 agreement ≈ 0.63/plane ⇒ recall
     ≈ 1-(1-0.63³)¹² ≈ 0.97). Same output schema as the exact form.
 
     Candidate-rate regime (tune per corpus): a random pair (cosine ≈ 0)
     collides per table with prob ≈ 0.5^n_planes, so the expected
-    candidate fraction is ≈ n_tables·0.5^n_planes. The defaults (12×3)
-    are sized for the VERIFICATION threshold 0.4 — close enough to the
+    candidate fraction is ≈ n_tables·0.5^n_planes. :data:`LSH_DEDUP`
+    (12×3) is sized for the VERIFICATION threshold 0.4 — close enough to the
     random regime that heavy pruning is mathematically impossible
     (0.63 vs 0.5 per-plane gap), so the candidate set stays near-
     quadratic and this config only wins over the exact form by
@@ -499,42 +465,15 @@ def embedding_cosine_duplicates_lsh(
     while pruning candidates to ≈ 16·0.5⁸ ≈ 6% of pairs — that is the
     100 TB configuration for the real regime (measured exponent 0.89
     at 1×→10×: see :func:`embedding_cosine_lsh_stats`)."""
-    from .similarity import cosine_pre_sql, l2_norm_sql
-
-    cand = _lsh_candidate_pairs(vectors, n_tables, n_planes, id_col, vec_col, dim)
-    va = vectors.select(
-        F.col(id_col).alias("dup_a"),
-        F.col(vec_col).alias("va"),
-        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("na"),
-    )
-    vb = vectors.select(
-        F.col(id_col).alias("dup_b"),
-        F.col(vec_col).alias("vb"),
-        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("nb"),
-    )
-    return (
-        cand.join(va, "dup_a")
-        .join(vb, "dup_b")
-        .select(
-            "dup_a",
-            "dup_b",
-            F.expr(cosine_pre_sql("va", "vb", "na", "nb")).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
+    cand = _lsh_candidate_pairs(vectors, LSH_DEDUP)
+    return _verified_pairs(cand, _normed_a(vectors), _normed_b(vectors)).filter(
+        F.col("cosine") >= threshold
     )
 
 
-def embedding_cosine_lsh_stats(
-    vectors: DataFrame,
-    threshold: float = 0.8,
-    n_tables: int = 16,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> DataFrame:
+def embedding_cosine_lsh_stats(vectors: DataFrame, threshold: float = 0.8) -> DataFrame:
     """One-row pruning profile of the hyperplane-LSH dedup under the
-    high-threshold (100 TB) configuration: how hard do the buckets
+    high-threshold (100 TB) configuration :data:`LSH_HI`: how hard do the buckets
     actually prune on this corpus?
 
     Returns ``(n_candidates, n_pairs, candidate_fraction, n_matches)``:
@@ -555,30 +494,13 @@ def embedding_cosine_lsh_stats(
     aggregation) — a separate ``matches`` subtree would recompute the
     signature/bucket/distinct chain a second time (measured ≈ 2× the
     whole query)."""
-    from .similarity import cosine_pre_sql, l2_norm_sql
-
-    cand = _lsh_candidate_pairs(vectors, n_tables, n_planes, id_col, vec_col, dim)
-    va = vectors.select(
-        F.col(id_col).alias("dup_a"),
-        F.col(vec_col).alias("va"),
-        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("na"),
-    )
-    vb = vectors.select(
-        F.col(id_col).alias("dup_b"),
-        F.col(vec_col).alias("vb"),
-        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("nb"),
-    )
     cand_stats = (
-        cand.join(va, "dup_a")
-        .join(vb, "dup_b")
+        _lsh_candidate_pairs(vectors, LSH_HI)
+        .join(_normed_a(vectors), "dup_a")
+        .join(_normed_b(vectors), "dup_b")
         .agg(
             F.count("*").alias("n_candidates"),
-            F.sum(
-                (
-                    F.expr(cosine_pre_sql("va", "vb", "na", "nb"))
-                    >= threshold
-                ).cast("long")
-            ).alias("n_matches"),
+            F.sum((F.expr(_COSINE_AB) >= threshold).cast("long")).alias("n_matches"),
         )
     )
     n_vec = vectors.agg(F.count("*").alias("n_vectors"))
@@ -605,23 +527,20 @@ def embedding_cosine_lsh_stats(
 SEMDEDUP_TARGET_CELL = 125
 
 
-def semantic_n_clusters(n_vectors: int, base: int = 16) -> int:
+def semantic_n_clusters(n_vectors: int) -> int:
     """Corpus-adaptive SemDeDup cell count: ceil(n / target cell size),
-    floored at the legacy ``base`` so every parity corpus (≤ 2 000
-    vectors at SEMDEDUP_TARGET_CELL = 125, i.e. n ≤ base·target)
-    resolves to the oracle-gated fixed-k configuration — the adaptive
-    branch only engages beyond oracle-verified scale."""
-    return max(base, -(-n_vectors // SEMDEDUP_TARGET_CELL))
+    floored at the IVF_CLUSTERS cells of the shared quantizer so every
+    parity corpus (≤ 2 000 vectors at SEMDEDUP_TARGET_CELL = 125, i.e.
+    n ≤ IVF_CLUSTERS·target) resolves to the oracle-gated fixed-k
+    configuration — the adaptive branch only engages beyond
+    oracle-verified scale."""
+    return max(IVF_CLUSTERS, -(-n_vectors // SEMDEDUP_TARGET_CELL))
 
 
 def semantic_duplicates_clustered(
     vectors: DataFrame,
     threshold: float = 0.4,
-    n_clusters: int = 16,
-    n_iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
+    n_clusters: int = IVF_CLUSTERS,
     train_sample_denom: int | str | None = "auto",
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
@@ -650,13 +569,6 @@ def semantic_duplicates_clustered(
     serves from the shared persisted IVF/SemDeDup quantizer
     (sources.ann_store.trained_ivf_centroids: same trainer, same
     config, so the artifact is bit-identical to training here)."""
-    from .similarity import (
-        assign_to_centroid,
-        cosine_pre_sql,
-        kmeans_centroids,
-        l2_norm_sql,
-    )
-
     # The argmin-over-centroids assignment is the CPU-heavy per-row
     # expression here; a small single-file corpus reads as 1-2
     # partitions and would serialize it onto two cores (measured 21.6 s
@@ -667,13 +579,7 @@ def semantic_duplicates_clustered(
     vectors = _spread(vectors)
     if centroids is None:
         centroids = kmeans_centroids(
-            vectors,
-            n_clusters=n_clusters,
-            n_iters=n_iters,
-            id_col=id_col,
-            vec_col=vec_col,
-            dim=dim,
-            train_sample_denom=train_sample_denom,
+            vectors, n_clusters=n_clusters, train_sample_denom=train_sample_denom
         )
     # candidates stay NARROW (id, cluster_id); vectors re-attach by id
     # only for the verify join — same shape as the LSH candidate path.
@@ -683,8 +589,8 @@ def semantic_duplicates_clustered(
     # consumer (the localCheckpoint rule every iterative operator here
     # follows).
     asg = (
-        assign_to_centroid(vectors, centroids, vec_col)
-        .select(F.col(id_col).alias("__id"), "cluster_id")
+        assign_to_centroid(vectors, centroids)
+        .select(F.col("vec_id").alias("__id"), "cluster_id")
         .localCheckpoint(eager=True)
     )
     a = asg.select(F.col("__id").alias("dup_a"), "cluster_id")
@@ -700,26 +606,9 @@ def semantic_duplicates_clustered(
     # vector column when no prior job has analyzed the lineage
     # (surfaced as INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND at execution the
     # moment the pretrained-centroid path removed the training jobs)
-    va = vectors.alias("sem_va").select(
-        F.col(id_col).alias("dup_a"),
-        F.col(vec_col).alias("va"),
-        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("na"),
-    )
-    vb = vectors.alias("sem_vb").select(
-        F.col(id_col).alias("dup_b"),
-        F.col(vec_col).alias("vb"),
-        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("nb"),
-    )
-    return (
-        cand.join(va, "dup_a")
-        .join(vb, "dup_b")
-        .select(
-            "dup_a",
-            "dup_b",
-            F.expr(cosine_pre_sql("va", "vb", "na", "nb")).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= F.lit(threshold))
-    )
+    va = _normed_a(vectors.alias("sem_va"))
+    vb = _normed_b(vectors.alias("sem_vb"))
+    return _verified_pairs(cand, va, vb).filter(F.col("cosine") >= F.lit(threshold))
 
 
 def duplicate_groups(
@@ -827,12 +716,7 @@ def duplicate_groups(
     )
 
 
-def prefix_filter_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def prefix_filter_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """EXACT Jaccard-threshold set-similarity self-join via prefix
     filtering (the SSJoin/PPJoin family) — the engine's third near-dup
     scale path, and the only one that is simultaneously exact AND
@@ -883,7 +767,7 @@ def prefix_filter_jaccard_pairs(
     from pyspark.sql import Window as W
 
     sh = (
-        _shingled(docs, text_col, id_col, 3)
+        _shingled(docs)
         .selectExpr(
             "doc_id AS did",
             "array_distinct(transform(shingles, g -> xxhash64(g))) AS s",
@@ -944,12 +828,7 @@ def prefix_filter_jaccard_pairs(
     )
 
 
-def containment_pairs(
-    docs: DataFrame,
-    threshold: float = 0.8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def containment_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """EXACT shingle-containment join: ordered pairs (a, b) where
     ``|s_a ∩ s_b| / |s_a| ≥ t`` — document a is mostly CONTAINED in b.
     The asymmetric near-dup relation Jaccard misses: a quote, excerpt,
@@ -981,7 +860,7 @@ def containment_pairs(
     from pyspark.sql import Window as W
 
     sh = (
-        _shingled(docs, text_col, id_col, 3)
+        _shingled(docs)
         .selectExpr(
             "doc_id AS did",
             "array_distinct(transform(shingles, g -> xxhash64(g))) AS s",

@@ -15,11 +15,10 @@ sizes, which makes the downstream eigenbasis reproducible too.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: corpus embedding dimension (TESTDATA.md: embeddings.embedding)
-DIM = 64
+from ..schemas import EMB_DIM
 
 #: pico-unit quantization for exact cross-engine product sums: each
 #: float32×float32 product (exact in double) is rounded at 1e-12 IN
@@ -38,8 +37,8 @@ MOMENT_SCALE = 1_000_000_000_000
 FLUSH_EVERY_ROWS = 4_000_000
 
 
-def second_moments_upper(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Upper-triangle second-moment matrix of ``vec_col``: one row per
+def second_moments_upper(df: DataFrame) -> DataFrame:
+    """Upper-triangle second-moment matrix of ``embedding``: one row per
     (i, j), i ≤ j, with ``m2_p12 = Σ round(x_i·x_j·1e12)`` in exact
     pico-units. The per-row product table is built JVM-side as one
     generated ``flatten(transform(...))`` expression — no Python in the
@@ -55,9 +54,9 @@ def second_moments_upper(df: DataFrame, vec_col: str = "embedding") -> DataFrame
     spark = df.sparkSession
     prods = df.select(
         F.expr(
-            f"flatten(transform(sequence(0, {DIM - 1}), i -> "
-            f"transform(sequence(i, {DIM - 1}), j -> "
-            f"CAST(round(CAST({vec_col}[i] AS DOUBLE) * CAST({vec_col}[j] AS DOUBLE)"
+            f"flatten(transform(sequence(0, {EMB_DIM - 1}), i -> "
+            f"transform(sequence(i, {EMB_DIM - 1}), j -> "
+            "CAST(round(CAST(embedding[i] AS DOUBLE) * CAST(embedding[j] AS DOUBLE)"
             f" * {MOMENT_SCALE}) AS BIGINT))))"
         ).alias("ps")
     )
@@ -71,8 +70,8 @@ def second_moments_upper(df: DataFrame, vec_col: str = "embedding") -> DataFrame
     pairs = spark.range(1).select(
         F.posexplode(
             F.expr(
-                f"flatten(transform(sequence(0, {DIM - 1}), i -> "
-                f"transform(sequence(i, {DIM - 1}), j -> "
+                f"flatten(transform(sequence(0, {EMB_DIM - 1}), i -> "
+                f"transform(sequence(i, {EMB_DIM - 1}), j -> "
                 f"struct(CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j))))"
             )
         ).alias("pos", "p")
@@ -80,11 +79,11 @@ def second_moments_upper(df: DataFrame, vec_col: str = "embedding") -> DataFrame
     return sums.join(F.broadcast(pairs), "pos").select("i", "j", "m2_p12")
 
 
-def first_moments(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def first_moments(df: DataFrame) -> DataFrame:
     """Per-dimension sums and the row count — the other half of the
     covariance sufficient statistics. One row out per dimension."""
     return (
-        df.select(F.posexplode(vec_col).alias("i", "x"))
+        df.select(F.posexplode("embedding").alias("i", "x"))
         .groupBy("i")
         .agg(
             F.sum(
@@ -98,26 +97,24 @@ def first_moments(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     )
 
 
-def pca_top_components(
-    df: DataFrame, k: int = 2, vec_col: str = "embedding"
-):
+def pca_top_components(df: DataFrame, k: int = 2):
     """Driver-side eigendecomposition of the covariance assembled from
     the distributed sufficient statistics. Returns
-    ``(eigvals_desc, components[k][DIM], explained_variance_ratio)``.
+    ``(eigvals_desc, components[k][EMB_DIM], explained_variance_ratio)``.
     The collects are the fixed-size moment summaries (2 080 + 64 rows),
     never data."""
     import numpy as np
 
     m2 = {
         (r["i"], r["j"]): float(r["m2_p12"]) / MOMENT_SCALE
-        for r in second_moments_upper(df, vec_col).collect()
+        for r in second_moments_upper(df).collect()
     }
-    fm = first_moments(df, vec_col).collect()
+    fm = first_moments(df).collect()
     n = fm[0]["n"]
-    s1 = np.zeros(DIM)
+    s1 = np.zeros(EMB_DIM)
     for r in fm:
         s1[r["i"]] = float(r["s1_p12"]) / MOMENT_SCALE
-    cov = np.zeros((DIM, DIM))
+    cov = np.zeros((EMB_DIM, EMB_DIM))
     for (i, j), v in m2.items():
         # covariance from moments: E[xy] − E[x]E[y], unbiased n−1 scaling
         c = (v - s1[i] * s1[j] / n) / (n - 1)
@@ -152,9 +149,7 @@ def _round_half_away_int64(x):
     return (np.sign(x) * r).astype(np.int64)
 
 
-def second_moments_upper_arrow(
-    df: DataFrame, vec_col: str = "embedding"
-) -> DataFrame:
+def second_moments_upper_arrow(df: DataFrame) -> DataFrame:
     """The Gram kernel done the way a native engine would: per Arrow
     batch, one numpy outer-product accumulation (C speed) into a 64×64
     int64 grid of exact pico-unit products — each task emits exactly
@@ -179,7 +174,7 @@ def second_moments_upper_arrow(
     import pandas as pd
 
     flush_every = FLUSH_EVERY_ROWS
-    iu = np.triu_indices(DIM)
+    iu = np.triu_indices(EMB_DIM)
 
     def _frame(acc):
         return pd.DataFrame(
@@ -191,10 +186,10 @@ def second_moments_upper_arrow(
         )
 
     def gram(batches):
-        acc = np.zeros((DIM, DIM), dtype=np.int64)
+        acc = np.zeros((EMB_DIM, EMB_DIM), dtype=np.int64)
         since_flush = 0
         for pdf in batches:
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             for lo in range(0, len(x), 1024):
                 c = x[lo : lo + 1024]
                 p = c[:, :, None] * c[:, None, :]
@@ -203,12 +198,12 @@ def second_moments_upper_arrow(
                 since_flush += len(c)
                 if since_flush >= flush_every:
                     yield _frame(acc)
-                    acc = np.zeros((DIM, DIM), dtype=np.int64)
+                    acc = np.zeros((EMB_DIM, EMB_DIM), dtype=np.int64)
                     since_flush = 0
         yield _frame(acc)
 
     return (
-        df.select(vec_col)
+        df.select("embedding")
         .mapInPandas(gram, schema="i long, j long, part_p12 long")
         .groupBy("i", "j")
         .agg(

@@ -131,12 +131,37 @@ def routed_energy_report(
     return rollup_from_second(df, grain)
 
 
+#: bucket width of the gap-fill grid (the minute rollup)
+GAPFILL_STEP_SECONDS = 60
+
+
+def _gapfill_grid_join(
+    observed: DataFrame, saids: DataFrame, start_epoch: int, n_buckets: int
+) -> DataFrame:
+    """The dense per-meter grid of ``n_buckets`` GAPFILL_STEP_SECONDS
+    buckets from ``start_epoch``, left-joined on (said, bucket index
+    ``__b``) to the observed (said, datetime, joules) rows — the shared
+    input of both gap-fill reads."""
+    step = GAPFILL_STEP_SECONDS
+    grid = saids.select(
+        "said",
+        F.explode(F.sequence(F.lit(0), F.lit(n_buckets - 1))).alias("__b"),
+    ).withColumn(
+        "datetime",
+        F.timestamp_seconds(F.lit(start_epoch) + F.col("__b").cast("long") * step),
+    )
+    obs = observed.select(
+        "said",
+        F.floor((F.col("datetime").cast("long") - start_epoch) / step)
+        .cast("int")
+        .alias("__b"),
+        "joules",
+    )
+    return grid.join(obs, on=["said", "__b"], how="left")
+
+
 def gapfill_locf(
-    observed: DataFrame,
-    saids: DataFrame,
-    start_epoch: int,
-    n_buckets: int,
-    step_seconds: int = 60,
+    observed: DataFrame, saids: DataFrame, start_epoch: int, n_buckets: int
 ) -> DataFrame:
     """Gap-fill a sparse rollup onto the dense per-meter time grid and
     carry the last observation forward (the hypertable
@@ -158,24 +183,6 @@ def gapfill_locf(
     and the LOCF is one ``last(ignorenulls)`` window partitioned by
     said — no global window, no Python. Deterministic: pure integer
     grid arithmetic + exact long joules."""
-    grid = saids.select(
-        "said",
-        F.explode(F.sequence(F.lit(0), F.lit(n_buckets - 1))).alias("__b"),
-    ).withColumn(
-        "datetime",
-        F.timestamp_seconds(
-            F.lit(start_epoch) + F.col("__b").cast("long") * step_seconds
-        ),
-    )
-    obs = observed.select(
-        "said",
-        F.floor(
-            (F.col("datetime").cast("long") - start_epoch) / step_seconds
-        )
-        .cast("int")
-        .alias("__b"),
-        "joules",
-    )
     from pyspark.sql import Window
 
     w = (
@@ -184,7 +191,7 @@ def gapfill_locf(
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     return (
-        grid.join(obs, on=["said", "__b"], how="left")
+        _gapfill_grid_join(observed, saids, start_epoch, n_buckets)
         .select(
             "said",
             "datetime",
@@ -195,11 +202,7 @@ def gapfill_locf(
 
 
 def gapfill_interpolate(
-    observed: DataFrame,
-    saids: DataFrame,
-    start_epoch: int,
-    n_buckets: int,
-    step_seconds: int = 60,
+    observed: DataFrame, saids: DataFrame, start_epoch: int, n_buckets: int
 ) -> DataFrame:
     """Gap-fill by LINEAR INTERPOLATION (the hypertable ``interpolate``
     dual of :func:`gapfill_locf`): each missing bucket gets the value
@@ -212,25 +215,7 @@ def gapfill_interpolate(
     are bit-equal to the oracle's."""
     from pyspark.sql import Window
 
-    grid = saids.select(
-        "said",
-        F.explode(F.sequence(F.lit(0), F.lit(n_buckets - 1))).alias("__b"),
-    ).withColumn(
-        "datetime",
-        F.timestamp_seconds(
-            F.lit(start_epoch) + F.col("__b").cast("long") * step_seconds
-        ),
-    )
-    obs = observed.select(
-        "said",
-        F.floor(
-            (F.col("datetime").cast("long") - start_epoch) / step_seconds
-        )
-        .cast("int")
-        .alias("__b"),
-        "joules",
-    )
-    j = grid.join(obs, on=["said", "__b"], how="left")
+    j = _gapfill_grid_join(observed, saids, start_epoch, n_buckets)
     w_prev = (
         Window.partitionBy("said")
         .orderBy("__b")

@@ -13,6 +13,15 @@ Design for 100 TB:
   only same-bucket candidates (multi-probe = OR over bands, like
   MinHash). Hyperplanes are generated from a fixed seed driver-side and
   shipped as literals — the plan stays deterministic and replayable.
+
+One definition per cross-engine value: the embedding width
+(``schemas.EMB_DIM``), the ANN query shape and every index
+configuration (LSH tables × planes, IVF cells/probes, PQ and IVF-PQ
+subspaces, codes and rerank bands, the Lloyd iteration count) are
+module constants below, and the operators, their DuckDB oracles
+(plans.vector_oracles) and the model store's cache keys
+(sources.ann_store) all read them. Oracles share these VALUES, never
+the engine's SQL text: the oracle stays an independent derivation.
 """
 
 from __future__ import annotations
@@ -22,12 +31,40 @@ import random
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..schemas import EMB_DIM
+
 #: fixed-point scale for the k-means centroid update: a power of two so
 #: ``val * SCALE`` is exact in IEEE double; integer sums are
 #: order-independent, which makes the trained centroids — and therefore
 #: the whole IVF candidate set — bit-reproducible by a serial oracle
-#: (same trick as plans.vector_queries._CENTROID_SCALE).
+#: (the per-label centroid entries of plans.vector_queries use it too).
 KMEANS_SCALE = float(1 << 40)
+
+#: the ANN query shape — part of every top-k query's definition: the
+#: ANN_K nearest neighbours of each of the first ANN_QUERIES vec_ids
+ANN_K = 5
+ANN_QUERIES = 5
+
+#: hyperplane-LSH (n_tables, n_planes): the ANN top-k, the 0.4-threshold
+#: dedup and the high-threshold (0.8) dedup configurations — recall
+#: math in :func:`lsh_topk` and operators.dedup
+LSH_ANN = (8, 3)
+LSH_DEDUP = (12, 3)
+LSH_HI = (16, 8)
+#: IVF coarse quantizer: cells, cells probed per query; KMEANS_ITERS is
+#: the Lloyd iteration count of every trainer (IVF, PQ, SemDeDup)
+IVF_CLUSTERS = 16
+IVF_PROBES = 4
+KMEANS_ITERS = 3
+#: PQ: subspaces × codes per subspace, rerank band = k × PQ_RERANK
+PQ_SUBSPACES = 16
+PQ_CODES = 16
+PQ_RERANK = 8
+#: IVF-PQ: PQ subspaces (PQ_CODES codes each), rerank band factor
+IVFPQ_SUBSPACES = 8
+IVFPQ_RERANK = 16
+#: int8 scalar quantization: rerank band factor
+INT8_RERANK = 4
 
 #: Knuth multiplicative-hash constants for the deterministic training
 #: sample (see :func:`train_sample_sql`). All-integer arithmetic,
@@ -125,10 +162,30 @@ def cosine_pre_sql(a: str, b: str, na: str, nb: str) -> str:
     return f"{dot_sql(a, b)} / ({na} * {nb})"
 
 
+def _normed(df: DataFrame, id_alias: str, vec_alias: str, nrm_alias: str) -> DataFrame:
+    """(id, vector, L2 norm) of an ``embeddings``-shaped frame under the
+    given aliases — the pre-normed side of every cosine join."""
+    return df.select(
+        F.col("vec_id").alias(id_alias),
+        F.col("embedding").alias(vec_alias),
+        F.expr(l2_norm_sql("`embedding`")).alias(nrm_alias),
+    )
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Rank each query's (query_id, neighbor_id, cosine) rows by cosine,
+    ties to the lower neighbor id, and keep ranks ≤ ``k``."""
+    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("int"))
+        .filter(F.col("rank") <= k)
+    )
+
+
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
-    k: int = 5,
+    k: int = ANN_K,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -164,11 +221,7 @@ def brute_force_topk(
             f"{cosine_pre_sql('q_vec', 'c_vec', 'q_nrm', 'c_nrm')} AS cosine",
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, k)
 
 
 def hyperplanes(dim: int, n_planes: int, seed: int = 20130101) -> list[list[float]]:
@@ -180,7 +233,16 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 20130101) -> list[list[floa
     ]
 
 
-def _buckets_sql(vec_col: str, tables: list[list[list[float]]]) -> str:
+def lsh_tables(n_tables: int, n_planes: int) -> list[list[list[float]]]:
+    """The hyperplanes of every LSH table (seed 20130101 + 7919·t for
+    table t) — shared by the operators and their oracles."""
+    return [
+        hyperplanes(EMB_DIM, n_planes, seed=20130101 + 7919 * t)
+        for t in range(n_tables)
+    ]
+
+
+def _buckets_sql(tables: list[list[list[float]]]) -> str:
     """The whole (table_idx, bucket) array as one SQL expression string
     — per table, the sign bits of the ascending-order fold projections
     onto each hyperplane, bit ``i`` for plane ``i`` (``repr``
@@ -191,7 +253,7 @@ def _buckets_sql(vec_col: str, tables: list[list[list[float]]]) -> str:
     deliberate: it stays inside WholeStageCodegen, where the
     higher-order-function alternative (planes as a nested array
     literal) executes interpreted and measured ~2× slower."""
-    v = f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
+    v = "CAST(`embedding` AS ARRAY<DOUBLE>)"
     structs = []
     for t, planes in enumerate(tables):
         terms = []
@@ -208,8 +270,7 @@ def _buckets_sql(vec_col: str, tables: list[list[list[float]]]) -> str:
 
 
 def _bucket_keys(
-    df: DataFrame, id_alias: str, tables: list[list[list[float]]],
-    id_col: str, vec_col: str,
+    df: DataFrame, id_alias: str, tables: list[list[list[float]]]
 ) -> DataFrame:
     """(id, table_idx, bucket) — one row per hash table.
 
@@ -222,8 +283,8 @@ def _bucket_keys(
     ~2·dim·(candidates/vector) and was measured 3-4× slower end-to-end
     at sf0.1 despite identical results."""
     return df.select(
-        F.col(id_col).alias(id_alias),
-        F.explode(F.expr(_buckets_sql(vec_col, tables))).alias("tb"),
+        F.col("vec_id").alias(id_alias),
+        F.explode(F.expr(_buckets_sql(tables))).alias("tb"),
     ).select(
         id_alias,
         F.col("tb.table_idx").alias("table_idx"),
@@ -231,48 +292,29 @@ def _bucket_keys(
     )
 
 
-def lsh_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_tables: int = 8,
-    n_planes: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> DataFrame:
+def lsh_topk(vectors: DataFrame, queries: DataFrame, k: int = ANN_K) -> DataFrame:
     """Approximate top-k: multi-table random-hyperplane LSH — a
     candidate is scored iff it shares a bucket with the query in ANY of
     ``n_tables`` independent tables (banding, like MinHash LSH). Trades
     recall for a cross-product → equi-join reduction (the 100 TB path;
     recall tunes via n_tables × n_planes).
 
-    Defaults (8×3) are sized for weakly-clustered data like the test
+    :data:`LSH_ANN` (8×3) is sized for weakly-clustered data like the test
     corpus (top-5 neighbors at cosine ≈ 0.3 ⇒ per-plane agreement
     ≈ 0.6): recall ≈ 1-(1-0.6³)⁸ ≈ 0.86. On real embedding corpora
     where near-dups sit at cosine ≥ 0.8, fewer tables with more planes
     (e.g. 4×8) give the same recall at a far lower candidate rate."""
-    tables = [
-        hyperplanes(dim, n_planes, seed=20130101 + 7919 * t) for t in range(n_tables)
-    ]
-    q = _bucket_keys(queries, "query_id", tables, id_col, vec_col)
-    c = _bucket_keys(vectors, "neighbor_id", tables, id_col, vec_col)
+    tables = lsh_tables(*LSH_ANN)
+    q = _bucket_keys(queries, "query_id", tables)
+    c = _bucket_keys(vectors, "neighbor_id", tables)
     cand = (
         c.join(F.broadcast(q), ["table_idx", "bucket"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("q_nrm"),
-    )
-    cv = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("c_nrm"),
-    )
+    qv = _normed(queries, "query_id", "q_vec", "q_nrm")
+    cv = _normed(vectors, "neighbor_id", "c_vec", "c_nrm")
     scored = (
         cand.join(F.broadcast(qv), "query_id")
         .join(cv, "neighbor_id")
@@ -282,17 +324,13 @@ def lsh_topk(
             F.expr(cosine_pre_sql("q_vec", "c_vec", "q_nrm", "c_nrm")).alias("cosine"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, k)
 
 
 # --- int8 scalar-quantized ANN: the IO-reduction scale path ---
 
 #: guards the all-zero vector (scale would be 0 → NaN codes); shared
-#: verbatim with the oracle (plans.vector_oracles.INT8_EPS)
+#: with the oracle (plans.vector_oracles._int8_topk_prep_cte)
 INT8_EPS = 1e-30
 
 
@@ -326,20 +364,12 @@ def _int8_prep(df: DataFrame, prefix: str, id_col: str, vec_col: str) -> DataFra
     )
 
 
-def int8_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    rerank_factor: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> DataFrame:
+def int8_topk(vectors: DataFrame, queries: DataFrame, k: int = ANN_K) -> DataFrame:
     """ANN via int8 scalar quantization + exact rerank (the SQ8
     pattern): score every candidate with an exact int64 dot product
     over per-vector-scaled int8 codes (4× smaller than float32 — at
     100 TB the quantized table is what the scan reads, cutting IO and
-    shuffle bytes 4×), keep the top ``k * rerank_factor`` per query by
+    shuffle bytes 4×), keep the top ``k * INT8_RERANK`` per query by
     approximate score, then rerank that band with the exact cosine on
     the full vectors (re-attached by id — the wide arrays never travel
     with the full candidate set).
@@ -351,8 +381,8 @@ def int8_topk(
 
     Returns (query_id, neighbor_id, cosine, rank ≤ k) with EXACT
     cosines; only the ranking beyond the band is approximate."""
-    q = _int8_prep(queries, "q", id_col, vec_col)
-    c = _int8_prep(vectors, "c", id_col, vec_col)
+    q = _int8_prep(queries, "q", "vec_id", "embedding")
+    c = _int8_prep(vectors, "c", "vec_id", "embedding")
     idot = F.aggregate(
         F.zip_with(F.col("q_q"), F.col("c_q"), lambda x, y: x * y),
         F.lit(0).cast("long"),
@@ -370,13 +400,7 @@ def int8_topk(
             ).alias("ascore"),
         )
     )
-    wa = W.partitionBy("query_id").orderBy(F.desc("ascore"), "neighbor_id")
-    band = (
-        approx.withColumn("arank", F.row_number().over(wa))
-        .filter(F.col("arank") <= k * rerank_factor)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_rerank_topk(band, vectors, queries, k, id_col, vec_col)
+    return _exact_rerank_topk(approx, vectors, queries, k, INT8_RERANK)
 
 
 # --- IVF (inverted-file) ANN: the second scale path ---
@@ -384,11 +408,8 @@ def int8_topk(
 
 def kmeans_centroids(
     vectors: DataFrame,
-    n_clusters: int = 16,
-    n_iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
+    n_clusters: int = IVF_CLUSTERS,
+    n_iters: int = KMEANS_ITERS,
     train_sample_denom: int | str | None = None,
 ) -> list[list[float]]:
     """Deterministic mini k-means for IVF coarse quantization, run as
@@ -427,19 +448,19 @@ def kmeans_centroids(
     train = vectors
     if train_sample_denom is not None and train_sample_denom > 1:
         train = vectors.filter(
-            F.expr(train_sample_sql(id_col, train_sample_denom, n_clusters))
+            F.expr(train_sample_sql("vec_id", train_sample_denom, n_clusters))
         )
     init = (
-        train.orderBy(id_col)
+        train.orderBy("vec_id")
         .limit(n_clusters)
-        .select(vec_col)
+        .select("embedding")
         .collect()
     )
     centroids = [[float(x) for x in r[0]] for r in init]
     for _ in range(n_iters):
-        assigned = assign_to_centroid(train, centroids, vec_col)
+        assigned = assign_to_centroid(train, centroids)
         new = (
-            assigned.select("cluster_id", F.posexplode(vec_col).alias("pos", "v"))
+            assigned.select("cluster_id", F.posexplode("embedding").alias("pos", "v"))
             .groupBy("cluster_id", "pos")
             .agg(
                 F.sum(
@@ -453,7 +474,7 @@ def kmeans_centroids(
         )
         by_cluster: dict[int, list[float]] = {}
         for r in new:
-            by_cluster.setdefault(r["cluster_id"], [0.0] * dim)[r["pos"]] = (
+            by_cluster.setdefault(r["cluster_id"], [0.0] * EMB_DIM)[r["pos"]] = (
                 float(r["s"]) / KMEANS_SCALE / float(r["n"])
             )
         # empty clusters keep their previous centroid
@@ -548,12 +569,9 @@ def assign_to_centroid_arrow(
 def ivf_topk(
     vectors: DataFrame,
     queries: DataFrame,
-    k: int = 5,
-    n_clusters: int = 16,
-    n_probes: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
+    k: int = ANN_K,
+    n_clusters: int = IVF_CLUSTERS,
+    n_probes: int = IVF_PROBES,
     train_sample_denom: int | str | None = "auto",
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
@@ -583,25 +601,20 @@ def ivf_topk(
     Returns (query_id, neighbor_id, cosine, rank ≤ k)."""
     if centroids is None:
         centroids = kmeans_centroids(
-            vectors,
-            n_clusters=n_clusters,
-            id_col=id_col,
-            vec_col=vec_col,
-            dim=dim,
-            train_sample_denom=train_sample_denom,
+            vectors, n_clusters=n_clusters, train_sample_denom=train_sample_denom
         )
-    cands = assign_to_centroid(vectors, centroids, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("c_nrm"),
+    cands = assign_to_centroid(vectors, centroids).select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        F.expr(l2_norm_sql("`embedding`")).alias("c_nrm"),
         "cluster_id",
     )
     probed = (
-        assign_probes(queries, centroids, n_probes, vec_col)
+        assign_probes(queries, centroids, n_probes)
         .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.expr(l2_norm_sql(f"`{vec_col}`")).alias("q_nrm"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("q_vec"),
+            F.expr(l2_norm_sql("`embedding`")).alias("q_nrm"),
             F.explode("probe_ids").alias("cluster_id"),
         )
     )
@@ -614,25 +627,18 @@ def ivf_topk(
             F.expr(cosine_pre_sql("q_vec", "c_vec", "q_nrm", "c_nrm")).alias("cosine"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, k)
 
 
 def assign_probes(
-    queries: DataFrame,
-    centroids: list[list[float]],
-    n_probes: int,
-    vec_col: str = "embedding",
+    queries: DataFrame, centroids: list[list[float]], n_probes: int
 ) -> DataFrame:
     """Add ``probe_ids``: the n_probes nearest centroid ids per query
     (sorted centroid-distance structs, sliced) — the (d, cid) struct
     array as one server-parsed SQL string (see :func:`_argmin_code_sql`;
     array_sort on structs is lexicographic (d, cid), identical to the
     previous Column-API form)."""
-    dvec = f"transform({vec_col}, x -> CAST(x AS DOUBLE))"
+    dvec = "transform(embedding, x -> CAST(x AS DOUBLE))"
     return queries.withColumn(
         "probe_ids",
         F.expr(
@@ -647,16 +653,12 @@ def assign_probes(
 
 def pq_codebooks(
     vectors: DataFrame,
-    n_subspaces: int = 16,
-    n_codes: int = 16,
-    n_iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
+    n_subspaces: int = PQ_SUBSPACES,
+    n_codes: int = PQ_CODES,
     train_sample_denom: int | str | None = None,
 ) -> list[list[list[float]]]:
     """Train one deterministic codebook per subspace: split each vector
-    into ``n_subspaces`` contiguous ``dim / n_subspaces``-dim blocks and
+    into ``n_subspaces`` contiguous ``EMB_DIM / n_subspaces``-dim blocks and
     run the fixed-point k-means of :func:`kmeans_centroids` on each
     block — the PQ trainer of Jégou et al.'s product quantization.
     Everything that made IVF training bit-reproducible carries over per
@@ -669,7 +671,7 @@ def pq_codebooks(
     single job computes every subspace's argmin assignment and the
     (subspace, code, dimension) integer partial sums — per-row work is
     identical to n_subspaces separate trainers, but the driver runs
-    n_iters jobs instead of n_subspaces × n_iters (measured: the
+    KMEANS_ITERS jobs instead of n_subspaces × KMEANS_ITERS (measured: the
     separate-loops form spent 26 s at sf0.01 on ~64 job round trips;
     this form runs 4). The per-(j, cid, pos) int64 sums are the same
     numbers in the same fixed-point arithmetic, so the codebooks are
@@ -679,25 +681,25 @@ def pq_codebooks(
     single count) and shared by every subspace — one training-sample
     id set, n_subspaces codebooks. Only the codebooks
     (n_subspaces × n_codes × sub floats) reach the driver."""
-    sub = dim // n_subspaces
+    sub = EMB_DIM // n_subspaces
     if train_sample_denom == "auto":
         train_sample_denom = auto_train_denom(vectors.count(), n_codes)
     train = vectors
     if train_sample_denom is not None and train_sample_denom > 1:
         train = vectors.filter(
-            F.expr(train_sample_sql(id_col, train_sample_denom, n_codes))
+            F.expr(train_sample_sql("vec_id", train_sample_denom, n_codes))
         )
     # init: the n_codes smallest ids, sliced driver-side (float→double
     # of the same stored values the sliced-column path would cast)
-    init = train.orderBy(id_col).limit(n_codes).select(vec_col).collect()
+    init = train.orderBy("vec_id").limit(n_codes).select("embedding").collect()
     books: list[list[list[float]]] = [
         [[float(x) for x in r[0][j * sub : (j + 1) * sub]] for r in init]
         for j in range(n_subspaces)
     ]
-    for _ in range(n_iters):
+    for _ in range(KMEANS_ITERS):
         per_sub = []
         for j in range(n_subspaces):
-            sv = _svec_sql(vec_col, j * sub + 1, sub)
+            sv = _svec_sql(j * sub + 1, sub)
             per_sub.append(
                 f"named_struct('j', {j},"
                 f" 'cid', {_argmin_code_sql(sv, books[j])},"
@@ -739,10 +741,10 @@ def _sdlit(x: float) -> str:
     return f"{x!r}D"
 
 
-def _svec_sql(vec_col: str, lo: int, n: int) -> str:
-    """SQL text for the ``n``-element double subvector at 1-based
-    offset ``lo``."""
-    return f"slice({_as_double_sql(vec_col)}, {lo}, {n})"
+def _svec_sql(lo: int, n: int) -> str:
+    """SQL text for the ``n``-element double subvector of ``embedding``
+    at 1-based offset ``lo``."""
+    return f"slice({_as_double_sql('embedding')}, {lo}, {n})"
 
 
 def _cents_sql(book: list[list[float]]) -> str:
@@ -781,12 +783,7 @@ def _argmin_code_sql(svec: str, book: list[list[float]]) -> str:
     return f"array_min({_dist_structs_sql(svec, book)}).cid"
 
 
-def pq_encode(
-    vectors: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_encode(vectors: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
     """Encode every vector as ``n_subspaces`` small integer codes —
     (id, code_0..code_{m-1}), the NARROW representation that travels
     through the candidate join. At 64 dims / 16 subspaces / 16 codes
@@ -794,17 +791,19 @@ def pq_encode(
     float32 (25.9× smaller on disk, measured by bench.py's pq_io):
     the 100 TB candidate scan reads codes, never embeddings. One
     projection, no shuffle, no Python."""
+    return vectors.select(F.col("vec_id"), *_code_cols(codebooks))
+
+
+def _code_cols(codebooks: list[list[list[float]]]) -> list[Column]:
+    """``code_j`` = the argmin code of subvector j against codebook j."""
     sub = len(codebooks[0][0])
-    cols: list[Column] = [F.col(id_col)]
-    for j, book in enumerate(codebooks):
-        sv = _svec_sql(vec_col, j * sub + 1, sub)
-        cols.append(F.expr(_argmin_code_sql(sv, book)).alias(f"code_{j}"))
-    return vectors.select(*cols)
+    return [
+        F.expr(_argmin_code_sql(_svec_sql(j * sub + 1, sub), book)).alias(f"code_{j}")
+        for j, book in enumerate(codebooks)
+    ]
 
 
-def _adc_query_cols(
-    books: list[list[list[float]]], sub: int, vec_col: str
-) -> list[Column]:
+def _adc_query_cols(books: list[list[list[float]]]) -> list[Column]:
     """Per-subspace ADC lookup-table columns for the query side:
     ``dt_j`` = dot of the query subvector with every codebook entry (in
     code order), ``rn_j`` = reconstructed-norm² per entry — both as
@@ -819,6 +818,7 @@ def _adc_query_cols(
     cost) and execution ~0.4 s SLOWER (pq exec 0.6–0.9 s literal vs
     1.0–1.2 s broadcast-row; the literal arrays constant-fold into
     codegen, a column reference cannot). Reverted; the literals stay."""
+    sub = len(books[0][0])
     cols: list[Column] = []
     for j, book in enumerate(books):
         bl = "array({})".format(
@@ -827,7 +827,7 @@ def _adc_query_cols(
                 for c in book
             )
         )
-        qsub = _svec_sql(vec_col, j * sub + 1, sub)
+        qsub = _svec_sql(j * sub + 1, sub)
         cols.append(
             F.expr(
                 f"transform({bl}, cv -> aggregate(zip_with({qsub}, cv,"
@@ -873,28 +873,27 @@ def _adc_score(n_subspaces: int) -> Column:
 
 
 def _exact_rerank_topk(
-    band: DataFrame,
+    approx: DataFrame,
     vectors: DataFrame,
     queries: DataFrame,
     k: int,
-    id_col: str,
-    vec_col: str,
+    rerank_factor: int,
 ) -> DataFrame:
-    """Rescore a (query_id, neighbor_id) candidate band with the exact
-    cosine on full vectors re-attached by id, rank to top ``k`` — the
-    shared tail of every quantized ANN path (int8 / PQ / IVF-PQ): the
-    wide arrays only ever join against the O(k·rerank) band, never the
-    full candidate set."""
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("qr_nrm"),
+    """Keep the top ``k * rerank_factor`` band of (query_id, neighbor_id,
+    ascore) rows per query by approximate score (ties to the lower
+    neighbor id), rescore that band with the exact cosine on full
+    vectors re-attached by id, rank to top ``k`` — the shared tail of
+    every quantized ANN path (int8 / PQ / IVF-PQ): the wide arrays only
+    ever join against the O(k·rerank) band, never the full candidate
+    set."""
+    wa = W.partitionBy("query_id").orderBy(F.desc("ascore"), "neighbor_id")
+    band = (
+        approx.withColumn("arank", F.row_number().over(wa))
+        .filter(F.col("arank") <= k * rerank_factor)
+        .select("query_id", "neighbor_id")
     )
-    cv = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("cr_nrm"),
-    )
+    qv = _normed(queries, "query_id", "q_vec", "qr_nrm")
+    cv = _normed(vectors, "neighbor_id", "c_vec", "cr_nrm")
     rescored = (
         band.join(F.broadcast(qv), "query_id")
         .join(cv, "neighbor_id")
@@ -906,24 +905,13 @@ def _exact_rerank_topk(
             ).alias("cosine"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        rescored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(rescored, k)
 
 
 def pq_topk(
     vectors: DataFrame,
     queries: DataFrame,
-    k: int = 5,
-    n_subspaces: int = 16,
-    n_codes: int = 16,
-    n_iters: int = 3,
-    rerank_factor: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
+    k: int = ANN_K,
     train_sample_denom: int | str | None = "auto",
     codebooks: list[list[list[float]]] | None = None,
     codes: DataFrame | None = None,
@@ -933,16 +921,16 @@ def pq_topk(
     LSH buckets, IVF probing, and int8 scalar quantization:
 
     - TRAIN: one codebook per subspace (:func:`pq_codebooks`);
-    - ENCODE: each candidate becomes ``n_subspaces`` integer codes
+    - ENCODE: each candidate becomes ``PQ_SUBSPACES`` integer codes
       (:func:`pq_encode`) — the only per-candidate state the scoring
       join touches;
     - SCORE (ADC): per query and subspace, precompute the dot product
       of the query subvector with every codebook entry (an
-      ``n_codes``-slot lookup table, built once per query on the
+      ``PQ_CODES``-slot lookup table, built once per query on the
       broadcast side); a candidate's approximate dot is then
-      ``n_subspaces`` array lookups + adds — no per-pair fold over the
+      ``PQ_SUBSPACES`` array lookups + adds — no per-pair fold over the
       64 dims at all, which is the whole point of ADC at 100 TB;
-    - RERANK: the top ``k * rerank_factor`` band per approximate
+    - RERANK: the top ``k * PQ_RERANK`` band per approximate
       cosine (reconstructed-norm denominator, same lookup trick) is
       rescored with the exact cosine on full vectors re-attached by id.
 
@@ -965,56 +953,32 @@ def pq_topk(
     Returns (query_id, neighbor_id, cosine, rank ≤ k) with EXACT
     cosines; only the ranking beyond the band is approximate."""
     books = codebooks if codebooks is not None else pq_codebooks(
-        vectors,
-        n_subspaces=n_subspaces,
-        n_codes=n_codes,
-        n_iters=n_iters,
-        id_col=id_col,
-        vec_col=vec_col,
-        dim=dim,
-        train_sample_denom=train_sample_denom,
+        vectors, train_sample_denom=train_sample_denom
     )
-    sub = dim // n_subspaces
     if codes is None:
-        codes = pq_encode(vectors, books, id_col, vec_col)
+        codes = pq_encode(vectors, books)
 
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("q_nrm"),
-        *_adc_query_cols(books, sub, vec_col),
+        F.col("vec_id").alias("query_id"),
+        F.expr(l2_norm_sql("`embedding`")).alias("q_nrm"),
+        *_adc_query_cols(books),
     )
     approx = (
         codes.crossJoin(F.broadcast(q))
-        .filter(F.col("query_id") != F.col(id_col))
+        .filter(F.col("query_id") != F.col("vec_id"))
         .select(
             "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            _adc_score(n_subspaces).alias("ascore"),
+            F.col("vec_id").alias("neighbor_id"),
+            _adc_score(len(books)).alias("ascore"),
         )
     )
-    wa = W.partitionBy("query_id").orderBy(F.desc("ascore"), "neighbor_id")
-    band = (
-        approx.withColumn("arank", F.row_number().over(wa))
-        .filter(F.col("arank") <= k * rerank_factor)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_rerank_topk(band, vectors, queries, k, id_col, vec_col)
+    return _exact_rerank_topk(approx, vectors, queries, k, PQ_RERANK)
 
 
 def ivfpq_topk(
     vectors: DataFrame,
     queries: DataFrame,
-    k: int = 5,
-    n_clusters: int = 16,
-    n_probes: int = 4,
-    n_subspaces: int = 8,
-    n_codes: int = 16,
-    n_iters: int = 3,
-    rerank_factor: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    train_sample_denom: int | str | None = "auto",
+    k: int = ANN_K,
     centroids: list[list[float]] | None = None,
     codebooks: list[list[list[float]]] | None = None,
     index: DataFrame | None = None,
@@ -1025,20 +989,20 @@ def ivfpq_topk(
     oracle-verifiable):
 
     - IVF coarse quantizer (:func:`kmeans_centroids`) partitions
-      candidates into cells; each query probes only its ``n_probes``
+      candidates into cells; each query probes only its ``IVF_PROBES``
       nearest — at 100 TB the cell id is the storage partition key, so
       probing prunes FILES before any row is read;
     - within the probed cells, candidates are scored by PQ asymmetric
-      distance (:func:`_adc_score`): ``n_subspaces`` array lookups per
+      distance (:func:`_adc_score`): ``IVFPQ_SUBSPACES`` array lookups per
       pair against per-query tables, over an encoded table ~16× narrower
       than the float32 vectors — the probe-pruned scan reads small
       integer codes, never embeddings;
-    - the top ``k * rerank_factor`` band per query is reranked with the
+    - the top ``k * IVFPQ_RERANK`` band per query is reranked with the
       exact cosine on full vectors re-attached by id
       (:func:`_exact_rerank_topk`).
 
     The two prunings compose multiplicatively: the scan reads
-    ~(n_probes/n_clusters) of the corpus at ~1/16 the bytes per row.
+    ~(IVF_PROBES/IVF_CLUSTERS) of the corpus at ~1/16 the bytes per row.
     One candidate scan produces (id, cluster_id, code_0..m-1) — the
     coarse argmin and all subspace encodings are projections of the
     same row, so IVF and PQ add no extra pass over the table.
@@ -1046,9 +1010,9 @@ def ivfpq_topk(
     Deterministic end to end (fixed-point k-means for both quantizers,
     fixed-order ADC sums), so even the approximate band is value-hash
     reproducible by the serial DuckDB oracle
-    (plans.vector_oracles.ann_ivfpq_topk_sql). ``train_sample_denom``
-    is forwarded to BOTH trainers; with ``n_clusters == n_codes`` and
-    ``"auto"`` they derive the identical denominator.
+    (plans.vector_oracles.ann_ivfpq_topk_sql). Both trainers sample
+    with ``"auto"``; with ``IVF_CLUSTERS == PQ_CODES`` they derive the
+    identical denominator.
 
     ``centroids``/``codebooks`` (pretrained) skip the corresponding
     trainer — see :func:`ivf_topk`/:func:`pq_topk`; sources.ann_store
@@ -1061,45 +1025,25 @@ def ivfpq_topk(
     Returns (query_id, neighbor_id, cosine, rank ≤ k) with EXACT
     cosines; only the ranking beyond the band is approximate."""
     if centroids is None:
-        centroids = kmeans_centroids(
-            vectors,
-            n_clusters=n_clusters,
-            id_col=id_col,
-            vec_col=vec_col,
-            dim=dim,
-            train_sample_denom=train_sample_denom,
-        )
+        centroids = kmeans_centroids(vectors, train_sample_denom="auto")
     books = codebooks if codebooks is not None else pq_codebooks(
-        vectors,
-        n_subspaces=n_subspaces,
-        n_codes=n_codes,
-        n_iters=n_iters,
-        id_col=id_col,
-        vec_col=vec_col,
-        dim=dim,
-        train_sample_denom=train_sample_denom,
+        vectors, n_subspaces=IVFPQ_SUBSPACES, train_sample_denom="auto"
     )
-    sub = dim // n_subspaces
     if index is not None:
-        codes = index.withColumnRenamed(id_col, "neighbor_id")
+        codes = index.withColumnRenamed("vec_id", "neighbor_id")
     else:
         # candidate side: ONE scan → (neighbor_id, cluster_id, codes…)
-        ccols: list[Column] = [
-            F.col(id_col).alias("neighbor_id"),
+        codes = assign_to_centroid(vectors, centroids).select(
+            F.col("vec_id").alias("neighbor_id"),
             F.col("cluster_id"),
-        ]
-        for j, book in enumerate(books):
-            sv = _svec_sql(vec_col, j * sub + 1, sub)
-            ccols.append(
-                F.expr(_argmin_code_sql(sv, book)).alias(f"code_{j}")
-            )
-        codes = assign_to_centroid(vectors, centroids, vec_col).select(*ccols)
+            *_code_cols(books),
+        )
     # query side: probes + ADC lookup tables in one projection, then
     # one row per (query, probed cell) — broadcast to the cell join
-    q = assign_probes(queries, centroids, n_probes, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.expr(l2_norm_sql(f"`{vec_col}`")).alias("q_nrm"),
-        *_adc_query_cols(books, sub, vec_col),
+    q = assign_probes(queries, centroids, IVF_PROBES).select(
+        F.col("vec_id").alias("query_id"),
+        F.expr(l2_norm_sql("`embedding`")).alias("q_nrm"),
+        *_adc_query_cols(books),
         F.explode("probe_ids").alias("cluster_id"),
     )
     approx = (
@@ -1108,13 +1052,7 @@ def ivfpq_topk(
         .select(
             "query_id",
             "neighbor_id",
-            _adc_score(n_subspaces).alias("ascore"),
+            _adc_score(len(books)).alias("ascore"),
         )
     )
-    wa = W.partitionBy("query_id").orderBy(F.desc("ascore"), "neighbor_id")
-    band = (
-        approx.withColumn("arank", F.row_number().over(wa))
-        .filter(F.col("arank") <= k * rerank_factor)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_rerank_topk(band, vectors, queries, k, id_col, vec_col)
+    return _exact_rerank_topk(approx, vectors, queries, k, IVFPQ_RERANK)

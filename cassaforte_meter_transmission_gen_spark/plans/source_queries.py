@@ -36,6 +36,89 @@ def _scratch(prefix: str) -> str:
     return d
 
 
+def _seed_orders_snapshot(spark: SparkSession, sf_dir: str, root: str):
+    """Create the snapshot table at ``root`` that the snapshot entries
+    (and streaming.pipeline.run_bounded_snapshot_view) share — the
+    ``o_orderkey < 4000`` orders slice hashed into 8 key buckets — and
+    commit it as snapshot 0. Returns (table, seeded frame with its
+    ``bucket`` column)."""
+    from ..sources.snapshot import SnapshotTable, bucket_of
+
+    table = SnapshotTable(
+        root,
+        "bucket int, o_orderkey bigint, o_orderstatus string,"
+        " o_totalprice double",
+        8,
+    )
+    base = (
+        load_table(spark, sf_dir, "orders")
+        .filter(F.col("o_orderkey") < 4000)
+        .select(
+            "o_orderkey",
+            "o_orderstatus",
+            F.col("o_totalprice").cast("double").alias("o_totalprice"),
+        )
+        .withColumn("bucket", bucket_of("o_orderkey", table.n_buckets))
+    )
+    table.commit(base, 0)
+    return table, base
+
+
+def _orders_upsert(base: DataFrame) -> DataFrame:
+    """The snapshot-1 upsert tranche of the seeded orders slice: +50 on
+    the ``o_orderkey % 10 == 7`` rows."""
+    return base.filter(F.col("o_orderkey") % 10 == 7).withColumn(
+        "o_totalprice", F.col("o_totalprice") + 50
+    )
+
+
+def _commit_upsert(spark: SparkSession, table, upd: DataFrame, sid: int, **kw) -> None:
+    """Commit the updated rows ``upd`` as snapshot ``sid``, rewriting
+    only the buckets they touch (their other rows carried over);
+    ``kw`` passes through to ``SnapshotTable.commit``."""
+    upd = upd.localCheckpoint()  # consumed twice: touched buckets + merge
+    touched = [r[0] for r in upd.select("bucket").distinct().collect()]
+    prev = table.read(spark, buckets=touched)
+    merged = prev.join(
+        F.broadcast(upd.select("o_orderkey")), "o_orderkey", "left_anti"
+    ).unionByName(upd.select(*prev.columns))
+    table.commit(merged, sid, **kw)
+
+
+def _commit_mixed_tranche(spark: SparkSession, table, base: DataFrame) -> None:
+    """Commit snapshot 1 of the seeded orders table as one mixed CDC
+    tranche — the :func:`_orders_upsert` update, a delete of the %10=3
+    keys, inserts of the %10=1 rows at key + 100000 — rewriting only
+    the touched buckets (one left empty is emptied explicitly)."""
+    from ..sources.snapshot import bucket_of
+
+    upd = _orders_upsert(base)
+    dele = base.filter(F.col("o_orderkey") % 10 == 3).select("o_orderkey")
+    ins = (
+        base.filter(F.col("o_orderkey") % 10 == 1)
+        .withColumn("o_orderkey", F.col("o_orderkey") + 100000)
+        .withColumn("bucket", bucket_of("o_orderkey", table.n_buckets))
+    )
+    changes = upd.unionByName(ins).localCheckpoint()
+    keys_out = changes.select("o_orderkey").unionByName(dele)
+    touched = [
+        r[0]
+        for r in changes.select("bucket")
+        .unionByName(
+            base.join(F.broadcast(dele), "o_orderkey", "left_semi")
+            .select("bucket")
+        )
+        .distinct()
+        .collect()
+    ]
+    prev = table.read(spark, buckets=touched)
+    merged = (
+        prev.join(F.broadcast(keys_out), "o_orderkey", "left_anti")
+        .unionByName(changes.select(*prev.columns))
+        .localCheckpoint()
+    )
+    kept = {r[0] for r in merged.select("bucket").distinct().collect()}
+    table.commit(merged, 1, emptied_buckets=sorted(set(touched) - kept))
 
 
 def _roundtrip(
@@ -714,36 +797,10 @@ def source_snapshot_table_roundtrip(
     Scale: readers plan from the manifest alone (no data-tree
     listing); an upsert's cost is O(touched buckets), the economics
     that make dimension maintenance viable at 100 TB."""
-    from ..sources.snapshot import SnapshotTable, bucket_of
-
-    n_buckets = 8
-    root = os.path.join(_scratch("src_snaptbl_"), "orders_snap")
-    table = SnapshotTable(
-        root,
-        "bucket int, o_orderkey bigint, o_orderstatus string,"
-        " o_totalprice double",
-        n_buckets,
+    table, base = _seed_orders_snapshot(
+        spark, sf_dir, os.path.join(_scratch("src_snaptbl_"), "orders_snap")
     )
-    base = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") < 4000)
-        .select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.col("o_totalprice").cast("double").alias("o_totalprice"),
-        )
-    )
-    withb = base.withColumn("bucket", bucket_of("o_orderkey", n_buckets))
-    table.commit(withb, 0)
-    upd = withb.filter(F.col("o_orderkey") % 10 == 7).withColumn(
-        "o_totalprice", F.col("o_totalprice") + 50
-    ).localCheckpoint()  # consumed twice: touched buckets + merge
-    touched = [r[0] for r in upd.select("bucket").distinct().collect()]
-    prev = table.read(spark, buckets=touched)
-    merged = prev.join(
-        F.broadcast(upd.select("o_orderkey")), "o_orderkey", "left_anti"
-    ).unionByName(upd.select(*prev.columns))
-    table.commit(merged, 1)
+    _commit_upsert(spark, table, _orders_upsert(base), 1)
     as_of_0 = table.read(spark, as_of=0).drop("bucket").withColumn(
         "snapshot_id", F.lit(0)
     )
@@ -792,44 +849,15 @@ def source_snapshot_compaction_roundtrip(
     metadata ops — no data scan. This is the bounded-hygiene story the
     streaming commit-log tables document, realized on the lakehouse
     format."""
-    from ..sources.snapshot import SnapshotTable, bucket_of
-
-    n_buckets = 8
-    root = os.path.join(_scratch("src_snapcompact_"), "orders_snap")
-    table = SnapshotTable(
-        root,
-        "bucket int, o_orderkey bigint, o_orderstatus string,"
-        " o_totalprice double",
-        n_buckets,
+    table, base = _seed_orders_snapshot(
+        spark, sf_dir, os.path.join(_scratch("src_snapcompact_"), "orders_snap")
     )
-    base = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") < 4000)
-        .select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.col("o_totalprice").cast("double").alias("o_totalprice"),
-        )
-        .withColumn("bucket", bucket_of("o_orderkey", n_buckets))
+    _commit_upsert(spark, table, _orders_upsert(base), 1)
+    # the second tranche applies over snapshot-1 state
+    upd = table.read(spark).filter(F.col("o_orderkey") % 10 == 3)
+    _commit_upsert(
+        spark, table, upd.withColumn("o_totalprice", F.col("o_totalprice") + 25.0), 2
     )
-    table.commit(base, 0)
-    for sid, (mod, delta) in enumerate([(7, 50.0), (3, 25.0)], start=1):
-        upd = base.filter(F.col("o_orderkey") % 10 == mod).withColumn(
-            "o_totalprice", F.col("o_totalprice") + delta
-        )
-        if sid == 2:  # second tranche applies over snapshot-1 state
-            upd = table.read(spark).filter(
-                F.col("o_orderkey") % 10 == mod
-            ).withColumn("o_totalprice", F.col("o_totalprice") + delta)
-        upd = upd.localCheckpoint()  # consumed twice: buckets + merge
-        touched = [r[0] for r in upd.select("bucket").distinct().collect()]
-        prev = table.read(spark, buckets=touched)
-        merged = prev.join(
-            F.broadcast(upd.select("o_orderkey")),
-            "o_orderkey",
-            "left_anti",
-        ).unionByName(upd.select(*prev.columns))
-        table.commit(merged, sid)
     table.compact(spark, 3)
     table.expire(keep_from=3)
     table.vacuum()
@@ -870,27 +898,9 @@ def source_snapshot_schema_evolution(
 
     Scale: evolving a 100 TB table costs one manifest write — zero
     data-file rewrites; the default is applied at read."""
-    from ..sources.snapshot import SnapshotTable, bucket_of
-
-    n_buckets = 8
-    root = os.path.join(_scratch("src_snapevolve_"), "orders_snap")
-    table = SnapshotTable(
-        root,
-        "bucket int, o_orderkey bigint, o_orderstatus string,"
-        " o_totalprice double",
-        n_buckets,
+    table, base = _seed_orders_snapshot(
+        spark, sf_dir, os.path.join(_scratch("src_snapevolve_"), "orders_snap")
     )
-    base = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") < 4000)
-        .select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.col("o_totalprice").cast("double").alias("o_totalprice"),
-        )
-        .withColumn("bucket", bucket_of("o_orderkey", n_buckets))
-    )
-    table.commit(base, 0)
     upd = base.filter(F.col("o_orderkey") % 10 == 7).localCheckpoint()
     touched = [r[0] for r in upd.select("bucket").distinct().collect()]
     prev = table.read(spark, buckets=touched)
@@ -945,27 +955,9 @@ def source_snapshot_delete_compliance(
 
     Scale: cost is O(buckets containing deleted keys) + metadata —
     the same partial-rewrite economics as any upsert."""
-    from ..sources.snapshot import SnapshotTable, bucket_of
-
-    n_buckets = 8
-    root = os.path.join(_scratch("src_snapdelete_"), "orders_snap")
-    table = SnapshotTable(
-        root,
-        "bucket int, o_orderkey bigint, o_orderstatus string,"
-        " o_totalprice double",
-        n_buckets,
+    table, base = _seed_orders_snapshot(
+        spark, sf_dir, os.path.join(_scratch("src_snapdelete_"), "orders_snap")
     )
-    base = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") < 4000)
-        .select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.col("o_totalprice").cast("double").alias("o_totalprice"),
-        )
-        .withColumn("bucket", bucket_of("o_orderkey", n_buckets))
-    )
-    table.commit(base, 0)
     doomed = base.filter(F.col("o_orderkey") % 10 == 3).localCheckpoint()
     touched = [r[0] for r in doomed.select("bucket").distinct().collect()]
     prev = table.read(spark, buckets=touched)
@@ -1028,56 +1020,10 @@ def source_snapshot_incremental_diff(
 
     Scale: a downstream sync of a 100 TB table reads O(changed
     buckets), never the table — the manifest diff is the plan."""
-    from ..sources.snapshot import SnapshotTable, bucket_of
-
-    n_buckets = 8
-    root = os.path.join(_scratch("src_snapdiff_"), "orders_snap")
-    table = SnapshotTable(
-        root,
-        "bucket int, o_orderkey bigint, o_orderstatus string,"
-        " o_totalprice double",
-        n_buckets,
+    table, base = _seed_orders_snapshot(
+        spark, sf_dir, os.path.join(_scratch("src_snapdiff_"), "orders_snap")
     )
-    base = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") < 4000)
-        .select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.col("o_totalprice").cast("double").alias("o_totalprice"),
-        )
-        .withColumn("bucket", bucket_of("o_orderkey", n_buckets))
-    )
-    table.commit(base, 0)
-    upd = base.filter(F.col("o_orderkey") % 10 == 7).withColumn(
-        "o_totalprice", F.col("o_totalprice") + 50
-    )
-    dele = base.filter(F.col("o_orderkey") % 10 == 3).select("o_orderkey")
-    ins = (
-        base.filter(F.col("o_orderkey") % 10 == 1)
-        .withColumn("o_orderkey", F.col("o_orderkey") + 100000)
-        .withColumn("bucket", bucket_of("o_orderkey", n_buckets))
-    )
-    changes = upd.unionByName(ins).localCheckpoint()
-    keys_out = changes.select("o_orderkey").unionByName(dele)
-    touched = [
-        r[0]
-        for r in changes.select("bucket")
-        .unionByName(
-            base.join(F.broadcast(dele), "o_orderkey", "left_semi")
-            .select("bucket")
-        )
-        .distinct()
-        .collect()
-    ]
-    prev = table.read(spark, buckets=touched)
-    merged = (
-        prev.join(F.broadcast(keys_out), "o_orderkey", "left_anti")
-        .unionByName(changes.select(*prev.columns))
-        .localCheckpoint()
-    )
-    kept = {r[0] for r in merged.select("bucket").distinct().collect()}
-    table.commit(merged, 1, emptied_buckets=sorted(set(touched) - kept))
+    _commit_mixed_tranche(spark, table, base)
     # --- the CDC read: manifest diff -> bucket-pruned row diff ---
     cb = table.changed_buckets(0, 1)
     old = table.read(spark, as_of=0, buckets=cb).select(
@@ -1145,27 +1091,9 @@ def source_snapshot_incremental_agg(
     Scale: the downstream view of a 100 TB table refreshes by reading
     O(changed buckets) — the manifest diff is the refresh plan; the
     full-table aggregation never re-runs after the seed."""
-    from ..sources.snapshot import SnapshotTable, bucket_of
-
-    n_buckets = 8
-    root = os.path.join(_scratch("src_snapivm_"), "orders_snap")
-    table = SnapshotTable(
-        root,
-        "bucket int, o_orderkey bigint, o_orderstatus string,"
-        " o_totalprice double",
-        n_buckets,
+    table, base = _seed_orders_snapshot(
+        spark, sf_dir, os.path.join(_scratch("src_snapivm_"), "orders_snap")
     )
-    base = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") < 4000)
-        .select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.col("o_totalprice").cast("double").alias("o_totalprice"),
-        )
-        .withColumn("bucket", bucket_of("o_orderkey", n_buckets))
-    )
-    table.commit(base, 0)
 
     def partials(df: DataFrame, sign: int) -> DataFrame:
         return df.groupBy("o_orderstatus").agg(
@@ -1178,36 +1106,7 @@ def source_snapshot_incremental_agg(
     # seed the downstream view from snapshot 0 (the one full pass)
     view0 = partials(table.read(spark), 1).localCheckpoint()
 
-    # the mixed tranche: update %10=7 (+50), delete %10=3, insert %10=1
-    upd = base.filter(F.col("o_orderkey") % 10 == 7).withColumn(
-        "o_totalprice", F.col("o_totalprice") + 50
-    )
-    dele = base.filter(F.col("o_orderkey") % 10 == 3).select("o_orderkey")
-    ins = (
-        base.filter(F.col("o_orderkey") % 10 == 1)
-        .withColumn("o_orderkey", F.col("o_orderkey") + 100000)
-        .withColumn("bucket", bucket_of("o_orderkey", n_buckets))
-    )
-    changes = upd.unionByName(ins).localCheckpoint()
-    keys_out = changes.select("o_orderkey").unionByName(dele)
-    touched = [
-        r[0]
-        for r in changes.select("bucket")
-        .unionByName(
-            base.join(F.broadcast(dele), "o_orderkey", "left_semi")
-            .select("bucket")
-        )
-        .distinct()
-        .collect()
-    ]
-    prev = table.read(spark, buckets=touched)
-    merged = (
-        prev.join(F.broadcast(keys_out), "o_orderkey", "left_anti")
-        .unionByName(changes.select(*prev.columns))
-        .localCheckpoint()
-    )
-    kept = {r[0] for r in merged.select("bucket").distinct().collect()}
-    table.commit(merged, 1, emptied_buckets=sorted(set(touched) - kept))
+    _commit_mixed_tranche(spark, table, base)
 
     # --- the incremental refresh: changed buckets only ---
     cb = table.changed_buckets(0, 1)
@@ -1335,27 +1234,9 @@ def source_snapshot_delete_mor(
     rewrites every bucket containing one — the ledger probe measures
     the gap; reads pay one small anti-join until compaction folds it
     away."""
-    from ..sources.snapshot import SnapshotTable, bucket_of
-
-    n_buckets = 8
-    root = os.path.join(_scratch("src_snapmor_"), "orders_snap")
-    table = SnapshotTable(
-        root,
-        "bucket int, o_orderkey bigint, o_orderstatus string,"
-        " o_totalprice double",
-        n_buckets,
+    table, base = _seed_orders_snapshot(
+        spark, sf_dir, os.path.join(_scratch("src_snapmor_"), "orders_snap")
     )
-    base = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") < 4000)
-        .select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.col("o_totalprice").cast("double").alias("o_totalprice"),
-        )
-        .withColumn("bucket", bucket_of("o_orderkey", n_buckets))
-    )
-    table.commit(base, 0)
     doomed = base.filter(F.col("o_orderkey") % 10 == 3).select(
         "bucket", "o_orderkey"
     )
@@ -1397,38 +1278,13 @@ def source_snapshot_rebucket_roundtrip(
     become 4096-bucket tables at 100 TB — an offline one-shuffle job
     against the old root while it keeps serving, then an atomic
     pointer cutover; the old table is never mutated."""
-    from ..sources.snapshot import SnapshotTable, bucket_of
-
-    n_buckets = 8
     scratch = _scratch("src_snaprebucket_")
-    root = os.path.join(scratch, "orders_snap")
-    table = SnapshotTable(
-        root,
-        "bucket int, o_orderkey bigint, o_orderstatus string,"
-        " o_totalprice double",
-        n_buckets,
+    table, base = _seed_orders_snapshot(
+        spark, sf_dir, os.path.join(scratch, "orders_snap")
     )
-    base = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") < 4000)
-        .select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.col("o_totalprice").cast("double").alias("o_totalprice"),
-        )
-        .withColumn("bucket", bucket_of("o_orderkey", n_buckets))
+    _commit_upsert(
+        spark, table, _orders_upsert(base), 1, expected_parent=table.latest()
     )
-    table.commit(base, 0)
-    parent = table.latest()
-    upd = base.filter(F.col("o_orderkey") % 10 == 7).withColumn(
-        "o_totalprice", F.col("o_totalprice") + 50
-    ).localCheckpoint()  # consumed twice: touched buckets + merge
-    touched = [r[0] for r in upd.select("bucket").distinct().collect()]
-    prev = table.read(spark, buckets=touched)
-    merged = prev.join(
-        F.broadcast(upd.select("o_orderkey")), "o_orderkey", "left_anti"
-    ).unionByName(upd.select(*prev.columns))
-    table.commit(merged, 1, expected_parent=parent)
     migrated = table.rebucket(
         spark, os.path.join(scratch, "orders_snap_32"), "o_orderkey", 32
     )

@@ -366,7 +366,7 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup.minhash_near_duplicates, portable hash family). The oracle
     reproduces the *entire* pipeline — 16 permutations, 4×4 banding,
     candidate join, verification — from the shared constants."""
-    return minhash_near_duplicates(_docs(spark, sf_dir), threshold=0.7, portable=True)
+    return minhash_near_duplicates(_docs(spark, sf_dir), threshold=0.7)
 
 
 @register(
@@ -400,7 +400,7 @@ def dedup_minhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     stopped early or mis-propagated, group ids would differ."""
     from ..operators.dedup import duplicate_groups
 
-    pairs = minhash_near_duplicates(_docs(spark, sf_dir), threshold=0.7, portable=True)
+    pairs = minhash_near_duplicates(_docs(spark, sf_dir), threshold=0.7)
     return duplicate_groups(pairs)
 
 
@@ -434,7 +434,7 @@ SELECT doc_id, {assemble} AS simhash FROM votes
 def dedup_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """60-bit SimHash signatures (operators.dedup.simhash_signatures,
     portable hash family) — oracle recomputes every bit vote."""
-    return simhash_signatures(_docs(spark, sf_dir), portable=True)
+    return simhash_signatures(_docs(spark, sf_dir))
 
 
 @register(
@@ -1157,7 +1157,7 @@ def dedup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import duplicate_groups
 
     d = _docs(spark, sf_dir)
-    pairs = minhash_near_duplicates(d, threshold=0.7, portable=True)
+    pairs = minhash_near_duplicates(d, threshold=0.7)
     groups = duplicate_groups(pairs)
     allg = (
         d.select("doc_id", "n_chars")
@@ -1667,12 +1667,12 @@ def text_hybrid_rrf_topk_sql(
     divisions of exact integers added once (two-operand FP addition is
     commutative), so the fused doubles are bit-equal to Spark's."""
     from ..operators.retrieval import RRF_C
-    from .vector_queries import _DOT, _NORM
+    from .vector_oracles import DOT, NORM
 
     terms = BM25_TERMS if terms is None else terms
-    dot = _DOT.format(a="qv", b="cv")
-    nq = _NORM.format(v="qv")
-    nc = _NORM.format(v="cv")
+    dot = DOT.format(a="qv", b="cv")
+    nq = NORM.format(v="qv")
+    nc = NORM.format(v="cv")
     return f"""
 WITH {_bm25_ranked_ctes(terms)},
 lexr AS (SELECT doc_id, rank AS lex_rank FROM ranked WHERE rank <= {k_each}),

@@ -20,6 +20,14 @@ MinHash oracle in plans.text_queries, extended to doubles:
   (operators.similarity.KMEANS_SCALE), so the serial SQL derivation
   and Spark's parallel aggregation produce the same centroids bit for
   bit, and the 3 Lloyd iterations unroll into a CTE chain.
+
+Each cross-engine value is defined once: the embedding width is
+``schemas.EMB_DIM``, and the ANN query shape (ANN_K, ANN_QUERIES) and
+every index configuration (LSH tables × planes, IVF cells/probes, PQ and
+IVF-PQ subspaces/codes/rerank bands, KMEANS_ITERS) are the constants of
+operators.similarity, which the functions below read instead of taking
+them as parameters. Oracles share those values with the engine, never
+its SQL text: every string here is DuckDB's own derivation.
 """
 
 from __future__ import annotations
@@ -28,7 +36,26 @@ import functools
 import re
 
 from ..functions.sqltext import sql_double_lit
-from ..operators.similarity import KMEANS_SCALE, hyperplanes
+from ..operators.similarity import (
+    ANN_K,
+    ANN_QUERIES,
+    INT8_EPS,
+    INT8_RERANK,
+    IVF_CLUSTERS,
+    IVF_PROBES,
+    IVFPQ_RERANK,
+    IVFPQ_SUBSPACES,
+    KMEANS_ITERS,
+    KMEANS_SCALE,
+    LSH_ANN,
+    LSH_DEDUP,
+    LSH_HI,
+    PQ_CODES,
+    PQ_RERANK,
+    PQ_SUBSPACES,
+    lsh_tables,
+)
+from ..schemas import EMB_DIM
 
 
 def _materialized(fn):
@@ -46,14 +73,21 @@ def _materialized(fn):
 
     return wrapped
 
-DIM = 64
 
-#: sequential-fold cosine pieces shared with plans.vector_queries
+#: sequential-fold cosine pieces shared with plans.vector_queries and
+#: plans.text_queries
 DOT = (
     "list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-    " list_transform(range(1, 65),"
+    f" list_transform(range(1, {EMB_DIM + 1}),"
     " i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE))),"
     " (acc, x) -> acc + x)"
+)
+
+#: the full-vector double view every k-means oracle starts from
+_E_CTE = (
+    "WITH e AS (SELECT vec_id,"
+    " list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v"
+    " FROM embeddings),"
 )
 NORM = (
     "sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
@@ -75,7 +109,7 @@ def _plane_proj(v: str, plane: list[float]) -> str:
     lst = "[" + ", ".join(sql_double_lit(x) for x in plane) + "]"
     return (
         "list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-        f" list_transform(range(1, {DIM + 1}),"
+        f" list_transform(range(1, {EMB_DIM + 1}),"
         f" i -> CAST({v}[i] AS DOUBLE) * ({lst})[i])),"
         " (acc, x) -> acc + x)"
     )
@@ -90,17 +124,14 @@ def _bucket(v: str, planes: list[list[float]]) -> str:
     return "(" + " + ".join(bits) + ")"
 
 
-def _bucket_keys_cte(n_tables: int, n_planes: int, where: str = "") -> str:
-    """(vec_id, t, bucket) — one SELECT per hash table, same seeds as
-    the Spark operators (20130101 + 7919·t)."""
-    tables = [
-        hyperplanes(DIM, n_planes, seed=20130101 + 7919 * t)
-        for t in range(n_tables)
-    ]
+def _bucket_keys_cte(config: tuple[int, int], where: str = "") -> str:
+    """(vec_id, t, bucket) — one SELECT per hash table of the
+    (n_tables, n_planes) ``config``, the Spark operators' hyperplanes
+    (operators.similarity.lsh_tables)."""
     return "\nUNION ALL\n".join(
         f"SELECT vec_id, {t} AS t, {_bucket('embedding', planes)} AS bucket"
         f" FROM embeddings{where}"
-        for t, planes in enumerate(tables)
+        for t, planes in enumerate(lsh_tables(*config))
     )
 
 
@@ -119,19 +150,15 @@ EMB_LSH_VERIFY_BOUND = 20_000
 
 
 @_materialized
-def dedup_embedding_cosine_lsh_sql(
-    threshold: float = 0.4,
-    n_tables: int = 12,
-    n_planes: int = 3,
-    bound: int = EMB_LSH_VERIFY_BOUND,
-) -> str:
-    """Oracle for operators.dedup.embedding_cosine_duplicates_lsh over
-    the bounded ``vec_id < bound`` slice (see EMB_LSH_VERIFY_BOUND)."""
+def dedup_embedding_cosine_lsh_sql() -> str:
+    """Oracle for operators.dedup.embedding_cosine_duplicates_lsh at
+    threshold 0.4 over the bounded ``vec_id < EMB_LSH_VERIFY_BOUND``
+    slice."""
     cos = _cosine("va", "vb")
-    where = f" WHERE vec_id < {bound}"
+    where = f" WHERE vec_id < {EMB_LSH_VERIFY_BOUND}"
     return f"""
 WITH bk AS (
-{_bucket_keys_cte(n_tables, n_planes, where)}
+{_bucket_keys_cte(LSH_DEDUP, where)}
 ),
 cand AS (
   SELECT DISTINCT a.vec_id AS dup_a, b.vec_id AS dup_b
@@ -144,23 +171,21 @@ SELECT dup_a, dup_b, {cos} AS cosine
 FROM cand
 JOIN ea ON ea.vec_id = dup_a
 JOIN eb ON eb.vec_id = dup_b
-WHERE {cos} >= {threshold}
+WHERE {cos} >= 0.4
 """
 
 
 @_materialized
-def dedup_embedding_cosine_lsh_stats_sql(
-    threshold: float = 0.8, n_tables: int = 16, n_planes: int = 8
-) -> str:
-    """Oracle for operators.dedup.embedding_cosine_lsh_stats: the
-    one-row pruning profile of the high-threshold LSH configuration,
-    re-derived serially from the same fixed-seed hyperplanes. The
+def dedup_embedding_cosine_lsh_stats_sql() -> str:
+    """Oracle for operators.dedup.embedding_cosine_lsh_stats at
+    threshold 0.8: the one-row pruning profile of the high-threshold
+    LSH configuration, re-derived serially from the same fixed-seed hyperplanes. The
     candidate_fraction division is DOUBLE/DOUBLE of identical integers
     on both engines, so it is bit-identical."""
     cos = _cosine("va", "vb")
     return f"""
 WITH bk AS (
-{_bucket_keys_cte(n_tables, n_planes)}
+{_bucket_keys_cte(LSH_HI)}
 ),
 cand AS (
   SELECT DISTINCT a.vec_id AS dup_a, b.vec_id AS dup_b
@@ -177,7 +202,7 @@ nm AS (
   FROM cand
   JOIN ea ON ea.vec_id = dup_a
   JOIN eb ON eb.vec_id = dup_b
-  WHERE {cos} >= {threshold}
+  WHERE {cos} >= 0.8
 )
 SELECT n_candidates, n_pairs,
        CAST(n_candidates AS DOUBLE) / CAST(n_pairs AS DOUBLE)
@@ -187,20 +212,33 @@ FROM nc, nv, nm
 """
 
 
+def _top_k_tail(src: str) -> str:
+    """Rank each query's (query_id, neighbor_id, cosine) rows of CTE
+    ``src`` by cosine, ties to the lower neighbor id, and select ranks
+    ≤ ANN_K — mirrors operators.similarity._top_k."""
+    return f"""ranked AS (
+  SELECT query_id, neighbor_id, cosine,
+         CAST(row_number() OVER (PARTITION BY query_id
+                                 ORDER BY cosine DESC, neighbor_id) AS INT)
+           AS rank
+  FROM {src}
+)
+SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {ANN_K}"""
+
+
 @_materialized
-def ann_lsh_topk_sql(
-    k: int = 5, n_tables: int = 8, n_planes: int = 3, n_queries: int = 5
-) -> str:
-    """Oracle for operators.similarity.lsh_topk (queries: vec_id < 5)."""
+def ann_lsh_topk_sql() -> str:
+    """Oracle for operators.similarity.lsh_topk (queries: vec_id <
+    ANN_QUERIES)."""
     cos = _cosine("qv", "cv")
     return f"""
 WITH bk AS (
-{_bucket_keys_cte(n_tables, n_planes)}
+{_bucket_keys_cte(LSH_ANN)}
 ),
 cand AS (
   SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
   FROM bk c JOIN bk q ON c.t = q.t AND c.bucket = q.bucket
-  WHERE q.vec_id < {n_queries} AND c.vec_id <> q.vec_id
+  WHERE q.vec_id < {ANN_QUERIES} AND c.vec_id <> q.vec_id
 ),
 qe AS (SELECT vec_id, embedding AS qv FROM embeddings),
 ce AS (SELECT vec_id, embedding AS cv FROM embeddings),
@@ -210,18 +248,11 @@ scored AS (
   JOIN qe ON qe.vec_id = query_id
   JOIN ce ON ce.vec_id = neighbor_id
 ),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         CAST(row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, neighbor_id) AS INT)
-           AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {k}
+{_top_k_tail("scored")}
 """
 
 
-def _sq_dist(v: str, cv: str, dim: int = DIM) -> str:
+def _sq_dist(v: str, cv: str, dim: int = EMB_DIM) -> str:
     """Sequential-fold squared-L2 — mirrors the zip_with/aggregate fold
     in operators.similarity.assign_to_centroid."""
     return (
@@ -234,15 +265,15 @@ def _sq_dist(v: str, cv: str, dim: int = DIM) -> str:
 
 def _kmeans_chain(
     n_clusters: int,
-    n_iters: int,
     train_sample_denom: int | str | None,
     prefix: str = "",
     src: str = "e",
-    dim: int = DIM,
+    dim: int = EMB_DIM,
 ) -> tuple[list[str], str]:
-    """The deterministic k-means training loop unrolled as CTEs (init =
-    the ``n_clusters`` smallest vec_ids of the training set; assign =
-    argmin sequential-fold squared-L2 with first-min tie-break; update
+    """The deterministic k-means training loop (KMEANS_ITERS Lloyd
+    steps) unrolled as CTEs (init = the ``n_clusters`` smallest vec_ids
+    of the training set; assign = argmin sequential-fold squared-L2
+    with first-min tie-break; update
     = fixed-point integer mean). Assumes a prior ``{src}(vec_id, v)``
     CTE with ``dim``-element vectors. Returns (cte_parts,
     final_centroid_cte_name) — shared by the IVF ANN oracle, the
@@ -296,7 +327,7 @@ def _kmeans_chain(
   FROM (SELECT vec_id, v FROM {train} ORDER BY vec_id LIMIT {n_clusters})
 ),""")
     prev = f"{p}c0"
-    for it in range(1, n_iters + 1):
+    for it in range(1, KMEANS_ITERS + 1):
         # assign: argmin distance, ties to the lowest cid (identical to
         # the Spark fold's keep-first-strict-min behavior)
         parts.append(f"""{p}a{it} AS (
@@ -324,25 +355,39 @@ def _kmeans_chain(
     return parts, prev
 
 
+def _assign_cte(name: str, cents: str) -> str:
+    """CTE ``name``(vec_id, cluster_id): every vector's argmin cell
+    against centroid CTE ``cents`` (ties to the lowest cid) —
+    mirrors operators.similarity.assign_to_centroid."""
+    return f"""{name} AS (
+  SELECT s.vec_id, (array_agg(s.cid ORDER BY s.d, s.cid))[1] AS cluster_id
+  FROM (SELECT e.vec_id, c.cid, {_sq_dist('e.v', 'c.cv')} AS d
+        FROM e CROSS JOIN {cents} c) s
+  GROUP BY s.vec_id
+)"""
+
+
+def _probed_cte(cents: str) -> str:
+    """CTE probed(query_id, cluster_id): the IVF_PROBES nearest cells of
+    each query — mirrors operators.similarity.assign_probes."""
+    return f"""probed AS (
+  SELECT s.vec_id AS query_id,
+         unnest(list_slice(array_agg(s.cid ORDER BY s.d, s.cid),
+                           1, {IVF_PROBES})) AS cluster_id
+  FROM (SELECT e.vec_id, c.cid, {_sq_dist('e.v', 'c.cv')} AS d
+        FROM e CROSS JOIN {cents} c WHERE e.vec_id < {ANN_QUERIES}) s
+  GROUP BY s.vec_id
+)"""
+
+
 @_materialized
-def ann_ivf_topk_sql(
-    k: int = 5,
-    n_clusters: int = 16,
-    n_probes: int = 4,
-    n_iters: int = 3,
-    n_queries: int = 5,
-    train_sample_denom: int | str | None = "auto",
-) -> str:
+def ann_ivf_topk_sql(train_sample_denom: int | str | None = "auto") -> str:
     """Oracle for operators.similarity.ivf_topk: the k-means chain
     (:func:`_kmeans_chain`), then the probe/score/rank pipeline —
     candidate assignment and probing read full ``e``, just like the
     plan."""
-    parts = [
-        "WITH e AS (SELECT vec_id,"
-        " list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v"
-        " FROM embeddings),",
-    ]
-    chain, prev = _kmeans_chain(n_clusters, n_iters, train_sample_denom)
+    parts = [_E_CTE]
+    chain, prev = _kmeans_chain(IVF_CLUSTERS, train_sample_denom)
     parts.extend(chain)
     cos = _cosine("qv", "cv2")
     parts.append(f"""cands AS (
@@ -352,14 +397,7 @@ def ann_ivf_topk_sql(
         FROM e CROSS JOIN {prev} c) s
   GROUP BY s.vec_id
 ),
-probed AS (
-  SELECT s.vec_id AS query_id,
-         unnest(list_slice(array_agg(s.cid ORDER BY s.d, s.cid),
-                           1, {n_probes})) AS cluster_id
-  FROM (SELECT e.vec_id, c.cid, {_sq_dist('e.v', 'c.cv')} AS d
-        FROM e CROSS JOIN {prev} c WHERE e.vec_id < {n_queries}) s
-  GROUP BY s.vec_id
-),
+{_probed_cte(prev)},
 qe AS (SELECT vec_id, embedding AS qv FROM embeddings),
 ce AS (SELECT vec_id, embedding AS cv2 FROM embeddings),
 scored AS (
@@ -370,42 +408,21 @@ scored AS (
   JOIN ce ON ce.vec_id = c.neighbor_id
   WHERE p.query_id <> c.neighbor_id
 ),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         CAST(row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, neighbor_id) AS INT)
-           AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {k}""")
+{_top_k_tail("scored")}""")
     return "\n".join(parts)
 
 
 @_materialized
-def dedup_semantic_clusters_sql(
-    threshold: float = 0.4,
-    n_clusters: int = 16,
-    n_iters: int = 3,
-    train_sample_denom: int | str | None = "auto",
-) -> str:
+def dedup_semantic_clusters_sql(threshold: float = 0.4) -> str:
     """Oracle for operators.dedup.semantic_duplicates_clustered: the
     k-means chain (:func:`_kmeans_chain`), full-table assignment, then
     within-cluster (a < b) pairs verified with the exact sequential-fold
     cosine — the SemDeDup shape: pairwise work confined to cells."""
     cos = _cosine("va", "vb")
-    parts = [
-        "WITH e AS (SELECT vec_id,"
-        " list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v"
-        " FROM embeddings),",
-    ]
-    chain, prev = _kmeans_chain(n_clusters, n_iters, train_sample_denom)
+    parts = [_E_CTE]
+    chain, prev = _kmeans_chain(IVF_CLUSTERS, "auto")
     parts.extend(chain)
-    parts.append(f"""asg AS (
-  SELECT s.vec_id, (array_agg(s.cid ORDER BY s.d, s.cid))[1] AS cluster_id
-  FROM (SELECT e.vec_id, c.cid, {_sq_dist('e.v', 'c.cv')} AS d
-        FROM e CROSS JOIN {prev} c) s
-  GROUP BY s.vec_id
-),
+    parts.append(f"""{_assign_cte("asg", prev)},
 ea AS (SELECT vec_id, embedding AS va FROM embeddings),
 eb AS (SELECT vec_id, embedding AS vb FROM embeddings),
 scored AS (
@@ -420,14 +437,6 @@ WHERE cosine >= {sql_double_lit(threshold)}""")
     return "\n".join(parts)
 
 
-#: int8 scalar-quantization pieces (oracle side), mirroring
-#: operators.similarity int8_topk fold-for-fold: per-vector scale =
-#: greatest(max |x|, eps) / 127 (eps guards the all-zero vector), codes
-#: = floor(x / scale) — floor, never round(): round's half-way ties
-#: split Spark's HALF_UP from DuckDB's HALF_EVEN.
-INT8_EPS = 1e-30
-
-
 def _q_maxabs(v: str) -> str:
     return (
         "list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
@@ -437,7 +446,11 @@ def _q_maxabs(v: str) -> str:
 
 
 def _int8_topk_prep_cte() -> str:
-    """Per-vector quantization CTE: (vec_id, v, qv, qscale, nrm)."""
+    """Per-vector quantization CTE (vec_id, v, qv, qscale, nrm),
+    mirroring operators.similarity._int8_prep fold-for-fold: scale =
+    greatest(max |x|, INT8_EPS) / 127 (eps guards the all-zero vector),
+    codes = floor(x / scale) — floor, never round(): round's half-way
+    ties split Spark's HALF_UP from DuckDB's HALF_EVEN."""
     return f"""q8 AS (
   SELECT vec_id, v,
          list_transform(v, x -> CAST(floor(x / (greatest({_q_maxabs('v')},
@@ -449,20 +462,17 @@ def _int8_topk_prep_cte() -> str:
 
 
 @_materialized
-def ann_int8_topk_sql(
-    k: int = 5, rerank_factor: int = 4, n_queries: int = 5
-) -> str:
+def ann_int8_topk_sql() -> str:
     """Oracle for operators.similarity.int8_topk: per-vector int8
     scalar quantization, exact int64 dot products on the codes (order-
     independent — integer sums), approximate-score band of
-    ``k * rerank_factor`` per query, exact-cosine rerank to top k."""
+    ``ANN_K * INT8_RERANK`` per query, exact-cosine rerank to top k."""
     idot = (
         "list_reduce(list_prepend(CAST(0 AS BIGINT),"
-        f" list_transform(range(1, {DIM + 1}),"
+        f" list_transform(range(1, {EMB_DIM + 1}),"
         " i -> q.qv[i] * c.qv[i])),"
         " (acc, x) -> acc + x)"
     )
-    cos = _cosine("qe.va", "ce.vb")
     return f"""
 WITH e AS (SELECT vec_id,
  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -472,31 +482,9 @@ approx AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          CAST({idot} AS DOUBLE) * q.qscale * c.qscale
            / (q.nrm * c.nrm) AS ascore
-  FROM q8 q JOIN q8 c ON q.vec_id < {n_queries} AND q.vec_id <> c.vec_id
+  FROM q8 q JOIN q8 c ON q.vec_id < {ANN_QUERIES} AND q.vec_id <> c.vec_id
 ),
-band AS (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY ascore DESC, neighbor_id) AS arank
-  FROM approx
-),
-qe AS (SELECT vec_id, embedding AS va FROM embeddings),
-ce AS (SELECT vec_id, embedding AS vb FROM embeddings),
-rescored AS (
-  SELECT b.query_id, b.neighbor_id, {cos} AS cosine
-  FROM band b
-  JOIN qe ON qe.vec_id = b.query_id
-  JOIN ce ON ce.vec_id = b.neighbor_id
-  WHERE b.arank <= {k * rerank_factor}
-),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         CAST(row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, neighbor_id) AS INT)
-           AS rank
-  FROM rescored
-)
-SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {k}
+{_rerank_tail_parts(INT8_RERANK)}
 """
 
 
@@ -522,36 +510,44 @@ def _sumsq(v: str) -> str:
 
 
 def _pq_subspace_chains(
-    n_subspaces: int,
-    n_codes: int,
-    n_iters: int,
-    train_sample_denom: int | str | None,
+    n_subspaces: int, train_sample_denom: int | str | None
 ) -> tuple[list[str], list[str]]:
-    """Per-subspace vector slicing + one k-means chain each — the PQ
-    training core as CTE parts. Returns (parts, final_codebook_cte
-    names), shared by the full ANN oracles (:func:`_pq_code_parts`) and
-    the persisted-artifact oracle (:func:`pq_codebooks_sql`)."""
-    sub = DIM // n_subspaces
+    """Per-subspace vector slicing + one PQ_CODES-cell k-means chain
+    each — the PQ training core as CTE parts. Returns (parts,
+    final_codebook_cte names), shared by the full ANN oracles
+    (:func:`_pq_code_parts`) and the persisted-artifact oracles."""
+    sub = EMB_DIM // n_subspaces
     parts: list[str] = []
     finals: list[str] = []
     for j in range(n_subspaces):
         lo, hi = j * sub + 1, (j + 1) * sub
         parts.append(f"e{j} AS (SELECT vec_id, v[{lo}:{hi}] AS v FROM e),")
         chain, prev = _kmeans_chain(
-            n_codes, n_iters, train_sample_denom,
-            prefix=f"s{j}", src=f"e{j}", dim=sub,
+            PQ_CODES, train_sample_denom, prefix=f"s{j}", src=f"e{j}", dim=sub
         )
         parts.extend(chain)
         finals.append(prev)
     return parts, finals
 
 
+def _code_ctes(finals: list[str]) -> list[str]:
+    """Per-subspace code assignment ``k{j}``(vec_id, code) over the FULL
+    sliced table (argmin distance, ties to lowest cid — same as the
+    Spark _argmin_code_sql), one CTE part per final codebook CTE."""
+    sub = EMB_DIM // len(finals)
+    return [
+        f"""k{j} AS (
+  SELECT s.vec_id, (array_agg(s.cid ORDER BY s.d, s.cid))[1] AS code
+  FROM (SELECT x.vec_id, c.cid, {_sq_dist('x.v', 'c.cv', sub)} AS d
+        FROM e{j} x CROSS JOIN {cb} c) s
+  GROUP BY s.vec_id
+),"""
+        for j, cb in enumerate(finals)
+    ]
+
+
 def _pq_code_parts(
-    n_subspaces: int,
-    n_codes: int,
-    n_iters: int,
-    n_queries: int,
-    train_sample_denom: int | str | None,
+    n_subspaces: int, train_sample_denom: int | str | None
 ) -> tuple[list[str], str, str]:
     """The PQ core as CTE parts — per-subspace slicing + k-means
     chains, full-table code assignment, the ``codes`` CTE
@@ -560,19 +556,9 @@ def _pq_code_parts(
     adot/rsum are the lookup-sum expressions over alias ``c`` — shared
     by the PQ and IVF-PQ oracles (assumes a prior ``e(vec_id, v)``
     CTE)."""
-    sub = DIM // n_subspaces
-    parts, finals = _pq_subspace_chains(
-        n_subspaces, n_codes, n_iters, train_sample_denom
-    )
-    # per-subspace code assignment over the FULL sliced table (argmin
-    # distance, ties to lowest cid — same as the Spark _argmin_code)
-    for j, cb in enumerate(finals):
-        parts.append(f"""k{j} AS (
-  SELECT s.vec_id, (array_agg(s.cid ORDER BY s.d, s.cid))[1] AS code
-  FROM (SELECT x.vec_id, c.cid, {_sq_dist('x.v', 'c.cv', sub)} AS d
-        FROM e{j} x CROSS JOIN {cb} c) s
-  GROUP BY s.vec_id
-),""")
+    sub = EMB_DIM // n_subspaces
+    parts, finals = _pq_subspace_chains(n_subspaces, train_sample_denom)
+    parts.extend(_code_ctes(finals))
     code_cols = ", ".join(f"k{j}.code AS c{j}" for j in range(n_subspaces))
     code_joins = " ".join(
         f"JOIN k{j} USING (vec_id)" for j in range(1, n_subspaces)
@@ -583,7 +569,7 @@ def _pq_code_parts(
     # rn = reconstructed-norm² per entry)
     parts.append(
         f"q AS (SELECT vec_id AS query_id, {NORM.format(v='v')} AS q_nrm"
-        f" FROM e WHERE vec_id < {n_queries}),"
+        f" FROM e WHERE vec_id < {ANN_QUERIES}),"
     )
     for j, cb in enumerate(finals):
         lo, hi = j * sub + 1, (j + 1) * sub
@@ -592,7 +578,7 @@ def _pq_code_parts(
          array_agg({_dot_sub('s.sv', 'c.cv', sub)} ORDER BY c.cid) AS dt,
          array_agg({_sumsq('c.cv')} ORDER BY c.cid) AS rn
   FROM (SELECT vec_id AS query_id, v[{lo}:{hi}] AS sv FROM e
-        WHERE vec_id < {n_queries}) s
+        WHERE vec_id < {ANN_QUERIES}) s
   CROSS JOIN {cb} c
   GROUP BY s.query_id
 ),""")
@@ -601,8 +587,8 @@ def _pq_code_parts(
     return parts, adot, rsum
 
 
-def _rerank_tail_parts(k: int, rerank_factor: int) -> str:
-    """The band → exact-cosine rerank → rank ≤ k tail shared by the
+def _rerank_tail_parts(rerank_factor: int) -> str:
+    """The band → exact-cosine rerank → rank ≤ ANN_K tail shared by the
     int8 / PQ / IVF-PQ oracles (assumes a prior ``approx(query_id,
     neighbor_id, ascore)`` CTE) — mirrors operators.similarity.
     _exact_rerank_topk."""
@@ -620,50 +606,29 @@ rescored AS (
   FROM band b
   JOIN qe ON qe.vec_id = b.query_id
   JOIN ce ON ce.vec_id = b.neighbor_id
-  WHERE b.arank <= {k * rerank_factor}
+  WHERE b.arank <= {ANN_K * rerank_factor}
 ),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         CAST(row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, neighbor_id) AS INT)
-           AS rank
-  FROM rescored
-)
-SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {k}"""
+{_top_k_tail("rescored")}"""
 
 
 @_materialized
-def ann_pq_topk_sql(
-    k: int = 5,
-    n_subspaces: int = 16,
-    n_codes: int = 16,
-    n_iters: int = 3,
-    n_queries: int = 5,
-    rerank_factor: int = 8,
-    train_sample_denom: int | str | None = "auto",
-) -> str:
+def ann_pq_topk_sql(train_sample_denom: int | str | None = "auto") -> str:
     """Oracle for operators.similarity.pq_topk — product quantization
     with asymmetric distance computation, fully re-derived in serial
     SQL: one :func:`_kmeans_chain` per subspace over the sliced
     vectors (identical codebooks bit for bit), per-vector code
     assignment, per-query lookup tables (dot of the query subvector
     with every codebook entry, plus the reconstructed-norm² table),
-    then the approximate-cosine band of ``k * rerank_factor`` and the
+    then the approximate-cosine band of ``ANN_K * PQ_RERANK`` and the
     exact-cosine rerank — the same band/rerank tail as the int8
     oracle. Every float expression is the same sequential fold in the
     same subspace order as the Spark plan, so the approximate band is
     value-hash reproducible."""
-    parts = [
-        "WITH e AS (SELECT vec_id,"
-        " list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v"
-        " FROM embeddings),",
-    ]
-    core, adot, rsum = _pq_code_parts(
-        n_subspaces, n_codes, n_iters, n_queries, train_sample_denom
-    )
+    parts = [_E_CTE]
+    core, adot, rsum = _pq_code_parts(PQ_SUBSPACES, train_sample_denom)
     parts.extend(core)
     qt_joins = " ".join(
-        f"JOIN qt{j} USING (query_id)" for j in range(n_subspaces)
+        f"JOIN qt{j} USING (query_id)" for j in range(PQ_SUBSPACES)
     )
     parts.append(f"""approx AS (
   SELECT q.query_id, c.vec_id AS neighbor_id,
@@ -671,22 +636,12 @@ def ann_pq_topk_sql(
   FROM codes c CROSS JOIN q {qt_joins}
   WHERE q.query_id <> c.vec_id
 ),
-{_rerank_tail_parts(k, rerank_factor)}""")
+{_rerank_tail_parts(PQ_RERANK)}""")
     return "\n".join(parts)
 
 
 @_materialized
-def ann_ivfpq_topk_sql(
-    k: int = 5,
-    n_clusters: int = 16,
-    n_probes: int = 4,
-    n_subspaces: int = 8,
-    n_codes: int = 16,
-    n_iters: int = 3,
-    n_queries: int = 5,
-    rerank_factor: int = 16,
-    train_sample_denom: int | str | None = "auto",
-) -> str:
+def ann_ivfpq_topk_sql() -> str:
     """Oracle for operators.similarity.ivfpq_topk — the composed
     IVF-PQ layout re-derived serially: the coarse k-means chain
     (prefix ``g``, identical to the IVF oracle's), the per-subspace PQ
@@ -697,37 +652,17 @@ def ann_ivfpq_topk_sql(
     pair dedup is needed — and the shared band/rerank tail. Both
     trainers' ``"auto"`` denominators derive from the same count(*)
     formula the Spark side uses."""
-    parts = [
-        "WITH e AS (SELECT vec_id,"
-        " list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v"
-        " FROM embeddings),",
-    ]
-    chain, coarse = _kmeans_chain(
-        n_clusters, n_iters, train_sample_denom, prefix="g"
-    )
+    parts = [_E_CTE]
+    chain, coarse = _kmeans_chain(IVF_CLUSTERS, "auto", prefix="g")
     parts.extend(chain)
-    core, adot, rsum = _pq_code_parts(
-        n_subspaces, n_codes, n_iters, n_queries, train_sample_denom
-    )
+    core, adot, rsum = _pq_code_parts(IVFPQ_SUBSPACES, "auto")
     parts.extend(core)
     qt_joins = " ".join(
         f"JOIN qt{j} ON qt{j}.query_id = p.query_id"
-        for j in range(n_subspaces)
+        for j in range(IVFPQ_SUBSPACES)
     )
-    parts.append(f"""cands AS (
-  SELECT s.vec_id, (array_agg(s.cid ORDER BY s.d, s.cid))[1] AS cluster_id
-  FROM (SELECT e.vec_id, c.cid, {_sq_dist('e.v', 'c.cv')} AS d
-        FROM e CROSS JOIN {coarse} c) s
-  GROUP BY s.vec_id
-),
-probed AS (
-  SELECT s.vec_id AS query_id,
-         unnest(list_slice(array_agg(s.cid ORDER BY s.d, s.cid),
-                           1, {n_probes})) AS cluster_id
-  FROM (SELECT e.vec_id, c.cid, {_sq_dist('e.v', 'c.cv')} AS d
-        FROM e CROSS JOIN {coarse} c WHERE e.vec_id < {n_queries}) s
-  GROUP BY s.vec_id
-),
+    parts.append(f"""{_assign_cte("cands", coarse)},
+{_probed_cte(coarse)},
 approx AS (
   SELECT p.query_id, c.vec_id AS neighbor_id,
          ({adot}) / (q.q_nrm * sqrt({rsum})) AS ascore
@@ -738,34 +673,21 @@ approx AS (
   {qt_joins}
   WHERE p.query_id <> c.vec_id
 ),
-{_rerank_tail_parts(k, rerank_factor)}""")
+{_rerank_tail_parts(IVFPQ_RERANK)}""")
     return "\n".join(parts)
 
 
 @_materialized
-def cluster_doc_quality_sql(
-    n_clusters: int = 16,
-    n_iters: int = 3,
-    train_sample_denom: int | str | None = "auto",
-) -> str:
+def cluster_doc_quality_sql() -> str:
     """Oracle for the cross-modal curation report: the shared k-means
     chain assigns every embedding to a cell, then document metadata
     joins on doc_id = vec_id and aggregates per cell. All aggregates
     are order-independent (integer sums, counts) with one final
     double division, so the report is value-hash gated."""
-    parts = [
-        "WITH e AS (SELECT vec_id,"
-        " list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v"
-        " FROM embeddings),",
-    ]
-    chain, prev = _kmeans_chain(n_clusters, n_iters, train_sample_denom)
+    parts = [_E_CTE]
+    chain, prev = _kmeans_chain(IVF_CLUSTERS, "auto")
     parts.extend(chain)
-    parts.append(f"""cands AS (
-  SELECT s.vec_id, (array_agg(s.cid ORDER BY s.d, s.cid))[1] AS cluster_id
-  FROM (SELECT e.vec_id, c.cid, {_sq_dist('e.v', 'c.cv')} AS d
-        FROM e CROSS JOIN {prev} c) s
-  GROUP BY s.vec_id
-)
+    parts.append(f"""{_assign_cte("cands", prev)}
 SELECT c.cluster_id,
        CAST(count(*) AS BIGINT) AS n_docs,
        CAST(SUM(d.n_chars) AS BIGINT) AS total_chars,
@@ -777,12 +699,14 @@ GROUP BY c.cluster_id""")
     return "\n".join(parts)
 
 
+def _last_cte(parts: list[str]) -> list[str]:
+    """Drop the trailing comma of the last CTE part, so a SELECT can
+    follow."""
+    return parts[:-1] + [parts[-1].rstrip().removesuffix(",")]
+
+
 @_materialized
-def ivf_centroids_sql(
-    n_clusters: int = 16,
-    n_iters: int = 3,
-    train_sample_denom: int | str | None = "auto",
-) -> str:
+def ivf_centroids_sql() -> str:
     """Oracle for the PERSISTED IVF centroid artifact (sources.
     ann_store.trained_ivf_centroids read back as rows): the identical
     unrolled k-means chain every IVF query oracle uses, with the final
@@ -790,61 +714,43 @@ def ivf_centroids_sql(
     coefficient. Hash-green here proves the on-disk artifact is bit-
     identical to a fresh serial re-derivation, which is what licenses
     the serve-path queries to keep their training-unrolled oracles."""
-    parts = [
-        "WITH e AS (SELECT vec_id,"
-        " list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v"
-        " FROM embeddings),",
-    ]
-    chain, prev = _kmeans_chain(n_clusters, n_iters, train_sample_denom)
-    parts.extend(chain)
-    parts[-1] = parts[-1].rstrip().removesuffix(",")
+    chain, prev = _kmeans_chain(IVF_CLUSTERS, "auto")
+    parts = _last_cte([_E_CTE, *chain])
     parts.append(
         f"SELECT c.cid, CAST(i - 1 AS INT) AS pos, c.cv[i] AS val\n"
-        f"FROM {prev} c CROSS JOIN range(1, {DIM + 1}) t(i)"
+        f"FROM {prev} c CROSS JOIN range(1, {EMB_DIM + 1}) t(i)"
     )
     return "\n".join(parts)
 
 
 @_materialized
-def pq_codebooks_sql(
-    n_subspaces: int = 16,
-    n_codes: int = 16,
-    n_iters: int = 3,
-    train_sample_denom: int | str | None = "auto",
-) -> str:
+def pq_codebooks_sql() -> str:
     """Oracle for the PERSISTED PQ codebook artifact (sources.
     ann_store.trained_pq_codebooks read back as rows): the identical
     per-subspace unrolled k-means chains the PQ ANN oracles use
     (:func:`_pq_subspace_chains`), each final codebook unnested to
     (subspace, cid, pos, val)."""
-    sub = DIM // n_subspaces
-    parts = [
-        "WITH e AS (SELECT vec_id,"
-        " list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v"
-        " FROM embeddings),",
-    ]
-    chains, finals = _pq_subspace_chains(
-        n_subspaces, n_codes, n_iters, train_sample_denom
-    )
-    parts.extend(chains)
-    parts[-1] = parts[-1].rstrip().removesuffix(",")
+    sub = EMB_DIM // PQ_SUBSPACES
+    chains, finals = _pq_subspace_chains(PQ_SUBSPACES, "auto")
+    parts = _last_cte([_E_CTE, *chains])
     selects = [
         f"SELECT CAST({j} AS INT) AS subspace, c.cid,"
         f" CAST(i - 1 AS INT) AS pos, c.cv[i] AS val\n"
-        f"FROM {finals[j]} c CROSS JOIN range(1, {sub + 1}) t(i)"
-        for j in range(n_subspaces)
+        f"FROM {final} c CROSS JOIN range(1, {sub + 1}) t(i)"
+        for j, final in enumerate(finals)
     ]
     parts.append("\nUNION ALL\n".join(selects))
     return "\n".join(parts)
 
 
+def _code_select_cols(n_subspaces: int) -> str:
+    return ", ".join(
+        f"CAST(k{j}.code AS INT) AS code_{j}" for j in range(n_subspaces)
+    )
+
+
 @_materialized
-def pq_index_codes_sql(
-    n_subspaces: int = 16,
-    n_codes: int = 16,
-    n_iters: int = 3,
-    train_sample_denom: int | str | None = "auto",
-) -> str:
+def pq_index_codes_sql() -> str:
     """Oracle for the PERSISTED encoded candidate table (sources.
     ann_store.trained_pq_codes read back as rows): the per-subspace
     unrolled k-means chains, then the full-table argmin code
@@ -852,42 +758,19 @@ def pq_index_codes_sql(
     returned directly as (vec_id, code_0..code_{m-1}). A hash-green
     row proves the on-disk index every ``ann_pq_topk`` serve reads is
     bit-identical to a fresh ``pq_encode`` run."""
-    sub = DIM // n_subspaces
-    parts = [
-        "WITH e AS (SELECT vec_id,"
-        " list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v"
-        " FROM embeddings),",
-    ]
-    chains, finals = _pq_subspace_chains(
-        n_subspaces, n_codes, n_iters, train_sample_denom
-    )
-    parts.extend(chains)
-    for j, cb in enumerate(finals):
-        parts.append(f"""k{j} AS (
-  SELECT s.vec_id, (array_agg(s.cid ORDER BY s.d, s.cid))[1] AS code
-  FROM (SELECT x.vec_id, c.cid, {_sq_dist('x.v', 'c.cv', sub)} AS d
-        FROM e{j} x CROSS JOIN {cb} c) s
-  GROUP BY s.vec_id
-),""")
-    parts[-1] = parts[-1].rstrip().removesuffix(",")
-    code_cols = ", ".join(
-        f"CAST(k{j}.code AS INT) AS code_{j}" for j in range(n_subspaces)
-    )
+    chains, finals = _pq_subspace_chains(PQ_SUBSPACES, "auto")
+    parts = _last_cte([_E_CTE, *chains, *_code_ctes(finals)])
     code_joins = " ".join(
-        f"JOIN k{j} USING (vec_id)" for j in range(1, n_subspaces)
+        f"JOIN k{j} USING (vec_id)" for j in range(1, PQ_SUBSPACES)
     )
-    parts.append(f"SELECT vec_id, {code_cols} FROM k0 {code_joins}")
+    parts.append(
+        f"SELECT vec_id, {_code_select_cols(PQ_SUBSPACES)} FROM k0 {code_joins}"
+    )
     return "\n".join(parts)
 
 
 @_materialized
-def ivfpq_index_rows_sql(
-    n_clusters: int = 16,
-    n_subspaces: int = 8,
-    n_codes: int = 16,
-    n_iters: int = 3,
-    train_sample_denom: int | str | None = "auto",
-) -> str:
+def ivfpq_index_rows_sql() -> str:
     """Oracle for the PERSISTED composed IVF-PQ index table (sources.
     ann_store.trained_ivfpq_index read back as rows): the coarse
     k-means chain + full-table argmin cell assignment, and the
@@ -896,27 +779,9 @@ def ivfpq_index_rows_sql(
     returned as (vec_id, cluster_id, code_0..code_{m-1}). Hash-green
     proves the on-disk index every ``ann_ivfpq_topk`` serve reads is
     bit-identical to a fresh assign+encode pass."""
-    sub = DIM // n_subspaces
-    parts = [
-        "WITH e AS (SELECT vec_id,"
-        " list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v"
-        " FROM embeddings),",
-    ]
-    chain, coarse = _kmeans_chain(
-        n_clusters, n_iters, train_sample_denom, prefix="g"
-    )
-    parts.extend(chain)
-    chains, finals = _pq_subspace_chains(
-        n_subspaces, n_codes, n_iters, train_sample_denom
-    )
-    parts.extend(chains)
-    for j, cb in enumerate(finals):
-        parts.append(f"""k{j} AS (
-  SELECT s.vec_id, (array_agg(s.cid ORDER BY s.d, s.cid))[1] AS code
-  FROM (SELECT x.vec_id, c.cid, {_sq_dist('x.v', 'c.cv', sub)} AS d
-        FROM e{j} x CROSS JOIN {cb} c) s
-  GROUP BY s.vec_id
-),""")
+    chain, coarse = _kmeans_chain(IVF_CLUSTERS, "auto", prefix="g")
+    chains, finals = _pq_subspace_chains(IVFPQ_SUBSPACES, "auto")
+    parts = [_E_CTE, *chain, *chains, *_code_ctes(finals)]
     parts.append(f"""cands AS (
   SELECT s.vec_id,
          CAST((array_agg(s.cid ORDER BY s.d, s.cid))[1] AS INT)
@@ -925,13 +790,11 @@ def ivfpq_index_rows_sql(
         FROM e CROSS JOIN {coarse} c) s
   GROUP BY s.vec_id
 )""")
-    code_cols = ", ".join(
-        f"CAST(k{j}.code AS INT) AS code_{j}" for j in range(n_subspaces)
-    )
     code_joins = " ".join(
-        f"JOIN k{j} USING (vec_id)" for j in range(n_subspaces)
+        f"JOIN k{j} USING (vec_id)" for j in range(IVFPQ_SUBSPACES)
     )
     parts.append(
-        f"SELECT vec_id, cluster_id, {code_cols} FROM cands {code_joins}"
+        f"SELECT vec_id, cluster_id, {_code_select_cols(IVFPQ_SUBSPACES)}"
+        f" FROM cands {code_joins}"
     )
     return "\n".join(parts)

@@ -13,33 +13,37 @@ import pandas as pd  # module-level: pandas_udf type hints must resolve
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.similarity import brute_force_topk, l2_norm_sql, lsh_topk
-from ..schemas import load_table
+from ..operators.similarity import (
+    ANN_K,
+    ANN_QUERIES,
+    IVF_CLUSTERS,
+    IVFPQ_SUBSPACES,
+    KMEANS_SCALE,
+    brute_force_topk,
+    l2_norm_sql,
+    lsh_topk,
+)
+from ..schemas import EMB_DIM, load_table
 from . import vector_oracles
 from .catalog import register
-
-#: DuckDB sequential-fold helpers mirroring operators.similarity
-_DOT = (
-    "list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-    " list_transform(range(1, 65),"
-    " i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE))),"
-    " (acc, x) -> acc + x)"
-)
-_NORM = (
-    "sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-    " list_transform({v}, e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE))),"
-    " (acc, x) -> acc + x))"
-)
+from .vector_oracles import DOT, NORM
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "embeddings")
 
 
+def _ann_inputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(corpus, queries) of the shared ANN query shape: the queries are
+    the first ANN_QUERIES vec_ids; every top-k entry ranks ANN_K."""
+    e = _emb(spark, sf_dir)
+    return e, e.filter(F.col("vec_id") < ANN_QUERIES)
+
+
 @register(
     "vector_norms",
     oracle=f"""
-SELECT vec_id, label, {_NORM.format(v='embedding')} AS l2_norm
+SELECT vec_id, label, {NORM.format(v='embedding')} AS l2_norm
 FROM embeddings
 """,
     tags=("vector", "scalar"),
@@ -54,12 +58,12 @@ def vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ann_bruteforce_cosine_topk",
     oracle=f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
+WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < {ANN_QUERIES}),
 c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
 scored AS (
   SELECT query_id, neighbor_id,
-         {_DOT.format(a='qv', b='cv')}
-           / ({_NORM.format(v='qv')} * {_NORM.format(v='cv')}) AS cosine
+         {DOT.format(a='qv', b='cv')}
+           / ({NORM.format(v='qv')} * {NORM.format(v='cv')}) AS cosine
   FROM c CROSS JOIN q
   WHERE query_id <> neighbor_id
 ),
@@ -69,7 +73,7 @@ ranked AS (
                                  ORDER BY cosine DESC, neighbor_id) AS INT) AS rank
   FROM scored
 )
-SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= 5
+SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {ANN_K}
 """,
     tags=("vector", "ann"),
 )
@@ -78,26 +82,17 @@ def ann_bruteforce_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     table — the correctness baseline for ANN (operators.similarity.
     brute_force_topk): broadcast queries, one scoring pass, per-query
     window rank."""
-    e = _emb(spark, sf_dir)
-    return brute_force_topk(e, e.filter(F.col("vec_id") < 5), k=5)
-
-
-#: fixed-point scale for order-independent centroid sums. A power of
-#: two so ``val * SCALE`` is exact in IEEE double (decimal casts are
-#: NOT tie-free: a float landing exactly on .5 at the rounding digit
-#: splits Spark's HALF_UP from DuckDB's HALF_EVEN — observed once per
-#: ~300k values).
-_CENTROID_SCALE = float(1 << 40)
+    return brute_force_topk(*_ann_inputs(spark, sf_dir))
 
 
 @register(
     "vector_centroid_per_label",
     oracle=f"""
 SELECT label, CAST(i AS INT) AS dim,
-       CAST(CAST(SUM(CAST(floor(CAST(embedding[i] AS DOUBLE) * {_CENTROID_SCALE!r})
+       CAST(CAST(SUM(CAST(floor(CAST(embedding[i] AS DOUBLE) * {KMEANS_SCALE!r})
                           AS BIGINT)) AS BIGINT) AS DOUBLE)
-         / {_CENTROID_SCALE!r} / count(*) AS centroid
-FROM embeddings CROSS JOIN range(1, 65) t(i)
+         / {KMEANS_SCALE!r} / count(*) AS centroid
+FROM embeddings CROSS JOIN range(1, {EMB_DIM + 1}) t(i)
 GROUP BY label, i
 """,
     tags=("vector", "agg"),
@@ -113,13 +108,13 @@ def vector_centroid_per_label(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "label",
             (F.col("pos") + 1).cast("int").alias("dim"),
-            F.floor(F.col("val").cast("double") * F.lit(_CENTROID_SCALE))
+            F.floor(F.col("val").cast("double") * F.lit(KMEANS_SCALE))
             .cast("long")
             .alias("v"),
         )
         .groupBy("label", "dim")
         .agg(
-            (F.sum("v").cast("double") / F.lit(_CENTROID_SCALE) / F.count("*")).alias(
+            (F.sum("v").cast("double") / F.lit(KMEANS_SCALE) / F.count("*")).alias(
                 "centroid"
             )
         )
@@ -134,11 +129,11 @@ WITH a AS (SELECT vec_id AS dup_a, embedding AS va FROM embeddings
 b AS (SELECT vec_id AS dup_b, embedding AS vb FROM embeddings
       WHERE vec_id < 200)
 SELECT dup_a, dup_b,
-       {_DOT.format(a='va', b='vb')}
-         / ({_NORM.format(v='va')} * {_NORM.format(v='vb')}) AS cosine
+       {DOT.format(a='va', b='vb')}
+         / ({NORM.format(v='va')} * {NORM.format(v='vb')}) AS cosine
 FROM a JOIN b ON dup_a < dup_b
-WHERE {_DOT.format(a='va', b='vb')}
-        / ({_NORM.format(v='va')} * {_NORM.format(v='vb')}) >= 0.4
+WHERE {DOT.format(a='va', b='vb')}
+        / ({NORM.format(v='va')} * {NORM.format(v='vb')}) >= 0.4
 """,
     tags=("dedup", "vector", "cosine"),
 )
@@ -231,8 +226,11 @@ def ann_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     a cross product. Fully hash-gated via the generated hyperplane
     oracle (plans.vector_oracles); recall vs the exact baseline is
     asserted in tests."""
-    e = _emb(spark, sf_dir)
-    return lsh_topk(e, e.filter(F.col("vec_id") < 5), k=5)
+    return lsh_topk(*_ann_inputs(spark, sf_dir))
+
+
+#: rows the pandas-UDF cosine entry scores (engine and oracle)
+_UDF_ROWS = 500
 
 
 @register(
@@ -240,10 +238,10 @@ def ann_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
 SELECT vec_id,
-       {_DOT.format(a='embedding', b='qv')}
-         / ({_NORM.format(v='embedding')} * {_NORM.format(v='qv')}) AS cosine
+       {DOT.format(a='embedding', b='qv')}
+         / ({NORM.format(v='embedding')} * {NORM.format(v='qv')}) AS cosine
 FROM embeddings CROSS JOIN q
-WHERE vec_id < 500
+WHERE vec_id < {_UDF_ROWS}
 """,
     tags=("vector", "pandas-udf", "arrow"),
 )
@@ -274,7 +272,7 @@ def vector_cosine_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
             qq = qq + q[j] * q[j]
         return pd.Series(dot / (np.sqrt(vv) * np.sqrt(qq)))
 
-    return e.filter(F.col("vec_id") < 500).select(
+    return e.filter(F.col("vec_id") < _UDF_ROWS).select(
         "vec_id", cos_to_q(F.col("embedding")).alias("cosine")
     )
 
@@ -283,10 +281,10 @@ def vector_cosine_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     "vector_centroid_grouped_pandas",
     oracle=f"""
 SELECT label, CAST(i AS INT) AS dim,
-       CAST(CAST(SUM(CAST(floor(CAST(embedding[i] AS DOUBLE) * {_CENTROID_SCALE!r})
+       CAST(CAST(SUM(CAST(floor(CAST(embedding[i] AS DOUBLE) * {KMEANS_SCALE!r})
                           AS BIGINT)) AS BIGINT) AS DOUBLE)
-         / {_CENTROID_SCALE!r} / count(*) AS centroid
-FROM embeddings CROSS JOIN range(1, 65) t(i)
+         / {KMEANS_SCALE!r} / count(*) AS centroid
+FROM embeddings CROSS JOIN range(1, {EMB_DIM + 1}) t(i)
 GROUP BY label, i
 """,
     tags=("vector", "pandas-udf", "grouped"),
@@ -298,7 +296,7 @@ def vector_centroid_grouped_pandas(spark: SparkSession, sf_dir: str) -> DataFram
     so arbitrary Arrow batch order inside the group cannot change the
     result. One shuffle (the groupBy), payload = the group's vectors."""
     e = _emb(spark, sf_dir)
-    scale = _CENTROID_SCALE
+    scale = KMEANS_SCALE
 
     def centroid(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
@@ -348,9 +346,8 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import ivf_topk
     from ..sources.ann_store import trained_ivf_centroids
 
-    e = _emb(spark, sf_dir)
     cents = trained_ivf_centroids(spark, sf_dir)
-    return ivf_topk(e, e.filter(F.col("vec_id") < 5), k=5, centroids=cents)
+    return ivf_topk(*_ann_inputs(spark, sf_dir), centroids=cents)
 
 
 @register(
@@ -384,7 +381,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _emb(spark, sf_dir)
     k = semantic_n_clusters(e.count())
-    if k == 16:  # parity configuration — shared persisted quantizer
+    if k == IVF_CLUSTERS:  # parity configuration — shared persisted quantizer
         cents = trained_ivf_centroids(spark, sf_dir)
         return semantic_duplicates_clustered(e, threshold=0.4, centroids=cents)
     return semantic_duplicates_clustered(
@@ -407,8 +404,7 @@ def ann_int8_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     serial oracle."""
     from ..operators.similarity import int8_topk
 
-    e = _emb(spark, sf_dir)
-    return int8_topk(e, e.filter(F.col("vec_id") < 5), k=5)
+    return int8_topk(*_ann_inputs(spark, sf_dir))
 
 
 @register(
@@ -430,10 +426,7 @@ def ann_ivf_sampled_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a deliberately coarse fixture."""
     from ..operators.similarity import ivf_topk
 
-    e = _emb(spark, sf_dir)
-    return ivf_topk(
-        e, e.filter(F.col("vec_id") < 5), k=5, train_sample_denom=4
-    )
+    return ivf_topk(*_ann_inputs(spark, sf_dir), train_sample_denom=4)
 
 
 @register(
@@ -470,12 +463,9 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import pq_topk
     from ..sources.ann_store import trained_pq_codebooks, trained_pq_codes
 
-    e = _emb(spark, sf_dir)
     books = trained_pq_codebooks(spark, sf_dir)
     codes = trained_pq_codes(spark, sf_dir)
-    return pq_topk(
-        e, e.filter(F.col("vec_id") < 5), k=5, codebooks=books, codes=codes
-    )
+    return pq_topk(*_ann_inputs(spark, sf_dir), codebooks=books, codes=codes)
 
 
 @register(
@@ -498,10 +488,7 @@ def ann_pq_sampled_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately coarse fixture."""
     from ..operators.similarity import pq_topk
 
-    e = _emb(spark, sf_dir)
-    return pq_topk(
-        e, e.filter(F.col("vec_id") < 5), k=5, train_sample_denom=4
-    )
+    return pq_topk(*_ann_inputs(spark, sf_dir), train_sample_denom=4)
 
 
 @register(
@@ -540,17 +527,11 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         trained_pq_codebooks,
     )
 
-    e = _emb(spark, sf_dir)
     cents = trained_ivf_centroids(spark, sf_dir)
-    books = trained_pq_codebooks(spark, sf_dir, n_subspaces=8)
+    books = trained_pq_codebooks(spark, sf_dir, n_subspaces=IVFPQ_SUBSPACES)
     idx = trained_ivfpq_index(spark, sf_dir)
     return ivfpq_topk(
-        e,
-        e.filter(F.col("vec_id") < 5),
-        k=5,
-        centroids=cents,
-        codebooks=books,
-        index=idx,
+        *_ann_inputs(spark, sf_dir), centroids=cents, codebooks=books, index=idx
     )
 
 
@@ -711,9 +692,9 @@ def vector_contrastive_triplets_sql() -> str:
     hash as the negative sampling priority."""
     from ..operators.contrastive import NEG_POOL_TARGET
 
-    dot = _DOT.format(a="av", b="cv")
-    na = _NORM.format(v="av")
-    nc = _NORM.format(v="cv")
+    dot = DOT.format(a="av", b="cv")
+    na = NORM.format(v="av")
+    nc = NORM.format(v="cv")
     pri = (
         "CAST(('0x' || substr(md5(CAST(anchor_id AS VARCHAR) || ':' ||"
         " CAST(cand_id AS VARCHAR)), 1, 15)) AS BIGINT)"
@@ -789,11 +770,11 @@ def vector_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT label,
        CAST(count(*) AS BIGINT) AS n_vecs,
-       CAST(SUM(CAST(floor({{norm}} * {_CENTROID_SCALE!r}) AS BIGINT))
+       CAST(SUM(CAST(floor({{norm}} * {KMEANS_SCALE!r}) AS BIGINT))
             AS BIGINT) AS norm_micro_sum
 FROM embeddings
 GROUP BY label
-""".format(norm=_NORM.format(v="embedding")),
+""".format(norm=NORM.format(v="embedding")),
     tags=("vector", "pandas-udf", "grouped-agg", "arrow"),
 )
 def vector_norm_grouped_agg_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -818,7 +799,7 @@ def vector_norm_grouped_agg_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB prefer the pure-SQL integer sum when expressible, this
     query exists to pin the API's exactness contract)."""
     e = _emb(spark, sf_dir)
-    scale = _CENTROID_SCALE
+    scale = KMEANS_SCALE
 
     @F.pandas_udf("long")
     def norm_micro_sum(col: pd.Series) -> int:
@@ -891,17 +872,17 @@ def pipeline_class_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "vector_pca_second_moments",
-    oracle="""
+    oracle=f"""
 WITH prods AS (
-  SELECT (p1.i - 1) * 64 + (p2.i - 1) AS pk,
+  SELECT (p1.i - 1) * {EMB_DIM} + (p2.i - 1) AS pk,
          CAST(round(CAST(e.embedding[p1.i] AS DOUBLE)
                     * CAST(e.embedding[p2.i] AS DOUBLE)
                     * 1000000000000) AS DECIMAL(20,0)) AS v
-  FROM embeddings e, range(1, 65) p1(i), range(1, 65) p2(i)
+  FROM embeddings e, range(1, {EMB_DIM + 1}) p1(i), range(1, {EMB_DIM + 1}) p2(i)
   WHERE p2.i >= p1.i
 )
-SELECT CAST(pk // 64 AS BIGINT) AS i,
-       CAST(pk % 64 AS BIGINT) AS j,
+SELECT CAST(pk // {EMB_DIM} AS BIGINT) AS i,
+       CAST(pk % {EMB_DIM} AS BIGINT) AS j,
        CAST(SUM(v) AS DECIMAL(38,0)) AS m2_p12
 FROM prods GROUP BY pk
 """,
@@ -948,8 +929,8 @@ c AS (
 ),
 scored AS (
   SELECT query_id, actual_label, neighbor_id, label,
-         {_DOT.format(a='qv', b='cv')}
-           / ({_NORM.format(v='qv')} * {_NORM.format(v='cv')}) AS cosine
+         {DOT.format(a='qv', b='cv')}
+           / ({NORM.format(v='qv')} * {NORM.format(v='cv')}) AS cosine
   FROM c CROSS JOIN q
 ),
 ranked AS (
@@ -1058,7 +1039,7 @@ def vector_dedup_cosine_cells_hi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _emb(spark, sf_dir)
     k = semantic_n_clusters(e.count())
-    if k == 16:  # parity configuration — shared persisted quantizer
+    if k == IVF_CLUSTERS:  # parity configuration — shared persisted quantizer
         cents = trained_ivf_centroids(spark, sf_dir)
         return semantic_duplicates_clustered(e, threshold=0.8, centroids=cents)
     return semantic_duplicates_clustered(

@@ -122,6 +122,11 @@ CORPUS_SCHEMAS: dict[str, list[tuple[str, str]]] = {
     ],
 }
 
+#: width of ``embeddings.embedding`` — the one definition the vector
+#: operators, their DuckDB oracles, the model store's cache keys and the
+#: scaled-corpus generator all read
+EMB_DIM = 64
+
 
 #: plausible corpus epoch range: 1990-01-01 .. 2130-01-01 (UTC seconds)
 _EPOCH_LO, _EPOCH_HI = 631152000, 5048352000

@@ -42,6 +42,15 @@ import shutil
 
 from pyspark.sql import SparkSession
 
+from ..operators.similarity import (
+    IVF_CLUSTERS,
+    IVFPQ_SUBSPACES,
+    KMEANS_ITERS,
+    PQ_CODES,
+    PQ_SUBSPACES,
+)
+from ..schemas import EMB_DIM, load_table
+
 #: cache root for train-once artifacts; env-overridable so the bench
 #: can point at a fresh directory and measure training honestly
 ANN_STORE_ENV = "SPARK_GRAFT_ANN_STORE"
@@ -144,39 +153,48 @@ def read_pq_codebooks(path: str) -> list[list[list[float]]]:
 
 
 def _cache_or_train(path: str, train, write, read):
-    """Shared cache protocol: serve the committed artifact if present,
+    """Shared publish protocol: serve the committed artifact if present,
     else train, persist to a process-private temp path, and rename into
-    place (atomic on one filesystem; on a lost race the winner's
-    bit-identical artifact is read instead)."""
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return read(path)
-    trained = train()
-    os.makedirs(_store_root(), exist_ok=True)
-    tmp = f"{path}.tmp{os.getpid()}"
-    write(trained, tmp)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
-            # another process committed first — its artifact is
-            # bit-identical (deterministic trainer, same key)
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:  # leftover from a crashed writer: replace it
-            shutil.rmtree(path, ignore_errors=True)
-            try:
-                os.rename(tmp, path)
-            except OSError:
+    place (atomic on one filesystem). On a lost race the winner's
+    bit-identical artifact stays; a crashed writer's leftover (a key
+    directory without ``_SUCCESS``) is replaced. Always returns the
+    committed read-back, never the in-flight value, so every consumer
+    sees the identical bytes."""
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        trained = train()
+        os.makedirs(_store_root(), exist_ok=True)
+        tmp = f"{path}.tmp{os.getpid()}"
+        write(trained, tmp)
+        try:
+            os.rename(tmp, path)
+        except OSError:
+            if os.path.exists(os.path.join(path, "_SUCCESS")):
+                # another process committed first — its artifact is
+                # bit-identical (deterministic trainer, same key)
                 shutil.rmtree(tmp, ignore_errors=True)
-    return trained
+            else:  # leftover from a crashed writer: replace it
+                shutil.rmtree(path, ignore_errors=True)
+                try:
+                    os.rename(tmp, path)
+                except OSError:
+                    shutil.rmtree(tmp, ignore_errors=True)
+    return read(path)
+
+
+def _store_path(sf_dir: str, config: str) -> str:
+    """Artifact directory for a quantizer ``config`` trained on the
+    ``embeddings`` table at ``sf_dir``. The key spells out every value
+    the artifact depends on — the shared Lloyd iteration count,
+    embedding width and ``"auto"`` training sample — so a change to any
+    of them can never serve a stale artifact."""
+    return os.path.join(
+        _store_root(),
+        f"{config}_i{KMEANS_ITERS}_d{EMB_DIM}_tauto_{_corpus_fingerprint(sf_dir)}",
+    )
 
 
 def trained_ivf_centroids(
-    spark: SparkSession,
-    sf_dir: str,
-    n_clusters: int = 16,
-    n_iters: int = 3,
-    dim: int = 64,
-    train_sample_denom: int | str | None = "auto",
+    spark: SparkSession, sf_dir: str, n_clusters: int = IVF_CLUSTERS
 ) -> list[list[float]]:
     """IVF coarse centroids for the ``embeddings`` table at ``sf_dir``
     — read from the persisted artifact when one exists for this
@@ -184,21 +202,13 @@ def trained_ivf_centroids(
     kmeans_centroids) and persist. The serve-path queries call this
     instead of the trainer, so repeated queries skip the Lloyd loop."""
     from ..operators.similarity import kmeans_centroids
-    from ..schemas import load_table
 
-    key = (
-        f"ivf_k{n_clusters}_i{n_iters}_d{dim}_t{train_sample_denom}"
-        f"_{_corpus_fingerprint(sf_dir)}"
-    )
-    path = os.path.join(_store_root(), key)
     return _cache_or_train(
-        path,
+        _store_path(sf_dir, f"ivf_k{n_clusters}"),
         lambda: kmeans_centroids(
             load_table(spark, sf_dir, "embeddings"),
             n_clusters=n_clusters,
-            n_iters=n_iters,
-            dim=dim,
-            train_sample_denom=train_sample_denom,
+            train_sample_denom="auto",
         ),
         lambda cents, p: write_kmeans_centroids(spark, cents, p),
         read_kmeans_centroids,
@@ -206,34 +216,19 @@ def trained_ivf_centroids(
 
 
 def trained_pq_codebooks(
-    spark: SparkSession,
-    sf_dir: str,
-    n_subspaces: int = 16,
-    n_codes: int = 16,
-    n_iters: int = 3,
-    dim: int = 64,
-    train_sample_denom: int | str | None = "auto",
+    spark: SparkSession, sf_dir: str, n_subspaces: int = PQ_SUBSPACES
 ) -> list[list[list[float]]]:
     """PQ codebooks for the ``embeddings`` table at ``sf_dir`` — cache
     semantics of :func:`trained_ivf_centroids`, trainer =
     operators.similarity.pq_codebooks."""
     from ..operators.similarity import pq_codebooks
-    from ..schemas import load_table
 
-    key = (
-        f"pq_m{n_subspaces}_c{n_codes}_i{n_iters}_d{dim}_t{train_sample_denom}"
-        f"_{_corpus_fingerprint(sf_dir)}"
-    )
-    path = os.path.join(_store_root(), key)
     return _cache_or_train(
-        path,
+        _store_path(sf_dir, f"pq_m{n_subspaces}_c{PQ_CODES}"),
         lambda: pq_codebooks(
             load_table(spark, sf_dir, "embeddings"),
             n_subspaces=n_subspaces,
-            n_codes=n_codes,
-            n_iters=n_iters,
-            dim=dim,
-            train_sample_denom=train_sample_denom,
+            train_sample_denom="auto",
         ),
         lambda books, p: write_pq_codebooks(spark, books, p),
         read_pq_codebooks,
@@ -241,40 +236,19 @@ def trained_pq_codebooks(
 
 
 def _cached_spark_table(spark: SparkSession, path: str, build):
-    """Cache protocol for Spark-written parquet artifacts (the INDEX
-    data, as opposed to the scalar parameters above): serve the
-    committed directory if present, else build → write to a
-    process-private temp path → rename into place. ``build`` returns
-    the DataFrame to persist; the caller always reads the committed
-    files back (never the in-flight plan), so every consumer sees the
-    identical bytes."""
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        os.makedirs(_store_root(), exist_ok=True)
-        tmp = f"{path}.tmp{os.getpid()}"
-        build().write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            if os.path.exists(os.path.join(path, "_SUCCESS")):
-                shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-            else:
-                shutil.rmtree(path, ignore_errors=True)
-                try:
-                    os.rename(tmp, path)
-                except OSError:
-                    shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(path)
+    """:func:`_cache_or_train` for Spark-written parquet artifacts (the
+    INDEX data, as opposed to the scalar parameters above): ``build``
+    returns the DataFrame to persist, and the caller gets a read of the
+    committed files."""
+    return _cache_or_train(
+        path,
+        build,
+        lambda df, p: df.write.mode("overwrite").parquet(p),
+        spark.read.parquet,
+    )
 
 
-def trained_pq_codes(
-    spark: SparkSession,
-    sf_dir: str,
-    n_subspaces: int = 16,
-    n_codes: int = 16,
-    n_iters: int = 3,
-    dim: int = 64,
-    train_sample_denom: int | str | None = "auto",
-):
+def trained_pq_codes(spark: SparkSession, sf_dir: str):
     """The ENCODED candidate table (vec_id, code_0..m-1) for the
     ``embeddings`` corpus — the PQ index *data*, persisted once per
     corpus+config beside the codebook *parameters*. Serving reads this
@@ -286,51 +260,24 @@ def trained_pq_codes(
     codebooks, so the read-back table is bit-identical to a fresh
     ``pq_encode`` — the oracle gate needs no store-aware variant."""
     from ..operators.similarity import pq_encode
-    from ..schemas import load_table
 
-    key = (
-        f"pqcodes_m{n_subspaces}_c{n_codes}_i{n_iters}_d{dim}"
-        f"_t{train_sample_denom}_{_corpus_fingerprint(sf_dir)}"
-    )
-    books = trained_pq_codebooks(
-        spark, sf_dir, n_subspaces, n_codes, n_iters, dim, train_sample_denom
-    )
+    books = trained_pq_codebooks(spark, sf_dir)
     return _cached_spark_table(
         spark,
-        os.path.join(_store_root(), key),
+        _store_path(sf_dir, f"pqcodes_m{PQ_SUBSPACES}_c{PQ_CODES}"),
         lambda: pq_encode(load_table(spark, sf_dir, "embeddings"), books),
     )
 
 
-def trained_ivfpq_index(
-    spark: SparkSession,
-    sf_dir: str,
-    n_clusters: int = 16,
-    n_subspaces: int = 8,
-    n_codes: int = 16,
-    n_iters: int = 3,
-    dim: int = 64,
-    train_sample_denom: int | str | None = "auto",
-):
+def trained_ivfpq_index(spark: SparkSession, sf_dir: str):
     """The composed IVF-PQ index table (vec_id, cluster_id,
     code_0..m-1): coarse cell assignment + subspace codes in one
     persisted parquet — what a Faiss IVF,PQ index stores per vector.
     Same cache/bit-identity contract as :func:`trained_pq_codes`."""
-    from pyspark.sql import functions as F
-
     from ..operators.similarity import assign_to_centroid, pq_encode
-    from ..schemas import load_table
 
-    key = (
-        f"ivfpq_k{n_clusters}_m{n_subspaces}_c{n_codes}_i{n_iters}_d{dim}"
-        f"_t{train_sample_denom}_{_corpus_fingerprint(sf_dir)}"
-    )
-    cents = trained_ivf_centroids(
-        spark, sf_dir, n_clusters, n_iters, dim, train_sample_denom
-    )
-    books = trained_pq_codebooks(
-        spark, sf_dir, n_subspaces, n_codes, n_iters, dim, train_sample_denom
-    )
+    cents = trained_ivf_centroids(spark, sf_dir)
+    books = trained_pq_codebooks(spark, sf_dir, IVFPQ_SUBSPACES)
 
     def build():
         emb = load_table(spark, sf_dir, "embeddings")
@@ -342,5 +289,9 @@ def trained_ivfpq_index(
         )
 
     return _cached_spark_table(
-        spark, os.path.join(_store_root(), key), build
+        spark,
+        _store_path(
+            sf_dir, f"ivfpq_k{IVF_CLUSTERS}_m{IVFPQ_SUBSPACES}_c{PQ_CODES}"
+        ),
+        build,
     )

@@ -41,6 +41,8 @@ import json
 import os
 import random
 
+from ..schemas import EMB_DIM
+
 DIM_TABLES = ("region", "nation", "customer", "supplier", "part")
 ALL_TABLES = DIM_TABLES + (
     "orders",
@@ -57,14 +59,12 @@ KEY_SHIFT = 1_000_000_000
 #: changes (v2: n_chars recomputed from the salted replica text)
 GEN_VERSION = 2
 
-#: embedding dimensionality (matches operators.pca.DIM)
-EMB_DIM = 64
 
-
-def replica_permutation(replica: int, dim: int = EMB_DIM) -> list[int]:
-    """Deterministic dimension permutation for a replica (identity for
-    replica 0), 1-indexed for DuckDB ``list_select``."""
-    perm = list(range(1, dim + 1))
+def replica_permutation(replica: int) -> list[int]:
+    """Deterministic permutation of the EMB_DIM embedding dimensions for
+    a replica (identity for replica 0), 1-indexed for DuckDB
+    ``list_select``."""
+    perm = list(range(1, EMB_DIM + 1))
     if replica:
         random.Random(0xC0FFEE + replica).shuffle(perm)
     return perm

@@ -2360,40 +2360,22 @@ def run_bounded_snapshot_view(
     :func:`snapshot_view_batch_fn`, and return the maintained view at
     the final applied snapshot — gated against the oracle that
     aggregates the final table state directly."""
-    from ..schemas import load_table
-    from ..sources.snapshot import SnapshotTable, bucket_of
+    from ..plans.source_queries import (
+        _commit_upsert,
+        _orders_upsert,
+        _seed_orders_snapshot,
+    )
+    from ..sources.snapshot import bucket_of
 
-    n_buckets = 8
     out = tempfile.mkdtemp(prefix="snap_view_out_")
     atexit.register(shutil.rmtree, out, ignore_errors=True)
-    table = SnapshotTable(
-        os.path.join(out, "orders_snap"),
-        "bucket int, o_orderkey bigint, o_orderstatus string,"
-        " o_totalprice double",
-        n_buckets,
+    table, base = _seed_orders_snapshot(
+        spark, sf_dir, os.path.join(out, "orders_snap")
     )
-    base = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") < 4000)
-        .select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.col("o_totalprice").cast("double").alias("o_totalprice"),
-        )
-        .withColumn("bucket", bucket_of("o_orderkey", n_buckets))
-    )
-    table.commit(base, 0)
     # snapshot 1: partial-rewrite upsert, CAS-guarded
-    parent = table.latest()
-    upd = base.filter(F.col("o_orderkey") % 10 == 7).withColumn(
-        "o_totalprice", F.col("o_totalprice") + 50
-    ).localCheckpoint()  # consumed twice: touched buckets + merge
-    touched = [r[0] for r in upd.select("bucket").distinct().collect()]
-    prev = table.read(spark, buckets=touched)
-    merged = prev.join(
-        F.broadcast(upd.select("o_orderkey")), "o_orderkey", "left_anti"
-    ).unionByName(upd.select(*prev.columns))
-    table.commit(merged, 1, expected_parent=parent)
+    _commit_upsert(
+        spark, table, _orders_upsert(base), 1, expected_parent=table.latest()
+    )
     # snapshot 2: merge-on-read delete
     table.commit_delete(
         base.filter(F.col("o_orderkey") % 10 == 3).select(
@@ -2406,7 +2388,7 @@ def run_bounded_snapshot_view(
     table.commit_append(
         base.filter(F.col("o_orderkey") % 10 == 1)
         .withColumn("o_orderkey", F.col("o_orderkey") + 100000)
-        .withColumn("bucket", bucket_of("o_orderkey", n_buckets)),
+        .withColumn("bucket", bucket_of("o_orderkey", table.n_buckets)),
         3,
     )
     # seed the view from snapshot 0 (the one full pass), then tail

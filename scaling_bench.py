@@ -89,6 +89,9 @@ def main() -> None:
 
     spark = get_spark("cassaforte-scaling-bench")
 
+    from cassaforte_meter_transmission_gen_spark.operators.similarity import (
+        IVFPQ_SUBSPACES,
+    )
     from cassaforte_meter_transmission_gen_spark.sources.ann_store import (
         ANN_STORE_ENV,
         trained_ivf_centroids,
@@ -119,7 +122,10 @@ def main() -> None:
         for label, train in () if args.skip_ann_train else (
             ("ivf_centroids", lambda: trained_ivf_centroids(spark, d)),
             ("pq16_codebooks", lambda: trained_pq_codebooks(spark, d)),
-            ("pq8_codebooks", lambda: trained_pq_codebooks(spark, d, n_subspaces=8)),
+            (
+                "pq8_codebooks",
+                lambda: trained_pq_codebooks(spark, d, n_subspaces=IVFPQ_SUBSPACES),
+            ),
             ("pq16_codes", lambda: trained_pq_codes(spark, d)),
             ("ivfpq8_index", lambda: trained_ivfpq_index(spark, d)),
         ):

@@ -108,6 +108,16 @@ def test_crashed_writer_leftover_is_replaced(spark, sf_small, store_root):
     assert os.path.exists(os.path.join(key_dir, "_SUCCESS"))
     assert read_kmeans_centroids(key_dir) == [[1.5]]
 
+    # the same for a Spark-written table artifact, which is always
+    # served as a read of the committed files
+    table_dir = os.path.join(store_root, "stale_table")
+    os.makedirs(table_dir)
+    served = ann_store._cached_spark_table(spark, table_dir, lambda: spark.range(3))
+    assert os.path.exists(os.path.join(table_dir, "_SUCCESS"))
+    assert sorted(r.id for r in served.collect()) == [0, 1, 2]
+    assert served.inputFiles()
+    assert all(table_dir in f for f in served.inputFiles())
+
 
 def test_pretrained_serve_equals_self_training(spark, sf_small, store_root):
     """The serve path (pretrained artifacts) must produce row-identical

@@ -1802,3 +1802,40 @@ def test_spread_small_scan_sizes_tasks_by_bytes(spark, sf_small, tmp_path):
                         -(-total // SPREAD_TASK_BYTES)))
     assert got == want
     assert spread.count() == 1000
+
+
+def test_spread_small_scan_sizes_other_uri_forms_by_bytes(
+    spark, tmp_path, monkeypatch
+):
+    """Input files listed in another URI form than ``file://`` (here
+    Hadoop's single-slash ``file:/`` spelling, standing in for any
+    non-local scheme) are sized from their FileSystem status too — the
+    task count is still bytes-derived, not a full-parallelism spread."""
+    import os
+
+    from pyspark import SparkContext
+
+    from cassaforte_meter_transmission_gen_spark.functions.spread import (
+        SPREAD_MIN_TASKS,
+        SPREAD_TASK_BYTES,
+        spread_small_scan,
+    )
+
+    path = str(tmp_path / "tiny.parquet")
+    spark.range(1000).coalesce(1).write.mode("overwrite").parquet(path)
+    df = spark.read.parquet(path)
+    files = df.inputFiles()
+    assert files and all(f.startswith("file:///") for f in files)
+    monkeypatch.setattr(
+        df, "inputFiles", lambda: [f.replace("file:///", "file:/") for f in files]
+    )
+    # a parallelism above the task floor, so on any host the bytes-derived
+    # count differs from the full-parallelism fallback
+    par = 4 * SPREAD_MIN_TASKS
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda sc: par))
+    total = sum(os.path.getsize(f.removeprefix("file://")) for f in files)
+    want = min(par, max(SPREAD_MIN_TASKS, -(-total // SPREAD_TASK_BYTES)))
+    assert want < par
+    spread = spread_small_scan(df)
+    assert spread.rdd.getNumPartitions() == want
+    assert spread.count() == 1000
