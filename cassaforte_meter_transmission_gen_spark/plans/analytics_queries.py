@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..operators.sketches import KMV_K, QSK_K
 from ..schemas import load_table
 from .catalog import register
 from .compat import DEC, dec_sum, sql_dec_sum, sql_ntile_from_rank
@@ -1914,12 +1915,7 @@ def sketch_kmv_userdays_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines. The exact side is ONE conditional count_distinct
     pass; intersection exactness via inclusion-exclusion, no INTERSECT
     materialization."""
-    from ..operators.sketches import (
-        KMV_K,
-        kmv_estimate_col,
-        kmv_merge,
-        kmv_sketch,
-    )
+    from ..operators.sketches import kmv_estimate_col, kmv_merge, kmv_sketch
 
     key_sql = (
         "CONCAT(CAST(user_id AS STRING), ':',"
@@ -2051,11 +2047,7 @@ def sketch_quantile_sample_totalprice(
     sort); state is O(k) per slice, mergeable across days exactly like
     the CMS/KMV tables; the exact twin is the verification fixture,
     not the scale path."""
-    from ..operators.sketches import (
-        QSK_K,
-        quantile_sample_merge,
-        quantile_sample_sketch,
-    )
+    from ..operators.sketches import quantile_sample_merge, quantile_sample_sketch
 
     o = _t(spark, sf_dir, "orders")
     ska = quantile_sample_sketch(
@@ -2090,7 +2082,7 @@ def sketch_quantile_sample_totalprice(
 
 @register(
     "streaming_quantile_sketch_daily",
-    oracle="""
+    oracle=f"""
 WITH base AS (
   SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
          CAST(('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 15))
@@ -2107,7 +2099,7 @@ est AS (
   SELECT day, CAST(COUNT(*) AS INT) AS n_sample,
          quantile_cont(v, 0.5) AS est_p50_micro,
          quantile_cont(v, 0.9) AS est_p90_micro
-  FROM sampled WHERE rn <= 512
+  FROM sampled WHERE rn <= {QSK_K}
   GROUP BY day
 ),
 ex AS (
@@ -2148,7 +2140,7 @@ def streaming_quantile_sketch_daily(
 
 @register(
     "streaming_kmv_daily_user_days",
-    oracle="""
+    oracle=f"""
 WITH base AS (
   SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
          CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR) || ':'
@@ -2162,7 +2154,7 @@ ranked AS (
 ),
 est AS (
   SELECT day, COUNT(*) AS n_sk, MAX(h) AS max_h
-  FROM ranked WHERE rn <= 256
+  FROM ranked WHERE rn <= {KMV_K}
   GROUP BY day
 ),
 ex AS (
@@ -2173,8 +2165,8 @@ ex AS (
   FROM events GROUP BY 1
 )
 SELECT est.day, CAST(n_sk AS INT) AS n_sketch,
-       CAST(CASE WHEN n_sk < 256 THEN n_sk
-            ELSE CAST(FLOOR(255.0 * 1152921504606846976.0 / max_h)
+       CAST(CASE WHEN n_sk < {KMV_K} THEN n_sk
+            ELSE CAST(FLOOR({KMV_K - 1}.0 * 1152921504606846976.0 / max_h)
                       AS BIGINT)
             END AS BIGINT) AS est_user_days,
        exact_user_days

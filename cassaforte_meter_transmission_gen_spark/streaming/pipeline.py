@@ -23,10 +23,26 @@ Exactly-once commit protocol
 ----------------------------
 Every ``foreachBatch`` sink here that keeps its state in plain parquet
 commits through one protocol — the poor-man's transaction log that a
-table format like Delta/Iceberg replaces wholesale. (The bucketed and
-LSM sinks commit through ``sources.snapshot.SnapshotTable.commit``
-instead; :func:`snapshot_view_batch_fn` runs this protocol keyed on the
-applied source snapshot id rather than the micro-batch id.)
+table format like Delta/Iceberg replaces wholesale.
+
+Each bounded sink is a (delta, merge) pair: ``delta(batch)`` is the
+micro-batch's contribution and ``merge(prev, delta)`` folds it into the
+committed state ``prev``. Two functions commit every pair, one per
+table format, and each owns that format's replay guard:
+
+- :func:`versioned_merge_fn` for marker-log state (the rules below):
+  one or more versioned tables committed under one marker;
+- :func:`snapshot_merge_fn` for manifest state
+  (``sources.snapshot.SnapshotTable``): the manifest's ``batch_hw`` is
+  the high watermark, the atomic manifest create is the commit point,
+  and only the buckets the delta touches are read and rewritten (or the
+  delta is appended, for the LSM ledger).
+
+Two sinks keep their own guard. :func:`streaming_ingest_batch_fn`
+writes append-only ``batch=`` dirs next to its versioned grains and
+overlaps the five table writes on driver threads, so it is not a
+(delta, merge) pair. :func:`snapshot_view_batch_fn` keys its guard on
+the applied source snapshot id, not on the micro-batch id.
 
 - **Layout.** A sink owns its table dirs plus one ``commits_dir``. A
   versioned table holds one full copy of its state per applied batch,
@@ -58,31 +74,34 @@ applied source snapshot id rather than the micro-batch id.)
   invisible to every reader.
 
 The ``run_bounded_*`` harnesses drive a sink over a staged, bounded
-stream to completion (:func:`_drain`) and read back the committed
-result.
+stream to completion and read back the committed result: a
+``foreachBatch`` sink through :func:`_drain_sink`, a stateful query
+through :func:`_drain_memory`.
 """
 
 from __future__ import annotations
 
 import atexit
-import hashlib
 import os
 import shutil
 import tempfile
+import uuid
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.sketches import (
+    KMV_K,
+    QSK_K,
+    cms_build,
+    cms_estimate,
+    cms_merge,
+    kmv_estimate_col,
+    kmv_hash_expr,
+)
 from ..schemas import METER_SAMPLES_SECOND
 from ..sources.meter_generator import meter_samples_second
-
-
-def _slug(*parts) -> str:
-    """Deterministic memory-sink name suffix: Python's ``hash()`` is
-    salted per process, so sink/view names built from it would differ
-    across runs — md5 of the repr is stable everywhere."""
-    return hashlib.md5(repr(parts).encode()).hexdigest()[:10]
 
 
 def _committed_batches(commits_dir: str) -> list[int]:
@@ -135,26 +154,64 @@ def _read_committed(
     return spark.read.schema(schema).parquet(f"{table_dir}/v={hw}")
 
 
-def versioned_merge_fn(
-    table_dir: str, commits_dir: str, schema: str, delta, merge
-):
-    """foreachBatch body of a one-table versioned sink under the module's
-    commit protocol: skip a replayed batch, else write
-    ``merge(committed state, delta(batch))`` as ``v=<batch_id>`` and
-    commit. ``delta(batch) -> DataFrame`` is the batch's contribution;
-    ``merge(prev, delta) -> DataFrame`` folds it into the committed
-    state (an empty frame of ``schema`` on the first batch)."""
+def versioned_merge_fn(commits_dir: str, *tables):
+    """foreachBatch body of a versioned sink under the module's commit
+    protocol. Each of ``tables`` is a ``(table_dir, schema, delta,
+    merge)`` tuple: ``delta(batch) -> DataFrame`` is the batch's
+    contribution and ``merge(prev, delta) -> DataFrame`` folds it into
+    the committed state ``prev`` (an empty frame of ``schema`` on the
+    first batch). A replayed batch is skipped; otherwise every table is
+    written as ``v=<batch_id>``, in order, and only then does the one
+    marker of the batch land."""
     os.makedirs(commits_dir, exist_ok=True)
 
     def fn(batch: DataFrame, batch_id: int) -> None:
         hw = _high_watermark(commits_dir)
         if hw is not None and batch_id <= hw:
             return  # replayed, fully applied
-        prev = _read_committed(batch.sparkSession, table_dir, commits_dir, schema)
-        merge(prev, delta(batch)).write.mode("overwrite").parquet(
-            f"{table_dir}/v={batch_id}"
-        )
-        _commit(commits_dir, batch_id, [table_dir])
+        for table_dir, schema, delta, merge in tables:
+            prev = _read_committed(batch.sparkSession, table_dir, commits_dir, schema)
+            merge(prev, delta(batch)).write.mode("overwrite").parquet(
+                f"{table_dir}/v={batch_id}"
+            )
+        _commit(commits_dir, batch_id, [t[0] for t in tables])
+
+    return fn
+
+
+def snapshot_merge_fn(table, delta, merge):
+    """foreachBatch body of a sink whose state is a bucketed
+    ``sources.snapshot.SnapshotTable`` — the manifest counterpart of
+    :func:`versioned_merge_fn`. The applied micro-batch id travels in
+    the manifest as ``batch_hw``, separate from the snapshot id, so
+    maintenance commits (compaction) can take snapshot ids between
+    batches without desynchronizing the replay guard; the atomic
+    manifest create is the commit point.
+
+    A batch with ``batch_id <= batch_hw`` is a replay and is skipped.
+    Otherwise ``delta(batch)``, whose rows carry the ``bucket`` column,
+    is committed as the next snapshot id: ``merge(prev, delta)``
+    replaces the committed rows ``prev`` of the buckets the delta
+    touches (untouched buckets carry forward by manifest reference,
+    their files never opened); with ``merge=None`` the delta is
+    appended to its buckets' file lists with no read of committed
+    state (``SnapshotTable.commit_append``, the LSM shape)."""
+
+    def fn(batch: DataFrame, batch_id: int) -> None:
+        hw = table.batch_high_watermark()
+        if hw is not None and batch_id <= hw:
+            return  # replayed, fully applied
+        d = delta(batch)
+        latest = table.latest()
+        sid = 0 if latest is None else latest + 1
+        if merge is None:
+            table.commit_append(d, sid, batch_hw=batch_id)
+            return
+        d = d.localCheckpoint()  # consumed twice: touched buckets + merge
+        # touched bucket ids: bounded driver state (≤ n_buckets rows)
+        touched = [r[0] for r in d.select("bucket").distinct().collect()]
+        prev = table.read(batch.sparkSession, buckets=touched)
+        table.commit(merge(prev, d), sid, batch_hw=batch_id)
 
     return fn
 
@@ -168,6 +225,47 @@ def _drain(writer) -> None:
         writer.option("checkpointLocation", ckpt).trigger(
             availableNow=True
         ).start().awaitTermination()
+
+
+def _drain_memory(df: DataFrame, output_mode: str) -> DataFrame:
+    """Drain the streaming query ``df`` into a memory sink under a
+    unique name and return the sink's table. (The name shows only in
+    the analyzed plan; the optimized plan reads ``MemoryPlan``.)"""
+    name = f"stream_memory_{uuid.uuid4().hex}"
+    _drain(df.writeStream.format("memory").queryName(name).outputMode(output_mode))
+    return df.sparkSession.table(name)
+
+
+def _drain_sink(stream: DataFrame, sink, state) -> DataFrame:
+    """Drain ``stream`` through the foreachBatch body
+    ``sink(table_dir, commits_dir)`` and return
+    ``state(table_dir, commits_dir)``, the committed state. Both dirs
+    live under a fresh scratch root removed at exit."""
+    root = tempfile.mkdtemp(prefix="stream_sink_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    table_dir = os.path.join(root, "state")
+    commits = os.path.join(root, "_commits")
+    _drain(stream.writeStream.foreachBatch(sink(table_dir, commits)))
+    return state(table_dir, commits)
+
+
+def _file_stream(df: DataFrame, files_per_trigger: int) -> DataFrame:
+    """Stage ``df`` as parquet (one file per partition) in a scratch dir
+    removed at exit, and re-read it as a schema-pinned file stream of
+    ``files_per_trigger`` files per micro-batch."""
+    stage = tempfile.mkdtemp(prefix="stream_in_")
+    atexit.register(shutil.rmtree, stage, ignore_errors=True)
+    df.write.mode("overwrite").parquet(stage)
+    return (
+        df.sparkSession.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", files_per_trigger)
+        .parquet(stage)
+    )
+
+
+def _four_file_stream(df: DataFrame) -> DataFrame:
+    """``df`` replayed as 4 staged files, one per micro-batch."""
+    return _file_stream(df.repartition(4), 1)
 
 
 def _sum_merge(keys: tuple[str, ...], cols: tuple[str, ...]):
@@ -222,12 +320,16 @@ def rate_transmission_stream(
     ).withColumn("watts", sawtooth_watts())
 
 
-def windowed_rollup(stream: DataFrame, grain_duration: str) -> DataFrame:
+def windowed_rollup(
+    stream: DataFrame, grain_duration: str, delay: str
+) -> DataFrame:
     """Streaming rollup: tumbling-window stateful sum — the COUNTER
     table as a continuously-maintained aggregation (update/complete
-    output mode both valid; state keyed (said, window))."""
+    output mode both valid; state keyed (said, window)). ``delay`` is
+    the watermark lateness: rows behind it are dropped, and in append
+    mode a window is emitted once its end passes the watermark."""
     return (
-        stream.withWatermark("datetime", "0 seconds")
+        stream.withWatermark("datetime", delay)
         .groupBy(F.window("datetime", grain_duration).alias("w"), "said")
         .agg(F.sum("joules").cast("long").alias("joules"))
         .select("said", F.col("w.start").alias("datetime"), "joules")
@@ -278,23 +380,15 @@ def run_bounded_dedup_ingest(
         meter_samples_second(spark, num_meters=num_meters, seconds=seconds).filter(
             F.pmod(F.unix_timestamp("datetime"), F.lit(dup_fraction)) == 0
         ).write.mode("append").parquet(stage)
-        name = f"stream_dedup_{_slug(num_meters, seconds, dup_fraction)}"
-        _drain(
-            dedup_transmission_stream(stream, lateness="10 minutes")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
+        return _drain_memory(
+            dedup_transmission_stream(stream, lateness="10 minutes"), "append"
         )
     finally:
         shutil.rmtree(stage, ignore_errors=True)
-    return spark.table(name)
 
 
 def bounded_second_stream(
-    spark: SparkSession,
-    num_meters: int = 4,
-    seconds: int = 7200,
-    stage_dir: str | None = None,
+    spark: SparkSession, num_meters: int = 4, seconds: int = 7200
 ) -> tuple[DataFrame, str]:
     """Deterministic bounded stream for tests/oracle checks: stage the
     batch-generated second-grain table as parquet, then re-read it as a
@@ -303,9 +397,8 @@ def bounded_second_stream(
     Staged as at least 32 files whatever the core count (files are
     capped at 1/32 of the known row count), so a drain at 8 files per
     trigger always spans several micro-batches."""
-    stage = stage_dir or tempfile.mkdtemp(prefix="meter_stream_")
-    if stage_dir is None:  # only reclaim dirs this function created
-        atexit.register(shutil.rmtree, stage, ignore_errors=True)
+    stage = tempfile.mkdtemp(prefix="meter_stream_")
+    atexit.register(shutil.rmtree, stage, ignore_errors=True)
     meter_samples_second(spark, num_meters=num_meters, seconds=seconds).write.mode(
         "overwrite"
     ).option("maxRecordsPerFile", -(-num_meters * seconds // 32)).parquet(stage)
@@ -327,14 +420,9 @@ def run_bounded_rollup(
     (availableNow trigger, complete output mode into a memory sink) and
     return the final result table — byte-equal to the batch rollup."""
     stream, _ = bounded_second_stream(spark, num_meters, seconds)
-    name = f"stream_rollup_{_slug(grain_duration, num_meters, seconds)}"
-    _drain(
-        windowed_rollup(stream, grain_duration)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
+    return _drain_memory(
+        windowed_rollup(stream, grain_duration, "0 seconds"), "complete"
     )
-    return spark.table(name)
 
 
 def cumulative_energy_stream(stream: DataFrame) -> DataFrame:
@@ -735,24 +823,14 @@ def session_rollup(stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
 def bounded_events_stream(
     spark: SparkSession,
     sf_dir: str,
-    stage_dir: str | None = None,
     columns: tuple[str, ...] = ("user_id", "ts", "event_id", "value"),
 ) -> DataFrame:
     """Deterministic bounded event stream: stage the corpus ``events``
     table (projected to ``columns``) and re-read it as a schema-pinned
-    file stream."""
+    file stream, 8 files per micro-batch."""
     from ..schemas import load_table
 
-    stage = stage_dir or tempfile.mkdtemp(prefix="events_stream_")
-    if stage_dir is None:  # only reclaim dirs this function created
-        atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    ev = load_table(spark, sf_dir, "events").select(*columns)
-    ev.write.mode("overwrite").parquet(stage)
-    return (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(stage)
-    )
+    return _file_stream(load_table(spark, sf_dir, "events").select(*columns), 8)
 
 
 def run_bounded_sessions(
@@ -760,15 +838,9 @@ def run_bounded_sessions(
 ) -> DataFrame:
     """Run the streaming sessionization to completion and return the
     final session table (complete mode: every closed + open session)."""
-    stream = bounded_events_stream(spark, sf_dir)
-    name = f"stream_sessions_{_slug(sf_dir, gap)}"
-    _drain(
-        session_rollup(stream, gap)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
+    return _drain_memory(
+        session_rollup(bounded_events_stream(spark, sf_dir), gap), "complete"
     )
-    return spark.table(name)
 
 
 def run_bounded_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -814,9 +886,7 @@ def run_bounded_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("user_n").cast("long").alias("sum_user_n"),
         )
     )
-    name = f"stream_enrich_{_slug(sf_dir)}"
-    _drain(agg.writeStream.format("memory").queryName(name).outputMode("complete"))
-    return spark.table(name)
+    return _drain_memory(agg, "complete")
 
 
 def run_bounded_interval_join(
@@ -870,9 +940,7 @@ def run_bounded_interval_join(
             "click_ts <= purchase_ts"
         ),
     ).select("user_id", "purchase_id", "purchase_ts", "purchase_value", "click_id", "click_ts")
-    name = f"stream_ssjoin_{_slug(sf_dir, window)}"
-    _drain(joined.writeStream.format("memory").queryName(name).outputMode("append"))
-    return spark.table(name)
+    return _drain_memory(joined, "append")
 
 
 def run_late_data_rollup(
@@ -927,15 +995,7 @@ def run_late_data_rollup(
         .option("latestFirst", "false")
         .parquet(stage)
     )
-    rollup = (
-        stream.withWatermark("datetime", delay)
-        .groupBy(F.window("datetime", grain).alias("w"), "said")
-        .agg(F.sum("joules").cast("long").alias("joules"))
-        .select("said", F.col("w.start").alias("datetime"), "joules")
-    )
-    name = f"stream_late_{_slug(stage, delay, grain)}"
-    _drain(rollup.writeStream.format("memory").queryName(name).outputMode("append"))
-    return spark.table(name)
+    return _drain_memory(windowed_rollup(stream, grain, delay), "append")
 
 
 def run_bounded_cumulative(
@@ -944,14 +1004,7 @@ def run_bounded_cumulative(
     """Drive the stateful counter over the bounded stream and return
     every emitted checkpoint row (memory sink, update mode)."""
     stream, _ = bounded_second_stream(spark, num_meters, seconds)
-    name = f"stream_cumulative_{_slug(num_meters, seconds)}"
-    _drain(
-        cumulative_energy_stream(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-    )
-    return spark.table(name)
+    return _drain_memory(cumulative_energy_stream(stream), "update")
 
 
 #: pinned state schemas of the versioned sketch/count sinks below —
@@ -983,15 +1036,17 @@ def sketch_rollup_batch_fn(table_dir: str, commits_dir: str):
     counters cannot (distinct users). Exactly-once by the module's
     commit protocol (:func:`versioned_merge_fn`)."""
     return versioned_merge_fn(
-        table_dir,
         commits_dir,
-        _SKETCH_SCHEMA,
-        lambda b: b.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
-            F.hll_sketch_agg("user_id").alias("user_sketch")
+        (
+            table_dir,
+            _SKETCH_SCHEMA,
+            lambda b: b.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
+                F.hll_sketch_agg("user_id").alias("user_sketch")
+            ),
+            lambda prev, sk: prev.unionByName(sk)
+            .groupBy("day")
+            .agg(F.hll_union_agg("user_sketch").alias("user_sketch")),
         ),
-        lambda prev, sk: prev.unionByName(sk)
-        .groupBy("day")
-        .agg(F.hll_union_agg("user_sketch").alias("user_sketch")),
     )
 
 
@@ -1072,11 +1127,13 @@ def scd2_batch_fn(
     rewrite — untouched buckets carry forward by manifest reference,
     the same economics as the IVF layout."""
     return versioned_merge_fn(
-        table_dir,
         commits_dir,
-        history_schema,
-        lambda b: b,
-        lambda prev, b: scd2_merge(prev, b, key_col, payload_cols),
+        (
+            table_dir,
+            history_schema,
+            lambda b: b,
+            lambda prev, b: scd2_merge(prev, b, key_col, payload_cols),
+        ),
     )
 
 
@@ -1088,6 +1145,7 @@ _SCD2_HISTORY_SCHEMA = (
     "o_orderkey bigint, o_orderstatus string, o_totalprice double,"
     " valid_from_seq int, valid_to_seq int, is_current boolean"
 )
+_SCD2_PAYLOAD = ["o_orderkey", "o_orderstatus", "o_totalprice"]
 
 
 def _stage_scd2_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1127,23 +1185,13 @@ def run_bounded_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     the streaming maintenance must converge to exactly the history a
     one-shot batch build produces, which is the streaming≡batch
     argument used for every rollup in this module."""
-    stream = _stage_scd2_feed(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="scd2_stream_out_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    table_dir = os.path.join(out, "orders_history")
-    commits = os.path.join(out, "_commits")
-    _drain(
-        stream.writeStream.foreachBatch(
-            scd2_batch_fn(
-                table_dir,
-                commits,
-                _SCD2_HISTORY_SCHEMA,
-                "o_orderkey",
-                ["o_orderkey", "o_orderstatus", "o_totalprice"],
-            )
-        )
+    return _drain_sink(
+        _stage_scd2_feed(spark, sf_dir),
+        lambda t, c: scd2_batch_fn(
+            t, c, _SCD2_HISTORY_SCHEMA, "o_orderkey", _SCD2_PAYLOAD
+        ),
+        lambda t, c: _read_committed(spark, t, c, _SCD2_HISTORY_SCHEMA),
     )
-    return _read_committed(spark, table_dir, commits, _SCD2_HISTORY_SCHEMA)
 
 
 #: key-bucket count for the bucketed SCD2 fixture. At 100 TB this is
@@ -1181,34 +1229,18 @@ def scd2_bucketed_batch_fn(
     (SnapshotTable.commit's idempotence contract). The chaining core
     and the at-least-once seq guard are byte-for-byte
     :func:`scd2_merge` — shared with the full-rewrite fixture, so both
-    gate against the identical batch oracle."""
+    gate against the identical batch oracle (:func:`snapshot_merge_fn`
+    commits it)."""
     from ..sources.snapshot import bucket_of
 
-    def fn(batch: DataFrame, batch_id: int) -> None:
-        hw = table.batch_high_watermark()
-        if hw is not None and batch_id <= hw:
-            return  # replayed, fully applied
-        spark = batch.sparkSession
-        batch = batch.localCheckpoint()  # consumed twice: buckets + merge
-        # touched bucket ids: bounded driver state (≤ n_buckets rows)
-        touched = [
-            r[0]
-            for r in batch.select(
-                bucket_of(key_col, table.n_buckets).alias("b")
-            )
-            .distinct()
-            .collect()
-        ]
-        prev = table.read(spark, buckets=touched).drop("bucket")
-        merged = scd2_merge(prev, batch, key_col, payload_cols)
-        sid = 0 if table.latest() is None else table.latest() + 1
-        table.commit(
-            merged.withColumn("bucket", bucket_of(key_col, table.n_buckets)),
-            sid,
-            batch_hw=batch_id,
-        )
-
-    return fn
+    bucket = bucket_of(key_col, table.n_buckets)
+    return snapshot_merge_fn(
+        table,
+        lambda b: b.withColumn("bucket", bucket),
+        lambda prev, b: scd2_merge(
+            prev.drop("bucket"), b, key_col, payload_cols
+        ).withColumn("bucket", bucket),
+    )
 
 
 def run_bounded_scd2_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1219,32 +1251,20 @@ def run_bounded_scd2_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-shot batch builds are all pinned to one truth."""
     from ..sources.snapshot import SnapshotTable
 
-    stream = _stage_scd2_feed(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="scd2_bucketed_out_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    table = SnapshotTable(
-        os.path.join(out, "orders_history"),
-        _SCD2_BUCKETED_SCHEMA,
-        SCD2_N_BUCKETS,
+    return _drain_sink(
+        _stage_scd2_feed(spark, sf_dir),
+        lambda t, _: scd2_bucketed_batch_fn(
+            SnapshotTable(t, _SCD2_BUCKETED_SCHEMA, SCD2_N_BUCKETS),
+            "o_orderkey",
+            _SCD2_PAYLOAD,
+        ),
+        lambda t, _: SnapshotTable.open(t).read(spark).drop("bucket"),
     )
-    _drain(
-        stream.writeStream.foreachBatch(
-            scd2_bucketed_batch_fn(
-                table,
-                "o_orderkey",
-                ["o_orderkey", "o_orderstatus", "o_totalprice"],
-            )
-        )
-    )
-    return table.read(spark).drop("bucket")
 
 
-def run_bounded_sketch_rollup(
-    spark: SparkSession, sf_dir: str, n_files: int = 4
-) -> DataFrame:
+def run_bounded_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drive :func:`sketch_rollup_batch_fn` over a bounded stream of the
-    ``events`` table (restaged as ``n_files`` parquet files, one file
-    per micro-batch), then gate the maintained sketch table: weekly
+    ``events`` table (:func:`_four_file_stream`), then gate the maintained sketch table: weekly
     estimates from the FINAL committed version against exact weekly
     distincts recomputed from raw — the streaming dual of the batch
     ``sketch_rollup_distinct_users``. At 100 TB this is the insert-time
@@ -1254,47 +1274,29 @@ def run_bounded_sketch_rollup(
     from ..schemas import load_table
 
     ev = load_table(spark, sf_dir, "events").select("ts", "user_id")
-    stage = tempfile.mkdtemp(prefix="sketch_stream_in_")
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    out = tempfile.mkdtemp(prefix="sketch_stream_out_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    try:
-        ev.repartition(n_files).write.mode("overwrite").parquet(f"{stage}/in")
-        table_dir = f"{out}/day_sketches"
-        commits = f"{out}/_commits"
-        stream = (
-            spark.readStream.schema("ts timestamp, user_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{stage}/in")
+    stored = _drain_sink(
+        _four_file_stream(ev),
+        sketch_rollup_batch_fn,
+        lambda t, c: _read_committed(spark, t, c, _SKETCH_SCHEMA),
+    )
+    weekly_est = stored.groupBy(
+        F.date_trunc("week", "day").cast("date").alias("week")
+    ).agg(
+        F.hll_sketch_estimate(F.hll_union_agg("user_sketch")).alias(
+            "approx_users"
         )
-        _drain(
-            stream.writeStream.foreachBatch(
-                sketch_rollup_batch_fn(table_dir, commits)
-            )
-        )
-        stored = _read_committed(spark, table_dir, commits, _SKETCH_SCHEMA)
-        weekly_est = stored.groupBy(
-            F.date_trunc("week", "day").cast("date").alias("week")
-        ).agg(
-            F.hll_sketch_estimate(F.hll_union_agg("user_sketch")).alias(
-                "approx_users"
-            )
-        )
-        weekly_exact = ev.groupBy(
-            F.date_trunc("week", "ts").cast("date").alias("week")
-        ).agg(F.count_distinct("user_id").alias("exact_users"))
-        res = weekly_exact.join(weekly_est, "week").select(
-            "week",
-            "exact_users",
-            (
-                F.abs(F.col("approx_users") - F.col("exact_users"))
-                <= F.lit(8) + F.lit(5 * 0.016) * F.col("exact_users")
-            ).alias("within_bound"),
-        )
-        res.write.mode("overwrite").parquet(f"{out}/weekly")
-        return spark.read.parquet(f"{out}/weekly")
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    )
+    weekly_exact = ev.groupBy(
+        F.date_trunc("week", "ts").cast("date").alias("week")
+    ).agg(F.count_distinct("user_id").alias("exact_users"))
+    return weekly_exact.join(weekly_est, "week").select(
+        "week",
+        "exact_users",
+        (
+            F.abs(F.col("approx_users") - F.col("exact_users"))
+            <= F.lit(8) + F.lit(5 * 0.016) * F.col("exact_users")
+        ).alias("within_bound"),
+    )
 
 
 def cms_rollup_batch_fn(table_dir: str, commits_dir: str):
@@ -1309,71 +1311,53 @@ def cms_rollup_batch_fn(table_dir: str, commits_dir: str):
     final estimates equal the batch CMS query exactly, and the DuckDB
     oracle gates them by full value hash. Exactly-once by the module's
     commit protocol (:func:`versioned_merge_fn`)."""
-    from ..operators.sketches import cms_build
-
     return versioned_merge_fn(
-        table_dir,
         commits_dir,
-        _CMS_SCHEMA,
-        lambda b: cms_build(
-            b.withColumn("day", F.to_date("ts")), "user_id", group_cols=("day",)
+        (
+            table_dir,
+            _CMS_SCHEMA,
+            lambda b: cms_build(
+                b.withColumn("day", F.to_date("ts")), "user_id", group_cols=("day",)
+            ),
+            _sum_merge(("day", "r", "c"), ("cnt",)),
         ),
-        _sum_merge(("day", "r", "c"), ("cnt",)),
     )
 
 
-def run_bounded_cms_rollup(
-    spark: SparkSession, sf_dir: str, n_files: int = 4
-) -> DataFrame:
+def run_bounded_cms_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drive :func:`cms_rollup_batch_fn` over a bounded stream of the
-    ``events`` table (restaged as ``n_files`` files, one per
-    micro-batch), then point-estimate the exact top-20 users from the
+    ``events`` table (:func:`_four_file_stream`), then point-estimate the exact top-20 users from the
     FINAL committed grid — the streaming dual of the batch
     ``sketch_cms_heavy_hitters``, and (because CMS counters are
     additive integers under the portable hash) its BIT-EQUAL dual:
     both run against the identical full-value-hash DuckDB oracle. At
     100 TB: every event folds into a fixed 4×1024-per-day grid once;
     estimates never rescan raw."""
-    from ..operators.sketches import cms_estimate, cms_merge
     from ..schemas import load_table
 
     ev = load_table(spark, sf_dir, "events").select("ts", "user_id")
-    stage = tempfile.mkdtemp(prefix="cms_stream_in_")
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    out = tempfile.mkdtemp(prefix="cms_stream_out_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    try:
-        ev.repartition(n_files).write.mode("overwrite").parquet(f"{stage}/in")
-        table_dir = f"{out}/day_grids"
-        commits = f"{out}/_commits"
-        stream = (
-            spark.readStream.schema("ts timestamp, user_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{stage}/in")
+    grid = cms_merge(
+        _drain_sink(
+            _four_file_stream(ev),
+            cms_rollup_batch_fn,
+            lambda t, c: _read_committed(spark, t, c, _CMS_SCHEMA),
         )
-        _drain(
-            stream.writeStream.foreachBatch(cms_rollup_batch_fn(table_dir, commits))
-        )
-        grid = cms_merge(_read_committed(spark, table_dir, commits, _CMS_SCHEMA))
-        top = (
-            ev.groupBy("user_id")
-            .agg(F.count("*").cast("long").alias("exact_count"))
-            .orderBy(F.desc("exact_count"), "user_id")
-            .limit(20)
-        )
-        res = cms_estimate(grid, top, "user_id").select(
-            "user_id",
-            "exact_count",
-            "cms_estimate",
-            (F.col("cms_estimate") >= F.col("exact_count")).alias("ge_exact"),
-            (F.col("cms_estimate") - F.col("exact_count"))
-            .cast("long")
-            .alias("overestimate"),
-        )
-        res.write.mode("overwrite").parquet(f"{out}/estimates")
-        return spark.read.parquet(f"{out}/estimates")
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    )
+    top = (
+        ev.groupBy("user_id")
+        .agg(F.count("*").cast("long").alias("exact_count"))
+        .orderBy(F.desc("exact_count"), "user_id")
+        .limit(20)
+    )
+    return cms_estimate(grid, top, "user_id").select(
+        "user_id",
+        "exact_count",
+        "cms_estimate",
+        (F.col("cms_estimate") >= F.col("exact_count")).alias("ge_exact"),
+        (F.col("cms_estimate") - F.col("exact_count"))
+        .cast("long")
+        .alias("overestimate"),
+    )
 
 
 def cusum_stream(
@@ -1442,11 +1426,9 @@ def run_bounded_cusum(
     sf_dir: str,
     k_micro: int,
     h_micro: int,
-    n_slices: int = 8,
-    files_per_trigger: int = 3,
 ) -> DataFrame:
-    """Drive :func:`cusum_stream` over the events table staged as
-    ``n_slices`` GLOBALLY time-ordered files (named and mtime-pinned in
+    """Drive :func:`cusum_stream` over the events table staged as 8
+    GLOBALLY time-ordered files (3 per micro-batch) (named and mtime-pinned in
     order, the run_bounded_scd2 staging) so per-user order holds across
     micro-batches, then return each user's FINAL state row (n_events is
     strictly increasing per user across emissions, so max-by picks the
@@ -1470,32 +1452,22 @@ def run_bounded_cusum(
     # harness, not the operator
     sliced = e.withColumn(
         "slice",
-        F.ntile(n_slices).over(
+        F.ntile(8).over(
             W.orderBy("ts", "event_id")
         ),
     )
     in_dir = _stage_ordered_files(
         "cusum_stream_in_",
-        [
-            sliced.filter(F.col("slice") == i).drop("slice")
-            for i in range(1, n_slices + 1)
-        ],
+        [sliced.filter(F.col("slice") == i).drop("slice") for i in range(1, 9)],
     )
     stream = (
         spark.readStream.schema(
             "user_id bigint, ts timestamp, event_id bigint, v_micro bigint"
         )
-        .option("maxFilesPerTrigger", files_per_trigger)
+        .option("maxFilesPerTrigger", 3)
         .parquet(in_dir)
     )
-    name = f"stream_cusum_{k_micro}_{h_micro}"
-    _drain(
-        cusum_stream(stream, k_micro, h_micro)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-    )
-    emitted = spark.table(name)
+    emitted = _drain_memory(cusum_stream(stream, k_micro, h_micro), "update")
     final = emitted.groupBy("user_id").agg(
         F.max(
             F.struct("n_events", "n_alarms", "max_s", "first_alarm_rn")
@@ -1513,7 +1485,7 @@ def run_bounded_cusum(
 
 
 def quantile_sketch_rollup_batch_fn(
-    table_dir: str, commits_dir: str, k: int = 512
+    table_dir: str, commits_dir: str, k: int = QSK_K
 ):
     """foreachBatch body maintaining a PER-DAY quantile-sample sketch
     table — the counter-merge versioned protocol applied to the third
@@ -1527,30 +1499,28 @@ def quantile_sketch_rollup_batch_fn(
     is O(days × k) rows regardless of stream history."""
     from pyspark.sql import Window as W
 
-    from ..operators.sketches import kmv_hash_expr
-
     wday = W.partitionBy("day").orderBy("h", "v")
     return versioned_merge_fn(
-        table_dir,
         commits_dir,
-        _QSK_SCHEMA,
-        lambda b: b.select(
-            F.date_trunc("day", "ts").alias("day"),
-            F.expr(kmv_hash_expr("CAST(event_id AS STRING)")).alias("h"),
-            F.expr(
-                "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)"
-            ).alias("v"),
+        (
+            table_dir,
+            _QSK_SCHEMA,
+            lambda b: b.select(
+                F.date_trunc("day", "ts").alias("day"),
+                F.expr(kmv_hash_expr("CAST(event_id AS STRING)")).alias("h"),
+                F.expr(
+                    "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)"
+                ).alias("v"),
+            ),
+            lambda prev, sk: prev.unionByName(sk)
+            .withColumn("rn", F.row_number().over(wday))
+            .filter(F.col("rn") <= k)
+            .drop("rn"),
         ),
-        lambda prev, sk: prev.unionByName(sk)
-        .withColumn("rn", F.row_number().over(wday))
-        .filter(F.col("rn") <= k)
-        .drop("rn"),
     )
 
 
-def run_bounded_quantile_rollup(
-    spark: SparkSession, sf_dir: str, k: int = 512
-) -> DataFrame:
+def run_bounded_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drive :func:`quantile_sketch_rollup_batch_fn` over the bounded
     event stream to completion, then estimate each day's median and
     p90 from the FINAL committed sketch table, with the exact per-day
@@ -1560,17 +1530,11 @@ def run_bounded_quantile_rollup(
     mergeability."""
     from ..schemas import load_table
 
-    out = tempfile.mkdtemp(prefix="qsk_stream_out_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    table_dir = os.path.join(out, "day_sketches")
-    commits = os.path.join(out, "_commits")
-    stream = bounded_events_stream(spark, sf_dir)
-    _drain(
-        stream.writeStream.foreachBatch(
-            quantile_sketch_rollup_batch_fn(table_dir, commits, k)
-        )
+    sk = _drain_sink(
+        bounded_events_stream(spark, sf_dir),
+        quantile_sketch_rollup_batch_fn,
+        lambda t, c: _read_committed(spark, t, c, _QSK_SCHEMA),
     )
-    sk = _read_committed(spark, table_dir, commits, _QSK_SCHEMA)
     est = sk.groupBy("day").agg(
         F.count("*").cast("int").alias("n_sample"),
         F.expr("percentile(v, 0.5)").alias("est_p50_micro"),
@@ -1593,7 +1557,7 @@ def run_bounded_quantile_rollup(
     return est.join(exact, "day")
 
 
-def kmv_rollup_batch_fn(table_dir: str, commits_dir: str, k: int = 256):
+def kmv_rollup_batch_fn(table_dir: str, commits_dir: str):
     """foreachBatch body maintaining a PER-DAY KMV distinct sketch
     table — completing the streaming-maintained sketch family (HLL
     distinct / CMS frequency / quantile sample / THIS for md5-portable
@@ -1605,50 +1569,43 @@ def kmv_rollup_batch_fn(table_dir: str, commits_dir: str, k: int = 256):
     (:func:`versioned_merge_fn`); state is O(days × k) int64s."""
     from pyspark.sql import Window as W
 
-    from ..operators.sketches import kmv_hash_expr
-
     wday = W.partitionBy("day").orderBy("h")
     key = (
         "CONCAT(CAST(user_id AS STRING), ':',"
         " CAST(CAST(ts AS DATE) AS STRING))"
     )
     return versioned_merge_fn(
-        table_dir,
         commits_dir,
-        _KMV_SCHEMA,
-        lambda b: b.select(
-            F.date_trunc("day", "ts").alias("day"),
-            F.expr(kmv_hash_expr(key)).alias("h"),
-        ).distinct(),
-        lambda prev, sk: prev.unionByName(sk)
-        .distinct()
-        .withColumn("rn", F.row_number().over(wday))
-        .filter(F.col("rn") <= k)
-        .drop("rn"),
+        (
+            table_dir,
+            _KMV_SCHEMA,
+            lambda b: b.select(
+                F.date_trunc("day", "ts").alias("day"),
+                F.expr(kmv_hash_expr(key)).alias("h"),
+            ).distinct(),
+            lambda prev, sk: prev.unionByName(sk)
+            .distinct()
+            .withColumn("rn", F.row_number().over(wday))
+            .filter(F.col("rn") <= KMV_K)
+            .drop("rn"),
+        ),
     )
 
 
-def run_bounded_kmv_rollup(
-    spark: SparkSession, sf_dir: str, k: int = 256
-) -> DataFrame:
+def run_bounded_kmv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drive :func:`kmv_rollup_batch_fn` over the bounded event stream
     to completion, then per day report the KMV distinct-user-day
     estimate from the FINAL committed sketch beside the exact distinct
     count (query-time, the KMV discipline). By mergeability the final
     sketch equals the one-pass per-day sketch, which is what the
     serial oracle draws."""
-    from ..operators.sketches import kmv_estimate_col
     from ..schemas import load_table
 
-    out = tempfile.mkdtemp(prefix="kmv_stream_out_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    table_dir = os.path.join(out, "day_sketches")
-    commits = os.path.join(out, "_commits")
-    stream = bounded_events_stream(spark, sf_dir)
-    _drain(
-        stream.writeStream.foreachBatch(kmv_rollup_batch_fn(table_dir, commits, k))
+    sk = _drain_sink(
+        bounded_events_stream(spark, sf_dir),
+        kmv_rollup_batch_fn,
+        lambda t, c: _read_committed(spark, t, c, _KMV_SCHEMA),
     )
-    sk = _read_committed(spark, table_dir, commits, _KMV_SCHEMA)
     est = sk.groupBy("day").agg(
         F.count("*").alias("n_sk"), F.max("h").alias("max_h")
     )
@@ -1669,7 +1626,7 @@ def run_bounded_kmv_rollup(
     return est.join(exact, "day").select(
         "day",
         F.col("n_sk").cast("int").alias("n_sketch"),
-        kmv_estimate_col(F.col("n_sk"), F.col("max_h"), k=k).alias(
+        kmv_estimate_col(F.col("n_sk"), F.col("max_h")).alias(
             "est_user_days"
         ),
         "exact_user_days",
@@ -1689,11 +1646,13 @@ def psi_counts_batch_fn(table_dir: str, commits_dir: str):
     from ..plans.analytics_queries import psi_bucket_counts
 
     return versioned_merge_fn(
-        table_dir,
         commits_dir,
-        _PSI_SCHEMA,
-        psi_bucket_counts,
-        _sum_merge(("bucket",), ("c_ref", "c_cur")),
+        (
+            table_dir,
+            _PSI_SCHEMA,
+            psi_bucket_counts,
+            _sum_merge(("bucket",), ("c_ref", "c_cur")),
+        ),
     )
 
 
@@ -1709,11 +1668,13 @@ def auc_scores_batch_fn(table_dir: str, commits_dir: str):
     from ..plans.events_queries import model_scores_by_score
 
     return versioned_merge_fn(
-        table_dir,
         commits_dir,
-        _AUC_SCHEMA,
-        model_scores_by_score,
-        _sum_merge(("score",), ("cnt", "pos")),
+        (
+            table_dir,
+            _AUC_SCHEMA,
+            model_scores_by_score,
+            _sum_merge(("score",), ("cnt", "pos")),
+        ),
     )
 
 
@@ -1727,18 +1688,14 @@ def run_bounded_model_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle."""
     from ..plans.events_queries import auc_from_by_score
 
-    out = tempfile.mkdtemp(prefix="auc_stream_out_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    table_dir = os.path.join(out, "score_counts")
-    commits = os.path.join(out, "_commits")
-    stream = bounded_events_stream(
-        spark, sf_dir, columns=("user_id", "ts", "event_type", "value")
-    )
-    _drain(
-        stream.writeStream.foreachBatch(auc_scores_batch_fn(table_dir, commits))
-    )
     return auc_from_by_score(
-        _read_committed(spark, table_dir, commits, _AUC_SCHEMA)
+        _drain_sink(
+            bounded_events_stream(
+                spark, sf_dir, columns=("user_id", "ts", "event_type", "value")
+            ),
+            auc_scores_batch_fn,
+            lambda t, c: _read_committed(spark, t, c, _AUC_SCHEMA),
+        )
     )
 
 
@@ -1752,16 +1709,13 @@ def run_bounded_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     IDENTICAL oracle."""
     from ..plans.analytics_queries import psi_from_counts
 
-    out = tempfile.mkdtemp(prefix="psi_stream_out_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    table_dir = os.path.join(out, "bucket_counts")
-    commits = os.path.join(out, "_commits")
-    stream = bounded_events_stream(spark, sf_dir)
-    _drain(
-        stream.writeStream.foreachBatch(psi_counts_batch_fn(table_dir, commits))
-    )
     return psi_from_counts(
-        spark, _read_committed(spark, table_dir, commits, _PSI_SCHEMA)
+        spark,
+        _drain_sink(
+            bounded_events_stream(spark, sf_dir),
+            psi_counts_batch_fn,
+            lambda t, c: _read_committed(spark, t, c, _PSI_SCHEMA),
+        ),
     )
 
 
@@ -1803,22 +1757,21 @@ def mg_rollup_batch_fn(table_dir: str, commits_dir: str, k: int):
         )
 
     return versioned_merge_fn(
-        table_dir,
         commits_dir,
-        _MG_SCHEMA,
-        lambda b: b.groupBy("user_id").agg(F.count("*").cast("long").alias("cnt")),
-        merge,
+        (
+            table_dir,
+            _MG_SCHEMA,
+            lambda b: b.groupBy("user_id").agg(F.count("*").cast("long").alias("cnt")),
+            merge,
+        ),
     )
 
 
 def run_bounded_mg_heavy_hitters(
-    spark: SparkSession,
-    sf_dir: str,
-    inv_support: int = 200,
-    n_files: int = 4,
+    spark: SparkSession, sf_dir: str, inv_support: int
 ) -> DataFrame:
     """Drive :func:`mg_rollup_batch_fn` over a bounded replay of
-    ``events`` (one file per micro-batch), then EXACT-verify the final
+    ``events`` (:func:`_four_file_stream`), then EXACT-verify the final
     committed candidate summary with one batch pass — the streaming
     dual of ``agg_heavy_hitters_two_pass``, sharing its oracle shape:
     the output is the exact heavy-hitter set at support 1/inv_support,
@@ -1827,43 +1780,22 @@ def run_bounded_mg_heavy_hitters(
     folds into a ≤ inv_support-row summary once; the verify pass
     shuffles candidate keys only."""
     from ..schemas import load_table
-    from ..schemas import load_table
 
     ev = load_table(spark, sf_dir, "events").select("user_id")
-    stage = tempfile.mkdtemp(prefix="mg_stream_in_")
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    out = tempfile.mkdtemp(prefix="mg_stream_out_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    try:
-        ev.repartition(n_files).write.mode("overwrite").parquet(f"{stage}/in")
-        table_dir = f"{out}/mg_summary"
-        commits = f"{out}/_commits"
-        stream = (
-            spark.readStream.schema("user_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{stage}/in")
-        )
-        _drain(
-            stream.writeStream.foreachBatch(
-                mg_rollup_batch_fn(table_dir, commits, k=inv_support)
-            )
-        )
-        candidates = _read_committed(
-            spark, table_dir, commits, _MG_SCHEMA
-        ).select("user_id")
-        total = ev.agg(F.count("*").alias("total"))
-        res = (
-            ev.join(F.broadcast(candidates), "user_id")
-            .groupBy("user_id")
-            .agg(F.count("*").cast("long").alias("exact_count"))
-            .crossJoin(F.broadcast(total))
-            .filter(F.col("exact_count") * inv_support > F.col("total"))
-            .select("user_id", "exact_count")
-        )
-        res.write.mode("overwrite").parquet(f"{out}/hitters")
-        return spark.read.parquet(f"{out}/hitters")
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    candidates = _drain_sink(
+        _four_file_stream(ev),
+        lambda t, c: mg_rollup_batch_fn(t, c, k=inv_support),
+        lambda t, c: _read_committed(spark, t, c, _MG_SCHEMA),
+    ).select("user_id")
+    total = ev.agg(F.count("*").alias("total"))
+    return (
+        ev.join(F.broadcast(candidates), "user_id")
+        .groupBy("user_id")
+        .agg(F.count("*").cast("long").alias("exact_count"))
+        .crossJoin(F.broadcast(total))
+        .filter(F.col("exact_count") * inv_support > F.col("total"))
+        .select("user_id", "exact_count")
+    )
 
 
 def run_bounded_python_source_stream(
@@ -1951,15 +1883,8 @@ def bounded_documents_stream(
     text-corpus ingress dual of :func:`bounded_events_stream`."""
     from ..schemas import load_table
 
-    stage = tempfile.mkdtemp(prefix="docs_stream_")
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    d = load_table(spark, sf_dir, "documents").select(*columns)
-    d.repartition(8).write.mode("overwrite").parquet(stage)
-    return (
-        spark.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(stage)
-    )
+    docs = load_table(spark, sf_dir, "documents").select(*columns)
+    return _file_stream(docs.repartition(8), 2)
 
 
 def nb_counts_batch_fn(table_dir: str, commits_dir: str):
@@ -1976,30 +1901,24 @@ def nb_counts_batch_fn(table_dir: str, commits_dir: str):
     corpus-sized."""
     from ..plans.text_queries import nb_doc_counts, nb_split_docs, nb_train_counts
 
-    os.makedirs(commits_dir, exist_ok=True)
-    tables = {
-        "wl": (nb_train_counts, _sum_merge(("lang", "tok"), ("cnt",))),
-        "dl": (nb_doc_counts, _sum_merge(("lang",), ("d_l",))),
-    }
+    def on_train(counts):
+        return lambda b: counts(nb_split_docs(b).where(~F.col("is_test")))
 
-    def fn(batch: DataFrame, batch_id: int) -> None:
-        hw = _high_watermark(commits_dir)
-        if hw is not None and batch_id <= hw:
-            return  # replayed, fully applied
-        train = nb_split_docs(batch).where(~F.col("is_test"))
-        for name, (counts, merge) in tables.items():
-            prev = _read_committed(
-                batch.sparkSession,
-                f"{table_dir}/{name}",
-                commits_dir,
-                _NB_SCHEMAS[name],
-            )
-            merge(prev, counts(train)).write.mode("overwrite").parquet(
-                f"{table_dir}/{name}/v={batch_id}"
-            )
-        _commit(commits_dir, batch_id, [f"{table_dir}/{t}" for t in tables])
-
-    return fn
+    return versioned_merge_fn(
+        commits_dir,
+        (
+            f"{table_dir}/wl",
+            _NB_SCHEMAS["wl"],
+            on_train(nb_train_counts),
+            _sum_merge(("lang", "tok"), ("cnt",)),
+        ),
+        (
+            f"{table_dir}/dl",
+            _NB_SCHEMAS["dl"],
+            on_train(nb_doc_counts),
+            _sum_merge(("lang",), ("d_l",)),
+        ),
+    )
 
 
 def run_bounded_nb_training(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2014,17 +1933,13 @@ def run_bounded_nb_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.text_queries import nb_confusion_from_counts, nb_split_docs
     from ..schemas import load_table
 
-    out = tempfile.mkdtemp(prefix="nb_stream_out_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    table_dir = os.path.join(out, "model")
-    commits = os.path.join(out, "_commits")
-    stream = bounded_documents_stream(spark, sf_dir)
-    _drain(
-        stream.writeStream.foreachBatch(nb_counts_batch_fn(table_dir, commits))
-    )
-    wl, dl = (
-        _read_committed(spark, f"{table_dir}/{t}", commits, _NB_SCHEMAS[t])
-        for t in ("wl", "dl")
+    wl, dl = _drain_sink(
+        bounded_documents_stream(spark, sf_dir),
+        nb_counts_batch_fn,
+        lambda t, c: [
+            _read_committed(spark, f"{t}/{n}", c, schema)
+            for n, schema in _NB_SCHEMAS.items()
+        ],
     )
     test = nb_split_docs(load_table(spark, sf_dir, "documents")).where(
         F.col("is_test")
@@ -2045,25 +1960,32 @@ def chunk_ledger_batch_fn(table_dir: str, commits_dir: str):
     not double-count a chunk). This is the production "ingest only
     what's new" shape: a chunk already in the ledger is a known
     duplicate the moment it arrives."""
+    return versioned_merge_fn(
+        commits_dir,
+        (table_dir, _CHUNK_LEDGER_SCHEMA, _chunk_ledger_delta, _ledger_union),
+    )
+
+
+def _chunk_ledger_delta(docs: DataFrame) -> DataFrame:
+    """A document batch's chunk-ledger contribution: one row per
+    content-defined chunk hash (plans.text_queries.
+    content_defined_chunks) with its MIN doc_id and occurrence COUNT."""
     from ..plans.text_queries import content_defined_chunks
 
-    return versioned_merge_fn(
-        table_dir,
-        commits_dir,
-        _CHUNK_LEDGER_SCHEMA,
-        lambda b: content_defined_chunks(b)
+    return (
+        content_defined_chunks(docs)
         .groupBy("chunk_hash")
         .agg(
             F.min("doc_id").cast("long").alias("first_doc_id"),
             F.count("*").cast("long").alias("n_occurrences"),
-        ),
-        lambda prev, led: prev.unionByName(led)
-        .groupBy("chunk_hash")
-        .agg(
-            F.min("first_doc_id").cast("long").alias("first_doc_id"),
-            F.sum("n_occurrences").cast("long").alias("n_occurrences"),
-        ),
+        )
     )
+
+
+def _ledger_union(prev: DataFrame, delta: DataFrame) -> DataFrame:
+    """``merge`` of every chunk-ledger sink: :func:`ledger_merge` over
+    the committed rows plus the delta."""
+    return ledger_merge(prev.unionByName(delta))
 
 
 def run_bounded_chunk_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2071,17 +1993,11 @@ def run_bounded_chunk_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream to completion and return the FINAL committed chunk ledger —
     gated against the oracle that derives the same (chunk_hash,
     first_doc_id, n_occurrences) table from the whole corpus at once."""
-    out = tempfile.mkdtemp(prefix="chunk_ledger_out_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    table_dir = os.path.join(out, "ledger")
-    commits = os.path.join(out, "_commits")
-    stream = bounded_documents_stream(
-        spark, sf_dir, columns=("doc_id", "text")
+    return _drain_sink(
+        bounded_documents_stream(spark, sf_dir, columns=("doc_id", "text")),
+        chunk_ledger_batch_fn,
+        lambda t, c: _read_committed(spark, t, c, _CHUNK_LEDGER_SCHEMA),
     )
-    _drain(
-        stream.writeStream.foreachBatch(chunk_ledger_batch_fn(table_dir, commits))
-    )
-    return _read_committed(spark, table_dir, commits, _CHUNK_LEDGER_SCHEMA)
 
 
 #: chunk-hash bucket count for the bucketed ledger. The ledger is the
@@ -2116,42 +2032,18 @@ def chunk_ledger_bucketed_batch_fn(table):
     (tests/test_snapshot.py pins this on the filesystem). The merge per
     bucket is the same order-free MIN/SUM as the full-rewrite fixture,
     so the drained ledger EQUALS the batch derivation — both gate
-    against the identical oracle. Exactly-once: batch id = snapshot id,
-    atomic manifest rename = commit point (see
-    sources.snapshot.SnapshotTable.commit)."""
+    against the identical oracle. Exactly-once by
+    :func:`snapshot_merge_fn`."""
+    return snapshot_merge_fn(table, _bucketed_ledger_delta(table), _ledger_union)
+
+
+def _bucketed_ledger_delta(table):
+    """``delta`` of the bucketed and LSM ledgers: the chunk-ledger
+    delta with each chunk's ``bucket`` in ``table``."""
     from ..sources.snapshot import bucket_of
 
-    def fn(batch: DataFrame, batch_id: int) -> None:
-        from ..plans.text_queries import content_defined_chunks
-
-        hw = table.batch_high_watermark()
-        if hw is not None and batch_id <= hw:
-            return  # replayed, fully applied
-        spark = batch.sparkSession
-        delta = (
-            content_defined_chunks(batch)
-            .groupBy("chunk_hash")
-            .agg(
-                F.min("doc_id").cast("long").alias("first_doc_id"),
-                F.count("*").cast("long").alias("n_occurrences"),
-            )
-            .withColumn("bucket", bucket_of("chunk_hash", table.n_buckets))
-            .localCheckpoint()  # consumed twice: touched buckets + merge
-        )
-        # touched bucket ids: bounded driver state (≤ n_buckets rows)
-        touched = [
-            r[0] for r in delta.select("bucket").distinct().collect()
-        ]
-        prev = table.read(spark, buckets=touched)
-        merged = ledger_merge(prev.unionByName(delta.select(*prev.columns)))
-        # snapshot ids are allocated off the chain head while the APPLIED
-        # batch id travels separately as batch_hw — so maintenance
-        # commits can take snapshot ids without desynchronizing the
-        # replay guard (which keys on batch_hw, never on latest()).
-        sid = 0 if table.latest() is None else table.latest() + 1
-        table.commit(merged, sid, batch_hw=batch_id)
-
-    return fn
+    bucket = bucket_of("chunk_hash", table.n_buckets)
+    return lambda b: _chunk_ledger_delta(b).withColumn("bucket", bucket)
 
 
 def chunk_ledger_lsm_batch_fn(table):
@@ -2167,41 +2059,29 @@ def chunk_ledger_lsm_batch_fn(table):
     read-side fold of base+deltas equals the whole-corpus derivation;
     read amplification is bounded by merge-compaction cadence (the
     runner compacts once at drain; production compacts periodically).
-    Exactly-once: the APPLIED batch id travels in the manifest as
-    ``batch_hw`` — SEPARATE from the snapshot id, so the PERIODIC
-    MID-STREAM merge-compaction this fn runs (size-tiered:
-    SnapshotTable.compact_buckets folds only buckets whose delta-file
-    count crossed ``CHUNK_LEDGER_COMPACT_MAX_FILES``, carrying
-    batch_hw forward) can claim snapshot ids between live batches
-    without the replay guard silently dropping the next batch. A
-    replayed batch id ≤ batch_hw is a no-op."""
-    from ..sources.snapshot import bucket_of
+    Exactly-once by :func:`snapshot_merge_fn`: the applied batch id
+    travels in the manifest as ``batch_hw``, separate from the snapshot
+    id, so the PERIODIC MID-STREAM merge-compaction this fn runs
+    (size-tiered: SnapshotTable.compact_buckets folds only buckets
+    whose delta-file count crossed ``CHUNK_LEDGER_COMPACT_MAX_FILES``,
+    carrying batch_hw forward) can claim snapshot ids between live
+    batches without the replay guard silently dropping the next
+    batch. A replayed batch appends nothing; its compaction pass finds
+    no bucket over the tier unless a crash cut the previous pass short,
+    which it then completes."""
+    delta = _bucketed_ledger_delta(table)
+    # one delta FILE per bucket per batch (not one per shuffle
+    # partition): keeps the size-tier honest — file count grows with
+    # BATCHES, not with parallelism
+    append = snapshot_merge_fn(
+        table, lambda b: delta(b).repartition("bucket"), None
+    )
 
     def fn(batch: DataFrame, batch_id: int) -> None:
-        from ..plans.text_queries import content_defined_chunks
-
-        hw = table.batch_high_watermark()
-        if hw is not None and batch_id <= hw:
-            return  # replayed, fully applied
-        delta = (
-            content_defined_chunks(batch)
-            .groupBy("chunk_hash")
-            .agg(
-                F.min("doc_id").cast("long").alias("first_doc_id"),
-                F.count("*").cast("long").alias("n_occurrences"),
-            )
-            .withColumn("bucket", bucket_of("chunk_hash", table.n_buckets))
-            # one delta FILE per bucket per batch (not one per shuffle
-            # partition): keeps the size-tier honest — file count grows
-            # with BATCHES, not with parallelism
-            .repartition("bucket")
-        )
-        sid = 0 if table.latest() is None else table.latest() + 1
-        table.commit_append(delta, sid, batch_hw=batch_id)
+        append(batch, batch_id)
         # mid-stream size-tiered merge-compaction: bounds read
         # amplification to O(max_files) deltas per bucket while the
-        # stream runs — the production cadence the docstrings
-        # prescribe, now that batch_hw decouples it from the guard
+        # stream runs
         table.compact_buckets(
             batch.sparkSession,
             table.latest() + 1,
@@ -2213,11 +2093,14 @@ def chunk_ledger_lsm_batch_fn(table):
 
 
 def ledger_merge(raw: DataFrame) -> DataFrame:
-    """The ledger's read-side fold: MIN/SUM over base+delta partials —
-    associative and order-free, so any delta split yields the same
-    merged ledger. Used by the LSM reader and by its merge-compaction
-    (which commits this fold back as the new base)."""
-    return raw.groupBy("bucket", "chunk_hash").agg(
+    """The ledger's fold: MIN first_doc_id / SUM n_occurrences per
+    chunk hash (and per ``bucket`` when the rows carry one) over
+    committed rows and deltas — associative and order-free, so any
+    delta split yields the same merged ledger. The merge of every
+    ledger sink (:func:`_ledger_union`), the LSM reader, and its
+    merge-compaction (which commits this fold back as the new base)."""
+    keys = [c for c in raw.columns if c in ("bucket", "chunk_hash")]
+    return raw.groupBy(*keys).agg(
         F.min("first_doc_id").cast("long").alias("first_doc_id"),
         F.sum("n_occurrences").cast("long").alias("n_occurrences"),
     )
@@ -2236,18 +2119,13 @@ def run_bounded_chunk_ledger_lsm(
     oracle as both twins."""
     from ..sources.snapshot import SnapshotTable
 
-    out = tempfile.mkdtemp(prefix="chunk_ledger_lsm_out_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    table = SnapshotTable(
-        os.path.join(out, "ledger"),
-        _CHUNK_LEDGER_BUCKETED_SCHEMA,
-        CHUNK_LEDGER_N_BUCKETS,
+    return _drain_sink(
+        bounded_documents_stream(spark, sf_dir, columns=("doc_id", "text")),
+        lambda t, _: chunk_ledger_lsm_batch_fn(
+            SnapshotTable(t, _CHUNK_LEDGER_BUCKETED_SCHEMA, CHUNK_LEDGER_N_BUCKETS)
+        ),
+        lambda t, _: finalize_chunk_ledger_lsm(spark, SnapshotTable.open(t)),
     )
-    stream = bounded_documents_stream(
-        spark, sf_dir, columns=("doc_id", "text")
-    )
-    _drain(stream.writeStream.foreachBatch(chunk_ledger_lsm_batch_fn(table)))
-    return finalize_chunk_ledger_lsm(spark, table)
 
 
 def finalize_chunk_ledger_lsm(spark: SparkSession, table) -> DataFrame:
@@ -2259,7 +2137,6 @@ def finalize_chunk_ledger_lsm(spark: SparkSession, table) -> DataFrame:
     GC the folded deltas, and return the logical ledger. The read-side
     MIN/SUM fold is idempotent on folded rows, so applying it here is
     correct whatever the compaction state."""
-    hw = table.latest()
     hw = table.latest()
     if hw is None:  # zero micro-batches: empty corpus, empty ledger
         return spark.createDataFrame([], _CHUNK_LEDGER_SCHEMA)
@@ -2434,15 +2311,10 @@ def run_bounded_chunk_ledger_bucketed(
     economics change nothing about the answer."""
     from ..sources.snapshot import SnapshotTable
 
-    out = tempfile.mkdtemp(prefix="chunk_ledger_bucketed_out_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    table = SnapshotTable(
-        os.path.join(out, "ledger"),
-        _CHUNK_LEDGER_BUCKETED_SCHEMA,
-        CHUNK_LEDGER_N_BUCKETS,
+    return _drain_sink(
+        bounded_documents_stream(spark, sf_dir, columns=("doc_id", "text")),
+        lambda t, _: chunk_ledger_bucketed_batch_fn(
+            SnapshotTable(t, _CHUNK_LEDGER_BUCKETED_SCHEMA, CHUNK_LEDGER_N_BUCKETS)
+        ),
+        lambda t, _: SnapshotTable.open(t).read(spark).drop("bucket"),
     )
-    stream = bounded_documents_stream(
-        spark, sf_dir, columns=("doc_id", "text")
-    )
-    _drain(stream.writeStream.foreachBatch(chunk_ledger_bucketed_batch_fn(table)))
-    return table.read(spark).drop("bucket")

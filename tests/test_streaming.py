@@ -1063,12 +1063,14 @@ def test_auc_scores_replay_is_exactly_once(spark, tmp_path):
 def _crash_sink(spark, sink, root):
     """(make_fn, read_state, commits_dir) for one sink of the commit
     protocol under ``root``: the five-table ingest (retaining one
-    version, so the GC after commit deletes something at batch 1) or
-    the CMS versioned sink, whose state is bit-reproducible."""
+    version, so the GC after commit deletes something at batch 1), the
+    CMS versioned sink, whose state is bit-reproducible, or the
+    Naive-Bayes sink, which commits two tables under one marker."""
     from cassaforte_meter_transmission_gen_spark.operators.ingest import TABLES
     from cassaforte_meter_transmission_gen_spark.streaming.pipeline import (
         _read_committed,
         cms_rollup_batch_fn,
+        nb_counts_batch_fn,
         read_stream_table,
         streaming_ingest_batch_fn,
     )
@@ -1089,6 +1091,26 @@ def _crash_sink(spark, sink, root):
                 )
                 for t in TABLES
             },
+            commits,
+        )
+    if sink == "nb":
+        model = f"{root}/model"
+        return (
+            lambda: nb_counts_batch_fn(model, commits),
+            lambda: [
+                sorted(
+                    map(
+                        tuple,
+                        _read_committed(
+                            spark, f"{model}/{t}", commits, schema
+                        ).collect(),
+                    )
+                )
+                for t, schema in (
+                    ("wl", "lang string, tok string, cnt bigint"),
+                    ("dl", "lang string, d_l bigint"),
+                )
+            ],
             commits,
         )
     table = f"{root}/day_grids"
@@ -1117,6 +1139,15 @@ def _crash_batches(spark, sink):
             transmissions(spark, num_meters=2, seconds=60, t0_epoch=T0_EPOCH + 60 * i)
             for i in range(2)
         ]
+    if sink == "nb":
+        texts = ["alpha beta", "beta gamma gamma", "alpha delta", "gamma"]
+        return [
+            spark.createDataFrame(
+                [(d, texts[d % 4], ("aa", "bb")[d % 2]) for d in ids],
+                "doc_id long, text string, lang string",
+            )
+            for ids in (range(0, 10), range(10, 20))
+        ]
     return [
         spark.createDataFrame(
             [("2024-01-01 00:00:00", u) for u in users], "ts string, user_id long"
@@ -1135,6 +1166,9 @@ _CRASH_STEPS = [
     ("ingest", "rmtree", "gc"),
     ("cms", "parquet", "day_grids/v=1"),
     ("cms", "replace", "marker"),
+    ("nb", "parquet", "model/wl/v=1"),
+    ("nb", "parquet", "model/dl/v=1"),
+    ("nb", "replace", "marker"),
 ]
 
 
