@@ -355,8 +355,8 @@ def main() -> None:
     # reference doesn't have. Bounded file stream driven to completion.
     # Measured across micro-batch SIZES (maxFilesPerTrigger over the
     # 32-file stage): per-batch fixed costs (trigger planning, five
-    # writes, three version merges, the marker) are constant per batch,
-    # so samples/s should rise with batch size — the curve quantifies
+    # writes, the marker) are constant per batch, so samples/s should
+    # rise with batch size — the curve quantifies
     # how much of the default-size figure is fixed cost. The default
     # size (8 → 4 micro-batches) stays the headline
     # `streaming_ingest_sec` for cross-round comparability.

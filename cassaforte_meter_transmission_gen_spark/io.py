@@ -82,8 +82,9 @@ class CassandraSink(TableSink):
     Cassandra upserts by primary key, which is exactly the reference's
     INSERT semantics for raw/second tables; COUNTER-table increments
     are NOT expressible through the DataFrame writer, so rollup tables
-    must be maintained by the engine's counter_merge (as the parquet
-    path does) and written as plain tables."""
+    must be maintained by the engine (operators.rollups.counter_merge,
+    or the parquet streaming path's summed per-batch increments) and
+    written as plain tables."""
 
     def __init__(self, spark: SparkSession, keyspace: str = "disagg") -> None:
         self.keyspace = keyspace

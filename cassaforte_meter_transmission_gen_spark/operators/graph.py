@@ -1,5 +1,6 @@
 """Distributed graph primitives: integer-exact weighted PageRank with
-dangling-mass redistribution, and degree-oriented triangle counting
+dangling-mass redistribution, integer-exact HITS, and degree-oriented
+triangle counting
 (SURVEY §2.10 graph family; the connected-components labeller lives in
 operators/dedup.py next to its dedup use).
 
@@ -94,6 +95,63 @@ def integer_pagerank(edges: DataFrame, n_iters: int = 3) -> DataFrame:
             )
         )
     return r
+
+
+#: HITS power iterations, each one authority and one hub half-step
+HITS_ITERS = 3
+
+
+def _hits_half_step(
+    edges: DataFrame, state: DataFrame, from_col: str, to_col: str
+) -> DataFrame:
+    """Sparse ``(n, v)`` scores of the nodes with an in-edge along
+    ``from_col → to_col``: weighted inflow ``Σ v·w`` in DECIMAL(38,0),
+    divided by ``greatest(1, total DIV PPB)``. The total is a window
+    over the inflow rows, so the inflow has one consumer and the plan
+    stays linear in the step count."""
+    return (
+        edges.join(state.withColumnRenamed("n", from_col), from_col)
+        .groupBy(F.col(to_col).alias("n"))
+        .agg(F.sum(F.expr("CAST(v AS DECIMAL(38,0)) * w")).alias("raw"))
+        .selectExpr(
+            "n",
+            "CAST(raw DIV greatest(CAST(1 AS BIGINT), "
+            f"CAST(SUM(raw) OVER () DIV {PPB} AS BIGINT)) AS BIGINT) AS v",
+        )
+    )
+
+
+def integer_hits(edges: DataFrame) -> DataFrame:
+    """HITS hubs and authorities (Kleinberg) over ``edges(src, dst, w)``
+    in ppb int64s: hubs start at PPB, then ``HITS_ITERS`` rounds of an
+    authority half-step (inflow along src → dst) and a hub half-step
+    (inflow along dst → src), each re-normalized to ~PPB L1 shares with
+    one truncating integer division — bit-reproducible, like
+    :func:`integer_pagerank`.
+
+    Returns ``(n, hub, auth)`` for every node. The half-steps carry
+    sparse states (a node with no inflow on a side is absent, i.e. 0)
+    and one lazy plan; the result is densified once with
+    ``COALESCE(…, 0)``. ``edges`` is referenced ``2 + 2·HITS_ITERS``
+    times — callers should pin it."""
+    nodes = (
+        edges.select(F.col("src").alias("n"))
+        .union(edges.select(F.col("dst").alias("n")))
+        .distinct()
+    )
+    h = nodes.select("n", F.lit(PPB).cast("long").alias("v"))
+    for _ in range(HITS_ITERS):
+        a = _hits_half_step(edges, h, "src", "dst")
+        h = _hits_half_step(edges, a, "dst", "src")
+    return (
+        nodes.join(h.withColumnRenamed("v", "hub"), "n", "left")
+        .join(a.withColumnRenamed("v", "auth"), "n", "left")
+        .selectExpr(
+            "n",
+            "COALESCE(hub, CAST(0 AS BIGINT)) AS hub",
+            "COALESCE(auth, CAST(0 AS BIGINT)) AS auth",
+        )
+    )
 
 
 def orient_by_degree(edges: DataFrame) -> DataFrame:

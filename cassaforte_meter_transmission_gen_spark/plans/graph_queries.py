@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.graph import HITS_ITERS, integer_hits
 from ..schemas import load_table
 from .catalog import register
 
@@ -511,7 +512,7 @@ def _hits_step_sql(state: str, raw_name: str, out_name: str,
 def _hits_oracle() -> str:
     steps = []
     state = "h0"
-    for t in range(1, 4):
+    for t in range(1, HITS_ITERS + 1):
         steps.append(_hits_step_sql(state, f"rawa{t}", f"a{t}", "src", "dst"))
         steps.append(_hits_step_sql(f"a{t}", f"rawh{t}", f"h{t}", "dst", "src"))
         state = f"h{t}"
@@ -524,10 +525,10 @@ nodes AS MATERIALIZED (SELECT src AS n FROM edges UNION SELECT dst FROM edges),
 h0 AS (SELECT n, CAST(1000000000 AS BIGINT) AS v FROM nodes),
 {chain}
 SELECT nt.n_nationkey AS nationkey, nt.n_name,
-       h3.v AS hub_ppb, a3.v AS auth_ppb
+       h{HITS_ITERS}.v AS hub_ppb, a{HITS_ITERS}.v AS auth_ppb
 FROM nodes
-JOIN h3 ON nodes.n = h3.n
-JOIN a3 ON nodes.n = a3.n
+JOIN h{HITS_ITERS} ON nodes.n = h{HITS_ITERS}.n
+JOIN a{HITS_ITERS} ON nodes.n = a{HITS_ITERS}.n
 JOIN nation nt ON nodes.n = nt.n_nationkey
 """
 
@@ -551,63 +552,21 @@ def graph_hits_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     textbook L2 normalization (a sqrt over a parallel double sum) never
     could.
 
-    Scale: edges and nodes are dimension-sized and pinned once
-    (localCheckpoint); each half-step is one edges⋈state join + one
-    partial-agg groupBy + one broadcast one-row total — the same
-    per-iteration shape as PageRank's dangling-mass pass. Each
-    normalized state is pinned because two consumers read it (the next
-    half-step's join and the final report / total row) — the
-    AQE-no-reuse rule."""
+    Scale: the edge list is the one pinned frame (localCheckpoint, as
+    for PageRank); the six half-steps (operators.graph.integer_hits)
+    are one lazy plan over it — per half-step one edges⋈state join,
+    one partial-agg groupBy and a window total over the ≤ #nodes
+    inflow rows."""
     edges = _trade_edges(spark, sf_dir, None).localCheckpoint(eager=True)
-    nodes = (
-        edges.select(F.col("src").alias("n"))
-        .union(edges.select(F.col("dst").alias("n")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def half_step(state: DataFrame, from_col: str, to_col: str) -> DataFrame:
-        raw = (
-            edges.join(
-                state.select(F.col("n").alias("jn"), "v"),
-                edges[from_col] == F.col("jn"),
-            )
-            .groupBy(F.col(to_col).alias("n"))
-            .agg(F.sum(F.expr("CAST(v AS DECIMAL(38,0)) * w")).alias("raw"))
-            .localCheckpoint(eager=True)  # read by the total AND the join
-        )
-        tot = raw.agg(
-            F.coalesce(F.sum("raw"), F.lit(0).cast("decimal(38,0)")).alias("s")
-        )
-        return (
-            nodes.join(raw, "n", "left")
-            .crossJoin(F.broadcast(tot))
-            .selectExpr(
-                "n",
-                "CAST(COALESCE(raw, CAST(0 AS DECIMAL(38,0))) DIV "
-                "greatest(CAST(1 AS BIGINT), "
-                "CAST(s DIV 1000000000 AS BIGINT)) AS BIGINT) AS v",
-            )
-            .localCheckpoint(eager=True)
-        )
-
-    h = nodes.select("n", F.lit(1000000000).cast("long").alias("v"))
-    for _ in range(3):
-        a = half_step(h, "src", "dst")
-        h = half_step(a, "dst", "src")
     nt = _t(spark, sf_dir, "nation")
     return (
-        nodes.join(h.withColumnRenamed("v", "hub_ppb"), "n")
-        .join(a.withColumnRenamed("v", "auth_ppb"), "n")
-        .join(
-            F.broadcast(nt),
-            F.col("n") == F.col("n_nationkey"),
-        )
+        integer_hits(edges)
+        .join(F.broadcast(nt), F.col("n") == F.col("n_nationkey"))
         .select(
             F.col("n_nationkey").alias("nationkey"),
             "n_name",
-            "hub_ppb",
-            "auth_ppb",
+            F.col("hub").alias("hub_ppb"),
+            F.col("auth").alias("auth_ppb"),
         )
     )
 

@@ -86,12 +86,12 @@ def run_unbounded(
     27-35): same host ⇒ same range, different hosts ⇒ disjoint ranges —
     computed once, driver-side, never inside the plan.
 
-    Long-running hygiene: grain versions and commit markers retain the
-    newest ``retain_versions`` (the reader-consistency window — size it
-    above the longest expected reader, in trigger intervals), and every
-    ``compact_every`` commits the raw/second batch dirs fold into one
-    compacted segment — so metadata, marker count, and file count stay
-    bounded no matter how long the 1 Hz loop runs."""
+    Long-running hygiene: commit markers retain the newest
+    ``retain_versions`` (the reader-consistency window — size it above
+    the longest expected reader, in trigger intervals), and every
+    ``compact_every`` commits the batch dirs of all five tables fold
+    into one compacted segment per table — so metadata, marker count,
+    and file count stay bounded no matter how long the 1 Hz loop runs."""
     if start_said is None:
         start_said = host_hash(os.uname().nodename)
     paths = {t: os.path.join(out_dir, t) for t in TABLES}

@@ -39,17 +39,18 @@ table format, and each owns that format's replay guard:
   delta is appended, for the LSM ledger).
 
 Two sinks keep their own guard. :func:`streaming_ingest_batch_fn`
-writes append-only ``batch=`` dirs next to its versioned grains and
-overlaps the five table writes on driver threads, so it is not a
-(delta, merge) pair. :func:`snapshot_view_batch_fn` keys its guard on
-the applied source snapshot id, not on the micro-batch id.
+only appends: it reads no committed state, so it is not a (delta,
+merge) pair, and it overlaps its five table writes on driver threads.
+:func:`snapshot_view_batch_fn` keys its guard on the applied source
+snapshot id, not on the micro-batch id.
 
 - **Layout.** A sink owns its table dirs plus one ``commits_dir``. A
   versioned table holds one full copy of its state per applied batch,
-  ``<table>/v=<batch_id>/``. The five-table ingest's raw and second
-  tables instead append ``<table>/batch=<batch_id>/`` dirs, which
-  :func:`compact_stream_tables` folds into ``_compacted/upto=<U>``
-  segments.
+  ``<table>/v=<batch_id>/``. The five tables of the ingest sink are
+  append-only instead: each batch writes ``<table>/batch=<batch_id>/``
+  (for the minute/hour/day grains, that batch's increment — the
+  reference's COUNTER bump), and :func:`compact_stream_tables` folds
+  old dirs into ``_compacted/upto=<U>`` segments.
 - **Marker.** The commit point of batch ``b`` is the empty file
   ``<commits_dir>/<b>``, published by ``os.replace`` of ``<b>.tmp``
   (:func:`_commit`) only after every table of the batch is durable.
@@ -57,21 +58,23 @@ the applied source snapshot id, not on the micro-batch id.
   the marker is each batch's last step, so every id ≤ the newest
   marker (the high watermark, :func:`_high_watermark`) is committed. A
   batch with ``batch_id <= hw`` is a replay and is skipped. Any other
-  batch merges onto ``v=<hw>`` and OVERWRITES its own ``v=<batch_id>``
-  (or ``batch=<batch_id>``) dir, so a batch replayed after a crash
-  before its marker rebuilds from the same committed base: it can
-  never be applied twice (:func:`versioned_merge_fn`).
+  batch merges onto ``v=<hw>`` (or, append-only, reads nothing) and
+  OVERWRITES its own ``v=<batch_id>`` (or ``batch=<batch_id>``) dir, so
+  a batch replayed after a crash before its marker rebuilds the same
+  dir: it can never be applied twice (:func:`versioned_merge_fn`).
 - **Retention.** After each commit only the newest ``retain_versions``
-  (default 4) ``v=`` dirs and markers are kept. The newest marker
+  (default 4) ``v=`` dirs and markers are kept; the append-only ingest
+  sink has no ``v=`` dirs and prunes markers only. The newest marker
   alone carries the committed set, so pruning never widens a read. A
   reader that resolved version N keeps a valid directory for
   ``retain_versions - 1`` further commits (≈ that many trigger
   intervals) — size it above the longest expected read.
 - **Readers.** Only ``v=<hw>`` (:func:`_read_committed`) and, for the
-  raw/second tables, the newest segment plus the batch dirs in
-  (segment upto, hw] (:func:`read_stream_table`) may be read. Anything
-  newer is an uncommitted in-flight batch, so a crash mid-batch is
-  invisible to every reader.
+  five ingest tables, the newest segment plus the batch dirs in
+  (segment upto, hw] (:func:`read_stream_table`, which sums the grain
+  rows per (said, datetime)) may be read. Anything newer is an
+  uncommitted in-flight batch, so a crash mid-batch is invisible to
+  every reader.
 
 The ``run_bounded_*`` harnesses drive a sink over a staged, bounded
 stream to completion and read back the committed result: a
@@ -91,6 +94,8 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.ingest import TABLES
+from ..operators.rollups import CHAIN, rollup_from_second
 from ..operators.sketches import (
     KMV_K,
     QSK_K,
@@ -458,13 +463,14 @@ def cumulative_energy_stream(stream: DataFrame) -> DataFrame:
     )
 
 
-#: raw/second tables: per-batch append dirs (grains are versioned instead)
-BATCH_DIR_TABLES = ("meter_samples", "meter_samples_second")
+#: the minute/hour/day tables: a key's rows across batch dirs and
+#: compacted segments are COUNTER increments that add up
+GRAIN_TABLES = tuple(f"meter_samples_{g}" for g in CHAIN)
 
-#: rollup-grain table schema — pinned so the per-batch read of the
-#: previous committed version skips parquet schema inference (one less
-#: driver job per grain per micro-batch; fixed costs dominate streaming
-#: throughput at bench scale, see bench.py's batch-size curve)
+#: grain table schema — pinned so reads of grain batch dirs and
+#: segments skip parquet schema inference (fixed per-read driver work
+#: dominates streaming cost at bench scale) and an empty increment's
+#: dir reads as empty
 GRAIN_SCHEMA = "said int, datetime timestamp, joules long"
 
 
@@ -485,6 +491,28 @@ def _compacted_state(table_path: str) -> tuple[int, str | None]:
     return best_upto, best
 
 
+def _batch_dirs(table_path: str, lo: int, hi: int) -> list[str]:
+    """The ``batch=<id>`` dirs of a table with ``lo < id <= hi``."""
+    return [
+        os.path.join(table_path, d)
+        for d in sorted(os.listdir(table_path))
+        if d.startswith("batch=") and lo < int(d[6:]) <= hi
+    ]
+
+
+def _read_parts(spark: SparkSession, table: str, parts: list[str]) -> DataFrame:
+    """One ingest table over segment and batch dirs ``parts``: the rows
+    as written, or for a grain table their sum per (said, datetime)."""
+    if table not in GRAIN_TABLES:
+        return spark.read.parquet(*parts)
+    return (
+        spark.read.schema(GRAIN_SCHEMA)
+        .parquet(*parts)
+        .groupBy("said", "datetime")
+        .agg(F.sum("joules").alias("joules"))
+    )
+
+
 def streaming_ingest_batch_fn(
     paths: dict[str, str],
     commits_dir: str,
@@ -495,39 +523,35 @@ def streaming_ingest_batch_fn(
 ):
     """foreachBatch body for the five-table write fan-out (K1-K5,
     core.clj:100-153) maintained continuously: per micro-batch, write
-    the raw arrays and the per-second energy rows, then COUNTER-merge
-    each rollup grain (operators.rollups.counter_merge) into its table.
+    the raw arrays, the per-second energy rows and each rollup grain's
+    increment — the reference's COUNTER bumps, append-only.
 
     Delivery is EXACTLY-ONCE, strictly stronger than the reference's
     fire-and-forget (T5), by the module docstring's commit protocol:
-    raw + second rows land in ``<table>/batch=<id>/`` and each grain
-    as a new version ``<table>/v=<id>/`` = counter_merge(committed
-    version, this batch's increment); the marker lands only after all
-    five tables are durable, and grain versions and markers beyond the
-    newest ``retain_versions`` are pruned after it.
+    every table lands in ``<table>/batch=<id>/``; the marker lands only
+    after all five are durable, and markers beyond the newest
+    ``retain_versions`` are pruned after it. No committed state is
+    read, so the per-batch cost is O(batch), whatever the stream's
+    history; :func:`read_stream_table` sums the grain increments.
 
     ``crash_before_commit(batch_id) -> bool`` is a fault-injection seam
     for the restart tests: when it returns True the fn raises AFTER all
     five tables are written but BEFORE the marker lands — the worst
     crash point, which replay must make invisible.
 
-    ``compact_every=N`` folds old raw/second batch dirs into one
-    compacted segment every N commits (:func:`compact_stream_tables`) —
+    ``compact_every=N`` folds old batch dirs into one compacted segment
+    per table every N commits (:func:`compact_stream_tables`) —
     bounding small-file growth on the unbounded runner.
 
     Scale notes: the raw write is shuffle-free (narrow write of the
-    arriving partitions); each grain merge shuffles only (said, bucket)
-    keys of the increment plus the existing rollup table — tiny
-    relative to raw, and the rewrite cost is bounded by the rollup
-    table size, not the stream history. Each grain increment derives
-    directly from the just-written second table (sum is associative,
-    so second→hour ≡ second→minute→hour), so raw rows are folded
-    exactly once and the three merges are independent jobs."""
+    arriving partitions); each grain increment shuffles only the
+    batch's (said, bucket) keys. Each grain derives directly from the
+    just-written second table (sum is associative, so second→hour ≡
+    second→minute→hour), so raw rows are folded exactly once and the
+    three grain writes are independent jobs."""
     from ..functions.energy import joules_over_second
-    from ..operators.rollups import CHAIN, counter_merge, rollup_from_second
 
     os.makedirs(commits_dir, exist_ok=True)
-    grain_paths = {g: paths[f"meter_samples_{g}"] for g in CHAIN}
 
     def fn(batch: DataFrame, batch_id: int) -> None:
         hw = _high_watermark(commits_dir)
@@ -535,92 +559,59 @@ def streaming_ingest_batch_fn(
             return  # replayed, fully applied — exactly-once
         spark = batch.sparkSession
 
-        def _write_raw() -> None:
-            batch.write.mode("overwrite").parquet(
-                f"{paths['meter_samples']}/batch={batch_id}"
-            )
+        def _write(df: DataFrame, table: str) -> None:
+            df.write.mode("overwrite").parquet(f"{paths[table]}/batch={batch_id}")
 
+        # Derive the grain increments from the JUST-WRITTEN second
+        # table, not from the in-memory lineage: each grain write is its
+        # own Spark action, and the lineage re-executed the raw batch
+        # scan plus the 15k-element joules fold once PER GRAIN (4× the
+        # stream's dominant CPU per micro-batch — r14, guide §1.2
+        # "don't recompute what you already wrote"). The read-back is
+        # the tiny (said, datetime, joules) table; the rows are
+        # identical by construction (lossless write). joules is INT at
+        # the second grain (joules_over_second); the rollup sum widens
+        # it to long per GRAIN_SCHEMA.
         def _write_second() -> DataFrame:
-            second = batch.select(
-                "said",
-                "datetime",
-                joules_over_second(F.col("watts")).alias("joules"),
+            _write(
+                batch.select(
+                    "said",
+                    "datetime",
+                    joules_over_second(F.col("watts")).alias("joules"),
+                ),
+                "meter_samples_second",
             )
-            second.write.mode("overwrite").parquet(
-                f"{paths['meter_samples_second']}/batch={batch_id}"
-            )
-            # Derive the grain increments from the JUST-WRITTEN second
-            # table, not from the in-memory lineage: each grain write is
-            # its own Spark action, and the lineage re-executed the raw
-            # batch scan plus the 15k-element joules fold once PER GRAIN
-            # (4× the stream's dominant CPU per micro-batch — r14,
-            # guide §1.2 "don't recompute what you already wrote").
-            # The read-back is the tiny (said, datetime, joules) table;
-            # the rows are identical by construction (lossless write),
-            # and it is durable before the commit marker either way.
-            # joules is INT at the second grain (joules_over_second);
-            # the rollup sum widens it to long per GRAIN_SCHEMA
             return spark.read.schema(
                 "said int, datetime timestamp, joules int"
             ).parquet(f"{paths['meter_samples_second']}/batch={batch_id}")
 
-        def _merge_grain(
-            inc_second: DataFrame, prev: DataFrame | None, grain: str
-        ) -> None:
-            # each grain directly from the written second table — sum is
-            # associative, so second→hour equals second→minute→hour, and
-            # deriving the three grains independently makes them
-            # independent Spark jobs (guide §2.6) instead of a chained
-            # sequence of three driver-blocking actions per micro-batch
-            inc = rollup_from_second(inc_second, grain)
-            merged = inc if prev is None else counter_merge(prev, inc)
-            (
-                merged.sortWithinPartitions("said", "datetime")
-                .write.mode("overwrite")
-                .parquet(f"{grain_paths[grain]}/v={batch_id}")
+        def _write_grain(second: DataFrame, grain: str) -> None:
+            _write(
+                rollup_from_second(second, grain).sortWithinPartitions(
+                    "said", "datetime"
+                ),
+                f"meter_samples_{grain}",
             )
 
-        # The raw batch-dir write, the second write, and the three
-        # grain-version merges write disjoint tables — independent Spark
+        # The five writes target disjoint tables — independent Spark
         # jobs, submitted from driver threads (guide §2.6) so the small
-        # grain merges back-fill executors idled by the raw write's task
-        # tail instead of queueing behind each other as four sequential
-        # driver-blocking actions. Only the real data dependency is
-        # sequential: grain merges start after the second table (their
-        # input) is durable. The commit marker still lands only after
-        # ALL five tables are durable (the .result() joins below).
-        # Resolving each committed grain version (a file listing under
-        # v=<hw>) depends only on the high watermark, so it runs in the
-        # pool too, overlapping the second-table write (r15).
+        # grain writes back-fill executors idled by the raw write's task
+        # tail instead of queueing as sequential driver-blocking
+        # actions. Only the real data dependency is sequential: grain
+        # writes start after the second table (their input) is durable.
+        # The commit marker still lands only after ALL five tables are
+        # durable (the .result() joins below).
         with ThreadPoolExecutor(max_workers=4) as pool:
-            fr = pool.submit(_write_raw)
-            prev_futs = (
-                {
-                    g: pool.submit(
-                        _read_committed, spark, p, commits_dir, GRAIN_SCHEMA
-                    )
-                    for g, p in grain_paths.items()
-                }
-                if hw is not None
-                else {}
-            )
-            inc_second = _write_second()
-            for f in [
-                pool.submit(
-                    _merge_grain,
-                    inc_second,
-                    prev_futs[g].result() if g in prev_futs else None,
-                    g,
-                )
-                for g in CHAIN
-            ]:
+            futs = [pool.submit(_write, batch, "meter_samples")]
+            second = _write_second()
+            futs += [pool.submit(_write_grain, second, g) for g in CHAIN]
+            for f in futs:
                 f.result()
-            fr.result()
         if crash_before_commit is not None and crash_before_commit(batch_id):
             raise RuntimeError(
                 f"injected crash before commit of batch {batch_id}"
             )
-        _commit(commits_dir, batch_id, list(grain_paths.values()), retain_versions)
+        _commit(commits_dir, batch_id, [], retain_versions)
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
             compact_stream_tables(
                 spark, paths, commits_dir, keep_batches=compact_keep_batches
@@ -635,10 +626,12 @@ def compact_stream_tables(
     commits_dir: str,
     keep_batches: int = 8,
 ) -> None:
-    """Fold old raw/second ``batch=<id>`` dirs into one compacted
-    segment per table — the maintenance job that bounds metadata and
-    small-file growth on the unbounded 1 Hz runner (one dir per second
-    otherwise). Idempotent and crash-safe:
+    """Fold old ``batch=<id>`` dirs into one compacted segment per
+    table — the maintenance job that bounds metadata and small-file
+    growth on the unbounded 1 Hz runner (one dir per second otherwise).
+    A grain segment holds the SUM per (said, datetime) of what it
+    folds, as :func:`read_stream_table` would read it. Idempotent and
+    crash-safe:
 
     - the new segment ``_compacted/upto=<U>`` (U = high-watermark −
       ``keep_batches``; recent dirs stay out for reader-race safety) is
@@ -647,8 +640,8 @@ def compact_stream_tables(
       leaves the previous segment authoritative;
     - batch dirs are DELETED only up to the *previous* segment's upto,
       so a reader that resolved the previous segment keeps every dir it
-      may touch for one full compaction cycle (same bounded-race window
-      as grain-version retention);
+      may touch for one full compaction cycle (the same bounded-race
+      window as marker retention);
     - the previous segment itself is kept (current + previous), older
       ones removed.
 
@@ -662,17 +655,12 @@ def compact_stream_tables(
     if hw is None:
         return
     new_upto = hw - keep_batches
-    for table in BATCH_DIR_TABLES:
+    for table in TABLES:
         path = paths[table]
         prev_upto, prev_dir = _compacted_state(path)
-        fold = [
-            d
-            for d in os.listdir(path)
-            if d.startswith("batch=") and prev_upto < int(d[6:]) <= new_upto
-        ]
-        if not fold or new_upto <= prev_upto:
+        parts = _batch_dirs(path, prev_upto, new_upto)
+        if not parts:
             continue
-        parts = [os.path.join(path, d) for d in sorted(fold)]
         if prev_dir is not None:
             parts.append(prev_dir)
         root = os.path.join(path, "_compacted")
@@ -689,13 +677,14 @@ def compact_stream_tables(
         final = os.path.join(root, f"upto={new_upto}")
         # coalesce to a handful of files: the segment is bounded by the
         # compaction period, not stream history, so small counts hold
-        spark.read.parquet(*parts).coalesce(4).write.mode("overwrite").parquet(tmp)
+        _read_parts(spark, table, parts).coalesce(4).write.mode(
+            "overwrite"
+        ).parquet(tmp)
         shutil.rmtree(final, ignore_errors=True)
         os.replace(tmp, final)  # publish point
         # delete only what BOTH retained segments cover
-        for d in os.listdir(path):
-            if d.startswith("batch=") and int(d[6:]) <= prev_upto:
-                shutil.rmtree(os.path.join(path, d), ignore_errors=True)
+        for d in _batch_dirs(path, -1, prev_upto):
+            shutil.rmtree(d, ignore_errors=True)
         for d in os.listdir(root):
             if d.startswith("upto=") and int(d[5:]) not in (new_upto, prev_upto):
                 shutil.rmtree(os.path.join(root, d), ignore_errors=True)
@@ -704,29 +693,21 @@ def compact_stream_tables(
 def read_stream_table(
     spark: SparkSession, paths: dict[str, str], table: str, commits_dir: str
 ) -> DataFrame:
-    """Read one table maintained by :func:`streaming_ingest_batch_fn`,
-    resolving the exactly-once layout for EVERY table: raw/second
-    tables are the newest compacted segment (if any) plus the batch
-    directories in (segment upto, high-watermark] — an uncommitted or
-    partially-written in-flight ``batch=`` dir is never touched, so a
-    crash mid-batch is invisible to readers here exactly as it is for
-    grains; grain tables resolve to the latest COMMITTED version."""
+    """Read one table maintained by :func:`streaming_ingest_batch_fn`:
+    the newest compacted segment (if any) plus the batch directories in
+    (segment upto, high-watermark], the grain tables summed per (said,
+    datetime). An uncommitted or partially-written in-flight ``batch=``
+    dir is never touched, so a crash mid-batch is invisible here."""
 
     path = paths[table]
     hw = _high_watermark(commits_dir)
     if hw is None:
         raise FileNotFoundError(f"no committed version of {table} yet")
-    if table in BATCH_DIR_TABLES:
-        upto, seg = _compacted_state(path)
-        parts = [
-            os.path.join(path, d)
-            for d in sorted(os.listdir(path))
-            if d.startswith("batch=") and upto < int(d[6:]) <= hw
-        ]
-        if seg is not None:
-            parts.append(seg)
-        return spark.read.parquet(*parts)
-    return spark.read.parquet(f"{path}/v={hw}")
+    upto, seg = _compacted_state(path)
+    parts = _batch_dirs(path, upto, hw)
+    if seg is not None:
+        parts.append(seg)
+    return _read_parts(spark, table, parts)
 
 
 def run_bounded_streaming_ingest(
@@ -745,7 +726,7 @@ def run_bounded_streaming_ingest(
 
     ``max_files_per_trigger`` sets the micro-batch size — the
     throughput lever: per-batch fixed costs (trigger planning, five
-    table writes, three version merges, the commit marker) are constant
+    table writes, the commit marker) are constant
     per batch, so samples/s scales with rows-per-batch until the batch
     no longer fits the cluster. bench.py measures this curve.
     ``stage_files`` stages the input as that many same-shaped files
@@ -756,7 +737,6 @@ def run_bounded_streaming_ingest(
     already holds a committed write (``_SUCCESS``), so bench.py's
     trigger-size sweep pays the big-stream generation once, not once
     per curve point (the caller deletes it)."""
-    from ..operators.ingest import TABLES
     from ..schemas import METER_SAMPLES
     from ..sources.meter_generator import transmissions
 
@@ -1030,8 +1010,8 @@ def sketch_rollup_batch_fn(table_dir: str, commits_dir: str):
     """foreachBatch body maintaining a SKETCH rollup table: per
     micro-batch, the day-grain HLL sketches of the arriving events are
     ``hll_union``-merged with the last COMMITTED version into a new
-    version of the day-sketch table — the counter-merge protocol of
-    :func:`streaming_ingest_batch_fn` applied to mergeable Datasketches
+    version of the day-sketch table — COUNTER maintenance
+    (operators.rollups.counter_merge) applied to mergeable Datasketches
     state instead of additive counters, maintaining a metric plain
     counters cannot (distinct users). Exactly-once by the module's
     commit protocol (:func:`versioned_merge_fn`)."""
@@ -1303,8 +1283,8 @@ def cms_rollup_batch_fn(table_dir: str, commits_dir: str):
     """foreachBatch body maintaining a COUNT-MIN-SKETCH rollup table:
     per micro-batch, the day-grain CMS grids of the arriving events
     (operators.sketches.cms_build) merge cell-wise with the last
-    COMMITTED version into a new version — the counter-merge protocol
-    of :func:`streaming_ingest_batch_fn` applied to the frequency
+    COMMITTED version into a new version — COUNTER maintenance
+    (operators.rollups.counter_merge) applied to the frequency
     sketch. CMS counters are plain additive longs, so unlike the HLL
     dual (:func:`sketch_rollup_batch_fn`, whose estimate bytes are
     engine-specific) the maintained state is bit-reproducible: the

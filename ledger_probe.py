@@ -20,7 +20,16 @@ assembly) with seed sizes, per-shape small-batch apply seconds, and
 bytes written per apply (the scale-honest metric: at 100 TB the apply
 cost IS the bytes rewritten).
 
+``--grains`` instead sweeps the five-table streaming sink
+(streaming_ingest_batch_fn) over committed grain history: for 0, 1M and
+5M committed minute rows (5M ≈ 3,500 meters for one day, with their
+hour and day rows) it times 120-row micro-batches (4 meters × 30 s)
+and prints the median per-batch seconds. An append-only sink's
+per-batch cost does not depend on the history; a sink that merges into
+committed state grows with it.
+
 Usage: python ledger_probe.py [--seed-sf-dir /tmp/..../x10] [--batch-docs 200]
+       python ledger_probe.py --grains
 """
 
 from __future__ import annotations
@@ -43,6 +52,112 @@ def _tree_bytes(root: str) -> int:
     return total
 
 
+#: committed minute rows seeded before each point of the --grains sweep
+GRAIN_SWEEP_ROWS = (0, 1_000_000, 5_000_000)
+#: micro-batches per sweep point; the first one is an untimed warm-up
+GRAIN_SWEEP_BATCHES = 5
+
+
+def _seed_grains(spark, paths: dict[str, str], commits: str, rows: int) -> None:
+    """Commit ``rows`` minute rows (one day per meter, consecutive
+    meters) plus their hour and day rollups as batch 0 — each grain
+    written as the compacted segment a long-running stream leaves."""
+    from pyspark.sql import functions as F
+
+    from cassaforte_meter_transmission_gen_spark.functions.energy import TICK_JOULES
+    from cassaforte_meter_transmission_gen_spark.operators.rollups import (
+        rollup_from_second,
+    )
+    from cassaforte_meter_transmission_gen_spark.sources.meter_generator import (
+        DEFAULT_START_SAID,
+        T0_EPOCH,
+    )
+
+    minute = spark.range(rows).select(
+        (F.lit(DEFAULT_START_SAID) + F.expr("id DIV 1440")).cast("int").alias("said"),
+        F.timestamp_seconds(F.lit(T0_EPOCH) + F.expr("id % 1440") * 60).alias(
+            "datetime"
+        ),
+        F.lit(60 * TICK_JOULES).cast("long").alias("joules"),
+    )
+    for g in ("minute", "hour", "day"):
+        df = minute if g == "minute" else rollup_from_second(minute, g)
+        df.sortWithinPartitions("said", "datetime").write.parquet(
+            os.path.join(paths[f"meter_samples_{g}"], "_compacted", "upto=0")
+        )
+    os.makedirs(commits)
+    open(os.path.join(commits, "0"), "w").close()
+
+
+def _sweep_point(spark, rows: int) -> list[float]:
+    """Seconds of each timed micro-batch over ``rows`` seeded minute rows."""
+    import shutil
+
+    from cassaforte_meter_transmission_gen_spark.operators.ingest import TABLES
+    from cassaforte_meter_transmission_gen_spark.sources.meter_generator import (
+        T0_EPOCH,
+        transmissions,
+    )
+    from cassaforte_meter_transmission_gen_spark.streaming.pipeline import (
+        streaming_ingest_batch_fn,
+    )
+
+    root = tempfile.mkdtemp(prefix="grain_probe_")
+    try:
+        paths = {t: os.path.join(root, t) for t in TABLES}
+        commits = os.path.join(root, "_commits")
+        if rows:
+            _seed_grains(spark, paths, commits, rows)
+        fn = streaming_ingest_batch_fn(paths, commits)
+        secs = []
+        for i in range(1, GRAIN_SWEEP_BATCHES + 1):
+            batch = transmissions(
+                spark, 4, t0_epoch=T0_EPOCH + 86400 + 30 * i, seconds=30
+            ).localCheckpoint()
+            t0 = time.perf_counter()
+            fn(batch, i)
+            secs.append(time.perf_counter() - t0)
+        return secs[1:]
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def grains_sweep(spark) -> dict:
+    """Per-batch seconds of the five-table sink at each seeded size.
+    One untimed pass over empty state warms the JVM, then the sizes run
+    in ascending and then descending order, so the warm-up still under
+    way biases no size."""
+    import statistics
+
+    _sweep_point(spark, 0)
+    secs: dict[int, list[float]] = {rows: [] for rows in GRAIN_SWEEP_ROWS}
+    for rows in GRAIN_SWEEP_ROWS + GRAIN_SWEEP_ROWS[::-1]:
+        secs[rows] += _sweep_point(spark, rows)
+    out: dict = {"batch_rows": 4 * 30, "points": []}
+    for rows, s in secs.items():
+        out["points"].append(
+            {
+                "committed_minute_rows": rows,
+                "per_batch_s": round(statistics.median(s), 3),
+                "batch_s": [round(x, 3) for x in s],
+            }
+        )
+        print(
+            f"committed minute rows {rows:>9,}: per-batch "
+            f"{statistics.median(s):.2f} s (median of {len(s)})",
+            file=sys.stderr,
+        )
+    return out
+
+
+def _emit(out: dict, out_path: str | None) -> None:
+    blob = json.dumps(out, indent=1, sort_keys=True)
+    if out_path:
+        with open(out_path, "w") as f:
+            f.write(blob + "\n")
+    print(blob)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument(
@@ -50,6 +165,7 @@ def main() -> None:
     )
     ap.add_argument("--batch-docs", type=int, default=200)
     ap.add_argument("--out", default=None)
+    ap.add_argument("--grains", action="store_true")
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
@@ -68,6 +184,9 @@ def main() -> None:
     )
 
     spark = get_spark("ledger-probe")
+    if args.grains:
+        _emit(grains_sweep(spark), args.out)
+        return
     docs = load_table(spark, args.seed_sf_dir, "documents").select(
         "doc_id", "text"
     )
@@ -347,12 +466,7 @@ def main() -> None:
     import shutil
 
     shutil.rmtree(root, ignore_errors=True)
-    out_path = args.out
-    blob = json.dumps(out, indent=1, sort_keys=True)
-    if out_path:
-        with open(out_path, "w") as f:
-            f.write(blob + "\n")
-    print(blob)
+    _emit(out, args.out)
 
 
 if __name__ == "__main__":

@@ -1,5 +1,5 @@
-"""operators.graph semantics: the integer-PageRank recurrence against
-a serial Python model (exact replication — the same discipline as the
+"""operators.graph semantics: the integer-PageRank and integer-HITS
+recurrences against serial Python models (exact replication — the same discipline as the
 BPE and weighted-sampling serial-model tests), fixed-point and
 mass-conservation properties, and triangle counts on known graphs."""
 
@@ -8,7 +8,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from cassaforte_meter_transmission_gen_spark.operators.graph import (
+    HITS_ITERS,
     PPB,
+    integer_hits,
     integer_pagerank,
     triangle_count,
 )
@@ -114,6 +116,49 @@ def test_pagerank_all_dangling_except_one(spark):
 
 def _pair_df(spark, pairs):
     return spark.createDataFrame(pairs, "ba STRING, bb STRING")
+
+
+def _serial_hits(edges: list[tuple]) -> dict:
+    """The HITS recurrence, serially and densely: unbounded-int inflow
+    sums (the DECIMAL(38,0) / HUGEINT domain), then one truncating
+    divide by ``max(1, total // PPB)`` per half-step."""
+    nodes = sorted({s for s, _, _ in edges} | {d for _, d, _ in edges})
+
+    def half(state: dict, fi: int, ti: int) -> dict:
+        raw = {n: 0 for n in nodes}
+        for e in edges:
+            raw[e[ti]] += state[e[fi]] * e[2]
+        div = max(1, sum(raw.values()) // PPB)
+        return {n: raw[n] // div for n in nodes}
+
+    h = {n: PPB for n in nodes}
+    for _ in range(HITS_ITERS):
+        a = half(h, 0, 1)
+        h = half(a, 1, 0)
+    return {n: (h[n], a[n]) for n in nodes}
+
+
+def test_hits_matches_serial_model_with_zero_scores(spark):
+    """Bit-exact replication of the serial HITS recurrence on graphs
+    with a source-only node (no in-edges → authority 0) and a
+    sink-only node (no out-edges → hub 0): the sparse half-steps must
+    densify those to 0, a path the trade corpus never reaches."""
+    graphs = [
+        [(0, 1, 5), (1, 2, 3), (2, 0, 2), (3, 1, 4), (0, 4, 7), (2, 4, 1)],
+        [(10, 20, 1), (11, 20, 2), (11, 21, 3)],  # bipartite
+    ]
+    for triples in graphs:
+        got = {
+            row.n: (row.hub, row.auth)
+            for row in integer_hits(_edges_df(spark, triples)).collect()
+        }
+        want = _serial_hits(triples)
+        assert got == want, triples
+        sources = {s for s, _, _ in triples} - {d for _, d, _ in triples}
+        sinks = {d for _, d, _ in triples} - {s for s, _, _ in triples}
+        assert sources and sinks
+        assert all(got[n][1] == 0 for n in sources)
+        assert all(got[n][0] == 0 for n in sinks)
 
 
 def test_triangle_count_k4(spark):

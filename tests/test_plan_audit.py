@@ -969,6 +969,30 @@ def test_hits_edges_pinned_no_fact_rescan(spark, sf_small):
     assert "lineitem" not in plan and "orders" not in plan
 
 
+def test_hits_pins_edges_once_and_runs_few_jobs(spark, sf_small, monkeypatch):
+    """HITS is one lazy plan over the pinned edge list: building the
+    frame calls localCheckpoint exactly once (the edges), and build
+    plus execution stay within 30 Spark jobs — pinning every
+    half-step's state took about 80."""
+    df_class = type(spark.range(1))
+    real = df_class.localCheckpoint
+    calls = []
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return real(self, *args, **kwargs)
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    monkeypatch.setattr(df_class, "localCheckpoint", counting)
+    df = REGISTRY["graph_hits_nation_trade"].fn(spark, sf_small)
+    monkeypatch.undo()
+    assert len(calls) == 1
+    assert df.count() > 0
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert len(jobs) <= 30, f"{len(jobs)} jobs"
+
+
 def test_benford_counts_pinned_once(spark, sf_small):
     """The 9-row digit-count state feeds the total row and the report;
     the pin must keep the lineitem scan out of the final plan."""

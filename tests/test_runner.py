@@ -137,6 +137,7 @@ def test_live_runner_compaction_keeps_readers_consistent(spark, tmp_path):
     import os
 
     from cassaforte_meter_transmission_gen_spark.streaming.pipeline import (
+        GRAIN_TABLES,
         _compacted_state,
         read_stream_table,
     )
@@ -191,9 +192,11 @@ def test_live_runner_compaction_keeps_readers_consistent(spark, tmp_path):
     assert dup == 0
     # batch-dir count bounded by the compaction horizon, not history:
     # keep_batches(8) + up to compact_every(4) since the last fold,
-    # plus slack for the one-cycle deferred deletion
-    n_dirs = sum(1 for d in os.listdir(second_path) if d.startswith("batch="))
-    assert n_dirs <= 8 + 4 + 4, f"{n_dirs} batch dirs survived compaction"
+    # plus slack for the one-cycle deferred deletion — for the grain
+    # tables too, which append one dir per batch like the second table
+    for t in ("meter_samples_second", *GRAIN_TABLES):
+        n_dirs = sum(1 for d in os.listdir(paths[t]) if d.startswith("batch="))
+        assert n_dirs <= 8 + 4 + 4, f"{t}: {n_dirs} batch dirs survived compaction"
 
 
 class _FailingConf:

@@ -415,10 +415,11 @@ def test_restart_after_crash_is_exactly_once(spark, tmp_path):
 
 
 def test_version_and_marker_retention(spark, tmp_path):
-    """Long-running hygiene: grain versions AND commit markers retain
-    only the newest `retain_versions`; the surviving max marker still
-    carries the full committed set (high-watermark semantics), so
-    reads stay complete after pruning."""
+    """Long-running hygiene: commit markers retain only the newest
+    `retain_versions`; the surviving max marker still carries the full
+    committed set (high-watermark semantics), so reads stay complete
+    after pruning. The grains keep no versions: each batch appends one
+    `batch=` dir."""
     import os
 
     from cassaforte_meter_transmission_gen_spark.functions.energy import TICK_JOULES
@@ -445,8 +446,8 @@ def test_version_and_marker_retention(spark, tmp_path):
         )
     assert _committed_batches(commits) == [3, 4, 5]
     for g in ("minute", "hour", "day"):
-        vers = sorted(os.listdir(paths[f"meter_samples_{g}"]))
-        assert vers == ["v=3", "v=4", "v=5"], g
+        dirs = sorted(os.listdir(paths[f"meter_samples_{g}"]))
+        assert dirs == [f"batch={i}" for i in range(6)], g
     # the retained head still covers every batch ever committed
     minute = read_stream_table(spark, paths, "meter_samples_minute", commits)
     assert minute.groupBy().sum("joules").first()[0] == 6 * 30 * TICK_JOULES
@@ -454,18 +455,20 @@ def test_version_and_marker_retention(spark, tmp_path):
 
 def test_compaction_bounds_batch_dirs(spark, tmp_path):
     """The small-file story for the unbounded runner: every
-    `compact_every` commits the old raw/second batch dirs fold into one
-    segment; readers lose nothing, and dirs older than the previous
-    segment are deleted — file count is bounded by the compaction
-    period, not stream history."""
+    `compact_every` commits the old batch dirs of every table fold
+    into one segment; readers lose nothing, and dirs older than the
+    previous segment are deleted — file count is bounded by the
+    compaction period, not stream history."""
     import os
 
+    from cassaforte_meter_transmission_gen_spark.functions.energy import TICK_JOULES
     from cassaforte_meter_transmission_gen_spark.operators.ingest import TABLES
     from cassaforte_meter_transmission_gen_spark.sources.meter_generator import (
         T0_EPOCH,
         transmissions,
     )
     from cassaforte_meter_transmission_gen_spark.streaming.pipeline import (
+        GRAIN_TABLES,
         read_stream_table,
         streaming_ingest_batch_fn,
     )
@@ -482,17 +485,23 @@ def test_compaction_bounds_batch_dirs(spark, tmp_path):
             ),
             i,
         )
-    second_path = paths["meter_samples_second"]
-    batch_dirs = sorted(
-        int(d[6:]) for d in os.listdir(second_path) if d.startswith("batch=")
-    )
-    assert batch_dirs == [6, 7, 8, 9]  # 0..5 folded into segments
-    segs = sorted(os.listdir(os.path.join(second_path, "_compacted")))
-    assert segs == ["upto=5", "upto=8"]  # current + previous retained
+    for t in ("meter_samples_second", *GRAIN_TABLES):
+        batch_dirs = sorted(
+            int(d[6:]) for d in os.listdir(paths[t]) if d.startswith("batch=")
+        )
+        assert batch_dirs == [6, 7, 8, 9], t  # 0..5 folded into segments
+        segs = sorted(os.listdir(os.path.join(paths[t], "_compacted")))
+        assert segs == ["upto=5", "upto=8"], t  # current + previous retained
     # nothing lost, nothing doubled
     got = read_stream_table(spark, paths, "meter_samples_second", commits)
     assert got.count() == 10 * 20
     assert got.select("datetime").distinct().count() == 10 * 20
+    for t in GRAIN_TABLES:
+        grain = read_stream_table(spark, paths, t, commits)
+        assert grain.groupBy().sum("joules").first()[0] == 10 * 20 * TICK_JOULES, t
+        # the segment holds the folded sums: one row per (said, datetime)
+        seg = spark.read.parquet(os.path.join(paths[t], "_compacted", "upto=8"))
+        assert seg.count() == seg.select("said", "datetime").distinct().count(), t
 
 
 def test_compaction_crash_before_publish_is_invisible(spark, tmp_path, monkeypatch):
@@ -1063,8 +1072,9 @@ def test_auc_scores_replay_is_exactly_once(spark, tmp_path):
 def _crash_sink(spark, sink, root):
     """(make_fn, read_state, commits_dir) for one sink of the commit
     protocol under ``root``: the five-table ingest (retaining one
-    version, so the GC after commit deletes something at batch 1), the
-    CMS versioned sink, whose state is bit-reproducible, or the
+    marker, so the prune after commit deletes marker 0 at batch 1),
+    the same ingest compacting every batch into a segment, the CMS
+    versioned sink, whose state is bit-reproducible, or the
     Naive-Bayes sink, which commits two tables under one marker."""
     from cassaforte_meter_transmission_gen_spark.operators.ingest import TABLES
     from cassaforte_meter_transmission_gen_spark.streaming.pipeline import (
@@ -1076,10 +1086,17 @@ def _crash_sink(spark, sink, root):
     )
 
     commits = f"{root}/_commits"
-    if sink == "ingest":
+    if sink in ("ingest", "compact"):
         paths = {t: f"{root}/{t}" for t in TABLES}
+        kw = (
+            {"compact_every": 1, "compact_keep_batches": 0}
+            if sink == "compact"
+            else {}
+        )
         return (
-            lambda: streaming_ingest_batch_fn(paths, commits, retain_versions=1),
+            lambda: streaming_ingest_batch_fn(
+                paths, commits, retain_versions=1, **kw
+            ),
             lambda: {
                 t: sorted(
                     map(
@@ -1134,7 +1151,7 @@ def _crash_batches(spark, sink):
         transmissions,
     )
 
-    if sink == "ingest":
+    if sink in ("ingest", "compact"):
         return [
             transmissions(spark, num_meters=2, seconds=60, t0_epoch=T0_EPOCH + 60 * i)
             for i in range(2)
@@ -1159,11 +1176,12 @@ def _crash_batches(spark, sink):
 _CRASH_STEPS = [
     ("ingest", "parquet", "meter_samples/batch=1"),
     ("ingest", "parquet", "meter_samples_second/batch=1"),
-    ("ingest", "parquet", "meter_samples_minute/v=1"),
-    ("ingest", "parquet", "meter_samples_hour/v=1"),
-    ("ingest", "parquet", "meter_samples_day/v=1"),
+    ("ingest", "parquet", "meter_samples_minute/batch=1"),
+    ("ingest", "parquet", "meter_samples_hour/batch=1"),
+    ("ingest", "parquet", "meter_samples_day/batch=1"),
     ("ingest", "replace", "marker"),
-    ("ingest", "rmtree", "gc"),
+    ("ingest", "remove", "gc"),
+    ("compact", "replace", "meter_samples_minute/_compacted/upto=1"),
     ("cms", "parquet", "day_grids/v=1"),
     ("cms", "replace", "marker"),
     ("nb", "parquet", "model/wl/v=1"),
@@ -1182,12 +1200,12 @@ def test_crash_at_every_commit_step_replays_exactly_once(
 ):
     """The commit protocol under a crash at EACH durable step of batch
     1 — after one of its table writes, instead of the marker's
-    ``os.replace``, or in the GC after the marker. Readers must see
-    exactly the batches ≤ the high watermark, and replaying batch 1
-    through a fresh fn must leave every table equal to an
-    uninterrupted run."""
+    ``os.replace``, in the marker prune after the marker, or in a
+    compaction after the commit, between a grain segment's temp write
+    and its publish. Readers must see exactly the batches ≤ the high
+    watermark, and replaying batch 1 through a fresh fn must leave
+    every table equal to an uninterrupted run."""
     import os
-    import shutil
 
     from pyspark.sql.readwriter import DataFrameWriter
 
@@ -1217,23 +1235,30 @@ def test_crash_at_every_commit_step_replays_exactly_once(
         real_replace = os.replace
 
         def replace(src, dst):
-            if os.path.dirname(dst) == commits:
-                raise RuntimeError("injected crash before the marker")
+            if (
+                os.path.dirname(dst) == commits
+                if target == "marker"
+                else dst.endswith(target)
+            ):
+                raise RuntimeError(f"injected crash before publishing {target}")
             return real_replace(src, dst)
 
         monkeypatch.setattr(os, "replace", replace)
     else:
+        real_remove = os.remove
 
-        def rmtree(*args, **kwargs):
-            raise RuntimeError("injected crash in the GC after commit")
+        def remove(path, *args, **kwargs):
+            if os.path.dirname(path) == commits:
+                raise RuntimeError("injected crash in the marker prune")
+            return real_remove(path, *args, **kwargs)
 
-        monkeypatch.setattr(shutil, "rmtree", rmtree)
+        monkeypatch.setattr(os, "remove", remove)
     with pytest.raises(RuntimeError, match="injected crash"):
         make()(batches[1], 1)
     monkeypatch.undo()
 
     hw = _high_watermark(commits)
-    assert hw == (1 if patch == "rmtree" else 0)
+    assert hw == (1 if target == "gc" or sink == "compact" else 0)
     assert read() == want[hw]
     make()(batches[1], 1)
     assert read() == want[1]
