@@ -29,7 +29,7 @@ SAW_PERIOD = 120
 TICK_JOULES = 59
 
 
-def joules_over_second(watts: Column, sample_rate: int = SAMPLE_RATE) -> Column:
-    """int(sum(watts) / sample_rate) — core.clj:43-46."""
+def joules_over_second(watts: Column) -> Column:
+    """int(sum(watts) / SAMPLE_RATE) — core.clj:43-46."""
     total = F.aggregate(watts, F.lit(0.0), lambda acc, x: acc + x.cast("double"))
-    return F.floor(total / F.lit(sample_rate)).cast("int")
+    return F.floor(total / F.lit(SAMPLE_RATE)).cast("int")

@@ -17,16 +17,16 @@ import hashlib
 HOST_HASH_MOD = 100000
 
 
-def host_hash(seed_str: str, mod: int = HOST_HASH_MOD) -> int:
-    """Driver-side stable seed: SHA1(seed_str) mod ``mod``.
+def host_hash(seed_str: str) -> int:
+    """Driver-side stable seed: SHA1(seed_str) mod ``HOST_HASH_MOD``.
 
     Matches the reference's floor-mod semantics: Python ``%`` on a
     non-negative int equals Clojure ``mod`` here because we take the
     digest as unsigned (the reference's signed interpretation + floor-mod
-    lands in the same residue class range [0, mod)).
+    lands in the same residue class range [0, HOST_HASH_MOD)).
     """
     digest = hashlib.sha1(seed_str.encode("utf-8")).hexdigest()
-    return int(digest, 16) % mod
+    return int(digest, 16) % HOST_HASH_MOD
 
 
 _M32 = 0xFFFFFFFF
@@ -36,7 +36,7 @@ def _rotl32(x: int, r: int) -> int:
     return ((x << r) | (x >> (32 - r))) & _M32
 
 
-def murmur3_hash_int(value: int, seed: int = 42) -> int:
+def murmur3_hash_int(value: int) -> int:
     """Murmur3 x86_32 of one 32-bit int block, driver-side — bit-equal
     to Spark's ``F.hash`` on an IntegerType column (Spark hashes an int
     as a single 4-byte block with seed 42; the well-specified public
@@ -50,7 +50,7 @@ def murmur3_hash_int(value: int, seed: int = 42) -> int:
     k1 = (value & _M32) * 0xCC9E2D51 & _M32
     k1 = _rotl32(k1, 15)
     k1 = k1 * 0x1B873593 & _M32
-    h1 = (seed & _M32) ^ k1
+    h1 = 42 ^ k1  # Spark's hash seed
     h1 = _rotl32(h1, 13)
     h1 = (h1 * 5 + 0xE6546B64) & _M32
     # fmix32, with len = 4 bytes

@@ -86,11 +86,11 @@ def tok_hash_fast_sql(s_sql: str) -> str:
     return f"xxhash64({s_sql})"
 
 
-def rolling_fingerprint(text: Column, prefix: int = ROLLING_PREFIX) -> Column:
-    """Polynomial rolling hash over the first ``prefix`` characters:
-    ``h = (h*31 + codepoint) mod 1e9+7`` — a cheap order-sensitive
-    document fingerprint (vs the order-insensitive md5)."""
-    chars = F.split(F.substring(text, 1, prefix), "")
+def rolling_fingerprint(text: Column) -> Column:
+    """Polynomial rolling hash over the first ``ROLLING_PREFIX``
+    characters: ``h = (h*31 + codepoint) mod 1e9+7`` — a cheap
+    order-sensitive document fingerprint (vs the order-insensitive md5)."""
+    chars = F.split(F.substring(text, 1, ROLLING_PREFIX), "")
     return F.aggregate(
         chars,
         F.lit(0).cast("long"),

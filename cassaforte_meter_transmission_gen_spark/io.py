@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 class TableSink:
     """Writer seam: route one logical table write to a physical sink."""
 
-    def write(self, df: DataFrame, table: str, mode: str = "overwrite") -> None:
+    def write(self, df: DataFrame, table: str) -> None:
         raise NotImplementedError
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
@@ -46,20 +46,20 @@ class TableSink:
 
 
 class ParquetSink(TableSink):
-    """Parquet-per-table under a root dir; rollup-grain tables are kept
-    sorted (said, datetime) inside files (reference clustering order)."""
+    """Parquet-per-table under a root dir, each write overwriting the
+    table; rollup-grain tables are kept sorted (said, datetime) inside
+    files (reference clustering order)."""
 
-    def __init__(self, root: str, sort_meter_tables: bool = True) -> None:
+    def __init__(self, root: str) -> None:
         self.root = root
-        self.sort_meter_tables = sort_meter_tables
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    def write(self, df: DataFrame, table: str, mode: str = "overwrite") -> None:
-        if self.sort_meter_tables and {"said", "datetime"} <= set(df.columns):
+    def write(self, df: DataFrame, table: str) -> None:
+        if {"said", "datetime"} <= set(df.columns):
             df = df.sortWithinPartitions("said", "datetime")
-        df.write.mode(mode).parquet(self.path(table))
+        df.write.mode("overwrite").parquet(self.path(table))
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         return spark.read.parquet(self.path(table))
@@ -100,11 +100,11 @@ class CassandraSink(TableSink):
                 "and set spark.cassandra.connection.host"
             ) from exc
 
-    def write(self, df: DataFrame, table: str, mode: str = "append") -> None:
+    def write(self, df: DataFrame, table: str) -> None:
         (
             df.write.format(CASSANDRA_FORMAT)
             .options(keyspace=self.keyspace, table=table)
-            .mode(mode)
+            .mode("append")
             .save()
         )
 

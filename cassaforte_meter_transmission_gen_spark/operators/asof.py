@@ -3,9 +3,10 @@ built-in, composed from existing DataFrame ops (SURVEY brief: custom
 operators as compositions before UDFs).
 
 Semantics (backward as-of, the common case): for each left row, attach
-the single right row with the greatest ``right_ts <= left_ts`` within
+the single right row with the greatest ``right.ts <= left.ts`` within
 the same key group — i.e. "the latest observation at or before this
-instant". DuckDB's ``ASOF JOIN`` is the oracle dual.
+instant". DuckDB's ``ASOF JOIN`` is the oracle dual. Both sides carry
+their timestamp in a ``ts`` column.
 
 Implementation is the **union-merge** shape, not a range join:
 
@@ -38,12 +39,9 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: Sequence[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     value_cols: Sequence[str] | None = None,
-    matched_ts_col: str = "matched_ts",
 ) -> DataFrame:
-    """Backward as-of join: left rows gain ``matched_ts_col`` (the
+    """Backward as-of join: left rows gain ``matched_ts`` (the
     matched right timestamp, null when no right row precedes) and each
     of ``value_cols`` from the matched right row.
 
@@ -52,12 +50,12 @@ def asof_join(
     max of each value column (deterministic)."""
     on = list(on)
     value_cols = list(value_cols or [])
-    left_cols = [c for c in left.columns if c not in on and c != left_ts]
+    left_cols = [c for c in left.columns if c not in on and c != "ts"]
 
     r = (
         right.select(
             *on,
-            F.col(right_ts).alias("__ts"),
+            F.col("ts").alias("__ts"),
             *[F.col(c).alias(f"__r_{c}") for c in value_cols],
         )
         .groupBy(*on, "__ts")
@@ -72,9 +70,9 @@ def asof_join(
     )
     l = left.select(
         *on,
-        F.col(left_ts).alias("__ts"),
+        F.col("ts").alias("__ts"),
         F.lit(1).alias("__side"),
-        F.lit(None).cast(right.schema[right_ts].dataType).alias("__r_ts"),
+        F.lit(None).cast(right.schema["ts"].dataType).alias("__r_ts"),
         *[
             F.lit(None).cast(right.schema[c].dataType).alias(f"__r_{c}")
             for c in value_cols
@@ -93,7 +91,7 @@ def asof_join(
         *on,
         "__ts",
         "__side",
-        F.last("__r_ts", ignorenulls=True).over(w).alias(matched_ts_col),
+        F.last("__r_ts", ignorenulls=True).over(w).alias("matched_ts"),
         *[
             F.last(f"__r_{c}", ignorenulls=True).over(w).alias(f"__m_{c}")
             for c in value_cols
@@ -102,9 +100,9 @@ def asof_join(
     )
     return carried.filter(F.col("__side") == 1).select(
         *on,
-        F.col("__ts").alias(left_ts),
+        F.col("__ts").alias("ts"),
         *[F.col(f"__l_{c}").alias(c) for c in left_cols],
-        matched_ts_col,
+        "matched_ts",
         *[F.col(f"__m_{c}").alias(f"{c}_asof") for c in value_cols],
     )
 
@@ -113,8 +111,6 @@ def asof_join_nearest(
     left: DataFrame,
     right: DataFrame,
     on: Sequence[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     value_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """NEAREST as-of join — pandas ``merge_asof(direction='nearest')``:
@@ -138,12 +134,12 @@ def asof_join_nearest(
     ``value_cols`` as ``{col}_asof``."""
     on = list(on)
     value_cols = list(value_cols or [])
-    left_cols = [c for c in left.columns if c not in on and c != left_ts]
+    left_cols = [c for c in left.columns if c not in on and c != "ts"]
 
     r = (
         right.select(
             *on,
-            F.col(right_ts).alias("__ts"),
+            F.col("ts").alias("__ts"),
             *[F.col(c).alias(f"__r_{c}") for c in value_cols],
         )
         .groupBy(*on, "__ts")
@@ -161,9 +157,9 @@ def asof_join_nearest(
     )
     l = left.select(
         *on,
-        F.col(left_ts).alias("__ts"),
+        F.col("ts").alias("__ts"),
         F.lit(1).alias("__side"),
-        F.lit(None).cast(right.schema[right_ts].dataType).alias("__r_ts"),
+        F.lit(None).cast(right.schema["ts"].dataType).alias("__r_ts"),
         *[
             F.lit(None).cast(right.schema[c].dataType).alias(f"__r_{c}")
             for c in value_cols
@@ -209,7 +205,7 @@ def asof_join_nearest(
     )
     return carried.filter(F.col("__side") == 1).select(
         *on,
-        F.col("__ts").alias(left_ts),
+        F.col("__ts").alias("ts"),
         *[F.col(f"__l_{c}").alias(c) for c in left_cols],
         F.when(take_prev, F.col("__prev_ts"))
         .otherwise(F.col("__next_ts"))

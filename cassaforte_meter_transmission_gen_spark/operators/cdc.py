@@ -30,14 +30,12 @@ def apply_changelog(
     snapshot: DataFrame,
     changes: DataFrame,
     key_cols: list[str],
-    seq_col: str = "seq",
-    op_col: str = "op",
 ) -> DataFrame:
     """Current state = snapshot ⊳ changelog. ``changes`` must contain
-    every ``snapshot`` column plus ``seq_col``/``op_col``; per key the
+    every ``snapshot`` column plus ``seq``/``op``; per key the
     max-seq row decides (assumes one row per (key, seq) — a real feed's
     log offset). Returns the snapshot schema."""
-    w = Window.partitionBy(*key_cols).orderBy(F.desc(seq_col))
+    w = Window.partitionBy(*key_cols).orderBy(F.desc("seq"))
     latest = (
         changes.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -46,7 +44,7 @@ def apply_changelog(
     untouched = snapshot.join(
         F.broadcast(latest.select(*key_cols)), key_cols, "left_anti"
     )
-    upserts = latest.filter(F.col(op_col) == "u").select(*snapshot.columns)
+    upserts = latest.filter(F.col("op") == "u").select(*snapshot.columns)
     return untouched.unionByName(upserts)
 
 
@@ -54,8 +52,6 @@ def scd2_history(
     snapshot: DataFrame,
     changes: DataFrame,
     key_cols: list[str],
-    seq_col: str = "seq",
-    op_col: str = "op",
 ) -> DataFrame:
     """Slowly-changing-dimension Type 2: instead of folding the change
     feed into current state (:func:`apply_changelog`), KEEP every
@@ -74,17 +70,15 @@ def scd2_history(
     (pure re-derivation), the property that makes the build retry-safe.
     """
     payload = list(snapshot.columns)
-    base = snapshot.withColumn(seq_col, F.lit(0)).withColumn(op_col, F.lit("u"))
-    stream = base.unionByName(changes.select(*payload, seq_col, op_col))
-    return versions_from_stream(stream, payload, key_cols, seq_col, op_col)
+    base = snapshot.withColumn("seq", F.lit(0)).withColumn("op", F.lit("u"))
+    stream = base.unionByName(changes.select(*payload, "seq", "op"))
+    return versions_from_stream(stream, payload, key_cols)
 
 
 def versions_from_stream(
     stream: DataFrame,
     payload: list[str],
     key_cols: list[str],
-    seq_col: str = "seq",
-    op_col: str = "op",
 ) -> DataFrame:
     """The SCD2 version-chaining core over an already-merged event
     stream (rows = payload + seq + op, any seq base): one
@@ -94,13 +88,13 @@ def versions_from_stream(
     streaming maintenance (streaming.pipeline.scd2_batch_fn, which
     seeds each affected key from its committed OPEN version so the
     chain continues across micro-batches)."""
-    w = Window.partitionBy(*key_cols).orderBy(seq_col)
+    w = Window.partitionBy(*key_cols).orderBy("seq")
     hist = stream.withColumn(
-        "valid_to_seq", F.lead(F.col(seq_col)).over(w).cast("int")
+        "valid_to_seq", F.lead(F.col("seq")).over(w).cast("int")
     )
     return (
-        hist.filter(F.col(op_col) == "u")
-        .withColumn("valid_from_seq", F.col(seq_col).cast("int"))
+        hist.filter(F.col("op") == "u")
+        .withColumn("valid_from_seq", F.col("seq").cast("int"))
         .withColumn("is_current", F.col("valid_to_seq").isNull())
         .select(*payload, "valid_from_seq", "valid_to_seq", "is_current")
     )

@@ -47,8 +47,6 @@ def contrastive_triplets(
     anchors: DataFrame,
     k_neg: int = 5,
     exclude_top: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(anchor_id, positive_id, positive_cosine, negative_id,
     neg_rank ≤ k_neg): positive = exact cosine rank-1 neighbor;
@@ -57,16 +55,14 @@ def contrastive_triplets(
     anchor itself), per the module docstring."""
     n = vectors.count()  # one cheap job; fixes the prefilter denom
     denom = neg_pool_denom(n)
-    top = brute_force_topk(
-        vectors, anchors, k=exclude_top, id_col=id_col, vec_col=vec_col
-    )
+    top = brute_force_topk(vectors, anchors, k=exclude_top)
     pos = top.filter(F.col("rank") == 1).select(
         F.col("query_id").alias("anchor_id"),
         F.col("neighbor_id").alias("positive_id"),
         F.col("cosine").alias("positive_cosine"),
     )
-    a = anchors.select(F.col(id_col).alias("anchor_id"))
-    cand = vectors.select(F.col(id_col).alias("cand_id"))
+    a = anchors.select(F.col("vec_id").alias("anchor_id"))
+    cand = vectors.select(F.col("vec_id").alias("cand_id"))
     pri = F.expr(
         tok_hash_portable_sql(
             "concat(CAST(anchor_id AS STRING), ':', CAST(cand_id AS STRING))"

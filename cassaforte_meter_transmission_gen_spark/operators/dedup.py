@@ -47,6 +47,8 @@ from ..functions.text import (
     word_shingles_sql,
 )
 from .similarity import (
+    DEDUP_COS_HI,
+    DEDUP_COS_LO,
     IVF_CLUSTERS,
     LSH_DEDUP,
     LSH_HI,
@@ -392,7 +394,9 @@ def _normed_b(vectors: DataFrame) -> DataFrame:
 _COSINE_AB = cosine_pre_sql("va", "vb", "na", "nb")
 
 
-def embedding_cosine_duplicates(vectors: DataFrame, threshold: float = 0.4) -> DataFrame:
+def embedding_cosine_duplicates(
+    vectors: DataFrame, threshold: float = DEDUP_COS_LO
+) -> DataFrame:
     """Exact embedding near-dup pairs: all (a < b) pairs with
     cosine(a, b) >= threshold. O(n²) self-join — the correctness
     baseline; use :func:`embedding_cosine_duplicates_lsh` at scale.
@@ -437,7 +441,9 @@ def _lsh_candidate_pairs(vectors: DataFrame, config: tuple[int, int]) -> DataFra
     )
 
 
-def embedding_cosine_duplicates_lsh(vectors: DataFrame, threshold: float = 0.4) -> DataFrame:
+def embedding_cosine_duplicates_lsh(
+    vectors: DataFrame, threshold: float = DEDUP_COS_LO
+) -> DataFrame:
     """Scale path for embedding near-dup: random-hyperplane LSH buckets
     confine the candidate join (quadratic only within a bucket), then
     candidates are verified with the exact cosine — precision 1.0,
@@ -471,7 +477,9 @@ def embedding_cosine_duplicates_lsh(vectors: DataFrame, threshold: float = 0.4) 
     )
 
 
-def embedding_cosine_lsh_stats(vectors: DataFrame, threshold: float = 0.8) -> DataFrame:
+def embedding_cosine_lsh_stats(
+    vectors: DataFrame, threshold: float = DEDUP_COS_HI
+) -> DataFrame:
     """One-row pruning profile of the hyperplane-LSH dedup under the
     high-threshold (100 TB) configuration :data:`LSH_HI`: how hard do the buckets
     actually prune on this corpus?
@@ -539,7 +547,7 @@ def semantic_n_clusters(n_vectors: int) -> int:
 
 def semantic_duplicates_clustered(
     vectors: DataFrame,
-    threshold: float = 0.4,
+    threshold: float = DEDUP_COS_LO,
     n_clusters: int = IVF_CLUSTERS,
     train_sample_denom: int | str | None = "auto",
     centroids: list[list[float]] | None = None,

@@ -315,7 +315,6 @@ def kcore_decomposition(
     edges: DataFrame,
     k: int,
     max_iters: int = 12,
-    broadcast_max_survivors: int = KCORE_BROADCAST_MAX_SURVIVORS,
 ) -> DataFrame:
     """K-core of an undirected graph: the maximal subgraph in which
     every vertex has degree ≥ k, computed by the textbook peel loop —
@@ -329,7 +328,7 @@ def kcore_decomposition(
     Scale shape (the CC labeller's economics): each round is one
     union-groupBy degree count plus one semi-equi-join of the
     surviving vertex set against the edge list — broadcast-hinted
-    while the survivor count stays under ``broadcast_max_survivors``
+    while the survivor count stays under ``KCORE_BROADCAST_MAX_SURVIVORS``
     (dimension-sized here), a shuffled vertex-sharded join beyond it
     (a billion-vertex survivor set forced through a broadcast is a
     driver OOM); the one driver row per round carries the dropped- and
@@ -362,10 +361,7 @@ def kcore_decomposition(
             return deg
         keep = deg.filter(F.col("degree") >= k).select("v")
         cur = _kcore_peel_join(
-            cur,
-            keep,
-            int(stats["n_all"]) - int(stats["n_drop"]),
-            broadcast_max_survivors,
+            cur, keep, int(stats["n_all"]) - int(stats["n_drop"])
         )
     raise RuntimeError(
         f"k-core peel did not converge within {max_iters} rounds "

@@ -953,17 +953,15 @@ def gif_decode(b: bytes) -> tuple[int, int, bytes]:
 _GIF_PATTERN_COLORS = 16
 
 
-def synthetic_gif_pattern(
-    item_id: int, width: int | None = None, height: int | None = None
-) -> tuple[int, int, bytes, bytes]:
-    """Deterministic per-id palette image: width = id%5+6, height 8
-    unless overridden; index (y, x) = (id·7919 + y·31 + (x div 2)·3)
+def synthetic_gif_pattern(item_id: int) -> tuple[int, int, bytes, bytes]:
+    """Deterministic per-id palette image: width = id%5+6, height 8;
+    index (y, x) = (id·7919 + y·31 + (x div 2)·3)
     mod 16 — the div-2 creates horizontal runs so the LZW table gets
     real multi-symbol entries; palette color c =
     ((id·37 + c·11) % 256, (id·59 + c·23) % 256, (id·83 + c·29) % 256).
     Pure integer formulas a SQL oracle re-derives exactly."""
-    w = width if width is not None else item_id % 5 + 6
-    h = height if height is not None else 8
+    w = item_id % 5 + 6
+    h = 8
     indices = bytes(
         (item_id * 7919 + y * 31 + (x // 2) * 3) % _GIF_PATTERN_COLORS
         for y in range(h)
@@ -1039,11 +1037,10 @@ def gif_encode_animation(
     height: int,
     frames: list[bytes],
     palette: bytes,
-    delay_cs: int = 10,
 ) -> bytes:
     """Encode full-frame palette-indexed frames as a real animated
     GIF89a: one global color table, per frame a Graphic Control
-    Extension (delay in centiseconds) followed by an image descriptor
+    Extension (a 10 centisecond delay) followed by an image descriptor
     and its own LZW stream."""
     import struct
 
@@ -1063,7 +1060,7 @@ def gif_encode_animation(
         if max(indices) >= n_colors:
             raise ValueError("palette index out of range")
         # Graphic Control Extension: no disposal, no transparency
-        out += b"\x21\xf9\x04\x00" + struct.pack("<H", delay_cs) + b"\x00\x00"
+        out += b"\x21\xf9\x04\x00" + struct.pack("<H", 10) + b"\x00\x00"
         out += b"\x2c" + struct.pack("<HHHH", 0, 0, width, height) + b"\x00"
         out.append(mcs)
         stream = _lzw_encode(indices, mcs)
@@ -1298,9 +1295,7 @@ def gif_motion_profile(df: DataFrame) -> DataFrame:
 WAV_AUTOCORR_LAGS = (1, 2, 4)
 
 
-def wav_autocorrelation(
-    df: DataFrame, lags: tuple[int, ...] = WAV_AUTOCORR_LAGS
-) -> DataFrame:
+def wav_autocorrelation(df: DataFrame) -> DataFrame:
     """(item_id, payload) → per-clip integer autocorrelation profile:
     R(0) = Σ s², R(ℓ) = Σ_{i≥ℓ} s(i)·s(i−ℓ) for each lag, plus the
     normalized r(ℓ) in integer ppm (R(ℓ)·1e6 DIV R(0)) — the classic
@@ -1322,7 +1317,7 @@ def wav_autocorrelation(
                 _rate, _n, samples = wav_decode(bytes(payload))
                 s = np.asarray(samples, dtype=np.int64)
                 r0 = int((s * s).sum())
-                for lag in lags:
+                for lag in WAV_AUTOCORR_LAGS:
                     rl = int((s[lag:] * s[:-lag]).sum()) if len(s) > lag else 0
                     ids.append(int(item_id))
                     ls.append(lag)

@@ -203,12 +203,11 @@ def global_running_totals(
 def token_budget_packs(
     docs_with_tokens: DataFrame,
     budget: int,
-    id_col: str = "doc_id",
-    tokens_col: str = "n_tokens",
 ) -> DataFrame:
-    """Greedy contiguous packing: documents in ascending ``id_col``
-    order fill pack 0 until ``budget`` tokens are exceeded, then pack 1,
-    and so on — ``pack_id = floor(exclusive_prefix_sum / budget)``.
+    """Greedy contiguous packing: documents in ascending ``doc_id``
+    order fill pack 0 until ``budget`` tokens (``n_tokens``) are
+    exceeded, then pack 1, and so on —
+    ``pack_id = floor(exclusive_prefix_sum / budget)``.
     A document straddling a boundary stays with the pack it started in
     (packs can overflow by at most one document), which keeps the
     assignment a pure per-row function of the prefix sum — no sequential
@@ -217,7 +216,7 @@ def token_budget_packs(
     Returns one row per pack: (pack_id, n_docs, pack_tokens,
     first_doc, last_doc)."""
     cum = global_running_total(
-        docs_with_tokens, id_col, tokens_col, out_col="__prev"
+        docs_with_tokens, "doc_id", "n_tokens", out_col="__prev"
     )
     return (
         cum.withColumn(
@@ -226,8 +225,8 @@ def token_budget_packs(
         .groupBy("pack_id")
         .agg(
             F.count("*").cast("long").alias("n_docs"),
-            F.sum(tokens_col).cast("long").alias("pack_tokens"),
-            F.min(id_col).alias("first_doc"),
-            F.max(id_col).alias("last_doc"),
+            F.sum("n_tokens").cast("long").alias("pack_tokens"),
+            F.min("doc_id").alias("first_doc"),
+            F.max("doc_id").alias("last_doc"),
         )
     )

@@ -42,12 +42,7 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def _toks_sql(text_col: str) -> str:
-    """Non-empty whitespace tokens (Spark dialect)."""
-    return f"filter(split({text_col}, ' '), x -> x <> '')"
-
-
-def bm25_score_sql(idfs: list[str], avgdl: str, k1: float, b: float) -> str:
+def bm25_score_sql(idfs: list[str], avgdl: str) -> str:
     """The BM25 score as one SQL expression over per-document columns
     ``tf_0..tf_{m-1}`` (BIGINT) and ``dl`` (BIGINT) — fixed term order,
     explicit parenthesization, CAST-string literals, so Spark and
@@ -55,10 +50,10 @@ def bm25_score_sql(idfs: list[str], avgdl: str, k1: float, b: float) -> str:
     ``idfs``/``avgdl`` are SQL snippets: repr literals on the Spark
     side (driver-computed), column references in the oracle (SQL-
     computed via the det-ln CTE chain) — same bits either way."""
-    k1p1 = sql_double_lit(k1 + 1.0)
-    k1l = sql_double_lit(k1)
-    omb = sql_double_lit(1.0 - b)
-    bl = sql_double_lit(b)
+    k1p1 = sql_double_lit(BM25_K1 + 1.0)
+    k1l = sql_double_lit(BM25_K1)
+    omb = sql_double_lit(1.0 - BM25_B)
+    bl = sql_double_lit(BM25_B)
     terms = [
         f"(({idf}) * ((CAST(tf_{i} AS DOUBLE) * {k1p1})"
         f" / (CAST(tf_{i} AS DOUBLE) + ({k1l} * ({omb} + ({bl}"
@@ -75,21 +70,18 @@ def bm25_topk(
     docs: DataFrame,
     terms: list[str],
     k: int = 20,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
-    """Rank documents by Okapi BM25 for a bag-of-terms query; returns
+    """Rank ``(doc_id, text)`` documents by Okapi BM25 (``BM25_K1``,
+    ``BM25_B``) for a bag-of-terms query; returns
     (doc_id, score, rank ≤ k), ties broken by doc_id. idf is the BM25+
     form ln(1 + (N - df + ½)/(df + ½)) — non-negative for every df.
 
     Terms are spliced into generated SQL (this plan AND the shared
     oracle text) as escaped literals (functions.sqltext.sql_str_lit) —
     a quote in a query term must never become plan syntax."""
-    toks = _toks_sql(text_col)
+    toks = "filter(split(text, ' '), x -> x <> '')"  # non-empty tokens
     sel = [
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         F.expr(f"size({toks})").cast("long").alias("dl"),
     ]
     for i, t in enumerate(terms):
@@ -119,7 +111,7 @@ def bm25_topk(
     ]
     scored = dtf.select(
         "doc_id",
-        F.expr(bm25_score_sql(idfs, sql_double_lit(avgdl), k1, b)).alias("score"),
+        F.expr(bm25_score_sql(idfs, sql_double_lit(avgdl))).alias("score"),
     )
     top = scored.orderBy(F.desc("score"), "doc_id").limit(k)
     w = W.orderBy(F.desc("score"), "doc_id")
@@ -132,14 +124,13 @@ def bm25_topk(
 RRF_C = 60
 
 
-def rrf_fuse(
-    lex: DataFrame, sem: DataFrame, k: int = 20, c: int = RRF_C
-) -> DataFrame:
+def rrf_fuse(lex: DataFrame, sem: DataFrame, k: int = 20) -> DataFrame:
     """Reciprocal Rank Fusion of a lexical and a semantic ranking —
     the standard score-free way to combine BM25 with embedding ANN
     (hybrid search). Inputs are (doc_id, rank) frames; output is
     (doc_id, rrf_score, lex_rank, sem_rank, rank ≤ k) with
-    rrf_score = Σ 1/(c + rankᵢ) over the rankings that contain the doc.
+    rrf_score = Σ 1/(RRF_C + rankᵢ) over the rankings that contain the
+    doc.
 
     Scale: both inputs are top-K rankings (k×partitions rows at most —
     the expensive work happened upstream in the BM25 scan and the ANN
@@ -156,9 +147,9 @@ def rrf_fuse(
         "doc_id",
         F.expr(
             f"(COALESCE(CAST('1.0' AS DOUBLE)"
-            f" / CAST({c} + lex_rank AS DOUBLE), CAST('0.0' AS DOUBLE))"
+            f" / CAST({RRF_C} + lex_rank AS DOUBLE), CAST('0.0' AS DOUBLE))"
             f" + COALESCE(CAST('1.0' AS DOUBLE)"
-            f" / CAST({c} + sem_rank AS DOUBLE), CAST('0.0' AS DOUBLE)))"
+            f" / CAST({RRF_C} + sem_rank AS DOUBLE), CAST('0.0' AS DOUBLE)))"
         ).alias("rrf_score"),
         "lex_rank",
         "sem_rank",

@@ -51,6 +51,11 @@ ANN_QUERIES = 5
 LSH_ANN = (8, 3)
 LSH_DEDUP = (12, 3)
 LSH_HI = (16, 8)
+#: embedding near-dup cosine thresholds: the low one every verification
+#: fixture and ``dedup_semantic_clusters`` use, the high one of the
+#: ``*_hi`` scale paths
+DEDUP_COS_LO = 0.4
+DEDUP_COS_HI = 0.8
 #: IVF coarse quantizer: cells, cells probed per query; KMEANS_ITERS is
 #: the Lloyd iteration count of every trainer (IVF, PQ, SemDeDup)
 IVF_CLUSTERS = 16
@@ -186,12 +191,11 @@ def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
     k: int = ANN_K,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact cosine top-k: broadcast the query set, score every
-    candidate, rank per query. Returns (query_id, neighbor_id, cosine,
-    rank). Deterministic: rank ties broken by neighbor id.
+    """Exact cosine top-k over ``(vec_id, embedding)`` rows: broadcast
+    the query set, score every candidate, rank per query. Returns
+    (query_id, neighbor_id, cosine, rank). Deterministic: rank ties
+    broken by neighbor id.
 
     The candidate side is spread (functions.spread): a single small
     parquet file reads as one split, which serialized every
@@ -203,14 +207,14 @@ def brute_force_topk(
     # projections as server-parsed SQL strings (r14): the lambda-fold
     # Column builders cost ~700 py4j round trips per build here
     q = queries.selectExpr(
-        f"`{id_col}` AS query_id",
-        f"`{vec_col}` AS q_vec",
-        f"{l2_norm_sql(f'`{vec_col}`')} AS q_nrm",
+        "`vec_id` AS query_id",
+        "`embedding` AS q_vec",
+        f"{l2_norm_sql('`embedding`')} AS q_nrm",
     )
     c = vectors.selectExpr(
-        f"`{id_col}` AS neighbor_id",
-        f"`{vec_col}` AS c_vec",
-        f"{l2_norm_sql(f'`{vec_col}`')} AS c_nrm",
+        "`vec_id` AS neighbor_id",
+        "`embedding` AS c_vec",
+        f"{l2_norm_sql('`embedding`')} AS c_nrm",
     )
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -497,11 +501,11 @@ ARROW_ASSIGN_MIN_K = 64
 
 
 def assign_to_centroid(
-    vectors: DataFrame, centroids: list[list[float]], vec_col: str = "embedding"
+    vectors: DataFrame, centroids: list[list[float]]
 ) -> DataFrame:
-    """Add ``cluster_id`` = argmin squared-L2 distance to the centroid
-    literals. Pure expression: per row, a fold over the (small)
-    centroid array — no join, no shuffle. Ties resolve to the lowest
+    """Add ``cluster_id`` = argmin squared-L2 distance of ``embedding``
+    to the centroid literals. Pure expression: per row, a fold over the
+    (small) centroid array — no join, no shuffle. Ties resolve to the lowest
     centroid index (keep-first-strict-min), matching the oracle's
     ORDER BY (d, cid).
 
@@ -517,15 +521,15 @@ def assign_to_centroid(
     :func:`assign_to_centroid_arrow` — the literal expression does not
     survive corpus-adaptive cell counts (see the constant's note)."""
     if len(centroids) >= ARROW_ASSIGN_MIN_K:
-        return assign_to_centroid_arrow(vectors, centroids, vec_col)
-    dvec = f"transform({vec_col}, x -> CAST(x AS DOUBLE))"
+        return assign_to_centroid_arrow(vectors, centroids)
+    dvec = "transform(embedding, x -> CAST(x AS DOUBLE))"
     return vectors.withColumn(
         "cluster_id", F.expr(_argmin_code_sql(dvec, centroids))
     )
 
 
 def assign_to_centroid_arrow(
-    vectors: DataFrame, centroids: list[list[float]], vec_col: str = "embedding"
+    vectors: DataFrame, centroids: list[list[float]]
 ) -> DataFrame:
     """Large-k assignment the way a native engine does it: per Arrow
     batch, ONE float64 BLAS matmul scores all centroids
@@ -550,7 +554,7 @@ def assign_to_centroid_arrow(
 
     def run(batches):
         for pdf in batches:
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             ids = np.empty(len(X), dtype=np.int32)
             for lo in range(0, len(X), 4096):
                 xb = X[lo : lo + 4096]

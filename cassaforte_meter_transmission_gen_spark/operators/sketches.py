@@ -44,30 +44,30 @@ def _cms_col_sql(row: int, key_sql: str, width: int) -> str:
     return f"CAST({h} % {width} AS INT)"
 
 
+def _cms_stack_sql(key_col: str, width: int) -> str:
+    """The key's ``CMS_DEPTH`` cells as a ``stack(...) AS (r, c)``."""
+    from ..functions.sqltext import safe_ident
+
+    key_col = safe_ident(key_col)  # spliced into generated SQL
+    cells = ", ".join(
+        f"{r}, {_cms_col_sql(r, key_col, width)}" for r in range(CMS_DEPTH)
+    )
+    return f"stack({CMS_DEPTH}, {cells}) AS (r, c)"
+
+
 def cms_build(
     df: DataFrame,
     key_col: str,
-    depth: int = CMS_DEPTH,
     width: int = CMS_WIDTH,
     group_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Sketch the frequencies of ``key_col``: one pass, one stack into
     (r, c) cells, one grouped count — the shuffle carries at most
-    depth·width rows per task thanks to partial aggregation. With
+    CMS_DEPTH·width rows per task thanks to partial aggregation. With
     ``group_cols`` (e.g. a day column) it emits one grid per group:
     the sketch-rollup-table layout."""
-    from ..functions.sqltext import safe_ident
-
-    key_col = safe_ident(key_col)  # spliced into generated SQL
-    stack = (
-        f"stack({depth}, "
-        + ", ".join(
-            f"{r}, {_cms_col_sql(r, key_col, width)}" for r in range(depth)
-        )
-        + ") AS (r, c)"
-    )
     return (
-        df.selectExpr(*group_cols, stack)
+        df.selectExpr(*group_cols, _cms_stack_sql(key_col, width))
         .groupBy(*group_cols, "r", "c")
         .agg(F.count("*").cast("long").alias("cnt"))
     )
@@ -87,26 +87,15 @@ def cms_estimate(
     grid: DataFrame,
     keys: DataFrame,
     key_col: str,
-    depth: int = CMS_DEPTH,
     width: int = CMS_WIDTH,
 ) -> DataFrame:
     """Point-estimate each key in ``keys`` (all its columns are carried
-    through): probe the key's ``depth`` cells with one left join on
-    (r, c) — the grid side is at most depth·width rows, so Spark
+    through): probe the key's ``CMS_DEPTH`` cells with one left join on
+    (r, c) — the grid side is at most CMS_DEPTH·width rows, so Spark
     broadcasts it — and take the min counter (0 for a never-seen key).
     Output: keys' columns + ``cms_estimate``."""
-    from ..functions.sqltext import safe_ident
-
-    key_col = safe_ident(key_col)  # spliced into generated SQL
     carry = list(keys.columns)
-    stack = (
-        f"stack({depth}, "
-        + ", ".join(
-            f"{r}, {_cms_col_sql(r, key_col, width)}" for r in range(depth)
-        )
-        + ") AS (r, c)"
-    )
-    probes = keys.selectExpr(*carry, stack)
+    probes = keys.selectExpr(*carry, _cms_stack_sql(key_col, width))
     return (
         probes.join(F.broadcast(grid), ["r", "c"], "left")
         .groupBy(*carry)
@@ -148,10 +137,10 @@ def kmv_sketch(df: DataFrame, key_sql: str, k: int = KMV_K) -> DataFrame:
     return df.select(h.alias("h")).distinct().orderBy("h").limit(k)
 
 
-def kmv_merge(sketches: DataFrame, k: int = KMV_K) -> DataFrame:
+def kmv_merge(sketches: DataFrame) -> DataFrame:
     """Union sketch from a stack of per-slice sketches (column ``h``):
-    dedupe and re-take the k smallest."""
-    return sketches.distinct().orderBy("h").limit(k)
+    dedupe and re-take the ``KMV_K`` smallest."""
+    return sketches.distinct().orderBy("h").limit(KMV_K)
 
 
 def kmv_estimate_col(n_col, max_h_col, k: int = KMV_K):

@@ -26,7 +26,6 @@ def salted_join(
     on: str,
     n_salts: int = 8,
     salt_by: str | None = None,
-    how: str = "inner",
 ) -> DataFrame:
     """Equi-join ``large ⋈ small`` on column ``on`` with the large side
     salted ``n_salts`` ways. ``salt_by`` names a large-side column to
@@ -43,5 +42,5 @@ def salted_join(
             small.sparkSession.range(n_salts).select(F.col("id").cast("int").alias("_salt"))
         )
     )
-    out = salted.join(replicated, [on, "_salt"], how)
+    out = salted.join(replicated, [on, "_salt"])
     return out.drop("_salt")

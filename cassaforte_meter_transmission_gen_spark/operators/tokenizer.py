@@ -55,11 +55,12 @@ BPE_MERGES_SCHEMA = (
 )
 
 
-def bpe_word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """The corpus-collapsing pass: whitespace words with exact corpus
-    frequencies. The ONLY full-corpus scan in BPE training."""
+def bpe_word_counts(docs: DataFrame) -> DataFrame:
+    """The corpus-collapsing pass: whitespace words of ``text`` with
+    exact corpus frequencies. The ONLY full-corpus scan in BPE
+    training."""
     return (
-        docs.select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
+        docs.select(F.explode(F.split(F.col("text"), " ")).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count("*").cast("long").alias("wcount"))
@@ -121,7 +122,7 @@ def _merge_pair(p: DataFrame, l: str, r: str) -> DataFrame:
 
 
 def _train(
-    docs: DataFrame, n_merges: int, text_col: str, cache: bool
+    docs: DataFrame, n_merges: int, cache: bool
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame, list[DataFrame]]:
     """The training loop: returns (adopted merges, the symbol table
     AFTER applying all of them, the persisted frames if ``cache``).
@@ -130,7 +131,7 @@ def _train(
     lineage (fine for small merge counts — each argmax re-derives from
     the vocab-sized s0, and the caller gets a cache-free frame)."""
     wword = Window.partitionBy("word").orderBy("pos")
-    cur = _symbol_rows(bpe_word_counts(docs, text_col))
+    cur = _symbol_rows(bpe_word_counts(docs))
     cached: list[DataFrame] = []
     merges: list[tuple[int, str, str, int]] = []
     for it in range(n_merges):
@@ -157,7 +158,6 @@ def _train(
 def bpe_train(
     docs: DataFrame,
     n_merges: int = BPE_N_MERGES,
-    text_col: str = "text",
 ) -> DataFrame:
     """Learn the first ``n_merges`` BPE merge rules from the corpus.
     Returns (merge_rank, left_sym, right_sym, pair_count) — rank is
@@ -165,7 +165,7 @@ def bpe_train(
     adoption time. Ties break deterministically on (count DESC,
     left_sym, right_sym) in binary string order, identically in Spark
     and the generated DuckDB oracle."""
-    merges, _, cached = _train(docs, n_merges, text_col, cache=True)
+    merges, _, cached = _train(docs, n_merges, cache=True)
     out = docs.sparkSession.createDataFrame(merges, schema=BPE_MERGES_SCHEMA)
     for c in cached:  # the result is driver-local: no lineage to free
         c.unpersist()
@@ -175,7 +175,6 @@ def bpe_train(
 def bpe_vocab(
     docs: DataFrame,
     n_merges: int = BPE_N_MERGES,
-    text_col: str = "text",
 ) -> DataFrame:
     """The encode side of training: corpus token statistics under the
     learned merges. Tokenizing a word depends only on the word, so the
@@ -184,7 +183,7 @@ def bpe_vocab(
     corpus-weighted occurrence count and the number of distinct words
     containing it. Built cache-free (pure lineage) so the returned
     frame is safe to evaluate any time with no pinned blocks."""
-    _, final, _ = _train(docs, n_merges, text_col, cache=False)
+    _, final, _ = _train(docs, n_merges, cache=False)
     return final.groupBy("sym").agg(
         F.sum("wcount").alias("token_count"),
         F.countDistinct("word").alias("n_words"),
@@ -219,11 +218,11 @@ UNIGRAM_MAX_WORD = 24
 UNIGRAM_INF = 1 << 60
 
 
-def unigram_words(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def unigram_words(docs: DataFrame) -> DataFrame:
     """Corpus collapsed once to (word, wcount), capped at
     UNIGRAM_MAX_WORD chars — the only full-corpus pass in unigram
     training; every EM round runs on this distinct-word table."""
-    return bpe_word_counts(docs, text_col).filter(
+    return bpe_word_counts(docs).filter(
         F.length("word") <= UNIGRAM_MAX_WORD
     )
 
@@ -351,7 +350,6 @@ def unigram_estep_counts(words: DataFrame, nll_rows: list) -> DataFrame:
 def unigram_lm_train(
     docs: DataFrame,
     em_rounds: int = UNIGRAM_EM_ROUNDS,
-    text_col: str = "text",
 ) -> DataFrame:
     """Unigram-LM tokenizer training (the SentencePiece EM shape,
     fixed seed vocab, +1-smoothed M-step, no pruning — pruning is a
@@ -372,7 +370,7 @@ def unigram_lm_train(
     """
     if em_rounds < 1:
         raise ValueError("em_rounds must be >= 1")
-    words = unigram_words(docs, text_col).localCheckpoint(eager=True)
+    words = unigram_words(docs).localCheckpoint(eager=True)
     vocab = unigram_seed_vocab(words).localCheckpoint(eager=True)
     nll_rows = unigram_piece_nll(vocab).collect()
     counts = None
@@ -398,12 +396,11 @@ def unigram_lm_train(
 def bpe_encode_doc_lengths(
     docs: DataFrame,
     n_merges: int = BPE_N_MERGES,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """The ENCODE step a pipeline runs after training: token counts per
-    document under the learned merges — the number a token-budget
-    planner (sequence packing, context-window chunking, cost
+    document (``doc_id``, ``text``) under the learned merges — the
+    number a token-budget planner (sequence packing, context-window
+    chunking, cost
     estimation) actually consumes. Tokenizing a word depends only on
     the word, so encoding never touches the token stream twice: the
     corpus-collapsed symbol table after the final merge gives each
@@ -414,22 +411,22 @@ def bpe_encode_doc_lengths(
     is; AQE decides), the probe side is one pass over the corpus.
     Float-free throughout except the final pieces-per-word ratio
     (one IEEE division of two exact integers — deterministic)."""
-    _, final, _ = _train(docs, n_merges, text_col, cache=False)
+    _, final, _ = _train(docs, n_merges, cache=False)
     wlen = final.groupBy("word").agg(
         F.count("*").cast("long").alias("n_pieces")
     )
     words = docs.select(
-        id_col, F.explode(F.expr(tokens_sql(f"`{text_col}`"))).alias("word")
+        "doc_id", F.explode(F.expr(tokens_sql("`text`"))).alias("word")
     ).filter(F.col("word") != "")
     return (
         words.join(wlen, "word")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_words"),
             F.sum("n_pieces").cast("long").alias("n_bpe_pieces"),
         )
         .selectExpr(
-            id_col,
+            "doc_id",
             "n_words",
             "n_bpe_pieces",
             "CAST(n_bpe_pieces AS DOUBLE) / CAST(n_words AS DOUBLE)"

@@ -803,7 +803,7 @@ def streaming_enrich_join_user_profile(spark: SparkSession, sf_dir: str) -> Data
     return run_bounded_enrich_join(spark, sf_dir)
 
 
-def _ewma_case_sql(col: str = "rn") -> tuple[str, int]:
+def _ewma_case_sql() -> tuple[str, int]:
     """Shared weight table for the trailing EWMA: decay 0.9 over the
     last 8 events as EXACT integer coefficients on the common
     denominator 10^7 — c_k = 9^k · 10^(7−k) for lag k (rn = k+1).
@@ -814,7 +814,7 @@ def _ewma_case_sql(col: str = "rn") -> tuple[str, int]:
     case = (
         "CASE "
         + " ".join(
-            f"WHEN {col} = {k + 1} THEN {c}" for k, c in enumerate(coeffs)
+            f"WHEN rn = {k + 1} THEN {c}" for k, c in enumerate(coeffs)
         )
         + " ELSE 0 END"
     )

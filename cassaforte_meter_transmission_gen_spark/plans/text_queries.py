@@ -301,11 +301,12 @@ def text_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- MinHash + LSH near-dup, fully oracle-gated ---
 
-def _minhash_sql(threshold: float = 0.7, split: int | None = None) -> str:
-    """Symmetric pairs when ``split`` is None; with ``split`` set, the
-    INCREMENTAL form — corpus (doc_id < split) × increment
-    (doc_id >= split) candidates only, output (new_doc, corpus_doc,
-    jaccard) — mirroring operators.dedup.minhash_incremental_duplicates."""
+def _minhash_sql(split: int | None = None) -> str:
+    """Pairs at Jaccard >= 0.7: symmetric when ``split`` is None; with
+    ``split`` set, the INCREMENTAL form — corpus (doc_id < split) ×
+    increment (doc_id >= split) candidates only, output (new_doc,
+    corpus_doc, jaccard) — mirroring
+    operators.dedup.minhash_incremental_duplicates."""
     p = MINHASH_PRIME
     mins = ",\n         ".join(
         f"MIN(({MINHASH_A[i]} * h + {MINHASH_B[i]}) % {p}) AS m{i}"
@@ -356,7 +357,7 @@ SELECT {"doc_b AS new_doc, doc_a AS corpus_doc" if split is not None
   FROM cand
   JOIN sh sa ON sa.doc_id = cand.doc_a
   JOIN sh sb ON sb.doc_id = cand.doc_b
-) v WHERE jaccard >= {threshold}
+) v WHERE jaccard >= 0.7
 """
 
 
@@ -1560,7 +1561,7 @@ def _bm25_ranked_ctes(terms: list[str]) -> str:
     columns instead of literals."""
     from ..functions.detmath import det_ln_ctes
     from ..functions.sqltext import sql_str_lit
-    from ..operators.retrieval import BM25_B, BM25_K1, bm25_score_sql
+    from ..operators.retrieval import bm25_score_sql
     half = "CAST('0.5' AS DOUBLE)"
     one = "CAST('1.0' AS DOUBLE)"
     tf_cols = ",\n         ".join(
@@ -1585,7 +1586,7 @@ def _bm25_ranked_ctes(terms: list[str]) -> str:
     )
     idf_refs = [f"i{i}l.idf_{i}" for i in range(len(terms))]
     idf_joins = " ".join(f"CROSS JOIN i{i}l" for i in range(len(terms)))
-    score = bm25_score_sql(idf_refs, "av.avgdl", BM25_K1, BM25_B)
+    score = bm25_score_sql(idf_refs, "av.avgdl")
     return f"""dtf AS (
   SELECT doc_id,
          CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
@@ -1655,11 +1656,7 @@ RRF_K_EACH = 50
 RRF_QUERY_ID = 0
 
 
-def text_hybrid_rrf_topk_sql(
-    terms: list[str] | None = None,
-    k: int = RRF_TOPK,
-    k_each: int = RRF_K_EACH,
-) -> str:
+def text_hybrid_rrf_topk_sql() -> str:
     """Oracle for the hybrid query: the SAME BM25 ranked chain the
     standalone oracle uses (:func:`_bm25_ranked_ctes`), an exact-cosine
     ranking in the sequential-fold dialect of the ann_bruteforce
@@ -1669,13 +1666,12 @@ def text_hybrid_rrf_topk_sql(
     from ..operators.retrieval import RRF_C
     from .vector_oracles import DOT, NORM
 
-    terms = BM25_TERMS if terms is None else terms
     dot = DOT.format(a="qv", b="cv")
     nq = NORM.format(v="qv")
     nc = NORM.format(v="cv")
     return f"""
-WITH {_bm25_ranked_ctes(terms)},
-lexr AS (SELECT doc_id, rank AS lex_rank FROM ranked WHERE rank <= {k_each}),
+WITH {_bm25_ranked_ctes(BM25_TERMS)},
+lexr AS (SELECT doc_id, rank AS lex_rank FROM ranked WHERE rank <= {RRF_K_EACH}),
 q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = {RRF_QUERY_ID}),
 sems AS (
   SELECT vec_id AS doc_id, embedding AS cv, qv
@@ -1689,7 +1685,7 @@ semranked AS (
            AS sem_rank
   FROM semscored
 ),
-semr AS (SELECT doc_id, sem_rank FROM semranked WHERE sem_rank <= {k_each}),
+semr AS (SELECT doc_id, sem_rank FROM semranked WHERE sem_rank <= {RRF_K_EACH}),
 fused AS (
   SELECT COALESCE(l.doc_id, s.doc_id) AS doc_id,
          (COALESCE(CAST('1.0' AS DOUBLE)
@@ -1707,7 +1703,7 @@ final AS (
   FROM fused
 )
 SELECT doc_id, rrf_score, lex_rank, sem_rank, rank
-FROM final WHERE rank <= {k}"""
+FROM final WHERE rank <= {RRF_TOPK}"""
 
 
 @register(
@@ -1813,13 +1809,13 @@ s{i + 1} AS MATERIALIZED (
     return "".join(parts)
 
 
-def text_bpe_train_sql(n_merges: int | None = None) -> str:
+def text_bpe_train_sql() -> str:
     """Oracle for operators.tokenizer.bpe_train: the shared unrolled
     chain (:func:`_bpe_ctes`), emitting each iteration's adopted
     argmax row b{i} with its 1-based adoption rank."""
     from ..operators.tokenizer import BPE_N_MERGES
 
-    n = BPE_N_MERGES if n_merges is None else n_merges
+    n = BPE_N_MERGES
     union = "\nUNION ALL\n".join(
         f"SELECT CAST({i + 1} AS INT) AS merge_rank, l AS left_sym,"
         f" r AS right_sym, cnt AS pair_count FROM b{i}"
@@ -1828,12 +1824,12 @@ def text_bpe_train_sql(n_merges: int | None = None) -> str:
     return _bpe_ctes(n) + "\n" + union
 
 
-def text_bpe_vocab_sql(n_merges: int | None = None) -> str:
+def text_bpe_vocab_sql() -> str:
     """Oracle for operators.tokenizer.bpe_vocab: the shared unrolled
     chain's final symbol table s{n}, aggregated per symbol."""
     from ..operators.tokenizer import BPE_N_MERGES
 
-    n = BPE_N_MERGES if n_merges is None else n_merges
+    n = BPE_N_MERGES
     return f"""{_bpe_ctes(n)}
 SELECT sym, CAST(SUM(wcount) AS BIGINT) AS token_count,
        CAST(COUNT(DISTINCT word) AS BIGINT) AS n_words
@@ -4328,7 +4324,7 @@ def nb_confusion_from_counts(
     )
 
 
-def text_bpe_encode_sql(n_merges: int | None = None) -> str:
+def text_bpe_encode_sql() -> str:
     """Oracle for operators.tokenizer.bpe_encode_doc_lengths: the
     shared unrolled training chain's final symbol table s{n} collapsed
     to per-word piece counts, joined back to the per-document word
@@ -4336,7 +4332,7 @@ def text_bpe_encode_sql(n_merges: int | None = None) -> str:
     that already gates training and vocab."""
     from ..operators.tokenizer import BPE_N_MERGES
 
-    n = BPE_N_MERGES if n_merges is None else n_merges
+    n = BPE_N_MERGES
     return f"""{_bpe_ctes(n)},
 wlen AS MATERIALIZED (
   SELECT word, CAST(COUNT(*) AS BIGINT) AS n_pieces

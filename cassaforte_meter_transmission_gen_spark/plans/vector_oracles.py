@@ -39,6 +39,8 @@ from ..functions.sqltext import sql_double_lit
 from ..operators.similarity import (
     ANN_K,
     ANN_QUERIES,
+    DEDUP_COS_HI,
+    DEDUP_COS_LO,
     INT8_EPS,
     INT8_RERANK,
     IVF_CLUSTERS,
@@ -171,7 +173,7 @@ SELECT dup_a, dup_b, {cos} AS cosine
 FROM cand
 JOIN ea ON ea.vec_id = dup_a
 JOIN eb ON eb.vec_id = dup_b
-WHERE {cos} >= 0.4
+WHERE {cos} >= {DEDUP_COS_LO}
 """
 
 
@@ -202,7 +204,7 @@ nm AS (
   FROM cand
   JOIN ea ON ea.vec_id = dup_a
   JOIN eb ON eb.vec_id = dup_b
-  WHERE {cos} >= 0.8
+  WHERE {cos} >= {DEDUP_COS_HI}
 )
 SELECT n_candidates, n_pairs,
        CAST(n_candidates AS DOUBLE) / CAST(n_pairs AS DOUBLE)
@@ -413,7 +415,7 @@ scored AS (
 
 
 @_materialized
-def dedup_semantic_clusters_sql(threshold: float = 0.4) -> str:
+def dedup_semantic_clusters_sql(threshold: float) -> str:
     """Oracle for operators.dedup.semantic_duplicates_clustered: the
     k-means chain (:func:`_kmeans_chain`), full-table assignment, then
     within-cluster (a < b) pairs verified with the exact sequential-fold

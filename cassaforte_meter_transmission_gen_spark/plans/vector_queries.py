@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 from ..operators.similarity import (
     ANN_K,
     ANN_QUERIES,
+    DEDUP_COS_HI,
+    DEDUP_COS_LO,
     IVF_CLUSTERS,
     IVFPQ_SUBSPACES,
     KMEANS_SCALE,
@@ -133,7 +135,7 @@ SELECT dup_a, dup_b,
          / ({NORM.format(v='va')} * {NORM.format(v='vb')}) AS cosine
 FROM a JOIN b ON dup_a < dup_b
 WHERE {DOT.format(a='va', b='vb')}
-        / ({NORM.format(v='va')} * {NORM.format(v='vb')}) >= 0.4
+        / ({NORM.format(v='va')} * {NORM.format(v='vb')}) >= {DEDUP_COS_LO}
 """,
     tags=("dedup", "vector", "cosine"),
 )
@@ -154,7 +156,8 @@ def dedup_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import embedding_cosine_duplicates
 
     return embedding_cosine_duplicates(
-        _emb(spark, sf_dir).filter(F.col("vec_id") < 200), threshold=0.4
+        _emb(spark, sf_dir).filter(F.col("vec_id") < 200),
+        threshold=DEDUP_COS_LO,
     )
 
 
@@ -188,7 +191,7 @@ def dedup_embedding_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         _emb(spark, sf_dir).filter(
             F.col("vec_id") < vector_oracles.EMB_LSH_VERIFY_BOUND
         ),
-        threshold=0.4,
+        threshold=DEDUP_COS_LO,
     )
 
 
@@ -212,7 +215,9 @@ def vector_dedup_cosine_lsh_hi(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.4-threshold twin."""
     from ..operators.dedup import embedding_cosine_lsh_stats
 
-    return embedding_cosine_lsh_stats(_emb(spark, sf_dir), threshold=0.8)
+    return embedding_cosine_lsh_stats(
+        _emb(spark, sf_dir), threshold=DEDUP_COS_HI
+    )
 
 
 @register(
@@ -352,7 +357,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_semantic_clusters",
-    oracle=vector_oracles.dedup_semantic_clusters_sql(),
+    oracle=vector_oracles.dedup_semantic_clusters_sql(DEDUP_COS_LO),
     tags=("dedup", "vector", "semantic", "kmeans", "scale"),
 )
 def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -383,9 +388,11 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = semantic_n_clusters(e.count())
     if k == IVF_CLUSTERS:  # parity configuration — shared persisted quantizer
         cents = trained_ivf_centroids(spark, sf_dir)
-        return semantic_duplicates_clustered(e, threshold=0.4, centroids=cents)
+        return semantic_duplicates_clustered(
+            e, threshold=DEDUP_COS_LO, centroids=cents
+        )
     return semantic_duplicates_clustered(
-        e, threshold=0.4, n_clusters=k, train_sample_denom="auto"
+        e, threshold=DEDUP_COS_LO, n_clusters=k, train_sample_denom="auto"
     )
 
 
@@ -1010,7 +1017,7 @@ def vector_knn_label_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "vector_dedup_cosine_cells_hi",
-    oracle=vector_oracles.dedup_semantic_clusters_sql(threshold=0.8),
+    oracle=vector_oracles.dedup_semantic_clusters_sql(DEDUP_COS_HI),
     tags=("dedup", "vector", "semantic", "kmeans", "scale"),
 )
 def vector_dedup_cosine_cells_hi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1041,7 +1048,9 @@ def vector_dedup_cosine_cells_hi(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = semantic_n_clusters(e.count())
     if k == IVF_CLUSTERS:  # parity configuration — shared persisted quantizer
         cents = trained_ivf_centroids(spark, sf_dir)
-        return semantic_duplicates_clustered(e, threshold=0.8, centroids=cents)
+        return semantic_duplicates_clustered(
+            e, threshold=DEDUP_COS_HI, centroids=cents
+        )
     return semantic_duplicates_clustered(
-        e, threshold=0.8, n_clusters=k, train_sample_denom="auto"
+        e, threshold=DEDUP_COS_HI, n_clusters=k, train_sample_denom="auto"
     )

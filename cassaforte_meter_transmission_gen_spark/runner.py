@@ -32,7 +32,11 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .functions.hashing import host_hash
 from .operators.ingest import TABLES
-from .streaming.pipeline import rate_transmission_stream, streaming_ingest_batch_fn
+from .streaming.pipeline import (
+    RETAIN_VERSIONS,
+    rate_transmission_stream,
+    streaming_ingest_batch_fn,
+)
 
 #: reference default: 2 meters (core.clj:18)
 DEFAULT_NUM_METERS = 2
@@ -76,7 +80,7 @@ def run_unbounded(
     start_said: int | None = None,
     checkpoint_dir: str | None = None,
     trigger_seconds: float = 1.0,
-    retain_versions: int = 4,
+    retain_versions: int = RETAIN_VERSIONS,
     compact_every: int | None = 60,
 ) -> StreamingQuery:
     """Start the unbounded five-table pipeline; returns the running

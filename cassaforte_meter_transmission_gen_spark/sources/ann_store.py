@@ -281,7 +281,7 @@ def trained_ivfpq_index(spark: SparkSession, sf_dir: str):
 
     def build():
         emb = load_table(spark, sf_dir, "embeddings")
-        assigned = assign_to_centroid(emb, cents, "embedding").select(
+        assigned = assign_to_centroid(emb, cents).select(
             "vec_id", "cluster_id", "embedding"
         )
         return pq_encode(assigned, books).join(

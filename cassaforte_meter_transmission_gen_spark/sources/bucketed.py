@@ -30,6 +30,9 @@ from pyspark.sql import SparkSession
 from ..schemas import load_table
 from .ann_store import _corpus_fingerprint, _store_root
 
+#: buckets per bucketed copy (part of its catalog name)
+N_BUCKETS = 8
+
 
 def _bucket_store_root() -> str:
     # sibling of the ANN store, same env-override discipline
@@ -45,10 +48,9 @@ def bucketed_table(
     sf_dir: str,
     table: str,
     key: str,
-    n_buckets: int = 8,
 ) -> str:
     """Ensure a catalog table for ``table`` bucketed AND sorted by
-    ``key`` into ``n_buckets``; return its catalog name.
+    ``key`` into ``N_BUCKETS``; return its catalog name.
 
     Write-once: the bucketed copy is keyed on the corpus fingerprint, so
     a regenerated corpus triggers a rewrite and repeated runs in one
@@ -56,7 +58,7 @@ def bucketed_table(
     once — the train-once/serve-many split, applied to storage.
     """
     fp = _corpus_fingerprint(sf_dir, table)
-    name = f"bkt_{table}_{key}_{n_buckets}_{fp}"
+    name = f"bkt_{table}_{key}_{N_BUCKETS}_{fp}"
     if spark.catalog.tableExists(name):
         return name
     path = os.path.join(_bucket_store_root(), name)
@@ -69,12 +71,12 @@ def bucketed_table(
         spark.sql(
             f"CREATE TABLE `{name}` ({cols}) USING parquet "
             f"CLUSTERED BY (`{key}`) SORTED BY (`{key}`) "
-            f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
+            f"INTO {N_BUCKETS} BUCKETS LOCATION '{path}'"
         )
         return name
     (
         df.write.format("parquet")
-        .bucketBy(n_buckets, key)
+        .bucketBy(N_BUCKETS, key)
         .sortBy(key)
         .option("path", path)
         .mode("overwrite")

@@ -33,15 +33,13 @@ from pyspark.sql import functions as F
 def write_time_partitioned(
     df: DataFrame,
     path: str,
-    ts_col: str = "datetime",
     said_buckets: int | None = None,
-    mode: str = "overwrite",
     clustered: bool = False,
-    day_splits: int = 16,
 ) -> None:
-    """Write parquet partitioned by event day (and optionally a said
-    hash bucket), rows within each file sorted by (said, ts) so
-    parquet row-group min/max stats prune time ranges inside a day.
+    """Overwrite ``path`` with parquet partitioned by event day of
+    ``datetime`` (and optionally a said hash bucket), rows within each
+    file sorted by (said, datetime) so parquet row-group min/max stats
+    prune time ranges inside a day.
 
     ``clustered=True`` declares the input already clustered by
     (said, ts) within its partitions (true for the generator, whose
@@ -49,26 +47,26 @@ def write_time_partitioned(
     from this layout): the write then needs NO shuffle — every input
     task streams its slice straight into the day directories, fully
     parallel. With ``clustered=False`` rows are hash-distributed over
-    (day[, bucket], said) so a hot day spreads across ``day_splits``
-    tasks instead of collapsing into one writer (the naive
+    (day[, bucket], said) so a hot day spreads across 16 tasks instead
+    of collapsing into one writer (the naive
     repartition-by-directory-column plan serializes a whole day
     through a single task — at 100 TB, one executor per day).
     Deliberately NOT repartitionByRange: its range-bound sampling pass
     evaluates the input twice, which doubles generation/decode cost of
     a wide array column for zero layout benefit here."""
-    out = df.withColumn("p_day", F.to_date(F.col(ts_col)))
+    out = df.withColumn("p_day", F.to_date(F.col("datetime")))
     partition_cols = ["p_day"]
     if said_buckets:
         out = out.withColumn("p_said_bucket", F.pmod(F.hash("said"), F.lit(said_buckets)))
         partition_cols.append("p_said_bucket")
     if not clustered:
-        split = F.pmod(F.hash("said"), F.lit(day_splits))
+        split = F.pmod(F.hash("said"), F.lit(16))
         out = (
             out.repartition(*[F.col(c) for c in partition_cols], split)
-            .sortWithinPartitions("said", ts_col)
+            .sortWithinPartitions("said", "datetime")
         )
     (
-        out.write.mode(mode)
+        out.write.mode("overwrite")
         .partitionBy(*partition_cols)
         .parquet(path)
     )
@@ -80,7 +78,7 @@ def read_time_partitioned(spark: SparkSession, path: str) -> DataFrame:
 
     NOTE (measured, not assumed): plain parquet carries no
     generated-column metadata, so Catalyst can NOT derive a ``p_day``
-    bound from a ``ts_col`` range predicate — a query filtering only on
+    bound from a ``datetime`` range predicate — a query filtering only on
     the data column scans every partition (scan metrics:
     numPartitions == all). Use :func:`read_meter_time_range` for the
     flagship read; it derives the partition predicates itself."""
@@ -94,7 +92,6 @@ def read_meter_time_range(
     t1_epoch: int,
     meters: list[int] | None = None,
     said_buckets: int | None = None,
-    ts_col: str = "datetime",
 ) -> DataFrame:
     """The reference's flagship read — "meters S over [t0, t1)"
     (setup_and_notes.txt:46) — over the :func:`write_time_partitioned`
@@ -148,8 +145,8 @@ def read_meter_time_range(
     days = [d0 + _dt.timedelta(days=i) for i in range((d1 - d0).days + 1)]
     df = df.filter(F.col("p_day").isin(days))
     df = df.filter(
-        (F.col(ts_col) >= F.timestamp_seconds(F.lit(t0_epoch)))
-        & (F.col(ts_col) < F.timestamp_seconds(F.lit(t1_epoch)))
+        (F.col("datetime") >= F.timestamp_seconds(F.lit(t0_epoch)))
+        & (F.col("datetime") < F.timestamp_seconds(F.lit(t1_epoch)))
     )
     if meters is not None:
         df = df.filter(F.col("said").isin(meters))
@@ -164,16 +161,15 @@ def write_bucketed(
     df: DataFrame,
     table: str,
     n_buckets: int = 32,
-    key: str = "said",
     sort: str = "datetime",
-    mode: str = "overwrite",
 ) -> None:
-    """Persist as a bucketed+sorted managed table: the one-time shuffle
-    that makes every later equi-join/aggregation on ``key``
-    exchange-free (SortMergeJoin reads co-bucketed splits directly)."""
+    """Persist (overwrite) as a ``said``-bucketed, sorted managed table:
+    the one-time shuffle that makes every later equi-join/aggregation
+    on ``said`` exchange-free (SortMergeJoin reads co-bucketed splits
+    directly)."""
     (
-        df.write.mode(mode)
-        .bucketBy(n_buckets, key)
+        df.write.mode("overwrite")
+        .bucketBy(n_buckets, "said")
         .sortBy(sort)
         .format("parquet")
         .saveAsTable(table)
@@ -184,7 +180,6 @@ def write_rollup_tables_bucketed(
     rollups: dict[str, DataFrame],
     prefix: str,
     n_buckets: int = 32,
-    mode: str = "overwrite",
 ) -> dict[str, str]:
     """Persist the whole rollup chain (operators.rollups.rollup_chain)
     as said-bucketed, datetime-sorted tables ``<prefix>_<grain>`` — the
@@ -206,7 +201,7 @@ def write_rollup_tables_bucketed(
     names: dict[str, str] = {}
     for grain, df in rollups.items():
         table = f"{prefix}_{grain}"
-        write_bucketed(df, table, n_buckets=n_buckets, mode=mode)
+        write_bucketed(df, table, n_buckets=n_buckets)
         names[grain] = table
     return names
 
@@ -242,11 +237,10 @@ def write_zordered(
     col_b: str,
     bits: int = 16,
     n_files: int = 8,
-    mode: str = "overwrite",
-    parquet_block_bytes: int | None = None,
 ) -> None:
-    """Write parquet clustered on the Z-order curve of two dimensions —
-    the multi-dimensional generalization of the (said, datetime) sort:
+    """Overwrite ``path`` with parquet clustered on the Z-order curve
+    of two dimensions — the multi-dimensional generalization of the
+    (said, datetime) sort:
 
     a file sorted by time alone packs EVERY meter into every row group,
     so a single-meter predicate prunes nothing; sorted by meter alone,
@@ -264,26 +258,23 @@ def write_zordered(
     write time — read-side pruning is free forever after, exactly the
     economics of the bucketed layout."""
     keyed = df.withColumn("__z", zorder_key(col_a, col_b, bits))
-    writer = (
+    (
         keyed.repartitionByRange(n_files, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
-        .write.mode(mode)
+        .write.mode("overwrite")
+        .parquet(path)
     )
-    if parquet_block_bytes:  # row-group granularity = pruning granularity
-        writer = writer.option("parquet.block.size", parquet_block_bytes)
-    writer.parquet(path)
 
 
 def write_ivf_partitioned(
     vectors: DataFrame,
     path: str,
     centroids: list[list[float]],
-    vec_col: str = "embedding",
-    mode: str = "overwrite",
 ) -> None:
-    """Persist an embedding table as an on-disk inverted file: directory
-    partitioned by nearest-centroid ``cluster_id`` (the IVF cell).
+    """Persist (overwrite) an embedding table as an on-disk inverted
+    file: directory partitioned by nearest-centroid ``cluster_id`` (the
+    IVF cell).
 
     This is the 100 TB form of operators.similarity.ivf_topk's pruning:
     instead of an equi-join filtering candidate ROWS by probed cell,
@@ -294,12 +285,12 @@ def write_ivf_partitioned(
     agree exactly."""
     from ..operators.similarity import assign_to_centroid
 
-    assigned = assign_to_centroid(vectors, centroids, vec_col)
+    assigned = assign_to_centroid(vectors, centroids)
     # one directory per cell; repartition by the partition column so a
     # hot cell writes from one task set, not every input task × cell
     (
         assigned.repartition("cluster_id")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("cluster_id")
         .parquet(path)
     )
@@ -315,7 +306,6 @@ def append_ivf_partitioned(
     new_vectors: DataFrame,
     path: str,
     centroids: list[list[float]],
-    vec_col: str = "embedding",
 ) -> None:
     """Grow an existing inverted-file layout with a new vector batch
     under the FIXED coarse quantizer — incremental index maintenance
@@ -331,7 +321,7 @@ def append_ivf_partitioned(
     only on the (fixed) centroid literals."""
     from ..operators.similarity import assign_to_centroid
 
-    assigned = assign_to_centroid(new_vectors, centroids, vec_col)
+    assigned = assign_to_centroid(new_vectors, centroids)
     (
         assigned.repartition("cluster_id")
         .write.mode("append")

@@ -40,15 +40,15 @@ from .meter_generator import (
 )
 
 
-def shared_tick_joules(sample_rate: int = SAMPLE_RATE) -> int:
+def shared_tick_joules() -> int:
     """Energy of the shared per-tick sample array — the same integer
-    ``floor(mean(first sample_rate of cycle(range 0 120)))`` the JVM
+    ``floor(mean(first SAMPLE_RATE of cycle(range 0 120)))`` the JVM
     plan computes in meter_generator.tick_joules_df (golden value 59
     for the fixture constants)."""
-    total = sum(float(i % SAW_PERIOD) for i in range(sample_rate))
+    total = sum(float(i % SAW_PERIOD) for i in range(SAMPLE_RATE))
     import math
 
-    return int(math.floor(total / sample_rate))
+    return int(math.floor(total / SAMPLE_RATE))
 
 
 class MeterPartition(InputPartition):

@@ -56,7 +56,7 @@ def sawtooth_watts() -> F.Column:
     )
 
 
-def tick_joules_df(spark: SparkSession, sample_rate: int = SAMPLE_RATE) -> DataFrame:
+def tick_joules_df(spark: SparkSession) -> DataFrame:
     """One-row DataFrame holding the energy of the shared per-tick
     sample array, computed honestly from the sawtooth in-plan — but
     ONCE, as a 15k-row aggregation, instead of once per meter-second.
@@ -74,8 +74,8 @@ def tick_joules_df(spark: SparkSession, sample_rate: int = SAMPLE_RATE) -> DataF
     # partition satisfies the final agg's AllTuples requirement
     # directly: no exchange, one task, same value (sum is exact — the
     # sawtooth doubles are integers far below 2^53).
-    return spark.range(0, sample_rate, 1, 1).agg(
-        F.floor(F.sum(saw) / F.lit(sample_rate)).cast("int").alias("joules")
+    return spark.range(0, SAMPLE_RATE, 1, 1).agg(
+        F.floor(F.sum(saw) / F.lit(SAMPLE_RATE)).cast("int").alias("joules")
     )
 
 

@@ -644,7 +644,6 @@ class SnapshotTable:
         tombstones: DataFrame,
         sid: int,
         key_cols: tuple[str, ...],
-        batch_hw=_CARRY,
     ) -> None:
         """MERGE-ON-READ delete: append ``tombstones`` (``bucket`` +
         the key columns) as DELETE FILES on the buckets they hash into
@@ -694,7 +693,6 @@ class SnapshotTable:
             )
         self._publish(
             sid, parent, bms,
-            batch_hw=batch_hw,
             delete_key=key,
             delete_schema=delete_schema,
         )
@@ -733,9 +731,7 @@ class SnapshotTable:
         spark: SparkSession,
         sid: int,
         max_files: int = 1,
-        buckets: list[int] | None = None,
         fold=None,
-        batch_hw=_CARRY,
         force: bool = False,
     ) -> list[int]:
         """SIZE-TIERED compaction: fold ONLY buckets whose file count
@@ -762,22 +758,17 @@ class SnapshotTable:
         man = self.manifest(parent) if parent is not None else {
             "buckets": {}, "deletes": {},
         }
-        if buckets is None:
-            todo = sorted(
-                int(b)
-                for b in set(man["buckets"]) | set(man["deletes"])
-                if len(man["buckets"].get(b) or [])
-                + len(man["deletes"].get(b) or [])
-                > max_files
-            )
-        else:
-            todo = sorted(buckets)
+        todo = sorted(
+            int(b)
+            for b in set(man["buckets"]) | set(man["deletes"])
+            if len(man["buckets"].get(b) or [])
+            + len(man["deletes"].get(b) or [])
+            > max_files
+        )
         if not todo:
             if force:
                 self._publish(
-                    sid, parent,
-                    self._parent_bucket_manifests(parent),
-                    batch_hw=batch_hw,
+                    sid, parent, self._parent_bucket_manifests(parent)
                 )
             return []
         state = self.read(spark, buckets=todo)
@@ -785,12 +776,7 @@ class SnapshotTable:
             state = fold(state)
         state = state.repartition("bucket").localCheckpoint()
         kept = {r[0] for r in state.select("bucket").distinct().collect()}
-        self.commit(
-            state,
-            sid,
-            emptied_buckets=sorted(set(todo) - kept),
-            batch_hw=batch_hw,
-        )
+        self.commit(state, sid, emptied_buckets=sorted(set(todo) - kept))
         return todo
 
     def compact(self, spark: SparkSession, sid: int, fold=None) -> None:

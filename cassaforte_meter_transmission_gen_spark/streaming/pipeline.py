@@ -63,12 +63,12 @@ snapshot id, not on the micro-batch id.
   a batch replayed after a crash before its marker rebuilds the same
   dir: it can never be applied twice (:func:`versioned_merge_fn`).
 - **Retention.** After each commit only the newest ``retain_versions``
-  (default 4) ``v=`` dirs and markers are kept; the append-only ingest
-  sink has no ``v=`` dirs and prunes markers only. The newest marker
-  alone carries the committed set, so pruning never widens a read. A
-  reader that resolved version N keeps a valid directory for
-  ``retain_versions - 1`` further commits (≈ that many trigger
-  intervals) — size it above the longest expected read.
+  (default :data:`RETAIN_VERSIONS`) ``v=`` dirs and markers are kept;
+  the append-only ingest sink has no ``v=`` dirs and prunes markers
+  only. The newest marker alone carries the committed set, so pruning
+  never widens a read. A reader that resolved version N keeps a valid
+  directory for ``retain_versions - 1`` further commits (≈ that many
+  trigger intervals) — size it above the longest expected read.
 - **Readers.** Only ``v=<hw>`` (:func:`_read_committed`) and, for the
   five ingest tables, the newest segment plus the batch dirs in
   (segment upto, hw] (:func:`read_stream_table`, which sums the grain
@@ -108,6 +108,13 @@ from ..operators.sketches import (
 from ..schemas import METER_SAMPLES_SECOND
 from ..sources.meter_generator import meter_samples_second
 
+#: default retention window: ``v=`` dirs and markers kept after each
+#: commit (the module docstring's retention rule)
+RETAIN_VERSIONS = 4
+#: default count of newest batch dirs a compaction leaves unfolded
+#: (reader-race margin, :func:`compact_stream_tables`)
+COMPACT_KEEP_BATCHES = 8
+
 
 def _committed_batches(commits_dir: str) -> list[int]:
     if not os.path.isdir(commits_dir):
@@ -126,7 +133,7 @@ def _commit(
     commits_dir: str,
     batch_id: int,
     version_dirs: list[str],
-    retain_versions: int = 4,
+    retain_versions: int = RETAIN_VERSIONS,
 ) -> None:
     """Publish the marker of ``batch_id`` (the commit point), then prune
     each of ``version_dirs`` and the markers to the newest
@@ -516,10 +523,10 @@ def _read_parts(spark: SparkSession, table: str, parts: list[str]) -> DataFrame:
 def streaming_ingest_batch_fn(
     paths: dict[str, str],
     commits_dir: str,
-    retain_versions: int = 4,
+    retain_versions: int = RETAIN_VERSIONS,
     crash_before_commit=None,
     compact_every: int | None = None,
-    compact_keep_batches: int = 8,
+    compact_keep_batches: int = COMPACT_KEEP_BATCHES,
 ):
     """foreachBatch body for the five-table write fan-out (K1-K5,
     core.clj:100-153) maintained continuously: per micro-batch, write
@@ -624,7 +631,7 @@ def compact_stream_tables(
     spark: SparkSession,
     paths: dict[str, str],
     commits_dir: str,
-    keep_batches: int = 8,
+    keep_batches: int = COMPACT_KEEP_BATCHES,
 ) -> None:
     """Fold old ``batch=<id>`` dirs into one compacted segment per
     table — the maintenance job that bounds metadata and small-file
@@ -740,11 +747,8 @@ def run_bounded_streaming_ingest(
     from ..schemas import METER_SAMPLES
     from ..sources.meter_generator import transmissions
 
-    if stage_dir is not None:
-        stage = stage_dir
-    else:
-        stage = tempfile.mkdtemp(prefix="raw_stream_")
-        atexit.register(shutil.rmtree, stage, ignore_errors=True)
+    owned = stage_dir is None
+    stage = tempfile.mkdtemp(prefix="raw_stream_") if owned else stage_dir
     try:
         if not os.path.exists(os.path.join(stage, "_SUCCESS")):
             transmissions(
@@ -767,9 +771,10 @@ def run_bounded_streaming_ingest(
         )
         return paths, commits_dir
     finally:
-        # the staged raw input is only read by the (now finished)
+        # a stage this call made is only read by the (now finished)
         # stream — multi-GB at bench sizes, so never leave it behind
-        shutil.rmtree(stage, ignore_errors=True)
+        if owned:
+            shutil.rmtree(stage, ignore_errors=True)
 
 
 def session_rollup(stream: DataFrame, gap: str = "30 minutes") -> DataFrame:

@@ -148,6 +148,36 @@ def test_streaming_ingest_finer_stage_files_equals_batch(spark, tmp_path):
         ), table
 
 
+def test_streaming_ingest_keeps_caller_owned_stage(spark, tmp_path, monkeypatch):
+    """A caller-passed ``stage_dir`` is reused across calls (bench.py's
+    trigger-size sweep stages once), so the ingest must leave it in
+    place: a second call over the same stage skips generation — here
+    generation raises — and still drains every staged row."""
+    import os
+
+    from cassaforte_meter_transmission_gen_spark.sources import meter_generator
+    from cassaforte_meter_transmission_gen_spark.streaming.pipeline import (
+        read_stream_table,
+        run_bounded_streaming_ingest,
+    )
+
+    stage = str(tmp_path / "stage")
+    run_bounded_streaming_ingest(
+        spark, str(tmp_path / "a"), num_meters=1, seconds=120, stage_dir=stage
+    )
+    assert os.path.exists(os.path.join(stage, "_SUCCESS"))
+
+    def regenerate(*_args, **_kwargs):
+        raise AssertionError("the caller-owned stage was generated again")
+
+    monkeypatch.setattr(meter_generator, "transmissions", regenerate)
+    paths, commits = run_bounded_streaming_ingest(
+        spark, str(tmp_path / "b"), num_meters=1, seconds=120, stage_dir=stage
+    )
+    second = read_stream_table(spark, paths, "meter_samples_second", commits)
+    assert second.count() == 120
+
+
 def test_streaming_session_window_equals_batch_sessionization(spark, sf_small):
     """T6: the native session_window stateful aggregation must produce
     the same sessions as the batch lag/running-sum sessionization
