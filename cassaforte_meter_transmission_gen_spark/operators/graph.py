@@ -13,10 +13,17 @@ agree bit-for-bit, the same move as the micro-nat perplexity totals
 
 Scale shape: edge lists are built ONCE from the fact scan (the caller
 pins them with localCheckpoint — dimension-sized here, checkpoint-to-
-storage at billion-edge scale); each PageRank iteration is
-edges ⋈ ranks ⋈ outdeg plus one partial-agg groupBy plus one one-row
-dangling-sum aggregate (broadcast back), rank state sharded by vertex
-id across executors, nothing on the driver. Triangle counting orients
+storage at billion-edge scale). PageRank, HITS and shortest path read
+their previous state exactly once per iteration — a frame read twice is
+copied into the plan twice, and the plan then doubles per iteration —
+so their plans grow linearly with the iteration count. Each PageRank
+iteration is one ranks ⟕ out-edges join plus one partial-agg groupBy,
+rank state sharded by vertex id across executors, nothing on the
+driver; the dangling sum and N are unpartitioned windows over the
+per-vertex rows, i.e. one task (HITS's L1 totals likewise). That is
+right for dimension-sized graphs; at billion-vertex scale make them a
+one-row aggregate broadcast back, which reads the state a second time,
+so pin the state per iteration there. Triangle counting orients
 every edge from its lower-(degree, id) endpoint to the higher one
 before the wedge join, so per-vertex fan-out is bounded by the graph's
 arboricity instead of its max degree — a celebrity hub contributes
@@ -32,13 +39,19 @@ DAMPING_NUM = 85  # damping 0.85 as an integer percentage
 TELEPORT_PPB = 150_000_000  # (1 - 0.85) * PPB
 
 
+def _nodes(edges: DataFrame) -> DataFrame:
+    """Every vertex of ``edges(src, dst, …)`` once, as ``(n)`` — one
+    read of the edge list."""
+    return edges.select(F.explode(F.array("src", "dst")).alias("n")).distinct()
+
+
 def integer_pagerank(edges: DataFrame, n_iters: int = 3) -> DataFrame:
     """Weighted PageRank over ``edges(src, dst, w)`` with ranks in
     parts-per-billion int64s, seeded at 1e9 per node.
 
     Per iteration every node sends ``(r·w) DIV Σw`` along each
     out-edge, the total rank held by DANGLING nodes (no out-edges) is
-    summed into one int64 row and redistributed equally, and each node
+    summed into one int64 and redistributed equally, and each node
     re-bases as ``TELEPORT + (85·inflow) DIV 100
     + (85·dangling_sum) DIV (100·N)`` — all int64, bit-reproducible.
     Without the dangling term a sink node leaks its damped mass and the
@@ -52,46 +65,40 @@ def integer_pagerank(edges: DataFrame, n_iters: int = 3) -> DataFrame:
     <1 ppb per iteration, damped geometrically across iterations) —
     unit-asserted in tests/test_graph.py.
 
-    Returns ``(n, r)``. ``edges`` is referenced ``3 + 2·n_iters`` times
+    Each iteration reads the previous ranks ONCE: every row of
+    ``r ⟕ out-edges`` emits a row for its node (carrying the rank as
+    ``dm`` when the node matched no out-edge, i.e. is dangling) and,
+    for an out-edge, a ``(dst, (r·w) DIV Σw)`` row; one groupBy per
+    node sums both, and ``SUM(dm) OVER ()`` / ``COUNT(*) OVER ()``
+    give the dangling sum and N. So the plan grows linearly in
+    ``n_iters``.
+
+    Returns ``(n, r)``. ``edges`` is referenced ``1 + n_iters`` times
     — callers should pin it (localCheckpoint / persisted table)."""
-    nodes = (
-        edges.select(F.col("src").alias("n"))
-        .union(edges.select(F.col("dst").alias("n")))
-        .distinct()
+    out = edges.select(
+        F.col("src").alias("n"),
+        "dst",
+        "w",
+        F.sum("w").over(Window.partitionBy("src")).cast("long").alias("tw"),
     )
-    outdeg = edges.groupBy("src").agg(F.sum("w").cast("long").alias("tw"))
-    # Dangling = nodes that never appear as src. One anti-join, reused
-    # every iteration to gather the leaked mass.
-    dangling = nodes.join(
-        edges.select(F.col("src").alias("n")).distinct(), "n", "left_anti"
-    )
-    n_cnt = nodes.agg(F.count("*").cast("long").alias("n_cnt"))
-    r = nodes.select("n", F.lit(PPB).cast("long").alias("r"))
+    r = _nodes(edges).select("n", F.lit(PPB).cast("long").alias("r"))
     for _ in range(n_iters):
-        inflow = (
-            edges.join(r.withColumnRenamed("n", "src"), "src")
-            .join(outdeg, "src")
-            .select(F.col("dst"), F.expr("(r * w) DIV tw").alias("contrib"))
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("m"))
-        )
-        ds = r.join(dangling, "n", "left_semi").agg(
-            F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("ds")
-        )
-        scalars = F.broadcast(ds.crossJoin(n_cnt))
         r = (
-            nodes.join(inflow.withColumnRenamed("dst", "n"), "n", "left")
-            .crossJoin(scalars)
-            .select(
+            r.join(out, "n", "left")
+            .selectExpr(
+                "stack(2, n, CAST(0 AS BIGINT),"
+                " IF(dst IS NULL, r, CAST(0 AS BIGINT)),"
+                " dst, (r * w) DIV tw, CAST(0 AS BIGINT)) AS (n, m, dm)"
+            )
+            .filter("n IS NOT NULL")
+            .groupBy("n")
+            .agg(F.sum("m").alias("m"), F.sum("dm").alias("dm"))
+            .selectExpr(
                 "n",
-                (
-                    F.lit(TELEPORT_PPB).cast("long")
-                    + F.expr(
-                        f"({DAMPING_NUM} * COALESCE(m, CAST(0 AS BIGINT)))"
-                        " DIV 100"
-                    )
-                    + F.expr(f"({DAMPING_NUM} * ds) DIV (100 * n_cnt)")
-                ).alias("r"),
+                f"CAST({TELEPORT_PPB} AS BIGINT)"
+                f" + ({DAMPING_NUM} * m) DIV 100"
+                f" + ({DAMPING_NUM} * SUM(dm) OVER ())"
+                " DIV (100 * COUNT(*) OVER ()) AS r",
             )
         )
     return r
@@ -100,24 +107,25 @@ def integer_pagerank(edges: DataFrame, n_iters: int = 3) -> DataFrame:
 #: HITS power iterations, each one authority and one hub half-step
 HITS_ITERS = 3
 
+#: a half-step's re-normalization of its weighted inflow ``raw``: the
+#: total is a window over the inflow rows, so they have one consumer
+_HITS_NORM = (
+    "CAST(raw DIV greatest(CAST(1 AS BIGINT), "
+    f"CAST(SUM(raw) OVER () DIV {PPB} AS BIGINT)) AS BIGINT)"
+)
+
 
 def _hits_half_step(
     edges: DataFrame, state: DataFrame, from_col: str, to_col: str
 ) -> DataFrame:
     """Sparse ``(n, v)`` scores of the nodes with an in-edge along
     ``from_col → to_col``: weighted inflow ``Σ v·w`` in DECIMAL(38,0),
-    divided by ``greatest(1, total DIV PPB)``. The total is a window
-    over the inflow rows, so the inflow has one consumer and the plan
-    stays linear in the step count."""
+    divided by ``greatest(1, total DIV PPB)``."""
     return (
         edges.join(state.withColumnRenamed("n", from_col), from_col)
         .groupBy(F.col(to_col).alias("n"))
         .agg(F.sum(F.expr("CAST(v AS DECIMAL(38,0)) * w")).alias("raw"))
-        .selectExpr(
-            "n",
-            "CAST(raw DIV greatest(CAST(1 AS BIGINT), "
-            f"CAST(SUM(raw) OVER () DIV {PPB} AS BIGINT)) AS BIGINT) AS v",
-        )
+        .selectExpr("n", f"{_HITS_NORM} AS v")
     )
 
 
@@ -129,26 +137,33 @@ def integer_hits(edges: DataFrame) -> DataFrame:
     one truncating integer division — bit-reproducible, like
     :func:`integer_pagerank`.
 
-    Returns ``(n, hub, auth)`` for every node. The half-steps carry
-    sparse states (a node with no inflow on a side is absent, i.e. 0)
-    and one lazy plan; the result is densified once with
-    ``COALESCE(…, 0)``. ``edges`` is referenced ``2 + 2·HITS_ITERS``
-    times — callers should pin it."""
-    nodes = (
-        edges.select(F.col("src").alias("n"))
-        .union(edges.select(F.col("dst").alias("n")))
-        .distinct()
+    Returns ``(n, hub, auth)`` for every node. Each half-step reads the
+    previous state once, so the plan is linear in ``HITS_ITERS``:
+    the first authorities come straight from the edges (every ``src``
+    starts at PPB), and the last hub half-step emits a
+    ``(src, v·w, NULL)`` and a ``(dst, NULL, auth)`` row per edge,
+    grouped by node — hub and authority in one frame, ``COALESCE(…, 0)``
+    for a node with no in- or no out-edge. ``edges`` is referenced
+    ``2·HITS_ITERS`` times — callers should pin it."""
+    a = (
+        edges.groupBy(F.col("dst").alias("n"))
+        .agg(F.sum(F.expr(f"CAST({PPB} AS DECIMAL(38,0)) * w")).alias("raw"))
+        .selectExpr("n", f"{_HITS_NORM} AS v")
     )
-    h = nodes.select("n", F.lit(PPB).cast("long").alias("v"))
-    for _ in range(HITS_ITERS):
-        a = _hits_half_step(edges, h, "src", "dst")
+    for _ in range(HITS_ITERS - 1):
         h = _hits_half_step(edges, a, "dst", "src")
+        a = _hits_half_step(edges, h, "src", "dst")
     return (
-        nodes.join(h.withColumnRenamed("v", "hub"), "n", "left")
-        .join(a.withColumnRenamed("v", "auth"), "n", "left")
+        edges.join(a.withColumnRenamed("n", "dst"), "dst")
+        .selectExpr(
+            "stack(2, src, CAST(v AS DECIMAL(38,0)) * w, CAST(NULL AS BIGINT),"
+            " dst, CAST(NULL AS DECIMAL(38,0)), v) AS (n, raw, auth)"
+        )
+        .groupBy("n")
+        .agg(F.sum("raw").alias("raw"), F.max("auth").alias("auth"))
         .selectExpr(
             "n",
-            "COALESCE(hub, CAST(0 AS BIGINT)) AS hub",
+            f"COALESCE({_HITS_NORM}, CAST(0 AS BIGINT)) AS hub",
             "COALESCE(auth, CAST(0 AS BIGINT)) AS auth",
         )
     )
@@ -243,42 +258,33 @@ def hop_bounded_shortest_path(
     oracle matches bit-for-bit; no double accumulates anywhere.
 
     Scale shape: distance state is one (n, d) row per vertex, sharded
-    by vertex id; each round is edges ⋈ dist (keyed by src) → one
-    partial-agg MIN groupBy (keyed by dst) → one left join back onto
-    the vertex set — the PageRank iteration economics exactly, nothing
-    on the driver. ``edges`` is referenced ``1 + n_hops`` times —
-    callers should pin it (localCheckpoint / persisted table).
+    by vertex id; each round is one ``dist ⟕ edges`` join keyed by src
+    that emits the node's own ``(n, d)`` and one ``(dst, d + cost)``
+    candidate per out-edge of a reached node, then one partial-agg MIN
+    groupBy per node — the round reads the previous distances once, so
+    the plan grows linearly in ``n_hops``; nothing on the driver.
+    ``edges`` is referenced ``1 + n_hops`` times — callers should pin
+    it (localCheckpoint / persisted table).
 
     Returns ``(n, d)`` with ``d`` = cheapest known cost from
     ``source`` using ≤ ``n_hops`` edges, or :data:`SP_INF` if
     unreached."""
-    nodes = (
-        edges.select(F.col("src").alias("n"))
-        .union(edges.select(F.col("dst").alias("n")))
-        .distinct()
-    )
-    dist = nodes.select(
+    dist = _nodes(edges).select(
         "n",
         F.when(F.col("n") == source, F.lit(0).cast("long"))
         .otherwise(F.lit(SP_INF).cast("long"))
         .alias("d"),
     )
     for _ in range(n_hops):
-        relax = (
-            edges.join(dist.withColumnRenamed("n", "src"), "src")
-            .filter(F.col("d") < F.lit(SP_INF))
-            .select(
-                F.col("dst").alias("n"),
-                (F.col("d") + F.col("cost")).alias("cand"),
+        dist = (
+            dist.join(edges.withColumnRenamed("src", "n"), "n", "left")
+            .selectExpr(
+                f"stack(2, n, d, dst, IF(d < {SP_INF}, d + cost, NULL))"
+                " AS (n, d)"
             )
+            .filter("d IS NOT NULL")
             .groupBy("n")
-            .agg(F.min("cand").alias("mc"))
-        )
-        dist = dist.join(relax, "n", "left").select(
-            "n",
-            F.least(
-                F.col("d"), F.coalesce(F.col("mc"), F.lit(SP_INF).cast("long"))
-            ).alias("d"),
+            .agg(F.min("d").alias("d"))
         )
     return dist
 

@@ -17,12 +17,14 @@ Scale notes:
   one fact-scan aggregation — the fact table is touched once to build
   edges, never per iteration. At 100 TB that one scan shuffles
   (src, dst) partial counts only.
-- Each PageRank iteration is edges ⋈ ranks ⋈ outdeg + one groupBy —
-  rank state lives in the cluster, nothing collects to the driver; a
+- Each PageRank iteration is one ranks ⟕ out-edges join + one groupBy
+  — rank state lives in the cluster, nothing collects to the driver; a
   billion-node graph shards by vertex id exactly like the min-label
-  CC loop. Fixed iteration count (3) keeps the plan statically
-  analyzable; the CC loop's convergence-or-raise pattern applies when
-  iterating to a fixpoint instead.
+  CC loop. Every iterative operator reads its previous state once per
+  iteration, so the plan grows linearly with the fixed iteration count
+  (3), which keeps it statically analyzable; the CC loop's
+  convergence-or-raise pattern applies when iterating to a fixpoint
+  instead.
 - Triangle enumeration degree-orients the edge list (lower-(degree,id)
   → higher endpoint) before the wedge join, so each triangle is
   produced exactly once AND the per-vertex join fan-out is bounded by
@@ -48,9 +50,10 @@ def _pagerank_iteration_sql(prev: str, this: str) -> str:
     """One unrolled integer-PageRank step for the DuckDB oracle
     (materialized: DuckDB re-inlines plain CTEs at every reference),
     INCLUDING the dangling-mass redistribution — the one-row dangling
-    sum over ``{prev}`` mirrors operators.graph.integer_pagerank's
-    per-iteration ``ds`` aggregate; on a sink-free graph the term is
-    provably zero and the values reduce to the plain recurrence."""
+    sum over ``{prev}`` is the value operators.graph.integer_pagerank
+    takes as ``SUM(dm) OVER ()`` over its per-node rows; on a sink-free
+    graph the term is provably zero and the values reduce to the plain
+    recurrence."""
     return f"""
 {this} AS MATERIALIZED (
   SELECT nodes.n,
@@ -130,9 +133,9 @@ def graph_pagerank_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the fact scan happens ONCE into the (src, dst, w) edge agg
     — localCheckpoint pins it so the 3 unrolled iterations reuse the
     materialized edges instead of re-deriving the 4-table join per
-    step (the CC labeller's move). Per iteration: one edges⋈ranks⋈
-    outdeg join + one partial-agg groupBy; rank state never touches
-    the driver. Cited shapes: reference has no graph surface
+    step (the CC labeller's move). Per iteration: one ranks⟕out-edges
+    join + one partial-agg groupBy, reading the previous ranks once;
+    rank state never touches the driver. Cited shapes: reference has no graph surface
     (core.clj); this extends the §2.10 pipeline families."""
     return _pagerank_over_trade(spark, sf_dir, src_where=None)
 
@@ -169,7 +172,7 @@ def _pagerank_over_trade(
 ) -> DataFrame:
     """Shared body: build the nation-trade edge list, pin it, run 3
     integer-PageRank iterations, decorate with nation names."""
-    # dimension-sized; reused 3 + 2·n_iters times by the iterations
+    # dimension-sized; reused 1 + n_iters times by the iterations
     edges = _trade_edges(spark, sf_dir, src_where).localCheckpoint(
         eager=True
     )
@@ -201,14 +204,14 @@ def graph_pagerank_dangling_trade(
     and value-hash gated (judge VERDICT r8 missing-#1: the plain trade
     graph conveniently has no sinks, so the leak path was untested).
 
-    Semantics: the dangling sum is one int64 row per iteration,
-    broadcast, and every node's base gains
-    ``(85·dangling_sum) DIV (100·N)`` — rank mass is conserved up to
-    documented floor-division loss (unit-asserted in
+    Semantics: the dangling sum is one int64 per iteration, and every
+    node's base gains ``(85·dangling_sum) DIV (100·N)`` — rank mass is
+    conserved up to documented floor-division loss (unit-asserted in
     tests/test_graph.py) instead of leaking 85% of every sink's rank
-    per step. Scale: the dangling set is ONE anti-join computed once;
-    the per-iteration extra work is a one-row aggregate — nothing on
-    the driver, same economics as the plain query."""
+    per step. Scale: a sink's rank rides on its own row of the
+    iteration's ranks⟕out-edges join (a sink has no out-edge to match),
+    and the sum is a window total over the per-node rows — no extra
+    join, nothing on the driver, same economics as the plain query."""
     return _pagerank_over_trade(
         spark, sf_dir, src_where="src % 5 <> 0"
     )
@@ -410,8 +413,9 @@ def _sp_iteration_sql(prev: str, this: str) -> str:
     """One unrolled Bellman-Ford relaxation for the DuckDB oracle —
     the exact integer step operators.graph.hop_bounded_shortest_path
     runs: min over (dist[src] + cost) per dst, folded into the carried
-    distance with LEAST. MATERIALIZED because DuckDB re-inlines plain
-    CTEs at every reference."""
+    distance with LEAST (the operator takes one MIN over the node's own
+    row and its candidates: the same value). MATERIALIZED because DuckDB
+    re-inlines plain CTEs at every reference."""
     return f"""
 {this} AS MATERIALIZED (
   SELECT nodes.n,
@@ -466,9 +470,10 @@ def graph_shortest_path_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the fact table is scanned ONCE into the (src, dst, w) edge
     agg (localCheckpoint-pinned, same as PageRank); per round one
-    edges⋈dist join keyed by src, one MIN groupBy keyed by dst, one
-    left join back — distance state sharded by vertex, nothing on the
-    driver. Cited: reference has no graph surface (core.clj); §2.10
+    dist⟕edges join keyed by src emitting each node's own distance and
+    its candidates, then one MIN groupBy per node — the round reads the
+    previous distances once, distance state sharded by vertex, nothing
+    on the driver. Cited: reference has no graph surface (core.clj); §2.10
     extension family."""
     base = _trade_edges(spark, sf_dir, src_where=None)
     edges = base.select(
@@ -554,9 +559,11 @@ def graph_hits_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the edge list is the one pinned frame (localCheckpoint, as
     for PageRank); the six half-steps (operators.graph.integer_hits)
-    are one lazy plan over it — per half-step one edges⋈state join,
-    one partial-agg groupBy and a window total over the ≤ #nodes
-    inflow rows."""
+    are one lazy plan over it, linear in the step count — per
+    half-step one edges⋈state join, one partial-agg groupBy and a
+    window total over the ≤ #nodes inflow rows; the first authorities
+    come straight from the edges, and the last hub half-step groups
+    hub inflow and authority per node in one pass."""
     edges = _trade_edges(spark, sf_dir, None).localCheckpoint(eager=True)
     nt = _t(spark, sf_dir, "nation")
     return (

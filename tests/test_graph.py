@@ -1,15 +1,20 @@
-"""operators.graph semantics: the integer-PageRank and integer-HITS
-recurrences against serial Python models (exact replication — the same discipline as the
+"""operators.graph semantics: the integer-PageRank, integer-HITS and
+hop-bounded shortest-path recurrences against serial Python models
+(exact replication — the same discipline as the
 BPE and weighted-sampling serial-model tests), fixed-point and
 mass-conservation properties, and triangle counts on known graphs."""
 
 from __future__ import annotations
+
+import random
 
 import pyspark.sql.functions as F
 
 from cassaforte_meter_transmission_gen_spark.operators.graph import (
     HITS_ITERS,
     PPB,
+    SP_INF,
+    hop_bounded_shortest_path,
     integer_hits,
     integer_pagerank,
     triangle_count,
@@ -291,6 +296,57 @@ def test_shortest_path_unreachable_stays_inf(spark):
     )
     got = {r["n"]: r["d"] for r in d.collect()}
     assert got == {0: 0, 1: 7, 2: SP_INF}
+
+
+def _serial_shortest_path(edges: list[tuple], source, n_hops: int) -> dict:
+    """Hop-bounded Bellman-Ford, serially: every round relaxes each edge
+    from the PREVIOUS round's distances (a k-edge path needs k rounds),
+    int64 sums, :data:`SP_INF` for an unreached node."""
+    nodes = {s for s, _, _ in edges} | {d for _, d, _ in edges}
+    dist = {n: 0 if n == source else SP_INF for n in nodes}
+    for _ in range(n_hops):
+        nxt = dict(dist)
+        for s, d, c in edges:
+            if dist[s] < SP_INF:
+                nxt[d] = min(nxt[d], dist[s] + c)
+        dist = nxt
+    return dist
+
+
+def test_shortest_path_matches_serial_model(spark):
+    """Bit-exact replication of the serial hop-bounded Bellman-Ford at
+    several hop bounds: a node with no out-edges (4), a component the
+    source never reaches (5 ⇄ 6), a source that is not in the graph
+    (every node stays at SP_INF), and a seeded random graph."""
+    rng = random.Random(11)
+    rand = {
+        (rng.randrange(10), rng.randrange(10)): rng.randint(1, 20)
+        for _ in range(30)
+    }
+    graphs = [
+        (
+            [(0, 1, 4), (0, 2, 9), (1, 2, 3), (2, 3, 1), (1, 3, 8),
+             (3, 4, 2), (2, 4, 7), (5, 6, 1), (6, 5, 2)],
+            0,
+        ),
+        ([(0, 1, 1), (1, 2, 1), (2, 0, 5)], 9),
+        ([(s, d, c) for (s, d), c in sorted(rand.items())], 0),
+    ]
+    for triples, source in graphs:
+        edges = _cost_edges_df(spark, triples)
+        for n_hops in (1, 2, 5):
+            got = {
+                r["n"]: r["d"]
+                for r in hop_bounded_shortest_path(
+                    edges, source, n_hops
+                ).collect()
+            }
+            assert got == _serial_shortest_path(triples, source, n_hops), (
+                triples, source, n_hops,
+            )
+    first = _serial_shortest_path(graphs[0][0], 0, 5)
+    assert first[4] < SP_INF and first[5] == first[6] == SP_INF
+    assert set(_serial_shortest_path(graphs[1][0], 9, 5).values()) == {SP_INF}
 
 
 def _und_edges_df(spark, pairs):
