@@ -29,6 +29,11 @@ number of pairs the change won, the metric's bound, and a verdict:
   better by more than the base's interquartile range;
 - ``ok``: anything else.
 
+On the ``queries`` workload a second table follows: each side's median
+warm CPU seconds per query (``query_cpu_s[q].warm`` of each run's
+detail line), with the relative change, so a gain or a loss can be
+attributed to the queries that moved. It carries no verdict.
+
 The exit status is 1 when a metric is ``WORSE``, a run failed an
 operation (``failed > 0``) or a run printed no result; otherwise 0.
 """
@@ -76,7 +81,8 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
 
 def run_once(tree: str, workload: str, seed: int, seconds: float) -> dict:
     """One untraced benchmark run in ``tree``: its result line, plus the
-    wall seconds, or ``{"error": …}`` when it printed none."""
+    wall seconds and its detail line (``detail``), or ``{"error": …}``
+    when it printed no result."""
     cmd = [
         sys.executable, "perfbench/run.py", "--workload", workload,
         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0",
@@ -93,6 +99,7 @@ def run_once(tree: str, workload: str, seed: int, seconds: float) -> dict:
         tail = (proc.stderr or proc.stdout).strip().splitlines()[-5:]
         return {"error": f"exit {proc.returncode}: " + " | ".join(tail), "wall_s": wall}
     res["wall_s"] = wall
+    res["detail"] = next((json.loads(ln) for ln in lines[:-1] if '"workload"' in ln), {})
     return res
 
 
@@ -124,6 +131,25 @@ def summarize(runs: list[dict], metrics: list[dict]) -> list[dict]:
     return rows
 
 
+def summarize_queries(runs: list[dict]) -> list[dict]:
+    """Per query of the ``queries`` mix: each side's median warm CPU
+    seconds over the pairs and the relative change of the median; empty
+    when the runs' detail lines carry no ``query_cpu_s``."""
+
+    def warm(res: dict) -> dict[str, float]:
+        per_query = res.get("detail", {}).get("metrics", {}).get("query_cpu_s", {})
+        return {q: v["warm"] for q, v in per_query.items()}
+
+    if not runs:
+        return []
+    rows = []
+    for q in warm(runs[0]["a"]):
+        a = statistics.median(warm(r["a"])[q] for r in runs)
+        b = statistics.median(warm(r["b"])[q] for r in runs)
+        rows.append({"query": q, "base": a, "change": b, "delta": (b - a) / a if a else 0.0})
+    return rows
+
+
 def print_table(rows: list[dict]) -> None:
     def q(t: tuple[float, float, float]) -> str:
         return f"{t[1]:.4g} [{t[0]:.4g}, {t[2]:.4g}]"
@@ -133,6 +159,14 @@ def print_table(rows: list[dict]) -> None:
     for r in rows:
         print(f"{r['metric']:<22} {q(r['base']):<34} {q(r['change']):<34}"
               f" {r['delta']:>+7.1%} {r['wins']:>3}/{r['pairs']:<2} {r['bound']:>6.2f}  {r['verdict']}")
+
+
+def print_query_table(rows: list[dict]) -> None:
+    if not rows:
+        return
+    print(f"\n{'median warm CPU s per query':<40} {'base':>8} {'change':>8} {'delta':>7}")
+    for r in rows:
+        print(f"{r['query']:<40} {r['base']:>8.3f} {r['change']:>8.3f} {r['delta']:>+7.1%}")
 
 
 def main() -> int:
@@ -178,6 +212,7 @@ def main() -> int:
     complete = [r for r in runs if "error" not in r["a"] and "error" not in r["b"]]
     rows = summarize(complete, bench["end_to_end"]) if complete else []
     print_table(rows)
+    print_query_table(summarize_queries(complete))
     worse = [r["metric"] for r in rows if r["verdict"] == "WORSE"]
     for p in problems:
         print("problem:", p)

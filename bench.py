@@ -24,6 +24,10 @@ signal trips, so a poisoned record is at least self-labelled.
 Each query is forced end-to-end with a noop-format write (full
 materialization, no driver collect). Wall time per query includes plan
 + execution; the JVM/session warmup is excluded via a warmup query.
+Every timed run also records, under ``query_codegen`` in the detail
+file, the whole-stage classes it compiled and their compile seconds
+(``session.codegen_stats`` read before and after), so a compiled-class
+cache thrash or a rise in a query's class count shows in the record.
 """
 
 from __future__ import annotations
@@ -36,7 +40,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from cassaforte_meter_transmission_gen_spark.plans import REGISTRY  # noqa: E402
-from cassaforte_meter_transmission_gen_spark.session import get_spark  # noqa: E402
+from cassaforte_meter_transmission_gen_spark.session import codegen_stats, get_spark  # noqa: E402
 from parity_report import REPO, _infer_round  # noqa: E402
 
 #: headline set: the reference's own pipeline (generator → joules →
@@ -201,7 +205,17 @@ def main() -> None:
 
     times: dict[str, float] = {}
     errors: dict[str, str] = {}
+    #: per timed query, one entry per run: classes compiled, compile s
+    query_codegen: dict[str, list[dict]] = {}
+
+    def _record_codegen(name: str, before: tuple[int, float]) -> None:
+        n, s = codegen_stats(spark)
+        query_codegen.setdefault(name, []).append(
+            {"classes": n - before[0], "compile_s": round(s - before[1], 3)}
+        )
+
     for name in HEADLINE:
+        cg0 = codegen_stats(spark)
         t0 = time.perf_counter()
         # failure-isolated: one broken query must not null the whole
         # round's bench — record the error and keep timing the rest
@@ -216,6 +230,7 @@ def main() -> None:
             # drop persisted intermediates (e.g. dedup shingle caches) so
             # one query's cache doesn't pressure the next one's heap
             spark.catalog.clearCache()
+            _record_codegen(name, cg0)
 
     # train-once/serve-many: the ANN quantizer artifacts (IVF coarse
     # centroids, PQ codebooks) are trained and persisted ONCE here, into
@@ -270,6 +285,7 @@ def main() -> None:
         runs: list[float] = []
         n_runs = 2 if name.startswith(BEST_OF_TWO) else 1
         for _ in range(n_runs):
+            cg0 = codegen_stats(spark)
             t0 = time.perf_counter()
             try:
                 REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
@@ -281,6 +297,7 @@ def main() -> None:
                 break
             finally:
                 spark.catalog.clearCache()
+                _record_codegen(name, cg0)
         if runs:
             scale_times[name] = min(runs)
             if len(runs) > 1:
@@ -807,6 +824,7 @@ def main() -> None:
         "detail": True,
         "scale_path_queries": scale_times,
         "scale_path_reruns_sec": scale_reruns,
+        "query_codegen": query_codegen,
         "streaming_operating_point": op_point,
         "parity_artifact_check": parity_fresh,
         "ann_train_sec": ann_train_sec,
