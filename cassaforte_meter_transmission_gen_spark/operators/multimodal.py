@@ -1,26 +1,55 @@
-"""Multimodal column handling (SURVEY §2.10): treat image/audio/video
-as opaque ``binary`` payloads with typed metadata, processed through
-Arrow-batched ``mapInPandas`` operators.
+"""Multimodal column handling (SURVEY §2.10): image, audio and video as
+opaque ``binary`` payloads with typed metadata, decoded and featurized
+through Arrow-batched ``mapInPandas`` operators.
 
-The decode libraries (PIL/librosa/ffmpeg) are not available in this
-environment, so the decode step is STUBBED — ``decode_stub='error'``
-raises NotImplementedError exactly where a real decoder would plug in,
-and ``decode_stub='fake'`` produces deterministic pseudo-features from
-the payload bytes so the full Spark plumbing (schema, batching,
-partitioning, UDF signature) is real and testable.
+The row-map seam: every operator is a per-row generator handed to
+:func:`_map_rows`, which streams the Arrow record batches, zips the
+named input columns, flat-maps the generator over them (a row may emit
+no, one or many output rows) and builds each output frame in the
+column order of the declared schema; Arrow coerces the Python values
+to the schema's types. Plan stability: the helper's inner function is
+named ``run`` and it adds no projection before ``mapInPandas``, so
+each operator's optimized plan is the one a hand-written batch loop
+over the same input gives.
 
-Scale design: payloads stay in executor memory as Arrow binary
-columns; ``mapInPandas`` streams record batches (no per-row Python
-overhead); feature outputs are narrow typed columns so downstream
-plans never reshuffle the heavy payload bytes.
+The codec table: ``_CODECS`` maps a payload format to the encoder of
+its synthetic test pattern and to its pixel decoder. The codecs are
+pure Python over the stdlib — 24-bit BMP, zlib PNG, LZW GIF (still and
+animated) and PCM WAV — so :func:`encode_synthetic` builds real
+containers executor-side and :func:`decode_pixels` decodes a
+mixed-format frame, dispatching each row on its ``format`` column.
+
+Scale design: payloads stay in executor memory as Arrow binary columns
+and never cross a shuffle; feature outputs are narrow typed columns.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _map_rows(
+    df: DataFrame, schema: str, fn: Callable[..., Iterable[tuple]], *cols: str
+) -> DataFrame:
+    """``mapInPandas`` of the per-row generator ``fn``: each Arrow
+    batch's ``cols`` are zipped row by row, every tuple ``fn(*values)``
+    yields is one output row, in the column order of the DDL
+    ``schema``."""
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
+        import pandas as pd  # local import: executed on executors
+
+        for pdf in batches:
+            rows = [out for vals in zip(*(pdf[c] for c in cols)) for out in fn(*vals)]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(run, schema=schema)
+
 
 #: output schema of the feature-extraction stage
 FEATURE_SCHEMA = (
@@ -40,128 +69,80 @@ def to_binary_payloads(df: DataFrame, id_col: str, payload_col: str, fmt: str) -
     )
 
 
-def extract_features(df: DataFrame, decode_stub: str = "fake") -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads.
+def extract_features(df: DataFrame) -> DataFrame:
+    """Arrow-batched feature extraction over binary payloads: width,
+    height and a feature hash derived deterministically from the bytes
+    (first/last byte, length), so the whole plumbing — schema,
+    batching, byte access — is checkable against an oracle."""
 
-    ``decode_stub='error'`` marks the real-decoder plug point;
-    ``'fake'`` derives deterministic pseudo width/height/feature-hash
-    from the bytes (first/last byte, length) so tests can assert the
-    full pipeline shape.
-    """
+    def rows(item_id, payload, fmt):
+        b = payload or b""
+        first, last = (b[0], b[-1]) if b else (0, 0)
+        yield (
+            item_id,
+            len(b),
+            fmt,
+            first % 64 + 1,
+            last % 64 + 1,
+            len(b) * 1_000_003 + first * 31 + last,
+        )
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd  # local import: executed on executors
-
-        for pdf in batches:
-            if decode_stub == "error":
-                raise NotImplementedError(
-                    "real image/audio decode requires PIL/librosa — plug the "
-                    "decoder in here; the fake path exercises the plumbing"
-                )
-            payloads = pdf["payload"]
-            n_bytes = payloads.map(lambda b: len(b) if b is not None else 0)
-            first = payloads.map(lambda b: b[0] if b else 0)
-            last = payloads.map(lambda b: b[-1] if b else 0)
-            out = pd.DataFrame(
-                {
-                    "item_id": pdf["item_id"],
-                    "n_bytes": n_bytes.astype("int32"),
-                    "format": pdf["format"],
-                    # deterministic fake decode: pretend dims from bytes
-                    "width": (first.astype("int64") % 64 + 1).astype("int32"),
-                    "height": (last.astype("int64") % 64 + 1).astype("int32"),
-                    "feature_hash": (
-                        n_bytes.astype("int64") * 1_000_003
-                        + first.astype("int64") * 31
-                        + last.astype("int64")
-                    ),
-                }
-            )
-            yield out
-
-    return df.mapInPandas(run, schema=FEATURE_SCHEMA)
+    return _map_rows(df, FEATURE_SCHEMA, rows, "item_id", "payload", "format")
 
 
 #: output schema of the resize stage (payload in, payload out)
 RESIZE_SCHEMA = "item_id bigint, payload binary, n_bytes int, format string"
 
+#: resize_payloads keeps at most this many bytes of each payload
+RESIZE_TARGET_BYTES = 64
 
-def resize_payloads(df: DataFrame, target_bytes: int = 64) -> DataFrame:
+
+def resize_payloads(df: DataFrame) -> DataFrame:
     """Resize plumbing (image downscale / audio resample stand-in):
-    stride-subsample each payload to at most ``target_bytes`` bytes
-    (stride = ceil(n / target)). Deterministic and byte-exact, so the
-    binary→binary Arrow round-trip is oracle-verifiable; a real
-    PIL/ffmpeg resize plugs into the same mapInPandas seam with the
-    same payload-in/payload-out schema.
+    stride-subsample each payload to at most ``RESIZE_TARGET_BYTES``
+    bytes (stride = ceil(n / target)). Deterministic and byte-exact, so
+    the binary→binary Arrow round-trip is oracle-verifiable.
 
     Scale shape matches the real thing: the heavy payload never leaves
     the task (no shuffle), output payloads are strictly smaller, and
     downstream stages see the same multimodal schema."""
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd  # local import: executed on executors
+    def rows(item_id, payload, fmt):
+        b = payload or b""
+        rb = b[:: max(1, -(-len(b) // RESIZE_TARGET_BYTES))]
+        yield item_id, rb, len(rb), fmt
 
-        for pdf in batches:
-            payloads, sizes = [], []
-            for b in pdf["payload"]:
-                b = b or b""
-                stride = max(1, -(-len(b) // target_bytes))
-                rb = b[::stride]
-                payloads.append(rb)
-                sizes.append(len(rb))
-            yield pd.DataFrame(
-                {
-                    "item_id": pdf["item_id"],
-                    "payload": payloads,
-                    "n_bytes": pd.Series(sizes, dtype="int32"),
-                    "format": pdf["format"],
-                }
-            )
-
-    return df.mapInPandas(run, schema=RESIZE_SCHEMA)
+    return _map_rows(df, RESIZE_SCHEMA, rows, "item_id", "payload", "format")
 
 
 #: output schema of the frame sampler
 FRAME_SCHEMA = "item_id bigint, frame_idx int, frame_bytes binary, frame_len int"
 
+#: sample_frames cuts each payload into this many byte ranges
+SAMPLED_FRAMES = 4
 
-def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
+
+def sample_frames(df: DataFrame) -> DataFrame:
     """Frame-sampling plumbing (video → k evenly-spaced frames): slices
-    each payload into ``n_frames`` byte ranges — the deterministic
-    stand-in for an ffmpeg keyframe extractor, with the real fan-out
-    shape: one input row → k output rows, payload bytes partitioned
-    (never duplicated), Arrow-batched.
+    each payload into ``SAMPLED_FRAMES`` byte ranges, the last taking
+    the remainder — one input row → k output rows, payload bytes
+    partitioned (never duplicated), Arrow-batched. The fan-out happens
+    inside the task, so no shuffle carries the heavy bytes."""
 
-    At scale the fan-out happens inside the task (mapInPandas), so no
-    shuffle carries the heavy bytes; downstream feature extraction
-    sees narrow per-frame rows."""
+    def rows(item_id, payload):
+        b = payload or b""
+        step = max(1, len(b) // SAMPLED_FRAMES)
+        for i in range(SAMPLED_FRAMES):
+            chunk = b[i * step : (i + 1) * step if i < SAMPLED_FRAMES - 1 else None]
+            yield item_id, i, chunk, len(chunk)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd  # local import: executed on executors
-
-        for pdf in batches:
-            rows = {"item_id": [], "frame_idx": [], "frame_bytes": [], "frame_len": []}
-            for item_id, payload in zip(pdf["item_id"], pdf["payload"]):
-                b = payload or b""
-                step = max(1, len(b) // n_frames)
-                for i in range(n_frames):
-                    chunk = b[i * step: (i + 1) * step] if i < n_frames - 1 else b[i * step:]
-                    rows["item_id"].append(item_id)
-                    rows["frame_idx"].append(i)
-                    rows["frame_bytes"].append(chunk)
-                    rows["frame_len"].append(len(chunk))
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, schema=FRAME_SCHEMA)
+    return _map_rows(df, FRAME_SCHEMA, rows, "item_id", "payload")
 
 
-# --- real decoder for one format: BMP (pure Python, no codec libs) ---
+# --- BMP: 24-bit uncompressed Windows DIB (pure Python) ---
 #
-# The decode seam above is stubbed because PIL/librosa are absent; BMP
-# (24-bit uncompressed, the Windows DIB format) is simple enough to
-# parse honestly in pure Python, so this pair makes the seam REAL for
-# one format: a byte-exact encoder (used to synthesize test payloads)
-# and a validating decoder that undoes everything the container does —
+# A byte-exact encoder (used to synthesize test payloads) and a
+# validating decoder that undoes everything the container does —
 # 4-byte row padding, bottom-up row order, BGR channel order. The
 # registry query multimodal_bmp_decode hash-gates the decoded pixels
 # against a serial re-derivation, so the decode is verified content,
@@ -250,61 +231,13 @@ def synthetic_bmp_pattern(
     return w, h, rgb
 
 
-def encode_synthetic_bmps(
-    df: DataFrame,
-    id_col: str = "item_id",
-    width: int | None = None,
-    height: int | None = None,
-) -> DataFrame:
-    """(id) → (item_id, payload binary, format 'bmp'): each row becomes
-    a REAL BMP file of its synthetic pattern, built executor-side in
-    Arrow batches — the encode half of the genuine-codec proof.
-    ``width``/``height`` pin a fixed geometry (e.g. 8×8 for the
-    word-packed aHash path); default derives mixed sizes from the id."""
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [
-                bmp_encode(*synthetic_bmp_pattern(int(i), width, height))
-                for i in ids
-            ]
-            yield pd.DataFrame(
-                {"item_id": ids, "payload": payloads, "format": "bmp"}
-            )
-
-    return df.mapInPandas(run, schema="item_id bigint, payload binary, format string")
-
-
-def decode_bmp_features(df: DataFrame) -> DataFrame:
-    """(item_id, payload) → (item_id, width, height, pixels binary):
-    the REAL decode path — container stripped (padding, bottom-up rows,
-    BGR), canonical RGB pixels out. Same mapInPandas seam and narrow-
-    output shape as the stubbed extract_features; a PIL decoder for
-    other formats plugs in identically."""
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            widths, heights, pixels = [], [], []
-            for b in pdf["payload"]:
-                w, h, rgb = bmp_decode(bytes(b))
-                widths.append(w)
-                heights.append(h)
-                pixels.append(rgb)
-            yield pd.DataFrame(
-                {
-                    "item_id": pdf["item_id"],
-                    "width": pd.Series(widths, dtype="int32"),
-                    "height": pd.Series(heights, dtype="int32"),
-                    "pixels": pixels,
-                }
-            )
-
-    return df.mapInPandas(
-        run, schema="item_id bigint, width int, height int, pixels binary"
-    )
+def _ahash_bits(pixels: bytes) -> tuple[int, list[int]]:
+    """``(n_pixels, set bit positions)`` of the average hash of
+    canonical RGB ``pixels``: per-pixel integer gray = r+g+b, bit p
+    (row-major pixel order) set iff ``gray_p · n_pixels > Σ gray``."""
+    gray = np.frombuffer(bytes(pixels), dtype=np.uint8).astype(np.int64)
+    gray = gray.reshape(-1, 3).sum(axis=1)
+    return len(gray), np.flatnonzero(gray * len(gray) > gray.sum()).tolist()
 
 
 def perceptual_hash(df: DataFrame) -> DataFrame:
@@ -328,41 +261,19 @@ def perceptual_hash(df: DataFrame) -> DataFrame:
     arbitrary sizes — including the canonical 8×8 aHash grid, which is
     exactly 64 bits — use :func:`perceptual_hash_words`, which packs
     the same bits into ``array<bigint>`` words."""
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            ids, ns, hashes = [], [], []
-            for item_id, px in zip(pdf["item_id"], pdf["pixels"]):
-                a = np.frombuffer(bytes(px), dtype=np.uint8).astype(np.int64)
-                gray = a.reshape(-1, 3).sum(axis=1)
-                n = int(gray.shape[0])
-                if n > 63:
-                    raise ValueError(
-                        f"perceptual_hash packs bits into one int64 and "
-                        f"supports at most 63 pixels (got {n}); use "
-                        "perceptual_hash_words for larger images"
-                    )
-                total = int(gray.sum())
-                bits = (gray * n) > total
-                ph = 0
-                for p in range(n):  # row-major pixel order
-                    if bool(bits[p]):
-                        ph |= 1 << p
-                ids.append(int(item_id))
-                ns.append(n)
-                hashes.append(ph)
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(ids, dtype="int64"),
-                    "n_pixels": pd.Series(ns, dtype="int32"),
-                    "phash": pd.Series(hashes, dtype="int64"),
-                }
+    def rows(item_id, pixels):
+        n, bits = _ahash_bits(pixels)
+        if n > 63:
+            raise ValueError(
+                f"perceptual_hash packs bits into one int64 and "
+                f"supports at most 63 pixels (got {n}); use "
+                "perceptual_hash_words for larger images"
             )
+        yield item_id, n, sum(1 << p for p in bits)
 
-    return df.mapInPandas(
-        run, schema="item_id bigint, n_pixels int, phash bigint"
+    return _map_rows(
+        df, "item_id bigint, n_pixels int, phash bigint", rows, "item_id", "pixels"
     )
 
 
@@ -394,38 +305,20 @@ def perceptual_hash_words(df: DataFrame) -> DataFrame:
     inside one word: band b of :func:`phash_band_count` bands is
     ``(words[b DIV 7] >> 8·(b%7)) & 255`` on both engines, and
     Hamming distance is Σ bit_count(xor) over aligned words."""
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            ids, ns, words_col = [], [], []
-            for item_id, px in zip(pdf["item_id"], pdf["pixels"]):
-                a = np.frombuffer(bytes(px), dtype=np.uint8).astype(np.int64)
-                gray = a.reshape(-1, 3).sum(axis=1)
-                n = int(gray.shape[0])
-                total = int(gray.sum())
-                bits = (gray * n) > total
-                n_words = -(-n // PHASH_WORD_BITS) if n else 0
-                words = [0] * n_words
-                for p in range(n):  # row-major pixel order
-                    if bool(bits[p]):
-                        words[p // PHASH_WORD_BITS] |= 1 << (
-                            p % PHASH_WORD_BITS
-                        )
-                ids.append(int(item_id))
-                ns.append(n)
-                words_col.append(words)
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(ids, dtype="int64"),
-                    "n_pixels": pd.Series(ns, dtype="int32"),
-                    "words": words_col,
-                }
-            )
+    def rows(item_id, pixels):
+        n, bits = _ahash_bits(pixels)
+        words = [0] * -(-n // PHASH_WORD_BITS)
+        for p in bits:
+            words[p // PHASH_WORD_BITS] |= 1 << (p % PHASH_WORD_BITS)
+        yield item_id, n, words
 
-    return df.mapInPandas(
-        run, schema="item_id bigint, n_pixels int, words array<bigint>"
+    return _map_rows(
+        df,
+        "item_id bigint, n_pixels int, words array<bigint>",
+        rows,
+        "item_id",
+        "pixels",
     )
 
 
@@ -585,61 +478,6 @@ def png_decode(b: bytes) -> tuple[int, int, bytes]:
     return width, height, bytes(rgb)
 
 
-def encode_synthetic_pngs(
-    df: DataFrame,
-    id_col: str = "item_id",
-    width: int | None = None,
-    height: int | None = None,
-) -> DataFrame:
-    """(id) → (item_id, payload binary, format 'png'): each row becomes
-    a REAL PNG of the same synthetic pattern the BMP path uses —
-    zlib-compressed, filter types cycling per scanline."""
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [
-                png_encode(*synthetic_bmp_pattern(int(i), width, height))
-                for i in ids
-            ]
-            yield pd.DataFrame(
-                {"item_id": ids, "payload": payloads, "format": "png"}
-            )
-
-    return df.mapInPandas(run, schema="item_id bigint, payload binary, format string")
-
-
-def decode_png_features(df: DataFrame) -> DataFrame:
-    """(item_id, payload) → (item_id, width, height, pixels binary)
-    through the REAL PNG decode — CRC walk, inflate, filter
-    reconstruction — same mapInPandas seam and output shape as
-    :func:`decode_bmp_features`, so every downstream consumer
-    (perceptual hashing, feature extraction) is codec-agnostic."""
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            widths, heights, pixels = [], [], []
-            for b in pdf["payload"]:
-                w, h, rgb = png_decode(bytes(b))
-                widths.append(w)
-                heights.append(h)
-                pixels.append(rgb)
-            yield pd.DataFrame(
-                {
-                    "item_id": pdf["item_id"],
-                    "width": pd.Series(widths, dtype="int32"),
-                    "height": pd.Series(heights, dtype="int32"),
-                    "pixels": pixels,
-                }
-            )
-
-    return df.mapInPandas(
-        run, schema="item_id bigint, width int, height int, pixels binary"
-    )
-
-
 def wav_encode(sample_rate: int, samples: list[int]) -> bytes:
     """16-bit mono PCM WAV bytes from int16 samples via the stdlib
     ``wave`` module — a REAL audio container (RIFF/fmt/data chunks),
@@ -689,59 +527,26 @@ def synthetic_wav_pattern(item_id: int) -> tuple[int, list[int]]:
     return rate, [((item_id * 31 + i * 7) % 2048) - 1024 for i in range(n)]
 
 
-def encode_synthetic_wavs(df: DataFrame, id_col: str = "item_id") -> DataFrame:
-    """(id) → (item_id, payload binary, format 'wav'): each row becomes
-    a REAL WAV file of its synthetic PCM pattern, built executor-side
-    in Arrow batches."""
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [wav_encode(*synthetic_wav_pattern(int(i))) for i in ids]
-            yield pd.DataFrame(
-                {"item_id": ids, "payload": payloads, "format": "wav"}
-            )
-
-    return df.mapInPandas(run, schema="item_id bigint, payload binary, format string")
-
-
 def decode_wav_features(df: DataFrame) -> DataFrame:
     """(item_id, payload) → integer audio features through the REAL
     decode: sample rate and count from the container, Σ|sample| (the
     integer loudness proxy) and the zero-crossing count (the integer
     pitch proxy — strict sign changes) from the PCM payload. All-int64
     so a serial SQL oracle that re-derives the samples pins every
-    value; the float feature pipeline (MFCCs etc.) plugs into the same
-    Arrow seam."""
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import numpy as np
-        import pandas as pd
+    value."""
 
-        for pdf in batches:
-            ids, rates, ns, sums, zcs = [], [], [], [], []
-            for item_id, b in zip(pdf["item_id"], pdf["payload"]):
-                rate, n, samples = wav_decode(bytes(b))
-                a = np.asarray(samples, dtype=np.int64)
-                ids.append(int(item_id))
-                rates.append(rate)
-                ns.append(n)
-                sums.append(int(np.abs(a).sum()))
-                zcs.append(int(((a[1:] * a[:-1]) < 0).sum()))
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(ids, dtype="int64"),
-                    "sample_rate": pd.Series(rates, dtype="int32"),
-                    "n_samples": pd.Series(ns, dtype="int32"),
-                    "sum_abs": pd.Series(sums, dtype="int64"),
-                    "zero_crossings": pd.Series(zcs, dtype="int64"),
-                }
-            )
+    def rows(item_id, payload):
+        rate, n, samples = wav_decode(bytes(payload))
+        a = np.asarray(samples, dtype=np.int64)
+        yield item_id, rate, n, int(np.abs(a).sum()), int((a[1:] * a[:-1] < 0).sum())
 
-    return df.mapInPandas(
-        run,
-        schema="item_id bigint, sample_rate int, n_samples int,"
+    return _map_rows(
+        df,
+        "item_id bigint, sample_rate int, n_samples int,"
         " sum_abs bigint, zero_crossings bigint",
+        rows,
+        "item_id",
+        "payload",
     )
 
 
@@ -975,51 +780,67 @@ def synthetic_gif_pattern(item_id: int) -> tuple[int, int, bytes, bytes]:
     return w, h, indices, palette
 
 
-def encode_synthetic_gifs(df: DataFrame, id_col: str = "item_id") -> DataFrame:
-    """(id) → (item_id, payload binary, format 'gif'): real GIF87a
-    files built executor-side in Arrow batches."""
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
+# ---------------------------------------------------------------------------
+# The codec table: per payload format, the encoder of its synthetic test
+# pattern and its pixel decoder. One encoder and one decoder operator
+# serve every format through it.
+# ---------------------------------------------------------------------------
 
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                w, h, idx, pal = synthetic_gif_pattern(int(i))
-                payloads.append(gif_encode(w, h, idx, pal))
-            yield pd.DataFrame(
-                {"item_id": ids, "payload": payloads, "format": "gif"}
-            )
+#: format → (payload of the synthetic pattern of ``(item_id, width,
+#: height)``, decoder of a payload to ``(width, height, RGB)``). Width
+#: and height pin the BMP/PNG geometry; the GIF and WAV patterns derive
+#: theirs from the id, and audio has no pixel decoder.
+_CODECS = {
+    "bmp": (lambda i, w, h: bmp_encode(*synthetic_bmp_pattern(i, w, h)), bmp_decode),
+    "png": (lambda i, w, h: png_encode(*synthetic_bmp_pattern(i, w, h)), png_decode),
+    "gif": (lambda i, w, h: gif_encode(*synthetic_gif_pattern(i)), gif_decode),
+    "wav": (lambda i, w, h: wav_encode(*synthetic_wav_pattern(i)), None),
+}
 
-    return df.mapInPandas(run, schema="item_id bigint, payload binary, format string")
+
+def encode_synthetic(
+    df: DataFrame,
+    id_col: str,
+    fmt: str,
+    width: int | None = None,
+    height: int | None = None,
+) -> DataFrame:
+    """(id) → (item_id, payload binary, format): each row becomes a
+    REAL ``fmt`` file of its synthetic pattern, built executor-side in
+    Arrow batches — the encode half of the genuine-codec proof.
+    ``width``/``height`` pin a fixed BMP/PNG geometry (e.g. 8×8 for the
+    word-packed aHash path); by default it derives from the id."""
+    encode = _CODECS[fmt][0]
+
+    def rows(item_id):
+        yield item_id, encode(item_id, width, height), fmt
+
+    return _map_rows(
+        df, "item_id bigint, payload binary, format string", rows, id_col
+    )
 
 
-def decode_gif_features(df: DataFrame) -> DataFrame:
-    """(item_id, payload) → (item_id, width, height, pixels binary):
-    the real GIF decode path — sub-block reassembly, variable-width
-    LZW inflate, palette application — canonical RGB out, same seam as
-    the BMP/PNG/WAV decoders."""
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
+def decode_pixels(df: DataFrame) -> DataFrame:
+    """(item_id, payload, format) → (item_id, width, height, pixels
+    binary): each row decoded by its own format's codec — container
+    stripped, canonical top-down RGB out — so one frame may mix BMP,
+    PNG and GIF rows, and every downstream consumer (perceptual
+    hashing, feature extraction) is codec-agnostic. A format without a
+    pixel decoder raises ValueError naming it."""
 
-        for pdf in batches:
-            widths, heights, pixels = [], [], []
-            for b in pdf["payload"]:
-                w, h, rgb = gif_decode(bytes(b))
-                widths.append(w)
-                heights.append(h)
-                pixels.append(rgb)
-            yield pd.DataFrame(
-                {
-                    "item_id": pdf["item_id"],
-                    "width": pd.Series(widths, dtype="int32"),
-                    "height": pd.Series(heights, dtype="int32"),
-                    "pixels": pixels,
-                }
-            )
+    def rows(item_id, payload, fmt):
+        decode = _CODECS.get(fmt, (None, None))[1]
+        if decode is None:
+            raise ValueError(f"no pixel decoder for payload format {fmt!r}")
+        yield (item_id, *decode(bytes(payload)))
 
-    return df.mapInPandas(
-        run, schema="item_id bigint, width int, height int, pixels binary"
+    return _map_rows(
+        df,
+        "item_id bigint, width int, height int, pixels binary",
+        rows,
+        "item_id",
+        "payload",
+        "format",
     )
 
 
@@ -1027,8 +848,8 @@ def decode_gif_features(df: DataFrame) -> DataFrame:
 # Animated GIF (GIF89a, multi-frame) — the VIDEO shape behind the codec
 # seam: a real container holding N LZW-compressed frames, with frame
 # SAMPLING (the training-pipeline read: decode every k-th frame, skip
-# the rest) as a first-class operation. Upgrades the stubbed
-# sample_frames plumbing to a genuine end-to-end decode.
+# the rest) as a first-class operation: the genuine end-to-end decode
+# beside the byte-range sample_frames plumbing.
 # ---------------------------------------------------------------------------
 
 
@@ -1176,72 +997,45 @@ def synthetic_gif_animation(
     return w, h, frames, palette
 
 
-def encode_synthetic_gif_animations(
-    df: DataFrame, id_col: str = "item_id"
-) -> DataFrame:
+def encode_synthetic_gif_animations(df: DataFrame, id_col: str) -> DataFrame:
     """(id) → (item_id, payload binary, format 'gif', n_frames):
     real animated GIF89a files built executor-side."""
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
 
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads, nf = [], []
-            for i in ids:
-                w, h, frames, pal = synthetic_gif_animation(int(i))
-                payloads.append(gif_encode_animation(w, h, frames, pal))
-                nf.append(len(frames))
-            yield pd.DataFrame(
-                {
-                    "item_id": ids,
-                    "payload": payloads,
-                    "format": "gif",
-                    "n_frames": pd.Series(nf, dtype="int32"),
-                }
-            )
+    def rows(item_id):
+        w, h, frames, pal = synthetic_gif_animation(item_id)
+        yield item_id, gif_encode_animation(w, h, frames, pal), "gif", len(frames)
 
-    return df.mapInPandas(
-        run,
-        schema="item_id bigint, payload binary, format string, n_frames int",
+    return _map_rows(
+        df,
+        "item_id bigint, payload binary, format string, n_frames int",
+        rows,
+        id_col,
     )
 
 
-def sample_gif_frames(df: DataFrame, stride: int = 2) -> DataFrame:
+#: sample_gif_frames decodes every GIF_FRAME_STRIDE-th frame, from 0
+GIF_FRAME_STRIDE = 2
+
+
+def sample_gif_frames(df: DataFrame) -> DataFrame:
     """(item_id, payload) → one row per SAMPLED frame (every
-    ``stride``-th, starting at 0): (item_id, frame_idx, width, height,
-    pixels binary) — the video-pipeline read: a training job decodes a
-    bounded subset of frames, never the whole stream. Arrow-batched
-    like every codec stage; output volume is n_frames/stride per clip
-    regardless of container size."""
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    ``GIF_FRAME_STRIDE``-th, starting at 0): (item_id, frame_idx,
+    width, height, pixels binary) — the video-pipeline read: a training
+    job decodes a bounded subset of frames, never the whole stream.
+    Output volume is n_frames/stride per clip regardless of container
+    size."""
 
-        for pdf in batches:
-            ids, fidx, ws, hs, px = [], [], [], [], []
-            for item_id, payload in zip(pdf["item_id"], pdf["payload"]):
-                w, h, frames = gif_decode_frames(bytes(payload))
-                for f in range(0, len(frames), stride):
-                    ids.append(int(item_id))
-                    fidx.append(f)
-                    ws.append(w)
-                    hs.append(h)
-                    px.append(frames[f])
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(fidx, dtype="int32"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "pixels": px,
-                }
-            )
+    def rows(item_id, payload):
+        w, h, frames = gif_decode_frames(bytes(payload))
+        for f in range(0, len(frames), GIF_FRAME_STRIDE):
+            yield item_id, f, w, h, frames[f]
 
-    return df.mapInPandas(
-        run,
-        schema=(
-            "item_id bigint, frame_idx int, width int, height int,"
-            " pixels binary"
-        ),
+    return _map_rows(
+        df,
+        "item_id bigint, frame_idx int, width int, height int, pixels binary",
+        rows,
+        "item_id",
+        "payload",
     )
 
 
@@ -1251,43 +1045,21 @@ def gif_motion_profile(df: DataFrame) -> DataFrame:
     exact integer sum of absolute RGB differences — the shot-boundary /
     motion-estimation read of a video pipeline (a cut is a SAD spike;
     static footage is a SAD floor). Decodes through the same
-    variable-width-LZW animated-GIF path as the frame sampler, diffs
-    vectorized in the Arrow batch; output is n_frames−1 rows per clip
-    regardless of resolution."""
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import numpy as np
-        import pandas as pd
+    variable-width-LZW animated-GIF path as the frame sampler; output
+    is n_frames−1 rows per clip regardless of resolution."""
 
-        for pdf in batches:
-            ids, ffrom, fto, sads, nb = [], [], [], [], []
-            for item_id, payload in zip(pdf["item_id"], pdf["payload"]):
-                w, h, frames = gif_decode_frames(bytes(payload))
-                arrs = [
-                    np.frombuffer(f, dtype=np.uint8).astype(np.int64)
-                    for f in frames
-                ]
-                for f in range(len(frames) - 1):
-                    ids.append(int(item_id))
-                    ffrom.append(f)
-                    fto.append(f + 1)
-                    sads.append(int(np.abs(arrs[f] - arrs[f + 1]).sum()))
-                    nb.append(w * h * 3)
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(ids, dtype="int64"),
-                    "frame_from": pd.Series(ffrom, dtype="int32"),
-                    "frame_to": pd.Series(fto, dtype="int32"),
-                    "sad": pd.Series(sads, dtype="int64"),
-                    "n_bytes": pd.Series(nb, dtype="int32"),
-                }
-            )
+    def rows(item_id, payload):
+        w, h, frames = gif_decode_frames(bytes(payload))
+        arrs = [np.frombuffer(f, dtype=np.uint8).astype(np.int64) for f in frames]
+        for f in range(len(arrs) - 1):
+            yield item_id, f, f + 1, int(np.abs(arrs[f] - arrs[f + 1]).sum()), w * h * 3
 
-    return df.mapInPandas(
-        run,
-        schema=(
-            "item_id long, frame_from int, frame_to int,"
-            " sad long, n_bytes int"
-        ),
+    return _map_rows(
+        df,
+        "item_id long, frame_from int, frame_to int, sad long, n_bytes int",
+        rows,
+        "item_id",
+        "payload",
     )
 
 
@@ -1307,36 +1079,21 @@ def wav_autocorrelation(df: DataFrame) -> DataFrame:
     samples per clip. Decodes through the same stdlib-wave container
     path as the loudness/ZCR features; Arrow-batched, payload never
     shuffles."""
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            ids, ls, r0s, rls, ppm = [], [], [], [], []
-            for item_id, payload in zip(pdf["item_id"], pdf["payload"]):
-                _rate, _n, samples = wav_decode(bytes(payload))
-                s = np.asarray(samples, dtype=np.int64)
-                r0 = int((s * s).sum())
-                for lag in WAV_AUTOCORR_LAGS:
-                    rl = int((s[lag:] * s[:-lag]).sum()) if len(s) > lag else 0
-                    ids.append(int(item_id))
-                    ls.append(lag)
-                    r0s.append(r0)
-                    rls.append(rl)
-                    # int(a // b) in Python floors; Spark/DuckDB DIV
-                    # truncates toward zero — match by trunc division
-                    q = abs(rl) * 1_000_000 // r0 if r0 else 0
-                    ppm.append(q if rl >= 0 else -q)
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(ids, dtype="int64"),
-                    "lag": pd.Series(ls, dtype="int32"),
-                    "r0": pd.Series(r0s, dtype="int64"),
-                    "r_lag": pd.Series(rls, dtype="int64"),
-                    "r_ppm": pd.Series(ppm, dtype="int64"),
-                }
-            )
+    def rows(item_id, payload):
+        s = np.asarray(wav_decode(bytes(payload))[2], dtype=np.int64)
+        r0 = int((s * s).sum())
+        for lag in WAV_AUTOCORR_LAGS:
+            rl = int((s[lag:] * s[:-lag]).sum()) if len(s) > lag else 0
+            # int(a // b) in Python floors; Spark/DuckDB DIV
+            # truncates toward zero — match by trunc division
+            q = abs(rl) * 1_000_000 // r0 if r0 else 0
+            yield item_id, lag, r0, rl, q if rl >= 0 else -q
 
-    return df.mapInPandas(
-        run, schema="item_id long, lag int, r0 long, r_lag long, r_ppm long"
+    return _map_rows(
+        df,
+        "item_id long, lag int, r0 long, r_lag long, r_ppm long",
+        rows,
+        "item_id",
+        "payload",
     )

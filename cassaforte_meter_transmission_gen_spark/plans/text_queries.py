@@ -496,8 +496,8 @@ FROM documents
 def multimodal_binary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal column plumbing: documents treated as opaque binary
     payloads with typed metadata — byte length + content hash + source
-    tag. The decode/feature-extract stage for real image/audio payloads
-    is operators.multimodal (Arrow-batched, stubbed decode)."""
+    tag. The decode/feature-extract stages for image/audio payloads
+    are operators.multimodal (Arrow-batched, pure-Python codecs)."""
     d = _docs(spark, sf_dir)
     return d.select(
         "doc_id",
@@ -535,7 +535,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _docs(spark, sf_dir).filter(F.col("doc_id") < 50)
     payloads = to_binary_payloads(d, "doc_id", "text", "text")
-    frames = sample_frames(payloads, n_frames=4)
+    frames = sample_frames(payloads)
     return frames.select(
         "item_id",
         "frame_idx",
@@ -567,17 +567,15 @@ FROM d
 def multimodal_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature extraction end-to-end (operators.multimodal.
     extract_features, mapInPandas): binary payloads → narrow typed
-    feature rows. The decode itself is the documented stub — the fake
-    path derives width/height/feature-hash deterministically from the
-    payload bytes, so the oracle recomputes them from the same ASCII
-    text and the whole Arrow plumbing (schema, batching, byte access)
-    is value-hash gated; a real PIL/librosa decoder plugs into the
-    same seam."""
+    feature rows. Width/height/feature-hash derive deterministically
+    from the payload bytes, so the oracle recomputes them from the same
+    ASCII text and the whole Arrow plumbing (schema, batching, byte
+    access) is value-hash gated."""
     from ..operators.multimodal import extract_features, to_binary_payloads
 
     d = _docs(spark, sf_dir).filter(F.col("doc_id") < 200)
     payloads = to_binary_payloads(d, "doc_id", "text", "text")
-    return extract_features(payloads, decode_stub="fake")
+    return extract_features(payloads)
 
 
 @register(
@@ -617,11 +615,29 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _docs(spark, sf_dir).filter(F.col("doc_id") < 200)
     payloads = to_binary_payloads(d, "doc_id", "text", "text")
-    resized = resize_payloads(payloads, target_bytes=64)
+    resized = resize_payloads(payloads)
     return resized.select(
         "item_id",
         "n_bytes",
         F.md5("payload").alias("resized_md5"),
+    )
+
+
+def _decoded_pixel_hex(
+    spark: SparkSession, sf_dir: str, fmt: str, **geometry: int
+) -> DataFrame:
+    """Shared body of the pixel-decode entries: 100 synthetic ``fmt``
+    images (``geometry`` pins width/height) encoded into real
+    containers and decoded back, pixels as lowercase hex."""
+    from ..operators.multimodal import decode_pixels, encode_synthetic
+
+    d = _docs(spark, sf_dir).filter(F.col("doc_id") < 100).select("doc_id")
+    feats = decode_pixels(encode_synthetic(d, "doc_id", fmt, **geometry))
+    return feats.select(
+        "item_id",
+        "width",
+        "height",
+        F.lower(F.hex("pixels")).alias("pixel_hex"),
     )
 
 
@@ -654,20 +670,8 @@ def multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     recovered CONTENT — dimensions from the header and pixels through
     the padding/row-order/channel-order transforms — not merely that
     bytes round-tripped. Mixed widths (2-6) exercise every padding
-    amount 0-3. This replaces 'stubbed decode' with a real decoder for
-    one format; PIL/librosa plug into the same mapInPandas seam for
-    the rest."""
-    from ..operators.multimodal import decode_bmp_features, encode_synthetic_bmps
-
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") < 100).select("doc_id")
-    payloads = encode_synthetic_bmps(d, "doc_id")
-    feats = decode_bmp_features(payloads)
-    return feats.select(
-        "item_id",
-        "width",
-        "height",
-        F.lower(F.hex("pixels")).alias("pixel_hex"),
-    )
+    amount 0-3."""
+    return _decoded_pixel_hex(spark, sf_dir, "bmp")
 
 
 @register(
@@ -2566,15 +2570,13 @@ def multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact / MinHash / SimHash / embedding-cosine / prefix-filter /
     THIS)."""
     from ..operators.multimodal import (
-        decode_bmp_features,
-        encode_synthetic_bmps,
+        decode_pixels,
+        encode_synthetic,
         perceptual_hash,
     )
 
     d = _docs(spark, sf_dir).filter(F.col("doc_id") < 100).select("doc_id")
-    ph = perceptual_hash(
-        decode_bmp_features(encode_synthetic_bmps(d, "doc_id"))
-    )
+    ph = perceptual_hash(decode_pixels(encode_synthetic(d, "doc_id", "bmp")))
     bands = ph.selectExpr(
         "item_id",
         "n_pixels",
@@ -2648,10 +2650,10 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     multimodal family has real image AND audio codecs behind the one
     mapInPandas seam (video frame-sampling shares the byte-range
     machinery of `multimodal_frame_sample`)."""
-    from ..operators.multimodal import decode_wav_features, encode_synthetic_wavs
+    from ..operators.multimodal import decode_wav_features, encode_synthetic
 
     d = _docs(spark, sf_dir).filter(F.col("doc_id") < 100).select("doc_id")
-    return decode_wav_features(encode_synthetic_wavs(d, "doc_id"))
+    return decode_wav_features(encode_synthetic(d, "doc_id", "wav"))
 
 
 @register(
@@ -2904,9 +2906,10 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "multimodal_phash64_words_near_dup",
-    oracle="""
+#: shared by the BMP and PNG phash near-dup twins: the oracle derives
+#: fingerprints from the synthetic PATTERN, so a green hash on each
+#: codec proves that codec's decode produced the identical content
+_PHASH64_WORDS_ORACLE = """
 WITH d AS (SELECT doc_id AS did FROM documents WHERE doc_id < 100),
 px AS (
   SELECT did, p,
@@ -2939,33 +2942,18 @@ SELECT cand.item_a, cand.item_b,
           + bit_count(xor(x.w1, y.w1)) AS BIGINT) AS hamming
 FROM cand JOIN ph x ON cand.item_a = x.did JOIN ph y ON cand.item_b = y.did
 WHERE bit_count(xor(x.w0, y.w0)) + bit_count(xor(x.w1, y.w1)) <= 2
-""",
-    tags=("multimodal", "dedup", "phash", "words", "pandas-udf"),
-)
-def multimodal_phash64_words_near_dup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The CANONICAL 8x8 = 64-bit aHash — the size the single-int64
-    perceptual_hash cannot hold (bit 63 overflows signed packing; the
-    operator now refuses n > 63 loudly) — through the word-packed
-    variant (operators.multimodal.perceptual_hash_words): bits packed
-    into 56-bit words so every value stays < 2^56 on both engines and
-    every 8-bit band lives inside one word. 100 real 8x8 BMP
-    containers are encoded, decoded, fingerprinted into two words, and
-    near-dup pairs found by the derived banding
-    (phash_band_count(64) = 8 bands; Hamming <= 2 flips <= 2 bands, so
-    >= 6 agree — the banded equi-join is lossless by pigeonhole).
-    Hamming distance is the word-wise popcount fold
-    (aggregate(zip_with(xor))) — the shape that generalizes to any
-    image size, closing the ADVICE r9 overflow finding as a working
-    operator rather than just a guard.
+"""
 
-    The oracle re-derives all 64 pixels per image from the synthetic
-    formula and replays the identical word packing, banding, and
-    verify, so hash-green rows pin the decoded content bit-for-bit."""
+
+def _phash64_words_near_dup(
+    spark: SparkSession, sf_dir: str, fmt: str
+) -> DataFrame:
+    """Shared body of the phash64 near-dup entries: 100 synthetic 8x8
+    ``fmt`` images encoded, decoded, fingerprinted into two 56-bit
+    words, and near-dup pairs found by the derived banding."""
     from ..operators.multimodal import (
-        decode_bmp_features,
-        encode_synthetic_bmps,
+        decode_pixels,
+        encode_synthetic,
         perceptual_hash_words,
         phash_band_count,
     )
@@ -2973,9 +2961,7 @@ def multimodal_phash64_words_near_dup(
     n_bands = phash_band_count(64)  # 8 bands of 8 bits over 64 bits
     d = _docs(spark, sf_dir).filter(F.col("doc_id") < 100).select("doc_id")
     ph = perceptual_hash_words(
-        decode_bmp_features(
-            encode_synthetic_bmps(d, "doc_id", width=8, height=8)
-        )
+        decode_pixels(encode_synthetic(d, "doc_id", fmt, width=8, height=8))
     )
     bands = ph.selectExpr(
         "item_id",
@@ -3011,6 +2997,35 @@ def multimodal_phash64_words_near_dup(
 
 
 @register(
+    "multimodal_phash64_words_near_dup",
+    oracle=_PHASH64_WORDS_ORACLE,
+    tags=("multimodal", "dedup", "phash", "words", "pandas-udf"),
+)
+def multimodal_phash64_words_near_dup(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """The CANONICAL 8x8 = 64-bit aHash — the size the single-int64
+    perceptual_hash cannot hold (bit 63 overflows signed packing; the
+    operator now refuses n > 63 loudly) — through the word-packed
+    variant (operators.multimodal.perceptual_hash_words): bits packed
+    into 56-bit words so every value stays < 2^56 on both engines and
+    every 8-bit band lives inside one word. 100 real 8x8 BMP
+    containers are encoded, decoded, fingerprinted into two words, and
+    near-dup pairs found by the derived banding
+    (phash_band_count(64) = 8 bands; Hamming <= 2 flips <= 2 bands, so
+    >= 6 agree — the banded equi-join is lossless by pigeonhole).
+    Hamming distance is the word-wise popcount fold
+    (aggregate(zip_with(xor))) — the shape that generalizes to any
+    image size, closing the ADVICE r9 overflow finding as a working
+    operator rather than just a guard.
+
+    The oracle re-derives all 64 pixels per image from the synthetic
+    formula and replays the identical word packing, banding, and
+    verify, so hash-green rows pin the decoded content bit-for-bit."""
+    return _phash64_words_near_dup(spark, sf_dir, "bmp")
+
+
+@register(
     "multimodal_png_decode",
     oracle="""
 WITH d AS (SELECT doc_id, doc_id % 5 + 2 AS w, 7 AS h
@@ -3042,17 +3057,7 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarantee every filter type runs on every image; the oracle
     re-derives the pixels from the integer pattern formula, same as
     `multimodal_bmp_decode`."""
-    from ..operators.multimodal import decode_png_features, encode_synthetic_pngs
-
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") < 100).select("doc_id")
-    payloads = encode_synthetic_pngs(d, "doc_id", height=7)
-    feats = decode_png_features(payloads)
-    return feats.select(
-        "item_id",
-        "width",
-        "height",
-        F.lower(F.hex("pixels")).alias("pixel_hex"),
-    )
+    return _decoded_pixel_hex(spark, sf_dir, "png", height=7)
 
 
 @register(
@@ -3402,45 +3407,6 @@ def text_zipf_rank_frequency_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: shared by the BMP and PNG phash near-dup twins: the oracle derives
-#: fingerprints from the synthetic PATTERN, so a green hash on each
-#: codec proves that codec's decode produced the identical content
-_PHASH64_WORDS_ORACLE = """
-WITH d AS (SELECT doc_id AS did FROM documents WHERE doc_id < 100),
-px AS (
-  SELECT did, p,
-         ((did * 7919 + (p // 8) * 31 + (p % 8) * 3 + 0) % 256
-        + (did * 7919 + (p // 8) * 31 + (p % 8) * 3 + 1) % 256
-        + (did * 7919 + (p // 8) * 31 + (p % 8) * 3 + 2) % 256) AS gray
-  FROM d, LATERAL (SELECT unnest(range(0, 64)) AS p) u
-),
-tot AS (SELECT did, CAST(SUM(gray) AS BIGINT) AS total FROM px GROUP BY did),
-wd AS (
-  SELECT px.did, px.p // 56 AS wi,
-         CAST(SUM(CASE WHEN px.gray * 64 > tot.total
-                       THEN 1 << (px.p % 56) ELSE 0 END) AS BIGINT) AS word
-  FROM px JOIN tot ON px.did = tot.did
-  GROUP BY px.did, px.p // 56
-),
-ph AS (SELECT did,
-              MAX(CASE WHEN wi = 0 THEN word END) AS w0,
-              MAX(CASE WHEN wi = 1 THEN word END) AS w1
-       FROM wd GROUP BY did),
-bd AS (
-  SELECT wd.did, u.b, (wd.word // (1 << (8 * (u.b % 7)))) % 256 AS v
-  FROM wd, LATERAL (SELECT unnest(range(0, 8)) AS b) u
-  WHERE wd.wi = u.b // 7
-),
-cand AS (SELECT DISTINCT a.did AS item_a, b.did AS item_b
-         FROM bd a JOIN bd b ON a.b = b.b AND a.v = b.v AND a.did < b.did)
-SELECT cand.item_a, cand.item_b,
-       CAST(bit_count(xor(x.w0, y.w0))
-          + bit_count(xor(x.w1, y.w1)) AS BIGINT) AS hamming
-FROM cand JOIN ph x ON cand.item_a = x.did JOIN ph y ON cand.item_b = y.did
-WHERE bit_count(xor(x.w0, y.w0)) + bit_count(xor(x.w1, y.w1)) <= 2
-"""
-
-
 @register(
     "multimodal_png_phash_near_dup",
     oracle=_PHASH64_WORDS_ORACLE,
@@ -3458,51 +3424,7 @@ def multimodal_png_phash_near_dup(
     contract (decode seam → fingerprint → banding → verify) holds
     regardless of container, which is exactly what a multi-format
     100 TB image corpus requires."""
-    from ..operators.multimodal import (
-        decode_png_features,
-        encode_synthetic_pngs,
-        perceptual_hash_words,
-        phash_band_count,
-    )
-
-    n_bands = phash_band_count(64)
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") < 100).select("doc_id")
-    ph = perceptual_hash_words(
-        decode_png_features(
-            encode_synthetic_pngs(d, "doc_id", width=8, height=8)
-        )
-    )
-    bands = ph.selectExpr(
-        "item_id",
-        "words",
-        f"explode(sequence(0, {n_bands - 1})) AS b",
-    ).selectExpr(
-        "item_id",
-        "b",
-        "(words[b DIV 7] DIV (CAST(1 AS BIGINT) << (8 * (b % 7)))) % 256"
-        " AS v",
-    )
-    a = bands.selectExpr("item_id AS item_a", "b", "v")
-    bb = bands.selectExpr("item_id AS item_b", "b", "v")
-    cand = (
-        a.join(bb, ["b", "v"])
-        .filter(F.col("item_a") < F.col("item_b"))
-        .select("item_a", "item_b")
-        .distinct()
-    )
-    x = ph.selectExpr("item_id AS item_a", "words AS wa")
-    y = ph.selectExpr("item_id AS item_b", "words AS wb")
-    return (
-        cand.join(x, "item_a")
-        .join(y, "item_b")
-        .selectExpr(
-            "item_a",
-            "item_b",
-            "CAST(aggregate(zip_with(wa, wb, (u, v) -> bit_count(u ^ v)),"
-            " 0, (acc, h) -> acc + h) AS BIGINT) AS hamming",
-        )
-        .filter(F.col("hamming") <= 2)
-    )
+    return _phash64_words_near_dup(spark, sf_dir, "png")
 
 
 # ---------------------------------------------------------------------------
@@ -3711,16 +3633,7 @@ def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     The div-2 run structure in the pattern forces real multi-symbol
     dictionary entries; the oracle re-derives every pixel from the
     integer palette formula, same as the BMP/PNG twins."""
-    from ..operators.multimodal import decode_gif_features, encode_synthetic_gifs
-
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") < 100).select("doc_id")
-    feats = decode_gif_features(encode_synthetic_gifs(d, "doc_id"))
-    return feats.select(
-        "item_id",
-        "width",
-        "height",
-        F.lower(F.hex("pixels")).alias("pixel_hex"),
-    )
+    return _decoded_pixel_hex(spark, sf_dir, "gif")
 
 
 @register(
@@ -3763,8 +3676,8 @@ def multimodal_gif_frame_sample(
     streams) and frame-SAMPLED — every 2nd frame decoded, the rest
     skipped at the container level — the training-pipeline read where
     a job never inflates the whole stream
-    (operators.multimodal.sample_gif_frames). Upgrades the stubbed
-    frame-sampler plumbing to a genuine end-to-end decode: the oracle
+    (operators.multimodal.sample_gif_frames). A genuine end-to-end
+    decode beside the byte-range frame sampler: the oracle
     re-derives every sampled frame's pixels from the integer pattern
     formula, so a hash-green row pins container walking (extension
     skipping, sub-block framing), per-frame LZW, and the sampling rule
@@ -3776,7 +3689,7 @@ def multimodal_gif_frame_sample(
 
     d = _docs(spark, sf_dir).filter(F.col("doc_id") < 50).select("doc_id")
     clips = encode_synthetic_gif_animations(d, "doc_id")
-    sampled = sample_gif_frames(clips.select("item_id", "payload"), stride=2)
+    sampled = sample_gif_frames(clips.select("item_id", "payload"))
     return sampled.select(
         "item_id",
         "frame_idx",
@@ -4497,13 +4410,10 @@ def multimodal_wav_autocorrelation(
     so a green row pins the container decode AND the estimator. r_ppm
     divides the same two integers on both engines (truncation toward
     zero verified for the engines' DIV//)."""
-    from ..operators.multimodal import (
-        encode_synthetic_wavs,
-        wav_autocorrelation,
-    )
+    from ..operators.multimodal import encode_synthetic, wav_autocorrelation
 
     d = _docs(spark, sf_dir).filter(F.col("doc_id") < 100).select("doc_id")
-    wavs = encode_synthetic_wavs(d, "doc_id")
+    wavs = encode_synthetic(d, "doc_id", "wav")
     return wav_autocorrelation(wavs.select("item_id", "payload"))
 
 

@@ -85,13 +85,10 @@ def test_lsh_recall_vs_bruteforce(spark, sf_small):
 def test_multimodal_plumbing(spark, sf_small):
     docs = load_table(spark, sf_small, "documents").limit(20)
     payloads = to_binary_payloads(docs, "doc_id", "text", "text/plain")
-    feats = extract_features(payloads, decode_stub="fake")
+    feats = extract_features(payloads)
     rows = feats.collect()
     assert len(rows) == 20
     assert all(r["n_bytes"] > 0 and 1 <= r["width"] <= 64 for r in rows)
-    # the error stub marks the real decoder plug point
-    with pytest.raises(Exception, match="NotImplementedError|real image"):
-        extract_features(payloads, decode_stub="error").collect()
 
 
 def test_embedding_cosine_dedup_exact_and_lsh(spark, sf_small):
@@ -1058,7 +1055,7 @@ def test_perceptual_hash_known_bits_and_near_dup(spark):
     few bits, a different pattern changes many."""
     from cassaforte_meter_transmission_gen_spark.operators.multimodal import (
         bmp_encode,
-        decode_bmp_features,
+        decode_pixels,
         perceptual_hash,
     )
 
@@ -1067,7 +1064,7 @@ def test_perceptual_hash_known_bits_and_near_dup(spark):
             [(0, bmp_encode(w, h, bytes(rgb_bytes)), "bmp")],
             "item_id long, payload binary, format string",
         )
-        row = perceptual_hash(decode_bmp_features(df)).first()
+        row = perceptual_hash(decode_pixels(df)).first()
         return row["phash"], row["n_pixels"]
 
     # pixel 0 gray=3, pixel 1 gray=600: mean compare sets only bit 1
@@ -1229,7 +1226,7 @@ def test_perceptual_hash_word_packing_and_63_pixel_limit(spark):
     from cassaforte_meter_transmission_gen_spark.operators.multimodal import (
         PHASH_WORD_BITS,
         bmp_encode,
-        decode_bmp_features,
+        decode_pixels,
         perceptual_hash,
         perceptual_hash_words,
         phash_band_count,
@@ -1245,8 +1242,8 @@ def test_perceptual_hash_word_packing_and_63_pixel_limit(spark):
     # small image: words == [phash]
     base = [10] * 24 + [240] * 24  # 4x4 bimodal
     small = frame(1, 4, 4, base)
-    ph = perceptual_hash(decode_bmp_features(small)).first()["phash"]
-    words = perceptual_hash_words(decode_bmp_features(small)).first()
+    ph = perceptual_hash(decode_pixels(small)).first()["phash"]
+    words = perceptual_hash_words(decode_pixels(small)).first()
     assert words["n_pixels"] == 16 and list(words["words"]) == [ph]
 
     # 8x8 (64 px): int64 variant refuses, words variant matches serial.
@@ -1261,8 +1258,8 @@ def test_perceptual_hash_word_packing_and_63_pixel_limit(spark):
     w8, h8, rgb8 = synthetic_bmp_pattern(7, width=8, height=8)
     big = frame(7, w8, h8, rgb8).coalesce(1)
     with _pytest.raises(Exception, match="at most 63 pixels"):
-        perceptual_hash(decode_bmp_features(big)).collect()
-    row = perceptual_hash_words(decode_bmp_features(big)).first()
+        perceptual_hash(decode_pixels(big)).collect()
+    row = perceptual_hash_words(decode_pixels(big)).first()
     gray = [sum(rgb8[3 * p : 3 * p + 3]) for p in range(64)]
     total = sum(gray)
     serial = [0, 0]
@@ -1657,6 +1654,86 @@ def test_gif_animation_roundtrip_and_rejects():
         gif_decode_frames(enc[:-2])  # trailer chopped
     with pytest.raises(ValueError):
         gif_encode_animation(w, h, [], pal)
+
+
+def test_decode_pixels_dispatches_each_row_on_its_format(spark):
+    """One frame mixing BMP, PNG and GIF rows decodes row by row through
+    each row's own codec: every row equals its codec's pure-Python
+    decode of the same payload."""
+    from cassaforte_meter_transmission_gen_spark.operators.multimodal import (
+        bmp_decode,
+        bmp_encode,
+        decode_pixels,
+        gif_decode,
+        gif_encode,
+        png_decode,
+        png_encode,
+        synthetic_bmp_pattern,
+        synthetic_gif_pattern,
+    )
+
+    payloads = [
+        (1, bmp_encode(*synthetic_bmp_pattern(1)), "bmp"),
+        (2, png_encode(*synthetic_bmp_pattern(2, height=7)), "png"),
+        (3, gif_encode(*synthetic_gif_pattern(3)), "gif"),
+    ]
+    decoders = {"bmp": bmp_decode, "png": png_decode, "gif": gif_decode}
+    df = spark.createDataFrame(
+        payloads, "item_id long, payload binary, format string"
+    )
+    got = {
+        r["item_id"]: (r["width"], r["height"], bytes(r["pixels"]))
+        for r in decode_pixels(df).collect()
+    }
+    assert got == {i: decoders[fmt](b) for i, b, fmt in payloads}
+
+
+def test_decode_pixels_rejects_unknown_format(spark):
+    """A payload format with no pixel decoder fails the job with a
+    ValueError that names the format. One partition, so no sibling
+    tasks are killed mid-protocol while the failing one raises."""
+    from cassaforte_meter_transmission_gen_spark.operators.multimodal import (
+        decode_pixels,
+    )
+
+    df = spark.createDataFrame(
+        [(1, b"\x00\x01", "tiff")], "item_id long, payload binary, format string"
+    ).coalesce(1)
+    with pytest.raises(Exception, match=r"ValueError: .*'tiff'"):
+        decode_pixels(df).collect()
+
+
+def test_row_map_empty_input_and_empty_emission_keep_schema(spark):
+    """The row-map seam yields an empty frame of the declared schema
+    both for an empty input and for rows that emit nothing: a one-frame
+    clip has no consecutive frame pair to diff."""
+    from cassaforte_meter_transmission_gen_spark.operators.multimodal import (
+        decode_pixels,
+        gif_encode_animation,
+        gif_motion_profile,
+        synthetic_gif_animation,
+    )
+
+    empty = spark.createDataFrame(
+        [], "item_id long, payload binary, format string"
+    )
+    decoded = decode_pixels(empty)
+    assert decoded.collect() == []
+    assert decoded.schema.simpleString() == (
+        "struct<item_id:bigint,width:int,height:int,pixels:binary>"
+    )
+
+    w, h, frames, pal = synthetic_gif_animation(5)
+    clip = spark.createDataFrame(
+        [(5, gif_encode_animation(w, h, frames[:1], pal))],
+        "item_id long, payload binary",
+    )
+    motion = gif_motion_profile(clip)
+    assert motion.collect() == []
+    assert motion.schema.simpleString() == (
+        "struct<item_id:bigint,frame_from:int,frame_to:int,"
+        "sad:bigint,n_bytes:int>"
+    )
 
 
 def test_unigram_lm_train_rejects_zero_rounds(spark, sf_small):
