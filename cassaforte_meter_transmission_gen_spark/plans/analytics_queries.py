@@ -2124,8 +2124,8 @@ def streaming_quantile_sketch_daily(
 ) -> DataFrame:
     """LIVE streaming maintenance of the per-day quantile-sample sketch
     table (streaming.pipeline.quantile_sketch_rollup_batch_fn): each
-    micro-batch merges its days' k hash-smallest (h, v) rows with the
-    last committed sketches by union + re-take-k under the exactly-once
+    micro-batch appends its days' k hash-smallest (h, v) rows, and the
+    reader re-takes k from their union, under the exactly-once
     batch-id commit-log protocol — the third sketch family maintained
     streaming-side, after HLL distinct and CMS frequency grids. The
     final committed table is, BY MERGEABILITY, exactly the sample a
@@ -2476,8 +2476,8 @@ def streaming_psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIVE streaming maintenance of the PSI drift gate
     (streaming.pipeline.psi_counts_batch_fn): per micro-batch the
     arriving events' conditional bucket counts — computed by the SAME
-    one-scan stage the batch query runs — merge additively with the
-    last committed 10-row count table under the exactly-once
+    one-scan stage the batch query runs — are appended, at most 10
+    rows per batch, and summed on read under the exactly-once
     commit-log protocol (counts are additive, so the replay guard IS
     the correctness: a double-applied batch would silently shift the
     distribution). The final committed table feeds the identical

@@ -2152,10 +2152,11 @@ def events_model_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_model_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact ROC-AUC maintained STREAMING-SIDE: each micro-batch's
     score-level (cnt, pos) collapse (the identical
-    :func:`model_scores_by_score` stage the batch query runs) merges
-    ADDITIVELY into a committed score table under the exactly-once
-    commit-log protocol (streaming.pipeline.auc_scores_batch_fn —
-    high-watermark replay guard, versioned parquet state, same
+    :func:`model_scores_by_score` stage the batch query runs) is
+    appended to a committed score table and summed on read under the
+    exactly-once commit-log protocol (streaming.pipeline.
+    auc_scores_batch_fn — high-watermark replay guard, append-only
+    parquet state, same
     machinery as the PSI/CMS/KMV/MG streaming families); after the
     bounded stream drains, the final committed table EQUALS the batch
     collapse, so the :func:`auc_from_by_score` tail is gated by the

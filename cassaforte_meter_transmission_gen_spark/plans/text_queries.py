@@ -4295,9 +4295,9 @@ def text_bpe_encode_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Naive-Bayes language classifier TRAINED ON THE STREAM: each
     micro-batch's train-fold (class, token) and (class, doc) counts
-    merge additively into a committed model table under the
-    exactly-once commit-log protocol (streaming.pipeline.
-    nb_counts_batch_fn — high-watermark replay guard, versioned
+    are appended to committed model tables and summed on read under
+    the exactly-once commit-log protocol (streaming.pipeline.
+    nb_counts_batch_fn — high-watermark replay guard, append-only
     parquet state, the same machinery as the PSI/CMS/KMV/MG/AUC
     streaming families); after the bounded corpus drains, the
     committed model EQUALS the batch aggregation, so serving the
@@ -4554,7 +4554,7 @@ def dedup_chunk_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: batch derivation of the chunk ledger — shared verbatim by the
-#: full-rewrite and bucket-partitioned streaming maintenances: the
+#: append and bucket-partitioned streaming maintenances: the
 #: partial-rewrite economics must change NOTHING about the answer.
 _CHUNK_LEDGER_ORACLE = f"""
 WITH t AS (
@@ -4601,8 +4601,9 @@ def streaming_chunk_incremental_dedup(
     """Incremental corpus dedup ON THE STREAM — the production "ingest
     only what's new" shape: every arriving document is content-defined
     chunked with the exact batch chunker plan, and the chunk ledger
-    (chunk_hash → first owner, occurrence count) merges per micro-batch
-    under the exactly-once commit-log protocol
+    (chunk_hash → first owner, occurrence count) is appended per
+    micro-batch and folded on read under the exactly-once commit-log
+    protocol
     (streaming.pipeline.chunk_ledger_batch_fn). MIN and SUM are
     order-free and batch-split-free, so the drained ledger EQUALS the
     whole-corpus derivation and is gated by the batch oracle — a chunk
@@ -4642,12 +4643,11 @@ def streaming_chunk_incremental_dedup_bucketed(
     micro-batch only the chunk-hash buckets the batch touches are read,
     merged, and rewritten; untouched buckets carry forward BY MANIFEST
     REFERENCE with their data files byte-identical (filesystem-pinned
-    unit). Per-batch cost drops from O(total distinct chunks) — a
-    multi-TB rewrite per batch at 100 TB — to O(touched-bucket
-    ledger). The atomic manifest rename is the exactly-once commit
-    point (batch id = snapshot id; poisoned-replay unit). Gated by the
-    IDENTICAL batch oracle as the full-rewrite twin: the economics
-    change nothing about the answer.
+    unit). Per-batch cost is O(touched-bucket ledger). The atomic
+    manifest rename is the exactly-once commit point (batch id =
+    snapshot id; poisoned-replay unit). Gated by the IDENTICAL batch
+    oracle as the append twin: the economics change nothing about the
+    answer.
 
     Honest caveat: under UNIFORM chunk hashing a corpus-sized
     micro-batch touches every bucket, degrading partial rewrite back

@@ -63,6 +63,15 @@ _REQUIRED_CONFS = (
 CODEGEN_CACHE_ENTRIES = 2000
 
 
+def default_driver_memory() -> str:
+    """The default ``spark.driver.memory`` of :func:`get_spark`: 60% of
+    this machine's physical memory, at most 16g, in megabytes. A fixed
+    16g overcommits a 16 GB machine: the heap grows past what is left
+    beside other processes, and the kernel kills the JVM."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(16 * 1024, int(phys * 0.6) >> 20)}m"
+
+
 def configure(spark: SparkSession) -> SparkSession:
     """Apply the engine's runtime confs to an externally-owned session.
 
@@ -80,7 +89,8 @@ def configure(spark: SparkSession) -> SparkSession:
 
 
 def get_spark(app_name: str = "cassaforte-spark-engine") -> SparkSession:
-    """Session for tests/bench: local[N], shuffle partitions sized to N.
+    """Session for tests/bench: local[N], shuffle partitions sized to N,
+    the driver heap ``SPARK_DRIVER_MEM`` or :func:`default_driver_memory`.
 
     On a real cluster these builder confs come from spark-submit; nothing
     in the engine assumes local mode.
@@ -90,7 +100,10 @@ def get_spark(app_name: str = "cassaforte-spark-engine") -> SparkSession:
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )

@@ -25,32 +25,40 @@ Every ``foreachBatch`` sink here that keeps its state in plain parquet
 commits through one protocol — the poor-man's transaction log that a
 table format like Delta/Iceberg replaces wholesale.
 
-Each bounded sink is a (delta, merge) pair: ``delta(batch)`` is the
-micro-batch's contribution and ``merge(prev, delta)`` folds it into the
-committed state ``prev``. Two functions commit every pair, one per
-table format, and each owns that format's replay guard:
+Each bounded sink is a ``delta(batch)``, the micro-batch's
+contribution, plus the rule that folds it into the committed state.
+Three functions commit them, one per layout, and each owns that
+layout's replay guard:
 
-- :func:`versioned_merge_fn` for marker-log state (the rules below):
-  one or more versioned tables committed under one marker;
+- :func:`append_fold_fn` for state that is a fold, ``merge(prev, d) =
+  fold(prev ∪ d)``: sums (CMS, PSI, AUC, Naive Bayes), MIN/SUM (the
+  chunk ledger), HLL unions and keep-k-per-day (quantile, KMV). Each
+  batch appends its folded delta and reads no committed state, so its
+  cost is O(batch) whatever the state's size; readers apply the fold;
+- :func:`versioned_merge_fn` for the two merges that are not a fold.
+  The Misra–Gries cap subtracts each merged batch's (k+1)-th count, and
+  SCD2 closes versions in batch order, so both must see the committed
+  state: each batch writes a full new copy of it;
 - :func:`snapshot_merge_fn` for manifest state
   (``sources.snapshot.SnapshotTable``): the manifest's ``batch_hw`` is
   the high watermark, the atomic manifest create is the commit point,
   and only the buckets the delta touches are read and rewritten (or the
   delta is appended, for the LSM ledger).
 
-Two sinks keep their own guard. :func:`streaming_ingest_batch_fn`
-only appends: it reads no committed state, so it is not a (delta,
-merge) pair, and it overlaps its five table writes on driver threads.
-:func:`snapshot_view_batch_fn` keys its guard on the applied source
-snapshot id, not on the micro-batch id.
+Two sinks on the append layout keep their own write step.
+:func:`streaming_ingest_batch_fn` overlaps its five table writes on
+driver threads and derives the grains from the second table it just
+wrote. :func:`snapshot_view_batch_fn` keys its guard on the applied
+source snapshot id, not on the micro-batch id.
 
-- **Layout.** A sink owns its table dirs plus one ``commits_dir``. A
-  versioned table holds one full copy of its state per applied batch,
-  ``<table>/v=<batch_id>/``. The five tables of the ingest sink are
-  append-only instead: each batch writes ``<table>/batch=<batch_id>/``
-  (for the minute/hour/day grains, that batch's increment — the
-  reference's COUNTER bump), and :func:`compact_stream_tables` folds
-  old dirs into ``_compacted/upto=<U>`` segments.
+- **Layout.** A sink owns its table dirs plus one ``commits_dir``. An
+  append table gets one dir per applied batch, ``<table>/batch=<id>/``,
+  holding that batch's folded contribution (for the rollup grains, the
+  reference's COUNTER bump); :func:`compact_fold_tables` folds old dirs
+  into ``_compacted/upto=<U>`` segments. Each append table is described
+  once by a :class:`Fold`: its pinned schema and its fold. A versioned
+  table holds one full copy of its state per applied batch,
+  ``<table>/v=<batch_id>/``.
 - **Marker.** The commit point of batch ``b`` is the empty file
   ``<commits_dir>/<b>``, published by ``os.replace`` of ``<b>.tmp``
   (:func:`_commit`) only after every table of the batch is durable.
@@ -58,23 +66,23 @@ snapshot id, not on the micro-batch id.
   the marker is each batch's last step, so every id ≤ the newest
   marker (the high watermark, :func:`_high_watermark`) is committed. A
   batch with ``batch_id <= hw`` is a replay and is skipped. Any other
-  batch merges onto ``v=<hw>`` (or, append-only, reads nothing) and
-  OVERWRITES its own ``v=<batch_id>`` (or ``batch=<batch_id>``) dir, so
-  a batch replayed after a crash before its marker rebuilds the same
-  dir: it can never be applied twice (:func:`versioned_merge_fn`).
+  batch OVERWRITES its own ``batch=<batch_id>`` dir (or, versioned,
+  merges onto ``v=<hw>`` into its own ``v=<batch_id>``), so a batch
+  replayed after a crash before its marker rebuilds the same dir: it
+  can never be applied twice.
 - **Retention.** After each commit only the newest ``retain_versions``
-  (default :data:`RETAIN_VERSIONS`) ``v=`` dirs and markers are kept;
-  the append-only ingest sink has no ``v=`` dirs and prunes markers
-  only. The newest marker alone carries the committed set, so pruning
-  never widens a read. A reader that resolved version N keeps a valid
-  directory for ``retain_versions - 1`` further commits (≈ that many
-  trigger intervals) — size it above the longest expected read.
-- **Readers.** Only ``v=<hw>`` (:func:`_read_committed`) and, for the
-  five ingest tables, the newest segment plus the batch dirs in
-  (segment upto, hw] (:func:`read_stream_table`, which sums the grain
-  rows per (said, datetime)) may be read. Anything newer is an
-  uncommitted in-flight batch, so a crash mid-batch is invisible to
-  every reader.
+  (default :data:`RETAIN_VERSIONS`) markers are kept, and as many
+  ``v=`` dirs of a versioned table. The newest marker alone carries the
+  committed set, so pruning never widens a read. A reader that resolved
+  version N keeps a valid directory for ``retain_versions - 1`` further
+  commits (≈ that many trigger intervals) — size it above the longest
+  expected read. Append tables keep their batch dirs until a
+  compaction folds them (its own retention rule).
+- **Readers.** An append table is read by :func:`read_fold_table`: the
+  newest segment plus the batch dirs in (segment upto, hw], folded; a
+  versioned table only as ``v=<hw>`` (:func:`_read_committed`).
+  Anything newer is an uncommitted in-flight batch, so a crash
+  mid-batch is invisible to every reader.
 
 The ``run_bounded_*`` harnesses drive a sink over a staged, bounded
 stream to completion and read back the committed result: a
@@ -90,9 +98,11 @@ import shutil
 import tempfile
 import uuid
 from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.ingest import TABLES
 from ..operators.rollups import CHAIN, rollup_from_second
@@ -105,7 +115,7 @@ from ..operators.sketches import (
     kmv_estimate_col,
     kmv_hash_expr,
 )
-from ..schemas import METER_SAMPLES_SECOND
+from ..schemas import METER_SAMPLES, METER_SAMPLES_SECOND
 from ..sources.meter_generator import meter_samples_second
 
 #: default retention window: ``v=`` dirs and markers kept after each
@@ -168,13 +178,15 @@ def _read_committed(
 
 def versioned_merge_fn(commits_dir: str, *tables):
     """foreachBatch body of a versioned sink under the module's commit
-    protocol. Each of ``tables`` is a ``(table_dir, schema, delta,
-    merge)`` tuple: ``delta(batch) -> DataFrame`` is the batch's
-    contribution and ``merge(prev, delta) -> DataFrame`` folds it into
-    the committed state ``prev`` (an empty frame of ``schema`` on the
-    first batch). A replayed batch is skipped; otherwise every table is
-    written as ``v=<batch_id>``, in order, and only then does the one
-    marker of the batch land."""
+    protocol — for a merge that must see the committed state because it
+    is not a fold (:func:`append_fold_fn` takes every merge that is).
+    Each of ``tables`` is a ``(table_dir, schema, delta, merge)`` tuple:
+    ``delta(batch) -> DataFrame`` is the batch's contribution and
+    ``merge(prev, delta) -> DataFrame`` folds it into the committed
+    state ``prev`` (an empty frame of ``schema`` on the first batch). A
+    replayed batch is skipped; otherwise every table is written as
+    ``v=<batch_id>``, in order, and only then does the one marker of
+    the batch land."""
     os.makedirs(commits_dir, exist_ok=True)
 
     def fn(batch: DataFrame, batch_id: int) -> None:
@@ -189,6 +201,158 @@ def versioned_merge_fn(commits_dir: str, *tables):
         _commit(commits_dir, batch_id, [t[0] for t in tables])
 
     return fn
+
+
+class Fold(NamedTuple):
+    """The spec of an append table: ``schema`` pins every read of its
+    batch dirs and segments (no inference job; an empty dir reads as
+    empty) and ``fold(rows) -> DataFrame`` collapses the rows of any set
+    of them into the state they hold. The fold must be associative, so
+    that folding folded rows again changes nothing; ``None`` keeps the
+    rows as they are."""
+
+    schema: str | StructType
+    fold: Callable[[DataFrame], DataFrame] | None
+
+
+def _compacted_state(table_dir: str) -> tuple[int, str | None]:
+    """(upto, dir) of the newest compacted segment under
+    ``<table>/_compacted`` — rows of batches 0..upto folded into one
+    parquet dir. (-1, None) when nothing is compacted yet."""
+
+    root = os.path.join(table_dir, "_compacted")
+    if not os.path.isdir(root):
+        return -1, None
+    best_upto, best = -1, None
+    for d in os.listdir(root):
+        if d.startswith("upto="):
+            upto = int(d[5:])
+            if upto > best_upto:
+                best_upto, best = upto, os.path.join(root, d)
+    return best_upto, best
+
+
+def _batch_dirs(table_dir: str, lo: int, hi: int) -> list[str]:
+    """The ``batch=<id>`` dirs of a table with ``lo < id <= hi``."""
+    return [
+        os.path.join(table_dir, d)
+        for d in sorted(os.listdir(table_dir))
+        if d.startswith("batch=") and lo < int(d[6:]) <= hi
+    ]
+
+
+def _fold_parts(spark: SparkSession, spec: Fold, parts: list[str]) -> DataFrame:
+    """The state held by the segment and batch dirs ``parts``."""
+    rows = spark.read.schema(spec.schema).parquet(*parts)
+    return rows if spec.fold is None else spec.fold(rows)
+
+
+def read_fold_table(
+    spark: SparkSession, table_dir: str, commits_dir: str, spec: Fold
+) -> DataFrame:
+    """The committed state of an append table: the newest compacted
+    segment (if any) plus the batch dirs in (segment upto,
+    high-watermark], folded by ``spec``; an empty frame of its schema
+    before the first commit. An uncommitted or partially-written
+    in-flight ``batch=`` dir is never touched, so a crash mid-batch is
+    invisible here."""
+    hw = _high_watermark(commits_dir)
+    if hw is None:
+        return spark.createDataFrame([], spec.schema)
+    upto, seg = _compacted_state(table_dir)
+    parts = _batch_dirs(table_dir, upto, hw)
+    if seg is not None:
+        parts.append(seg)
+    return _fold_parts(spark, spec, parts)
+
+
+def append_fold_fn(commits_dir: str, *tables):
+    """foreachBatch body of an append sink under the module's commit
+    protocol. Each of ``tables`` is a ``(table_dir, spec, delta)``
+    tuple: ``delta(batch) -> DataFrame`` is the batch's contribution and
+    ``spec`` the table's :class:`Fold`. A replayed batch is skipped;
+    otherwise every table's folded delta is written as
+    ``batch=<batch_id>``, in order, and only then does the one marker
+    of the batch land. No committed state is read, so the per-batch
+    cost is O(batch) however large the state; :func:`read_fold_table`
+    reads it back."""
+    os.makedirs(commits_dir, exist_ok=True)
+
+    def fn(batch: DataFrame, batch_id: int) -> None:
+        hw = _high_watermark(commits_dir)
+        if hw is not None and batch_id <= hw:
+            return  # replayed, fully applied
+        for table_dir, spec, delta in tables:
+            spec.fold(delta(batch)).write.mode("overwrite").parquet(
+                f"{table_dir}/batch={batch_id}"
+            )
+        _commit(commits_dir, batch_id, [])
+
+    return fn
+
+
+def compact_fold_tables(
+    spark: SparkSession, commits_dir: str, keep_batches: int, *tables
+) -> None:
+    """Fold old ``batch=<id>`` dirs of each ``(table_dir, spec)`` of
+    ``tables`` into one compacted segment — the maintenance job that
+    bounds metadata, small-file growth and read fan-out on an unbounded
+    stream (one dir per batch otherwise). A segment holds what
+    :func:`read_fold_table` would read from what it folds. Idempotent and
+    crash-safe:
+
+    - the new segment ``_compacted/upto=<U>`` (U = high-watermark −
+      ``keep_batches``; recent dirs stay out for reader-race safety) is
+      written to a dotted temp dir and ``os.replace``d into place —
+      readers never see a partial segment, and a crash mid-compaction
+      leaves the previous segment authoritative;
+    - batch dirs are DELETED only up to the *previous* segment's upto,
+      so a reader that resolved the previous segment keeps every dir it
+      may touch for one full compaction cycle (the same bounded-race
+      window as marker retention);
+    - the previous segment itself is kept (current + previous), older
+      ones removed.
+
+    Readers take the newest segment plus batch dirs in (upto,
+    high-watermark] — exclusive bounds, so rows are never double-read.
+    At real scale this runs as a scheduled maintenance job."""
+
+    hw = _high_watermark(commits_dir)
+    if hw is None:
+        return
+    new_upto = hw - keep_batches
+    for path, spec in tables:
+        prev_upto, prev_dir = _compacted_state(path)
+        parts = _batch_dirs(path, prev_upto, new_upto)
+        if not parts:
+            continue
+        if prev_dir is not None:
+            parts.append(prev_dir)
+        root = os.path.join(path, "_compacted")
+        os.makedirs(root, exist_ok=True)
+        # GC stale temp dirs from cycles that crashed between the temp
+        # write and the publish: later cycles compute a different
+        # new_upto, so the orphaned name would never be reused and the
+        # upto=-only segment GC below never sees it. Readers ignore
+        # dotted dirs, so this sweep is race-free.
+        for d in os.listdir(root):
+            if d.startswith(".tmp_upto="):
+                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+        tmp = os.path.join(root, f".tmp_upto={new_upto}")
+        final = os.path.join(root, f"upto={new_upto}")
+        # coalesce to a handful of files: the segment is bounded by the
+        # compaction period, not stream history, so small counts hold
+        _fold_parts(spark, spec, parts).coalesce(4).write.mode(
+            "overwrite"
+        ).parquet(tmp)
+        shutil.rmtree(final, ignore_errors=True)
+        os.replace(tmp, final)  # publish point
+        # delete only what BOTH retained segments cover
+        for d in _batch_dirs(path, -1, prev_upto):
+            shutil.rmtree(d, ignore_errors=True)
+        for d in os.listdir(root):
+            if d.startswith("upto=") and int(d[5:]) not in (new_upto, prev_upto):
+                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
 
 
 def snapshot_merge_fn(table, delta, merge):
@@ -278,16 +442,6 @@ def _file_stream(df: DataFrame, files_per_trigger: int) -> DataFrame:
 def _four_file_stream(df: DataFrame) -> DataFrame:
     """``df`` replayed as 4 staged files, one per micro-batch."""
     return _file_stream(df.repartition(4), 1)
-
-
-def _sum_merge(keys: tuple[str, ...], cols: tuple[str, ...]):
-    """``merge`` for additive state: union, then re-sum ``cols`` (as
-    long) per ``keys``."""
-    return lambda prev, delta: (
-        prev.unionByName(delta)
-        .groupBy(*keys)
-        .agg(*[F.sum(c).cast("long").alias(c) for c in cols])
-    )
 
 
 def _stage_ordered_files(prefix: str, frames: list[DataFrame]) -> str:
@@ -474,57 +628,35 @@ def cumulative_energy_stream(stream: DataFrame) -> DataFrame:
 #: compacted segments are COUNTER increments that add up
 GRAIN_TABLES = tuple(f"meter_samples_{g}" for g in CHAIN)
 
-#: grain table schema — pinned so reads of grain batch dirs and
-#: segments skip parquet schema inference (fixed per-read driver work
-#: dominates streaming cost at bench scale) and an empty increment's
-#: dir reads as empty
-GRAIN_SCHEMA = "said int, datetime timestamp, joules long"
 
-
-def _compacted_state(table_path: str) -> tuple[int, str | None]:
-    """(upto, dir) of the newest compacted segment under
-    ``<table>/_compacted`` — rows of batches 0..upto folded into one
-    parquet dir. (-1, None) when nothing is compacted yet."""
-
-    root = os.path.join(table_path, "_compacted")
-    if not os.path.isdir(root):
-        return -1, None
-    best_upto, best = -1, None
-    for d in os.listdir(root):
-        if d.startswith("upto="):
-            upto = int(d[5:])
-            if upto > best_upto:
-                best_upto, best = upto, os.path.join(root, d)
-    return best_upto, best
-
-
-def _batch_dirs(table_path: str, lo: int, hi: int) -> list[str]:
-    """The ``batch=<id>`` dirs of a table with ``lo < id <= hi``."""
-    return [
-        os.path.join(table_path, d)
-        for d in sorted(os.listdir(table_path))
-        if d.startswith("batch=") and lo < int(d[6:]) <= hi
-    ]
-
-
-def _read_parts(spark: SparkSession, table: str, parts: list[str]) -> DataFrame:
-    """One ingest table over segment and batch dirs ``parts``: the rows
-    as written, or for a grain table their sum per (said, datetime)."""
-    if table not in GRAIN_TABLES:
-        return spark.read.parquet(*parts)
-    return (
-        spark.read.schema(GRAIN_SCHEMA)
-        .parquet(*parts)
-        .groupBy("said", "datetime")
-        .agg(F.sum("joules").alias("joules"))
+def _sum_fold(keys: tuple[str, ...], cols: tuple[str, ...]):
+    """``fold`` of additive state: re-sum ``cols`` (as long) per
+    ``keys``."""
+    return lambda rows: rows.groupBy(*keys).agg(
+        *[F.sum(c).cast("long").alias(c) for c in cols]
     )
+
+
+#: the five tables of :func:`streaming_ingest_batch_fn`. The raw and
+#: second tables hold rows as written; a grain's rows add up per (said,
+#: datetime), and its joules widen to long
+INGEST_FOLDS = {
+    "meter_samples": Fold(METER_SAMPLES, None),
+    "meter_samples_second": Fold("said int, datetime timestamp, joules int", None),
+    **{
+        t: Fold(
+            "said int, datetime timestamp, joules long",
+            _sum_fold(("said", "datetime"), ("joules",)),
+        )
+        for t in GRAIN_TABLES
+    },
+}
 
 
 def streaming_ingest_batch_fn(
     paths: dict[str, str],
     commits_dir: str,
     retain_versions: int = RETAIN_VERSIONS,
-    crash_before_commit=None,
     compact_every: int | None = None,
     compact_keep_batches: int = COMPACT_KEEP_BATCHES,
 ):
@@ -539,12 +671,11 @@ def streaming_ingest_batch_fn(
     after all five are durable, and markers beyond the newest
     ``retain_versions`` are pruned after it. No committed state is
     read, so the per-batch cost is O(batch), whatever the stream's
-    history; :func:`read_stream_table` sums the grain increments.
-
-    ``crash_before_commit(batch_id) -> bool`` is a fault-injection seam
-    for the restart tests: when it returns True the fn raises AFTER all
-    five tables are written but BEFORE the marker lands — the worst
-    crash point, which replay must make invisible.
+    history; :func:`read_stream_table` sums the grain increments. It
+    writes its own tables instead of going through
+    :func:`append_fold_fn` for the driver-thread overlap and the
+    read-back of the second table below; each table's
+    :data:`INGEST_FOLDS` entry says how it is read and compacted.
 
     ``compact_every=N`` folds old batch dirs into one compacted segment
     per table every N commits (:func:`compact_stream_tables`) —
@@ -578,7 +709,7 @@ def streaming_ingest_batch_fn(
         # the tiny (said, datetime, joules) table; the rows are
         # identical by construction (lossless write). joules is INT at
         # the second grain (joules_over_second); the rollup sum widens
-        # it to long per GRAIN_SCHEMA.
+        # it to long per INGEST_FOLDS.
         def _write_second() -> DataFrame:
             _write(
                 batch.select(
@@ -589,7 +720,7 @@ def streaming_ingest_batch_fn(
                 "meter_samples_second",
             )
             return spark.read.schema(
-                "said int, datetime timestamp, joules int"
+                INGEST_FOLDS["meter_samples_second"].schema
             ).parquet(f"{paths['meter_samples_second']}/batch={batch_id}")
 
         def _write_grain(second: DataFrame, grain: str) -> None:
@@ -614,10 +745,6 @@ def streaming_ingest_batch_fn(
             futs += [pool.submit(_write_grain, second, g) for g in CHAIN]
             for f in futs:
                 f.result()
-        if crash_before_commit is not None and crash_before_commit(batch_id):
-            raise RuntimeError(
-                f"injected crash before commit of batch {batch_id}"
-            )
         _commit(commits_dir, batch_id, [], retain_versions)
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
             compact_stream_tables(
@@ -633,88 +760,28 @@ def compact_stream_tables(
     commits_dir: str,
     keep_batches: int = COMPACT_KEEP_BATCHES,
 ) -> None:
-    """Fold old ``batch=<id>`` dirs into one compacted segment per
-    table — the maintenance job that bounds metadata and small-file
-    growth on the unbounded 1 Hz runner (one dir per second otherwise).
-    A grain segment holds the SUM per (said, datetime) of what it
-    folds, as :func:`read_stream_table` would read it. Idempotent and
-    crash-safe:
-
-    - the new segment ``_compacted/upto=<U>`` (U = high-watermark −
-      ``keep_batches``; recent dirs stay out for reader-race safety) is
-      written to a dotted temp dir and ``os.replace``d into place —
-      readers never see a partial segment, and a crash mid-compaction
-      leaves the previous segment authoritative;
-    - batch dirs are DELETED only up to the *previous* segment's upto,
-      so a reader that resolved the previous segment keeps every dir it
-      may touch for one full compaction cycle (the same bounded-race
-      window as marker retention);
-    - the previous segment itself is kept (current + previous), older
-      ones removed.
-
-    Readers (:func:`read_stream_table`) take the newest segment plus
-    batch dirs in (upto, high-watermark] — exclusive bounds, so rows
-    are never double-read. At real scale this runs as a scheduled
-    maintenance job; the runner inlines it every ``compact_every``
+    """:func:`compact_fold_tables` over the five tables of
+    :func:`streaming_ingest_batch_fn`, each by its :data:`INGEST_FOLDS`
+    entry — a grain segment holds the SUM per (said, datetime) of what
+    it folds. The unbounded runner inlines it every ``compact_every``
     commits."""
-
-    hw = _high_watermark(commits_dir)
-    if hw is None:
-        return
-    new_upto = hw - keep_batches
-    for table in TABLES:
-        path = paths[table]
-        prev_upto, prev_dir = _compacted_state(path)
-        parts = _batch_dirs(path, prev_upto, new_upto)
-        if not parts:
-            continue
-        if prev_dir is not None:
-            parts.append(prev_dir)
-        root = os.path.join(path, "_compacted")
-        os.makedirs(root, exist_ok=True)
-        # GC stale temp dirs from cycles that crashed between the temp
-        # write and the publish: later cycles compute a different
-        # new_upto, so the orphaned name would never be reused and the
-        # upto=-only segment GC below never sees it. Readers ignore
-        # dotted dirs, so this sweep is race-free.
-        for d in os.listdir(root):
-            if d.startswith(".tmp_upto="):
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-        tmp = os.path.join(root, f".tmp_upto={new_upto}")
-        final = os.path.join(root, f"upto={new_upto}")
-        # coalesce to a handful of files: the segment is bounded by the
-        # compaction period, not stream history, so small counts hold
-        _read_parts(spark, table, parts).coalesce(4).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        shutil.rmtree(final, ignore_errors=True)
-        os.replace(tmp, final)  # publish point
-        # delete only what BOTH retained segments cover
-        for d in _batch_dirs(path, -1, prev_upto):
-            shutil.rmtree(d, ignore_errors=True)
-        for d in os.listdir(root):
-            if d.startswith("upto=") and int(d[5:]) not in (new_upto, prev_upto):
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+    compact_fold_tables(
+        spark,
+        commits_dir,
+        keep_batches,
+        *[(paths[t], INGEST_FOLDS[t]) for t in TABLES],
+    )
 
 
 def read_stream_table(
     spark: SparkSession, paths: dict[str, str], table: str, commits_dir: str
 ) -> DataFrame:
-    """Read one table maintained by :func:`streaming_ingest_batch_fn`:
-    the newest compacted segment (if any) plus the batch directories in
-    (segment upto, high-watermark], the grain tables summed per (said,
-    datetime). An uncommitted or partially-written in-flight ``batch=``
-    dir is never touched, so a crash mid-batch is invisible here."""
-
-    path = paths[table]
-    hw = _high_watermark(commits_dir)
-    if hw is None:
+    """Read one table maintained by :func:`streaming_ingest_batch_fn`
+    through :func:`read_fold_table` — the grain tables summed per
+    (said, datetime). Raises before the first commit."""
+    if _high_watermark(commits_dir) is None:
         raise FileNotFoundError(f"no committed version of {table} yet")
-    upto, seg = _compacted_state(path)
-    parts = _batch_dirs(path, upto, hw)
-    if seg is not None:
-        parts.append(seg)
-    return _read_parts(spark, table, parts)
+    return read_fold_table(spark, paths[table], commits_dir, INGEST_FOLDS[table])
 
 
 def run_bounded_streaming_ingest(
@@ -744,7 +811,6 @@ def run_bounded_streaming_ingest(
     already holds a committed write (``_SUCCESS``), so bench.py's
     trigger-size sweep pays the big-stream generation once, not once
     per curve point (the caller deletes it)."""
-    from ..schemas import METER_SAMPLES
     from ..sources.meter_generator import transmissions
 
     owned = stage_dir is None
@@ -992,45 +1058,74 @@ def run_bounded_cumulative(
     return _drain_memory(cumulative_energy_stream(stream), "update")
 
 
-#: pinned state schemas of the versioned sketch/count sinks below —
-#: shared by each sink's committed-state read and its harness's final
-#: read (no schema-inference job per micro-batch)
-_SKETCH_SCHEMA = "day timestamp, user_sketch binary"
-_CMS_SCHEMA = "day date, r int, c int, cnt long"
-_QSK_SCHEMA = "day timestamp, h bigint, v bigint"
-_KMV_SCHEMA = "day timestamp, h bigint"
-_PSI_SCHEMA = "bucket bigint, c_ref bigint, c_cur bigint"
-_AUC_SCHEMA = "score bigint, cnt bigint, pos bigint"
-_MG_SCHEMA = "user_id long, cnt long"
-_NB_SCHEMAS = {
-    "wl": "lang string, tok string, cnt bigint",
-    "dl": "lang string, d_l bigint",
+def _bottom_k(k: int, *order: str):
+    """``fold`` of a per-day sample: the ``k`` first rows of each day in
+    ``order``. The bottom k of a union of bottom-k samples is the bottom
+    k of everything they sampled (mergeability)."""
+    wday = Window.partitionBy("day").orderBy(*order)
+    return lambda rows: (
+        rows.withColumn("rn", F.row_number().over(wday))
+        .filter(F.col("rn") <= k)
+        .drop("rn")
+    )
+
+
+def _quantile_fold(k: int) -> Fold:
+    """The quantile-sample table of :func:`quantile_sketch_rollup_batch_fn`
+    at sample size ``k`` per day."""
+    return Fold("day timestamp, h bigint, v bigint", _bottom_k(k, "h", "v"))
+
+
+#: the append tables of the sketch and count sinks below — one spec
+#: serves each sink's writer, its harness's read and any compaction
+_SKETCH = Fold(
+    "day timestamp, user_sketch binary",
+    lambda rows: rows.groupBy("day").agg(
+        F.hll_union_agg("user_sketch").alias("user_sketch")
+    ),
+)
+_CMS = Fold("day date, r int, c int, cnt long", _sum_fold(("day", "r", "c"), ("cnt",)))
+_KMV = Fold(
+    "day timestamp, h bigint", lambda rows: _bottom_k(KMV_K, "h")(rows.distinct())
+)
+_PSI = Fold(
+    "bucket bigint, c_ref bigint, c_cur bigint",
+    _sum_fold(("bucket",), ("c_ref", "c_cur")),
+)
+_AUC = Fold(
+    "score bigint, cnt bigint, pos bigint", _sum_fold(("score",), ("cnt", "pos"))
+)
+_NB = {
+    "wl": Fold("lang string, tok string, cnt bigint", _sum_fold(("lang", "tok"), ("cnt",))),
+    "dl": Fold("lang string, d_l bigint", _sum_fold(("lang",), ("d_l",))),
 }
-_CHUNK_LEDGER_SCHEMA = (
-    "chunk_hash string, first_doc_id bigint, n_occurrences bigint"
+#: the versioned Misra–Gries summary (its merge is not a fold)
+_MG_SCHEMA = "user_id long, cnt long"
+
+#: micro-units of an event ``value``: exact decimal scaling to int64
+_VALUE_MICRO = "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)"
+#: the KMV sketch's distinct key: one user on one day
+_USER_DAY_KEY = (
+    "CONCAT(CAST(user_id AS STRING), ':', CAST(CAST(ts AS DATE) AS STRING))"
 )
 
 
 def sketch_rollup_batch_fn(table_dir: str, commits_dir: str):
     """foreachBatch body maintaining a SKETCH rollup table: per
     micro-batch, the day-grain HLL sketches of the arriving events are
-    ``hll_union``-merged with the last COMMITTED version into a new
-    version of the day-sketch table — COUNTER maintenance
-    (operators.rollups.counter_merge) applied to mergeable Datasketches
-    state instead of additive counters, maintaining a metric plain
-    counters cannot (distinct users). Exactly-once by the module's
-    commit protocol (:func:`versioned_merge_fn`)."""
-    return versioned_merge_fn(
+    appended, and readers ``hll_union`` them per day — COUNTER
+    maintenance (operators.rollups.counter_merge) applied to mergeable
+    Datasketches state instead of additive counters, maintaining a
+    metric plain counters cannot (distinct users). Exactly-once by the
+    module's commit protocol (:func:`append_fold_fn`)."""
+    return append_fold_fn(
         commits_dir,
         (
             table_dir,
-            _SKETCH_SCHEMA,
+            _SKETCH,
             lambda b: b.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
                 F.hll_sketch_agg("user_id").alias("user_sketch")
             ),
-            lambda prev, sk: prev.unionByName(sk)
-            .groupBy("day")
-            .agg(F.hll_union_agg("user_sketch").alias("user_sketch")),
         ),
     )
 
@@ -1105,12 +1200,15 @@ def scd2_batch_fn(
     already-applied seq redelivered under a NEW batch id is dropped by
     :func:`scd2_merge`'s at-least-once guard.
 
-    Scale: this fixture rewrites the full history per version (like
-    the grain tables); the production shape is
-    :func:`scd2_bucketed_batch_fn`, where the history partitions by
-    key bucket on a snapshot-manifest table and only affected buckets
-    rewrite — untouched buckets carry forward by manifest reference,
-    the same economics as the IVF layout."""
+    It stays on the versioned layout: closing a version needs the
+    committed open version, in batch order, so the merge is not a fold
+    that :func:`append_fold_fn` could defer to the reader.
+
+    Scale: this fixture rewrites the full history per version; the
+    production shape is :func:`scd2_bucketed_batch_fn`, where the
+    history partitions by key bucket on a snapshot-manifest table and
+    only affected buckets rewrite — untouched buckets carry forward by
+    manifest reference, the same economics as the IVF layout."""
     return versioned_merge_fn(
         commits_dir,
         (
@@ -1262,7 +1360,7 @@ def run_bounded_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored = _drain_sink(
         _four_file_stream(ev),
         sketch_rollup_batch_fn,
-        lambda t, c: _read_committed(spark, t, c, _SKETCH_SCHEMA),
+        lambda t, c: read_fold_table(spark, t, c, _SKETCH),
     )
     weekly_est = stored.groupBy(
         F.date_trunc("week", "day").cast("date").alias("week")
@@ -1287,24 +1385,23 @@ def run_bounded_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cms_rollup_batch_fn(table_dir: str, commits_dir: str):
     """foreachBatch body maintaining a COUNT-MIN-SKETCH rollup table:
     per micro-batch, the day-grain CMS grids of the arriving events
-    (operators.sketches.cms_build) merge cell-wise with the last
-    COMMITTED version into a new version — COUNTER maintenance
+    (operators.sketches.cms_build) are appended, and readers sum them
+    cell-wise — COUNTER maintenance
     (operators.rollups.counter_merge) applied to the frequency
     sketch. CMS counters are plain additive longs, so unlike the HLL
     dual (:func:`sketch_rollup_batch_fn`, whose estimate bytes are
     engine-specific) the maintained state is bit-reproducible: the
     final estimates equal the batch CMS query exactly, and the DuckDB
     oracle gates them by full value hash. Exactly-once by the module's
-    commit protocol (:func:`versioned_merge_fn`)."""
-    return versioned_merge_fn(
+    commit protocol (:func:`append_fold_fn`)."""
+    return append_fold_fn(
         commits_dir,
         (
             table_dir,
-            _CMS_SCHEMA,
+            _CMS,
             lambda b: cms_build(
                 b.withColumn("day", F.to_date("ts")), "user_id", group_cols=("day",)
             ),
-            _sum_merge(("day", "r", "c"), ("cnt",)),
         ),
     )
 
@@ -1325,7 +1422,7 @@ def run_bounded_cms_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _drain_sink(
             _four_file_stream(ev),
             cms_rollup_batch_fn,
-            lambda t, c: _read_committed(spark, t, c, _CMS_SCHEMA),
+            lambda t, c: read_fold_table(spark, t, c, _CMS),
         )
     )
     top = (
@@ -1427,9 +1524,7 @@ def run_bounded_cusum(
         "user_id",
         "ts",
         "event_id",
-        F.expr(
-            "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)"
-        ).alias("v_micro"),
+        F.expr(_VALUE_MICRO).alias("v_micro"),
     )
     # fixture staging: one global sort of the (small) verification
     # corpus into contiguous time slices — a real deployment's feed is
@@ -1473,34 +1568,25 @@ def quantile_sketch_rollup_batch_fn(
     table_dir: str, commits_dir: str, k: int = QSK_K
 ):
     """foreachBatch body maintaining a PER-DAY quantile-sample sketch
-    table — the counter-merge versioned protocol applied to the third
-    mergeable sketch family (HLL distinct → CMS frequency → THIS for
-    order statistics): per micro-batch, each day's k hash-smallest
-    (h, v) rows from the arriving events are merged with the last
-    COMMITTED day sketches by union + re-take-k — mergeability
+    table — the counter-merge protocol applied to the third mergeable
+    sketch family (HLL distinct → CMS frequency → THIS for order
+    statistics): per micro-batch, each day's k hash-smallest (h, v)
+    rows from the arriving events are appended, and readers re-take k
+    from their union — mergeability
     (operators.sketches.quantile_sample_sketch) guarantees the result
     equals the one-pass sketch of everything seen. Exactly-once by the
-    module's commit protocol (:func:`versioned_merge_fn`). Sketch state
-    is O(days × k) rows regardless of stream history."""
-    from pyspark.sql import Window as W
-
-    wday = W.partitionBy("day").orderBy("h", "v")
-    return versioned_merge_fn(
+    module's commit protocol (:func:`append_fold_fn`). Each batch dir
+    holds O(days × k) rows."""
+    return append_fold_fn(
         commits_dir,
         (
             table_dir,
-            _QSK_SCHEMA,
+            _quantile_fold(k),
             lambda b: b.select(
                 F.date_trunc("day", "ts").alias("day"),
                 F.expr(kmv_hash_expr("CAST(event_id AS STRING)")).alias("h"),
-                F.expr(
-                    "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)"
-                ).alias("v"),
+                F.expr(_VALUE_MICRO).alias("v"),
             ),
-            lambda prev, sk: prev.unionByName(sk)
-            .withColumn("rn", F.row_number().over(wday))
-            .filter(F.col("rn") <= k)
-            .drop("rn"),
         ),
     )
 
@@ -1518,7 +1604,7 @@ def run_bounded_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sk = _drain_sink(
         bounded_events_stream(spark, sf_dir),
         quantile_sketch_rollup_batch_fn,
-        lambda t, c: _read_committed(spark, t, c, _QSK_SCHEMA),
+        lambda t, c: read_fold_table(spark, t, c, _quantile_fold(QSK_K)),
     )
     est = sk.groupBy("day").agg(
         F.count("*").cast("int").alias("n_sample"),
@@ -1529,14 +1615,8 @@ def run_bounded_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "events")
         .groupBy(F.date_trunc("day", "ts").alias("day"))
         .agg(
-            F.expr(
-                "percentile(CAST(CAST(value AS DECIMAL(18,6)) * 1000000"
-                " AS BIGINT), 0.5)"
-            ).alias("exact_p50_micro"),
-            F.expr(
-                "percentile(CAST(CAST(value AS DECIMAL(18,6)) * 1000000"
-                " AS BIGINT), 0.9)"
-            ).alias("exact_p90_micro"),
+            F.expr(f"percentile({_VALUE_MICRO}, 0.5)").alias("exact_p50_micro"),
+            F.expr(f"percentile({_VALUE_MICRO}, 0.9)").alias("exact_p90_micro"),
         )
     )
     return est.join(exact, "day")
@@ -1549,30 +1629,18 @@ def kmv_rollup_batch_fn(table_dir: str, commits_dir: str):
     distinct counts whose estimator arithmetic is fully value-hash
     gated, unlike HLL's bound-pinned oracles): per micro-batch, each
     day's k smallest distinct user-day hashes from the arriving events
-    merge with the last COMMITTED sketches by union + distinct +
-    re-take-k. Exactly-once by the module's commit protocol
-    (:func:`versioned_merge_fn`); state is O(days × k) int64s."""
-    from pyspark.sql import Window as W
-
-    wday = W.partitionBy("day").orderBy("h")
-    key = (
-        "CONCAT(CAST(user_id AS STRING), ':',"
-        " CAST(CAST(ts AS DATE) AS STRING))"
-    )
-    return versioned_merge_fn(
+    are appended, and readers re-take k from the distinct union.
+    Exactly-once by the module's commit protocol
+    (:func:`append_fold_fn`); each batch dir holds O(days × k) int64s."""
+    return append_fold_fn(
         commits_dir,
         (
             table_dir,
-            _KMV_SCHEMA,
+            _KMV,
             lambda b: b.select(
                 F.date_trunc("day", "ts").alias("day"),
-                F.expr(kmv_hash_expr(key)).alias("h"),
-            ).distinct(),
-            lambda prev, sk: prev.unionByName(sk)
-            .distinct()
-            .withColumn("rn", F.row_number().over(wday))
-            .filter(F.col("rn") <= KMV_K)
-            .drop("rn"),
+                F.expr(kmv_hash_expr(_USER_DAY_KEY)).alias("h"),
+            ),
         ),
     )
 
@@ -1589,7 +1657,7 @@ def run_bounded_kmv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sk = _drain_sink(
         bounded_events_stream(spark, sf_dir),
         kmv_rollup_batch_fn,
-        lambda t, c: _read_committed(spark, t, c, _KMV_SCHEMA),
+        lambda t, c: read_fold_table(spark, t, c, _KMV),
     )
     est = sk.groupBy("day").agg(
         F.count("*").alias("n_sk"), F.max("h").alias("max_h")
@@ -1598,12 +1666,7 @@ def run_bounded_kmv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "events")
         .groupBy(F.date_trunc("day", "ts").alias("day"))
         .agg(
-            F.count_distinct(
-                F.expr(
-                    "CONCAT(CAST(user_id AS STRING), ':',"
-                    " CAST(CAST(ts AS DATE) AS STRING))"
-                )
-            )
+            F.count_distinct(F.expr(_USER_DAY_KEY))
             .cast("long")
             .alias("exact_user_days")
         )
@@ -1623,44 +1686,28 @@ def psi_counts_batch_fn(table_dir: str, commits_dir: str):
     (c_ref, c_cur) count table: per micro-batch the batch's
     conditional bucket counts (plans.analytics_queries.
     psi_bucket_counts — the SAME one-scan stage the batch query runs)
-    merge ADDITIVELY with the last committed counts. Exactly-once by
-    the module's commit protocol (:func:`versioned_merge_fn`); counts
-    are additive int64s, so replayed batches must not double-count —
-    the high-watermark guard is the correctness, not just an
-    optimization. State: ≤ 10 rows."""
+    are appended, and readers sum them. Exactly-once by the module's
+    commit protocol (:func:`append_fold_fn`); counts are additive
+    int64s, so replayed batches must not double-count — the
+    high-watermark guard is the correctness, not just an optimization.
+    Each batch dir: ≤ 10 rows."""
     from ..plans.analytics_queries import psi_bucket_counts
 
-    return versioned_merge_fn(
-        commits_dir,
-        (
-            table_dir,
-            _PSI_SCHEMA,
-            psi_bucket_counts,
-            _sum_merge(("bucket",), ("c_ref", "c_cur")),
-        ),
-    )
+    return append_fold_fn(commits_dir, (table_dir, _PSI, psi_bucket_counts))
 
 
 def auc_scores_batch_fn(table_dir: str, commits_dir: str):
     """foreachBatch body maintaining the exact-AUC score table: per
     micro-batch the batch's score-level (cnt, pos) collapse
     (plans.events_queries.model_scores_by_score — the SAME stage the
-    batch AUC/PR-AUC/KS queries run) merges ADDITIVELY with the last
-    committed table. Exactly-once by the module's commit protocol
-    (:func:`versioned_merge_fn`) — counts are additive int64s, so the
-    high-watermark replay guard IS the correctness. State:
+    batch AUC/PR-AUC/KS queries run) is appended, and readers sum it.
+    Exactly-once by the module's commit protocol
+    (:func:`append_fold_fn`) — counts are additive int64s, so the
+    high-watermark replay guard IS the correctness. Each batch dir:
     distinct-score-sized (value-range bounded), never event-sized."""
     from ..plans.events_queries import model_scores_by_score
 
-    return versioned_merge_fn(
-        commits_dir,
-        (
-            table_dir,
-            _AUC_SCHEMA,
-            model_scores_by_score,
-            _sum_merge(("score",), ("cnt", "pos")),
-        ),
-    )
+    return append_fold_fn(commits_dir, (table_dir, _AUC, model_scores_by_score))
 
 
 def run_bounded_model_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1679,7 +1726,7 @@ def run_bounded_model_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, sf_dir, columns=("user_id", "ts", "event_type", "value")
             ),
             auc_scores_batch_fn,
-            lambda t, c: _read_committed(spark, t, c, _AUC_SCHEMA),
+            lambda t, c: read_fold_table(spark, t, c, _AUC),
         )
     )
 
@@ -1699,7 +1746,7 @@ def run_bounded_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         _drain_sink(
             bounded_events_stream(spark, sf_dir),
             psi_counts_batch_fn,
-            lambda t, c: _read_committed(spark, t, c, _PSI_SCHEMA),
+            lambda t, c: read_fold_table(spark, t, c, _PSI),
         ),
     )
 
@@ -1719,11 +1766,17 @@ def mg_rollup_batch_fn(table_dir: str, commits_dir: str, k: int):
     present. The subtraction threshold is a one-row broadcast
     (sort-desc/limit(k+1) over a ≤ k+distinct(batch) frame), so state
     never exceeds k rows no matter the stream length — the fixed-size
-    property every streaming sketch here shares."""
-    summed = _sum_merge(("user_id",), ("cnt",))
+    property every streaming sketch here shares.
+
+    This sink stays on the versioned layout: the cap reads the merged
+    state, so the merge is not a fold that :func:`append_fold_fn` could
+    apply at read time. Nor does a one-bucket ``SnapshotTable`` fit:
+    :func:`snapshot_merge_fn` passes no ``emptied_buckets``, so a
+    summary whose counts all reached 0 would keep its previous rows."""
+    summed = _sum_fold(("user_id",), ("cnt",))
 
     def merge(prev: DataFrame, counts: DataFrame) -> DataFrame:
-        counts = summed(prev, counts)
+        counts = summed(prev.unionByName(counts))
         # MG cap: subtract the (k+1)-th largest count (0 when ≤ k keys)
         kth = (
             counts.orderBy(F.desc("cnt"), "user_id")
@@ -1877,32 +1930,22 @@ def nb_counts_batch_fn(table_dir: str, commits_dir: str):
     stream: per micro-batch the batch's train-fold (lang, tok, cnt)
     multinomial counts and (lang, d_l) prior counts
     (plans.text_queries.nb_train_counts / nb_doc_counts — the SAME
-    stages the batch classifier runs) merge ADDITIVELY with the last
-    committed state, as the two versioned tables ``<table_dir>/wl`` and
-    ``<table_dir>/dl`` under ONE marker of the module's commit protocol
-    — counts are additive int64s, so the high-watermark replay guard
-    IS the correctness (a replayed batch must not double-count a
-    word). State: vocab×class-sized plus one row per class, never
-    corpus-sized."""
+    stages the batch classifier runs) are appended to the two tables
+    ``<table_dir>/wl`` and ``<table_dir>/dl`` under ONE marker of the
+    module's commit protocol (:func:`append_fold_fn`), and readers sum
+    them — counts are additive int64s, so the high-watermark replay
+    guard IS the correctness (a replayed batch must not double-count a
+    word). Each batch dir: vocab×class-sized plus one row per class,
+    never corpus-sized."""
     from ..plans.text_queries import nb_doc_counts, nb_split_docs, nb_train_counts
 
     def on_train(counts):
         return lambda b: counts(nb_split_docs(b).where(~F.col("is_test")))
 
-    return versioned_merge_fn(
+    return append_fold_fn(
         commits_dir,
-        (
-            f"{table_dir}/wl",
-            _NB_SCHEMAS["wl"],
-            on_train(nb_train_counts),
-            _sum_merge(("lang", "tok"), ("cnt",)),
-        ),
-        (
-            f"{table_dir}/dl",
-            _NB_SCHEMAS["dl"],
-            on_train(nb_doc_counts),
-            _sum_merge(("lang",), ("d_l",)),
-        ),
+        (f"{table_dir}/wl", _NB["wl"], on_train(nb_train_counts)),
+        (f"{table_dir}/dl", _NB["dl"], on_train(nb_doc_counts)),
     )
 
 
@@ -1922,8 +1965,7 @@ def run_bounded_nb_training(spark: SparkSession, sf_dir: str) -> DataFrame:
         bounded_documents_stream(spark, sf_dir),
         nb_counts_batch_fn,
         lambda t, c: [
-            _read_committed(spark, f"{t}/{n}", c, schema)
-            for n, schema in _NB_SCHEMAS.items()
+            read_fold_table(spark, f"{t}/{n}", c, spec) for n, spec in _NB.items()
         ],
     )
     test = nb_split_docs(load_table(spark, sf_dir, "documents")).where(
@@ -1937,17 +1979,19 @@ def chunk_ledger_batch_fn(table_dir: str, commits_dir: str):
     LEDGER: per micro-batch every arriving document is content-defined
     chunked (plans.text_queries.content_defined_chunks — the SAME plan
     the batch chunker runs) and the ledger row per chunk hash —
-    (first_doc_id = MIN, n_occurrences = SUM) — merges with the last
-    committed ledger. MIN and SUM are both order-free and batch-split-
-    free, so the drained ledger EQUALS the batch derivation no matter
-    how the corpus was micro-batched; exactly-once by the module's
-    commit protocol (:func:`versioned_merge_fn` — a replayed batch must
-    not double-count a chunk). This is the production "ingest only
-    what's new" shape: a chunk already in the ledger is a known
-    duplicate the moment it arrives."""
-    return versioned_merge_fn(
-        commits_dir,
-        (table_dir, _CHUNK_LEDGER_SCHEMA, _chunk_ledger_delta, _ledger_union),
+    (first_doc_id = MIN, n_occurrences = SUM) — is appended, and readers
+    fold the ledger with :func:`ledger_merge`. MIN and SUM are both
+    order-free and batch-split-free, so the drained ledger EQUALS the
+    batch derivation no matter how the corpus was micro-batched;
+    exactly-once by the module's commit protocol
+    (:func:`append_fold_fn` — a replayed batch must not double-count a
+    chunk). Each batch writes O(batch) bytes however large the ledger
+    has grown; :func:`compact_fold_tables` bounds the dirs a read
+    folds. This is the production "ingest only what's new" shape: a
+    chunk already in the ledger is a known duplicate the moment it
+    arrives."""
+    return append_fold_fn(
+        commits_dir, (table_dir, _CHUNK_LEDGER, _chunk_ledger_delta)
     )
 
 
@@ -1967,12 +2011,6 @@ def _chunk_ledger_delta(docs: DataFrame) -> DataFrame:
     )
 
 
-def _ledger_union(prev: DataFrame, delta: DataFrame) -> DataFrame:
-    """``merge`` of every chunk-ledger sink: :func:`ledger_merge` over
-    the committed rows plus the delta."""
-    return ledger_merge(prev.unionByName(delta))
-
-
 def run_bounded_chunk_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drive :func:`chunk_ledger_batch_fn` over the bounded document
     stream to completion and return the FINAL committed chunk ledger —
@@ -1981,7 +2019,7 @@ def run_bounded_chunk_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain_sink(
         bounded_documents_stream(spark, sf_dir, columns=("doc_id", "text")),
         chunk_ledger_batch_fn,
-        lambda t, c: _read_committed(spark, t, c, _CHUNK_LEDGER_SCHEMA),
+        lambda t, c: read_fold_table(spark, t, c, _CHUNK_LEDGER),
     )
 
 
@@ -2009,17 +2047,21 @@ CHUNK_LEDGER_COMPACT_MAX_FILES = 4
 
 def chunk_ledger_bucketed_batch_fn(table):
     """foreachBatch body maintaining the incremental chunk-dedup ledger
-    on a BUCKETED snapshot-manifest table — the scale fix for
-    :func:`chunk_ledger_batch_fn`'s full-ledger rewrite: the ledger
+    on a BUCKETED snapshot-manifest table — the partial-rewrite twin of
+    the append ledger (:func:`chunk_ledger_batch_fn`): the ledger
     partitions by chunk-hash bucket, each micro-batch merges its delta
     into ONLY the buckets it touches, and untouched buckets carry
     forward by manifest reference with their files byte-identical
     (tests/test_snapshot.py pins this on the filesystem). The merge per
-    bucket is the same order-free MIN/SUM as the full-rewrite fixture,
+    bucket is the same order-free MIN/SUM as the append ledger's fold,
     so the drained ledger EQUALS the batch derivation — both gate
     against the identical oracle. Exactly-once by
     :func:`snapshot_merge_fn`."""
-    return snapshot_merge_fn(table, _bucketed_ledger_delta(table), _ledger_union)
+    return snapshot_merge_fn(
+        table,
+        _bucketed_ledger_delta(table),
+        lambda prev, delta: ledger_merge(prev.unionByName(delta)),
+    )
 
 
 def _bucketed_ledger_delta(table):
@@ -2081,14 +2123,21 @@ def ledger_merge(raw: DataFrame) -> DataFrame:
     """The ledger's fold: MIN first_doc_id / SUM n_occurrences per
     chunk hash (and per ``bucket`` when the rows carry one) over
     committed rows and deltas — associative and order-free, so any
-    delta split yields the same merged ledger. The merge of every
-    ledger sink (:func:`_ledger_union`), the LSM reader, and its
-    merge-compaction (which commits this fold back as the new base)."""
+    delta split yields the same merged ledger. The fold of the append
+    ledger (:func:`chunk_ledger_batch_fn`), the merge of the bucketed
+    one, the LSM reader, and its merge-compaction (which commits this
+    fold back as the new base)."""
     keys = [c for c in raw.columns if c in ("bucket", "chunk_hash")]
     return raw.groupBy(*keys).agg(
         F.min("first_doc_id").cast("long").alias("first_doc_id"),
         F.sum("n_occurrences").cast("long").alias("n_occurrences"),
     )
+
+
+#: the append table of :func:`chunk_ledger_batch_fn`
+_CHUNK_LEDGER = Fold(
+    "chunk_hash string, first_doc_id bigint, n_occurrences bigint", ledger_merge
+)
 
 
 def run_bounded_chunk_ledger_lsm(
@@ -2124,18 +2173,28 @@ def finalize_chunk_ledger_lsm(spark: SparkSession, table) -> DataFrame:
     correct whatever the compaction state."""
     hw = table.latest()
     if hw is None:  # zero micro-batches: empty corpus, empty ledger
-        return spark.createDataFrame([], _CHUNK_LEDGER_SCHEMA)
+        return spark.createDataFrame([], _CHUNK_LEDGER.schema)
     table.compact(spark, hw + 1, fold=ledger_merge)
     table.expire(keep_from=hw + 1)
     table.vacuum()
     return ledger_merge(table.read(spark)).drop("bucket")
 
 
-#: maintained-view schema for the snapshot change-feed consumer.
-#: sum_dec rides a wide exact decimal end to end so the Abelian
-#: add-then-subtract refresh cancels exactly (no float drift).
-_SNAPSHOT_VIEW_SCHEMA = (
-    "o_orderstatus string, n_orders bigint, sum_dec decimal(38,4)"
+#: the maintained view of the snapshot change-feed consumer: signed
+#: per-status partials that add up, a status with no orders left
+#: dropping out. Every prefix of the view's batches sums to a real view
+#: state (no negative counts), so the filter is exact on what readers
+#: and compaction fold. sum_dec rides a wide exact decimal end to end so
+#: the Abelian add-then-subtract refresh cancels exactly (no float
+#: drift).
+_SNAPSHOT_VIEW = Fold(
+    "o_orderstatus string, n_orders bigint, sum_dec decimal(38,4)",
+    lambda rows: rows.groupBy("o_orderstatus")
+    .agg(
+        F.sum("n_orders").cast("long").alias("n_orders"),
+        F.sum("sum_dec").cast("decimal(38,4)").alias("sum_dec"),
+    )
+    .where(F.col("n_orders") > 0),
 )
 
 
@@ -2168,44 +2227,44 @@ def snapshot_view_batch_fn(table, view_dir: str, commits_dir: str):
     Exactly-once under the module's commit protocol keyed on the
     APPLIED SOURCE SNAPSHOT id (not the micro-batch id): a redelivered
     or poisoned replay of an already-applied snapshot id is a no-op.
+    The view is an append table (:data:`_SNAPSHOT_VIEW`): the first
+    micro-batch seeds it with snapshot 0's partials as ``batch=0``, and
+    each refresh appends the signed partials of (applied, target] as
+    ``batch=<target>`` without reading the committed view.
 
     Scale: the downstream view of a 100 TB table refreshes per
     trigger by reading O(changed buckets); the full-table aggregation
     runs exactly once, at seed."""
     os.makedirs(commits_dir, exist_ok=True)
 
+    def publish(partials: DataFrame, sid: int) -> None:
+        partials.write.mode("overwrite").parquet(f"{view_dir}/batch={sid}")
+        _commit(commits_dir, sid, [])
+
     def fn(batch: DataFrame, batch_id: int) -> None:
         # delivered snapshot ids: bounded driver state (one tiny row
         # per source snapshot, never data rows)
         sids = sorted({int(r["value"]) for r in batch.collect()})
+        spark = batch.sparkSession
         applied = _high_watermark(commits_dir)
-        if applied is None:
-            return  # seed marker is written before the stream starts
+        if applied is None:  # seed: the one full pass, at snapshot 0
+            publish(_snapshot_view_partials(table.read(spark, as_of=0), 1), 0)
+            applied = 0
         targets = [s for s in sids if s > applied]
         if not targets:
             return  # replayed (possibly poisoned) ids: already folded
         target = max(targets)
-        spark = batch.sparkSession
-        prev = _read_committed(spark, view_dir, commits_dir, _SNAPSHOT_VIEW_SCHEMA)
         cb = table.changed_buckets(applied, target)
-        minus = _snapshot_view_partials(
-            table.read(spark, as_of=applied, buckets=cb), -1
+        publish(
+            _snapshot_view_partials(
+                table.read(spark, as_of=applied, buckets=cb), -1
+            ).unionByName(
+                _snapshot_view_partials(
+                    table.read(spark, as_of=target, buckets=cb), 1
+                )
+            ),
+            target,
         )
-        plus = _snapshot_view_partials(
-            table.read(spark, as_of=target, buckets=cb), 1
-        )
-        refreshed = (
-            prev.unionByName(minus)
-            .unionByName(plus)
-            .groupBy("o_orderstatus")
-            .agg(
-                F.sum("n_orders").cast("long").alias("n_orders"),
-                F.sum("sum_dec").cast("decimal(38,4)").alias("sum_dec"),
-            )
-            .where(F.col("n_orders") > 0)
-        )
-        refreshed.write.mode("overwrite").parquet(f"{view_dir}/v={target}")
-        _commit(commits_dir, target, [view_dir])
 
     return fn
 
@@ -2253,14 +2312,8 @@ def run_bounded_snapshot_view(
         .withColumn("bucket", bucket_of("o_orderkey", table.n_buckets)),
         3,
     )
-    # seed the view from snapshot 0 (the one full pass), then tail
     view_dir = os.path.join(out, "view")
     commits = os.path.join(out, "_commits")
-    os.makedirs(commits, exist_ok=True)
-    _snapshot_view_partials(table.read(spark, as_of=0), 1).write.mode(
-        "overwrite"
-    ).parquet(f"{view_dir}/v=0")
-    _commit(commits, 0, [view_dir])
     # the change feed: one trigger file per published snapshot id
     feed = os.path.join(out, "feed")
     os.makedirs(feed, exist_ok=True)
@@ -2277,9 +2330,7 @@ def run_bounded_snapshot_view(
             snapshot_view_batch_fn(table, view_dir, commits)
         )
     )
-    return _read_committed(
-        spark, view_dir, commits, _SNAPSHOT_VIEW_SCHEMA
-    ).select(
+    return read_fold_table(spark, view_dir, commits, _SNAPSHOT_VIEW).select(
         "o_orderstatus",
         "n_orders",
         F.col("sum_dec").cast("double").alias("sum_totalprice"),
@@ -2292,8 +2343,8 @@ def run_bounded_chunk_ledger_bucketed(
     """Drive :func:`chunk_ledger_bucketed_batch_fn` over the IDENTICAL
     bounded document stream as :func:`run_bounded_chunk_ledger` and
     return the final committed ledger read from the snapshot manifest
-    — same oracle as the full-rewrite twin, so the partial-rewrite
-    economics change nothing about the answer."""
+    — same oracle as the append twin, so the partial-rewrite economics
+    change nothing about the answer."""
     from ..sources.snapshot import SnapshotTable
 
     return _drain_sink(

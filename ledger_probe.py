@@ -4,12 +4,13 @@
 ledger, then apply ONE SMALL micro-batch through each of the three
 maintenance shapes and time just that apply:
 
-- full-rewrite  (chunk_ledger_batch_fn): reads + rewrites the WHOLE
-  committed ledger — O(total distinct chunks) per batch.
+- append-fold (chunk_ledger_batch_fn): appends the batch's folded
+  MIN/SUM rows as one batch dir and reads NOTHING — O(batch) per batch;
+  readers fold the dirs, and compaction bounds how many.
 - bucketed overwrite (chunk_ledger_bucketed_batch_fn): reads + rewrites
   only TOUCHED buckets — honest caveat measured here: uniform chunk
   hashing spreads even a small batch across most buckets, so at small
-  n_buckets this approaches the full rewrite; the win is the
+  n_buckets this approaches a full rewrite; the win is the
   bucket-granular bound, not a guarantee.
 - LSM append (chunk_ledger_lsm_batch_fn): appends O(batch) delta files,
   reads NOTHING — the shape whose per-batch cost is independent of
@@ -209,16 +210,16 @@ def main() -> None:
 
     root = tempfile.mkdtemp(prefix="ledger_probe_")
 
-    # --- full rewrite ---
-    table_dir = os.path.join(root, "full")
-    commits = os.path.join(root, "full_commits")
+    # --- append-fold ---
+    table_dir = os.path.join(root, "append")
+    commits = os.path.join(root, "append_commits")
     fn = chunk_ledger_batch_fn(table_dir, commits)
     fn(seed, 0)
     b0 = _tree_bytes(table_dir)
     t0 = time.perf_counter()
     fn(small, 1)
     dt = time.perf_counter() - t0
-    out["shapes"]["full_rewrite"] = {
+    out["shapes"]["append_fold"] = {
         "apply_sec": round(dt, 3),
         "bytes_written": _tree_bytes(table_dir) - b0,
     }

@@ -4,6 +4,8 @@ that make the 100 TB design work, asserted on the real plans."""
 
 from __future__ import annotations
 
+import os
+import shutil
 import tempfile
 
 from pyspark.sql import functions as F
@@ -178,6 +180,17 @@ def test_routed_report_over_bucketed_chain_has_no_exchange(spark):
         write_rollup_tables_bucketed,
     )
 
+    def drop_chain_tables() -> None:
+        """Drop the chain tables, and any table dir a killed run left
+        behind unregistered, which would fail the next write."""
+        warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+        for g in ("second", "minute", "hour", "day"):
+            spark.sql(f"DROP TABLE IF EXISTS t_routed_chain_{g}")
+            shutil.rmtree(
+                os.path.join(warehouse, f"t_routed_chain_{g}"), ignore_errors=True
+            )
+
+    drop_chain_tables()
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         chain = rollup_chain(meter_samples_second(spark, num_meters=4, seconds=2 * 86400))
@@ -211,8 +224,7 @@ def test_routed_report_over_bucketed_chain_has_no_exchange(spark):
         )
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        for g in ("second", "minute", "hour", "day"):
-            spark.sql(f"DROP TABLE IF EXISTS t_routed_chain_{g}")
+        drop_chain_tables()
 
 
 def _row_group_ranges(path: str, col: str) -> list[tuple]:

@@ -220,7 +220,9 @@ def test_nb_stream_training_replay_is_exactly_once(spark, tmp_path):
     committed model after the poisoned replay equals the model after
     the two genuine batches."""
     from cassaforte_meter_transmission_gen_spark.streaming.pipeline import (
+        _NB,
         nb_counts_batch_fn,
+        read_fold_table,
     )
 
     table = str(tmp_path / "model")
@@ -252,14 +254,10 @@ def test_nb_stream_training_replay_is_exactly_once(spark, tmp_path):
     # poisoned replay: same id, different content — must be a no-op
     fn(batch([(i2, "alpha alpha alpha poison", "aa")]), 1)
 
-    wl = spark.read.schema("lang string, tok string, cnt bigint").parquet(
-        f"{table}/wl/v=1"
-    )
+    wl = read_fold_table(spark, f"{table}/wl", commits, _NB["wl"])
     got = {r["tok"]: r["cnt"] for r in wl.collect()}
     assert got == {"alpha": 3, "beta": 1, "gamma": 1}
-    dl = spark.read.schema("lang string, d_l bigint").parquet(
-        f"{table}/dl/v=1"
-    )
+    dl = read_fold_table(spark, f"{table}/dl", commits, _NB["dl"])
     assert {r["lang"]: r["d_l"] for r in dl.collect()} == {"aa": 2}
 
 
@@ -295,7 +293,9 @@ def test_chunk_ledger_replay_is_exactly_once(spark, tmp_path):
     a leaked replay would double-count, and a smaller doc_id in the
     poisoned batch would corrupt first_doc_id."""
     from cassaforte_meter_transmission_gen_spark.streaming.pipeline import (
+        _CHUNK_LEDGER,
         chunk_ledger_batch_fn,
+        read_fold_table,
     )
 
     table = str(tmp_path / "ledger")
@@ -312,9 +312,7 @@ def test_chunk_ledger_replay_is_exactly_once(spark, tmp_path):
     # poisoned replay: same id, smaller doc_id, new content
     fn(batch([(1, "alpha"), (2, "gamma")]), 1)
 
-    led = spark.read.schema(
-        "chunk_hash string, first_doc_id bigint, n_occurrences bigint"
-    ).parquet(f"{table}/v=1")
+    led = read_fold_table(spark, table, commits, _CHUNK_LEDGER)
     got = {
         r["chunk_hash"]: (r["first_doc_id"], r["n_occurrences"])
         for r in led.collect()

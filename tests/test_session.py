@@ -9,6 +9,7 @@ from cassaforte_meter_transmission_gen_spark.session import (
     CODEGEN_CACHE_ENTRIES,
     RUNTIME_CONFS,
     codegen_stats,
+    default_driver_memory,
 )
 
 #: a catalog mix whose generated code is the same on every run: the six
@@ -51,3 +52,25 @@ def test_repeat_pass_of_the_query_mix_compiles_nothing(spark, sf_small):
     one_pass()
     after, _ = codegen_stats(spark)
     assert after - before == 0, f"the repeat pass compiled {after - before} classes"
+
+
+def test_default_driver_heap_follows_physical_memory(monkeypatch):
+    """Without ``SPARK_DRIVER_MEM`` the driver heap is 60% of physical
+    memory, capped at 16g: a 16 GB machine gets about 9.6g, not 16g."""
+    import os
+
+    def machine(gib):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": gib * 2**30 // 4096}
+        monkeypatch.setattr(os, "sysconf", pages.__getitem__)
+        return default_driver_memory()
+
+    assert machine(16) == "9830m"
+    assert machine(4) == "2457m"
+    assert machine(64) == "16384m"
+
+
+def test_session_driver_heap_is_the_env_or_the_default(spark):
+    import os
+
+    want = os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory()
+    assert spark.sparkContext.getConf().get("spark.driver.memory") == want

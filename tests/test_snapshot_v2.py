@@ -446,8 +446,8 @@ def test_snapshot_view_feed_replay_is_exactly_once(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from cassaforte_meter_transmission_gen_spark.streaming.pipeline import (
-        _SNAPSHOT_VIEW_SCHEMA,
-        _snapshot_view_partials,
+        _SNAPSHOT_VIEW,
+        read_fold_table,
         snapshot_view_batch_fn,
     )
 
@@ -473,12 +473,7 @@ def test_snapshot_view_feed_replay_is_exactly_once(spark, tmp_path):
 
     view_dir = str(tmp_path / "view")
     commits = str(tmp_path / "commits")
-    os.makedirs(commits, exist_ok=True)
-    _snapshot_view_partials(t.read(spark, as_of=0), 1).write.parquet(
-        f"{view_dir}/v=0"
-    )
-    open(os.path.join(commits, "0"), "w").close()
-    fn = snapshot_view_batch_fn(t, view_dir, commits)
+    fn = snapshot_view_batch_fn(t, view_dir, commits)  # seeds at snapshot 0
 
     def feed(sids, batch_id):
         fn(
@@ -489,9 +484,7 @@ def test_snapshot_view_feed_replay_is_exactly_once(spark, tmp_path):
     feed([1, 2], 0)  # batched delivery: one refresh 0 -> 2
     want = {
         (r["o_orderstatus"], r["n_orders"], str(r["sum_dec"]))
-        for r in spark.read.schema(_SNAPSHOT_VIEW_SCHEMA)
-        .parquet(f"{view_dir}/v=2")
-        .collect()
+        for r in read_fold_table(spark, view_dir, commits, _SNAPSHOT_VIEW).collect()
     }
     assert want == {("O", 1, "10.0000"), ("F", 2, "25.0000")}
     feed([1], 1)  # poisoned replay of an applied snapshot: no-op
@@ -499,9 +492,7 @@ def test_snapshot_view_feed_replay_is_exactly_once(spark, tmp_path):
     assert sorted(os.listdir(commits)) == ["0", "2"]  # no new version
     got = {
         (r["o_orderstatus"], r["n_orders"], str(r["sum_dec"]))
-        for r in spark.read.schema(_SNAPSHOT_VIEW_SCHEMA)
-        .parquet(f"{view_dir}/v=2")
-        .collect()
+        for r in read_fold_table(spark, view_dir, commits, _SNAPSHOT_VIEW).collect()
     }
     assert got == want
 
