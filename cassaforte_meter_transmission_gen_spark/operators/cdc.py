@@ -85,9 +85,9 @@ def versions_from_stream(
     key-partitioned window; each 'u' row becomes a version open from
     its seq until the key's next event. Shared by the batch build
     (:func:`scd2_history`, which seeds seq 0 from the snapshot) and the
-    streaming maintenance (streaming.pipeline.scd2_batch_fn, which
-    seeds each affected key from its committed OPEN version so the
-    chain continues across micro-batches)."""
+    streaming maintenance (streaming.pipeline.scd2_merge, which seeds
+    each affected key from its committed OPEN version so the chain
+    continues across micro-batches)."""
     w = Window.partitionBy(*key_cols).orderBy("seq")
     hist = stream.withColumn(
         "valid_to_seq", F.lead(F.col("seq")).over(w).cast("int")

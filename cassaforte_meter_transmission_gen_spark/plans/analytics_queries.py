@@ -2752,8 +2752,9 @@ FROM c, t WHERE c.exact_count * 200 > t.total
     tags=("streaming", "sketch", "exactly-once"),
 )
 def streaming_mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming-maintained Misra–Gries summary (exactly-once
-    commit-log protocol) + one exact verify pass — the live dual of
+    """Streaming-maintained Misra–Gries summary (a one-bucket
+    snapshot-manifest table, exactly-once by its ``batch_hw`` replay
+    guard) + one exact verify pass — the live dual of
     agg_heavy_hitters_two_pass, gated against the identical naive
     oracle: the MG state is approximate but candidate-complete, so the
     verified output is exact and full-value-hash comparable. Events

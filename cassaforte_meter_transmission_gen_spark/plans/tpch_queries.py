@@ -1407,19 +1407,20 @@ def cdc_scd2_orders_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_scd2_orders_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIVE streaming SCD2 dimension maintenance
-    (streaming.pipeline.scd2_batch_fn / run_bounded_scd2): the same
-    change feed delivered as three strictly-ordered micro-batches,
-    each folded into a versioned history table under the exactly-once
-    batch-id commit-log protocol (replayed batches are no-ops; the
-    atomic marker is the commit point). Gated against the IDENTICAL
-    oracle as the batch cdc_scd2_orders_history — the streaming
-    maintenance must converge to exactly the one-shot batch history,
-    the module's streaming≡batch argument applied to dimension
-    versioning. Per batch only affected keys enter the chaining
-    window; closed history rows are never edited.
+    (streaming.pipeline.scd2_bucketed_batch_fn on a ONE-bucket
+    snapshot-manifest table, run_bounded_scd2): the same change feed
+    delivered as three strictly-ordered micro-batches, each folded into
+    the history table exactly once (the manifest's ``batch_hw`` is the
+    replay guard — replayed batches are no-ops; the atomic manifest
+    create is the commit point). Gated against the IDENTICAL oracle as
+    the batch cdc_scd2_orders_history — the streaming maintenance must
+    converge to exactly the one-shot batch history, the module's
+    streaming≡batch argument applied to dimension versioning. Per batch
+    only affected keys enter the chaining window; closed history rows
+    are never edited.
 
-    Scale caveat (the production twin fixes it): this fixture rewrites
-    the FULL history per micro-batch. See
+    Scale caveat (the production twin fixes it): with one bucket every
+    micro-batch rewrites the FULL history. See
     streaming_scd2_orders_history_bucketed for the bucket-partitioned
     partial-rewrite shape."""
     from ..streaming.pipeline import run_bounded_scd2
@@ -1439,7 +1440,7 @@ def streaming_scd2_orders_history_bucketed(
     snapshot-manifest table
     (streaming.pipeline.scd2_bucketed_batch_fn over
     sources.snapshot.SnapshotTable) — the production shape the
-    full-rewrite fixture's docstring prescribes: the history
+    one-bucket fixture's docstring points to: the history
     partitions by key hash bucket; each micro-batch reads, chains, and
     rewrites ONLY the buckets its keys hash into; untouched buckets
     carry forward BY MANIFEST REFERENCE with their files
@@ -1447,10 +1448,10 @@ def streaming_scd2_orders_history_bucketed(
     O(touched-bucket history), never O(total history) — at 100 TB the
     difference between a bounded partial rewrite and re-materializing
     a multi-TB dimension per batch. The chaining core and the
-    at-least-once seq guard are the SAME code as the full-rewrite
-    twin (streaming.pipeline.scd2_merge), and all three builds —
-    batch, full-rewrite streaming, bucketed streaming — gate against
-    the IDENTICAL oracle."""
+    at-least-once seq guard are the SAME code as the one-bucket
+    twin (streaming.pipeline.scd2_bucketed_batch_fn), and all three
+    builds — batch, one-bucket streaming, bucketed streaming — gate
+    against the IDENTICAL oracle."""
     from ..streaming.pipeline import run_bounded_scd2_bucketed
 
     return run_bounded_scd2_bucketed(spark, sf_dir)

@@ -33,6 +33,7 @@ from pyspark.sql.streaming import StreamingQuery
 from .functions.hashing import host_hash
 from .operators.ingest import TABLES
 from .streaming.pipeline import (
+    COMPACT_EVERY,
     RETAIN_VERSIONS,
     rate_transmission_stream,
     streaming_ingest_batch_fn,
@@ -81,7 +82,7 @@ def run_unbounded(
     checkpoint_dir: str | None = None,
     trigger_seconds: float = 1.0,
     retain_versions: int = RETAIN_VERSIONS,
-    compact_every: int | None = 60,
+    compact_every: int | None = COMPACT_EVERY,
 ) -> StreamingQuery:
     """Start the unbounded five-table pipeline; returns the running
     query (caller owns ``awaitTermination``/``stop``).

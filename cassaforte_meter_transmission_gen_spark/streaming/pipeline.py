@@ -27,38 +27,39 @@ table format like Delta/Iceberg replaces wholesale.
 
 Each bounded sink is a ``delta(batch)``, the micro-batch's
 contribution, plus the rule that folds it into the committed state.
-Three functions commit them, one per layout, and each owns that
-layout's replay guard:
+Two functions commit them, one per layout, and each owns that layout's
+replay guard:
 
 - :func:`append_fold_fn` for state that is a fold, ``merge(prev, d) =
   fold(prev ∪ d)``: sums (CMS, PSI, AUC, Naive Bayes), MIN/SUM (the
   chunk ledger), HLL unions and keep-k-per-day (quantile, KMV). Each
   batch appends its folded delta and reads no committed state, so its
   cost is O(batch) whatever the state's size; readers apply the fold;
-- :func:`versioned_merge_fn` for the two merges that are not a fold.
-  The Misra–Gries cap subtracts each merged batch's (k+1)-th count, and
-  SCD2 closes versions in batch order, so both must see the committed
-  state: each batch writes a full new copy of it;
 - :func:`snapshot_merge_fn` for manifest state
-  (``sources.snapshot.SnapshotTable``): the manifest's ``batch_hw`` is
-  the high watermark, the atomic manifest create is the commit point,
-  and only the buckets the delta touches are read and rewritten (or the
-  delta is appended, for the LSM ledger).
+  (``sources.snapshot.SnapshotTable``), including the merges that are
+  not a fold and so must see the committed state: the Misra–Gries cap
+  subtracts each merged batch's (k+1)-th count, and SCD2 closes
+  versions in batch order. The manifest's ``batch_hw`` is the high
+  watermark, the atomic manifest create is the commit point, and only
+  the buckets the delta touches are read and rewritten (or the delta
+  is appended, for the LSM ledger). A one-bucket table is the
+  full-rewrite shape.
 
 Two sinks on the append layout keep their own write step.
 :func:`streaming_ingest_batch_fn` overlaps its five table writes on
 driver threads and derives the grains from the second table it just
 wrote. :func:`snapshot_view_batch_fn` keys its guard on the applied
-source snapshot id, not on the micro-batch id.
+source snapshot id, not on the micro-batch id. The rest of this
+section is the append layout's protocol; the manifest layout's is
+``sources.snapshot``'s.
 
-- **Layout.** A sink owns its table dirs plus one ``commits_dir``. An
-  append table gets one dir per applied batch, ``<table>/batch=<id>/``,
-  holding that batch's folded contribution (for the rollup grains, the
-  reference's COUNTER bump); :func:`compact_fold_tables` folds old dirs
-  into ``_compacted/upto=<U>`` segments. Each append table is described
-  once by a :class:`Fold`: its pinned schema and its fold. A versioned
-  table holds one full copy of its state per applied batch,
-  ``<table>/v=<batch_id>/``.
+- **Layout.** An append sink owns its table dirs plus one
+  ``commits_dir``. An append table gets one dir per applied batch,
+  ``<table>/batch=<id>/``, holding that batch's folded contribution
+  (for the rollup grains, the reference's COUNTER bump);
+  :func:`compact_fold_tables` folds old dirs into
+  ``_compacted/upto=<U>`` segments. Each append table is described
+  once by a :class:`Fold`: its pinned schema and its fold.
 - **Marker.** The commit point of batch ``b`` is the empty file
   ``<commits_dir>/<b>``, published by ``os.replace`` of ``<b>.tmp``
   (:func:`_commit`) only after every table of the batch is durable.
@@ -66,21 +67,21 @@ source snapshot id, not on the micro-batch id.
   the marker is each batch's last step, so every id ≤ the newest
   marker (the high watermark, :func:`_high_watermark`) is committed. A
   batch with ``batch_id <= hw`` is a replay and is skipped. Any other
-  batch OVERWRITES its own ``batch=<batch_id>`` dir (or, versioned,
-  merges onto ``v=<hw>`` into its own ``v=<batch_id>``), so a batch
+  batch OVERWRITES its own ``batch=<batch_id>`` dir, so a batch
   replayed after a crash before its marker rebuilds the same dir: it
   can never be applied twice.
 - **Retention.** After each commit only the newest ``retain_versions``
-  (default :data:`RETAIN_VERSIONS`) markers are kept, and as many
-  ``v=`` dirs of a versioned table. The newest marker alone carries the
-  committed set, so pruning never widens a read. A reader that resolved
-  version N keeps a valid directory for ``retain_versions - 1`` further
-  commits (≈ that many trigger intervals) — size it above the longest
-  expected read. Append tables keep their batch dirs until a
-  compaction folds them (its own retention rule).
+  (default :data:`RETAIN_VERSIONS`) markers are kept. The newest marker
+  alone carries the committed set, so pruning never widens a read.
+  Batch dirs stay until a compaction folds them: every
+  :data:`COMPACT_EVERY` batches for the sinks here, on the ingest
+  sink's own ``compact_every`` cadence for it; a compaction keeps the
+  newest :data:`COMPACT_KEEP_BATCHES` dirs out of the segment and
+  deletes a dir only once two segments cover it. A manifest table
+  retains through its ``expire``/``vacuum`` maintenance.
 - **Readers.** An append table is read by :func:`read_fold_table`: the
   newest segment plus the batch dirs in (segment upto, hw], folded; a
-  versioned table only as ``v=<hw>`` (:func:`_read_committed`).
+  manifest table by ``SnapshotTable.read`` of its latest snapshot.
   Anything newer is an uncommitted in-flight batch, so a crash
   mid-batch is invisible to every reader.
 
@@ -118,12 +119,14 @@ from ..operators.sketches import (
 from ..schemas import METER_SAMPLES, METER_SAMPLES_SECOND
 from ..sources.meter_generator import meter_samples_second
 
-#: default retention window: ``v=`` dirs and markers kept after each
-#: commit (the module docstring's retention rule)
+#: default retention window: markers kept after each commit (the module
+#: docstring's retention rule)
 RETAIN_VERSIONS = 4
 #: default count of newest batch dirs a compaction leaves unfolded
 #: (reader-race margin, :func:`compact_stream_tables`)
 COMPACT_KEEP_BATCHES = 8
+#: commits between two compactions of an append sink's tables
+COMPACT_EVERY = 60
 
 
 def _committed_batches(commits_dir: str) -> list[int]:
@@ -139,24 +142,14 @@ def _high_watermark(commits_dir: str) -> int | None:
     return committed[-1] if committed else None
 
 
-def _commit(
-    commits_dir: str,
-    batch_id: int,
-    version_dirs: list[str],
-    retain_versions: int = RETAIN_VERSIONS,
-) -> None:
+def _commit(commits_dir: str, batch_id: int, retain_versions: int) -> None:
     """Publish the marker of ``batch_id`` (the commit point), then prune
-    each of ``version_dirs`` and the markers to the newest
-    ``retain_versions`` — the module docstring's marker and retention
-    rules."""
+    the markers to the newest ``retain_versions`` — the module
+    docstring's marker and retention rules."""
     marker = os.path.join(commits_dir, str(batch_id))
     tmp = marker + ".tmp"
     open(tmp, "w").close()
     os.replace(tmp, marker)  # commit point
-    for d in version_dirs:
-        vers = sorted(int(v[2:]) for v in os.listdir(d) if v.startswith("v="))
-        for v in vers[:-retain_versions]:
-            shutil.rmtree(os.path.join(d, f"v={v}"), ignore_errors=True)
     for b in _committed_batches(commits_dir)[:-retain_versions]:
         try:
             os.remove(os.path.join(commits_dir, str(b)))
@@ -164,43 +157,15 @@ def _commit(
             pass
 
 
-def _read_committed(
-    spark: SparkSession, table_dir: str, commits_dir: str, schema: str
-) -> DataFrame:
-    """The committed version ``v=<hw>`` of a versioned table, read with
-    its pinned ``schema`` (no inference job); an empty frame of that
-    schema before the first commit."""
-    hw = _high_watermark(commits_dir)
-    if hw is None:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(f"{table_dir}/v={hw}")
-
-
-def versioned_merge_fn(commits_dir: str, *tables):
-    """foreachBatch body of a versioned sink under the module's commit
-    protocol — for a merge that must see the committed state because it
-    is not a fold (:func:`append_fold_fn` takes every merge that is).
-    Each of ``tables`` is a ``(table_dir, schema, delta, merge)`` tuple:
-    ``delta(batch) -> DataFrame`` is the batch's contribution and
-    ``merge(prev, delta) -> DataFrame`` folds it into the committed
-    state ``prev`` (an empty frame of ``schema`` on the first batch). A
-    replayed batch is skipped; otherwise every table is written as
-    ``v=<batch_id>``, in order, and only then does the one marker of
-    the batch land."""
-    os.makedirs(commits_dir, exist_ok=True)
-
-    def fn(batch: DataFrame, batch_id: int) -> None:
-        hw = _high_watermark(commits_dir)
-        if hw is not None and batch_id <= hw:
-            return  # replayed, fully applied
-        for table_dir, schema, delta, merge in tables:
-            prev = _read_committed(batch.sparkSession, table_dir, commits_dir, schema)
-            merge(prev, delta(batch)).write.mode("overwrite").parquet(
-                f"{table_dir}/v={batch_id}"
-            )
-        _commit(commits_dir, batch_id, [t[0] for t in tables])
-
-    return fn
+def _commit_folds(
+    spark: SparkSession, commits_dir: str, batch_id: int, *tables
+) -> None:
+    """:func:`_commit` the batch, then every :data:`COMPACT_EVERY`
+    batches fold the old batch dirs of each ``(table_dir, spec)`` of
+    ``tables`` into a segment (:func:`compact_fold_tables`)."""
+    _commit(commits_dir, batch_id, RETAIN_VERSIONS)
+    if batch_id > 0 and batch_id % COMPACT_EVERY == 0:
+        compact_fold_tables(spark, commits_dir, COMPACT_KEEP_BATCHES, *tables)
 
 
 class Fold(NamedTuple):
@@ -273,9 +238,10 @@ def append_fold_fn(commits_dir: str, *tables):
     ``spec`` the table's :class:`Fold`. A replayed batch is skipped;
     otherwise every table's folded delta is written as
     ``batch=<batch_id>``, in order, and only then does the one marker
-    of the batch land. No committed state is read, so the per-batch
-    cost is O(batch) however large the state; :func:`read_fold_table`
-    reads it back."""
+    of the batch land; every :data:`COMPACT_EVERY` batches a compaction
+    follows it. No committed state is read, so the per-batch cost is
+    O(batch) however large the state; :func:`read_fold_table` reads it
+    back."""
     os.makedirs(commits_dir, exist_ok=True)
 
     def fn(batch: DataFrame, batch_id: int) -> None:
@@ -286,7 +252,12 @@ def append_fold_fn(commits_dir: str, *tables):
             spec.fold(delta(batch)).write.mode("overwrite").parquet(
                 f"{table_dir}/batch={batch_id}"
             )
-        _commit(commits_dir, batch_id, [])
+        _commit_folds(
+            batch.sparkSession,
+            commits_dir,
+            batch_id,
+            *[(table_dir, spec) for table_dir, spec, _ in tables],
+        )
 
     return fn
 
@@ -357,21 +328,28 @@ def compact_fold_tables(
 
 def snapshot_merge_fn(table, delta, merge):
     """foreachBatch body of a sink whose state is a bucketed
-    ``sources.snapshot.SnapshotTable`` — the manifest counterpart of
-    :func:`versioned_merge_fn`. The applied micro-batch id travels in
-    the manifest as ``batch_hw``, separate from the snapshot id, so
-    maintenance commits (compaction) can take snapshot ids between
-    batches without desynchronizing the replay guard; the atomic
-    manifest create is the commit point.
+    ``sources.snapshot.SnapshotTable`` — the layout for a merge that
+    must see the committed state because it is not a fold
+    (:func:`append_fold_fn` takes every merge that is), and for the
+    LSM ledger. The applied micro-batch id travels in the manifest as
+    ``batch_hw``, separate from the snapshot id, so maintenance commits
+    (compaction) can take snapshot ids between batches without
+    desynchronizing the replay guard; the atomic manifest create is
+    the commit point.
 
     A batch with ``batch_id <= batch_hw`` is a replay and is skipped.
     Otherwise ``delta(batch)``, whose rows carry the ``bucket`` column,
     is committed as the next snapshot id: ``merge(prev, delta)``
     replaces the committed rows ``prev`` of the buckets the delta
-    touches (untouched buckets carry forward by manifest reference,
-    their files never opened); with ``merge=None`` the delta is
-    appended to its buckets' file lists with no read of committed
-    state (``SnapshotTable.commit_append``, the LSM shape)."""
+    touches, and a touched bucket it returns no rows for is emptied
+    (untouched buckets carry forward by manifest reference, their
+    files never opened); with ``merge=None`` the delta is appended to
+    its buckets' file lists with no read of committed state
+    (``SnapshotTable.commit_append``, the LSM shape).
+
+    Nothing here prunes old snapshots: a manifest table retains
+    through ``expire``/``vacuum`` maintenance, as
+    :func:`finalize_chunk_ledger_lsm` runs it."""
 
     def fn(batch: DataFrame, batch_id: int) -> None:
         hw = table.batch_high_watermark()
@@ -387,7 +365,9 @@ def snapshot_merge_fn(table, delta, merge):
         # touched bucket ids: bounded driver state (≤ n_buckets rows)
         touched = [r[0] for r in d.select("bucket").distinct().collect()]
         prev = table.read(batch.sparkSession, buckets=touched)
-        table.commit(merge(prev, d), sid, batch_hw=batch_id)
+        table.commit(
+            merge(prev, d), sid, emptied_buckets=touched, batch_hw=batch_id
+        )
 
     return fn
 
@@ -745,7 +725,7 @@ def streaming_ingest_batch_fn(
             futs += [pool.submit(_write_grain, second, g) for g in CHAIN]
             for f in futs:
                 f.result()
-        _commit(commits_dir, batch_id, [], retain_versions)
+        _commit(commits_dir, batch_id, retain_versions)
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
             compact_stream_tables(
                 spark, paths, commits_dir, keep_batches=compact_keep_batches
@@ -1099,9 +1079,6 @@ _NB = {
     "wl": Fold("lang string, tok string, cnt bigint", _sum_fold(("lang", "tok"), ("cnt",))),
     "dl": Fold("lang string, d_l bigint", _sum_fold(("lang",), ("d_l",))),
 }
-#: the versioned Misra–Gries summary (its merge is not a fold)
-_MG_SCHEMA = "user_id long, cnt long"
-
 #: micro-units of an event ``value``: exact decimal scaling to int64
 _VALUE_MICRO = "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)"
 #: the KMV sketch's distinct key: one user on one day
@@ -1136,11 +1113,11 @@ def scd2_merge(
     key_col: str,
     payload_cols: list[str],
 ) -> DataFrame:
-    """The SCD2 micro-batch merge core, shared by the full-rewrite
-    fixture (:func:`scd2_batch_fn`) and the bucket-partitioned
-    maintenance (:func:`scd2_bucketed_batch_fn`): given the committed
-    history IN SCOPE (the whole table, or just the touched buckets) and
-    the batch's events, return the complete NEW content of that scope.
+    """The SCD2 micro-batch merge core of
+    :func:`scd2_bucketed_batch_fn`: given the committed history IN
+    SCOPE (the touched buckets; the whole table when it has one
+    bucket) and the batch's events, return the complete NEW content of
+    that scope.
     Each affected key's committed OPEN version is carried into the
     version-chaining window together with the batch's events
     (operators.cdc.versions_from_stream), so updates close the open
@@ -1182,51 +1159,14 @@ def scd2_merge(
     return untouched.unionByName(closed).unionByName(new_versions)
 
 
-def scd2_batch_fn(
-    table_dir: str,
-    commits_dir: str,
-    history_schema: str,
-    key_col: str,
-    payload_cols: list[str],
-):
-    """foreachBatch body maintaining an SCD2 HISTORY table from an
-    ordered change stream — :func:`scd2_merge` applied per micro-batch
-    under the module's commit protocol (:func:`versioned_merge_fn`):
-    updates close the committed open version and open a new one,
-    deletes close without opening, and closed history rows are never
-    edited. Precondition (same as apply_changelog): the feed delivers
-    each key's events in STRICTLY increasing seq order across batches
-    — the log-offset guarantee of a real changelog source; an
-    already-applied seq redelivered under a NEW batch id is dropped by
-    :func:`scd2_merge`'s at-least-once guard.
-
-    It stays on the versioned layout: closing a version needs the
-    committed open version, in batch order, so the merge is not a fold
-    that :func:`append_fold_fn` could defer to the reader.
-
-    Scale: this fixture rewrites the full history per version; the
-    production shape is :func:`scd2_bucketed_batch_fn`, where the
-    history partitions by key bucket on a snapshot-manifest table and
-    only affected buckets rewrite — untouched buckets carry forward by
-    manifest reference, the same economics as the IVF layout."""
-    return versioned_merge_fn(
-        commits_dir,
-        (
-            table_dir,
-            history_schema,
-            lambda b: b,
-            lambda prev, b: scd2_merge(prev, b, key_col, payload_cols),
-        ),
-    )
-
-
 _SCD2_FEED_SCHEMA = (
     "o_orderkey bigint, o_orderstatus string, o_totalprice double,"
     " seq int, op string"
 )
 _SCD2_HISTORY_SCHEMA = (
-    "o_orderkey bigint, o_orderstatus string, o_totalprice double,"
-    " valid_from_seq int, valid_to_seq int, is_current boolean"
+    "bucket int, o_orderkey bigint, o_orderstatus string,"
+    " o_totalprice double, valid_from_seq int, valid_to_seq int,"
+    " is_current boolean"
 )
 _SCD2_PAYLOAD = ["o_orderkey", "o_orderstatus", "o_totalprice"]
 
@@ -1235,7 +1175,7 @@ def _stage_scd2_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The orders changelog as a file stream of THREE strictly-ordered
     micro-batches: snapshot seeds at seq 0, then the seq-1 tranche
     (updates and tombstones), then seq-2 (:func:`_stage_ordered_files`).
-    Shared by the full-rewrite and bucket-partitioned SCD2 runners."""
+    Shared by the one-bucket and bucket-partitioned SCD2 runners."""
     from ..plans.tpch_queries import _orders_snapshot_and_changelog
 
     snap, changes = _orders_snapshot_and_changelog(spark, sf_dir)
@@ -1261,22 +1201,6 @@ def _stage_scd2_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_bounded_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drive :func:`scd2_batch_fn` over the staged orders changelog
-    (:func:`_stage_scd2_feed`) and return the final committed history.
-    Gated against the SAME oracle as the batch cdc_scd2_orders_history:
-    the streaming maintenance must converge to exactly the history a
-    one-shot batch build produces, which is the streaming≡batch
-    argument used for every rollup in this module."""
-    return _drain_sink(
-        _stage_scd2_feed(spark, sf_dir),
-        lambda t, c: scd2_batch_fn(
-            t, c, _SCD2_HISTORY_SCHEMA, "o_orderkey", _SCD2_PAYLOAD
-        ),
-        lambda t, c: _read_committed(spark, t, c, _SCD2_HISTORY_SCHEMA),
-    )
-
-
 #: key-bucket count for the bucketed SCD2 fixture. At 100 TB this is
 #: sized so one bucket's history fits an executor (e.g. 4096 buckets →
 #: ~25 GB each); at test scale a small count still exercises the
@@ -1284,36 +1208,41 @@ def run_bounded_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: seq 0, then only %10∈{3,7} keys' buckets afterwards).
 SCD2_N_BUCKETS = 8
 
-_SCD2_BUCKETED_SCHEMA = "bucket int, " + _SCD2_HISTORY_SCHEMA
-
 
 def scd2_bucketed_batch_fn(
     table,
     key_col: str,
     payload_cols: list[str],
 ):
-    """foreachBatch body maintaining the SCD2 history on a BUCKETED
-    snapshot-manifest table (sources.snapshot.SnapshotTable) — the
-    production shape :func:`scd2_batch_fn`'s docstring prescribes: the
-    history partitions by key hash bucket, each micro-batch reads and
-    rewrites ONLY the buckets its keys hash into, and untouched buckets
-    carry forward BY MANIFEST REFERENCE — their files are never opened,
-    never rewritten (pinned byte-identical by
+    """foreachBatch body maintaining an SCD2 HISTORY table from an
+    ordered change stream on a BUCKETED snapshot-manifest table
+    (sources.snapshot.SnapshotTable) — :func:`scd2_merge` applied per
+    micro-batch: updates close the committed open version and open a
+    new one, deletes close without opening, and closed history rows
+    are never edited. Precondition (same as apply_changelog): the feed
+    delivers each key's events in STRICTLY increasing seq order across
+    batches — the log-offset guarantee of a real changelog source; an
+    already-applied seq redelivered under a NEW batch id is dropped by
+    :func:`scd2_merge`'s at-least-once guard. Closing a version needs
+    the committed open version, in batch order, so the merge is not a
+    fold that :func:`append_fold_fn` could defer to the reader.
+
+    The history partitions by key hash bucket, each micro-batch reads
+    and rewrites ONLY the buckets its keys hash into, and untouched
+    buckets carry forward BY MANIFEST REFERENCE — their files are never
+    opened, never rewritten (pinned byte-identical by
     tests/test_snapshot.py). Per-batch cost is O(touched-bucket
     history), not O(total history): the difference between rewriting a
-    few hundred MB and a multi-TB table per micro-batch at 100 TB.
+    few hundred MB and a multi-TB table per micro-batch at 100 TB. On a
+    one-bucket table every batch rewrites the full history.
 
-    Exactly-once composes with the snapshot chain: the micro-batch id
+    Exactly-once by :func:`snapshot_merge_fn`: the micro-batch id
     travels as the manifest's ``batch_hw`` (SEPARATE from the snapshot
     id, so interleaved maintenance commits never desynchronize the
     replay guard), the atomic exclusive manifest create is the commit
     point, and a replayed/crashed batch re-reads the same parent
     manifest and overwrites its own orphaned data directory
-    (SnapshotTable.commit's idempotence contract). The chaining core
-    and the at-least-once seq guard are byte-for-byte
-    :func:`scd2_merge` — shared with the full-rewrite fixture, so both
-    gate against the identical batch oracle (:func:`snapshot_merge_fn`
-    commits it)."""
+    (SnapshotTable.commit's idempotence contract)."""
     from ..sources.snapshot import bucket_of
 
     bucket = bucket_of(key_col, table.n_buckets)
@@ -1326,23 +1255,42 @@ def scd2_bucketed_batch_fn(
     )
 
 
-def run_bounded_scd2_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drive :func:`scd2_bucketed_batch_fn` over the IDENTICAL staged
-    changelog as :func:`run_bounded_scd2` and return the final
-    committed history read from the snapshot manifest — gated by the
-    same batch oracle, so full-rewrite, bucketed-partial-rewrite, and
-    one-shot batch builds are all pinned to one truth."""
+def _run_bounded_scd2(
+    spark: SparkSession, sf_dir: str, n_buckets: int
+) -> DataFrame:
+    """Drive :func:`scd2_bucketed_batch_fn` on a table of ``n_buckets``
+    over the staged orders changelog (:func:`_stage_scd2_feed`) and
+    return the final committed history read from the snapshot
+    manifest."""
     from ..sources.snapshot import SnapshotTable
 
     return _drain_sink(
         _stage_scd2_feed(spark, sf_dir),
         lambda t, _: scd2_bucketed_batch_fn(
-            SnapshotTable(t, _SCD2_BUCKETED_SCHEMA, SCD2_N_BUCKETS),
+            SnapshotTable(t, _SCD2_HISTORY_SCHEMA, n_buckets),
             "o_orderkey",
             _SCD2_PAYLOAD,
         ),
         lambda t, _: SnapshotTable.open(t).read(spark).drop("bucket"),
     )
+
+
+def run_bounded_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The SCD2 maintenance on a one-bucket table, the full-rewrite
+    shape (:func:`_run_bounded_scd2`). Gated against the SAME oracle
+    as the batch cdc_scd2_orders_history: the streaming maintenance
+    must converge to exactly the history a one-shot batch build
+    produces, which is the streaming≡batch argument used for every
+    rollup in this module."""
+    return _run_bounded_scd2(spark, sf_dir, 1)
+
+
+def run_bounded_scd2_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The SCD2 maintenance on :data:`SCD2_N_BUCKETS` buckets, over the
+    IDENTICAL staged changelog as :func:`run_bounded_scd2` and gated by
+    the same batch oracle, so one-bucket, bucketed-partial-rewrite, and
+    one-shot batch builds are all pinned to one truth."""
+    return _run_bounded_scd2(spark, sf_dir, SCD2_N_BUCKETS)
 
 
 def run_bounded_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1751,11 +1699,12 @@ def run_bounded_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def mg_rollup_batch_fn(table_dir: str, commits_dir: str, k: int):
+def mg_rollup_batch_fn(table, k: int):
     """foreachBatch body for a streaming-maintained Misra–Gries heavy
     hitter summary over ``user_id`` — the live dual of
-    operators.sketches.misra_gries_candidates, under the module's
-    exactly-once commit protocol (:func:`versioned_merge_fn`).
+    operators.sketches.misra_gries_candidates — on a one-bucket
+    snapshot-manifest table, exactly-once by
+    :func:`snapshot_merge_fn`.
 
     Per micro-batch: exact batch counts (one partial-agg groupBy) merge
     with the last COMMITTED summary, then the MG merge step — subtract
@@ -1766,13 +1715,10 @@ def mg_rollup_batch_fn(table_dir: str, commits_dir: str, k: int):
     present. The subtraction threshold is a one-row broadcast
     (sort-desc/limit(k+1) over a ≤ k+distinct(batch) frame), so state
     never exceeds k rows no matter the stream length — the fixed-size
-    property every streaming sketch here shares.
-
-    This sink stays on the versioned layout: the cap reads the merged
-    state, so the merge is not a fold that :func:`append_fold_fn` could
-    apply at read time. Nor does a one-bucket ``SnapshotTable`` fit:
-    :func:`snapshot_merge_fn` passes no ``emptied_buckets``, so a
-    summary whose counts all reached 0 would keep its previous rows."""
+    property every streaming sketch here shares. The cap reads the
+    merged state, so the merge is not a fold that
+    :func:`append_fold_fn` could apply at read time; a batch whose
+    merged counts all cap to 0 empties the summary."""
     summed = _sum_fold(("user_id",), ("cnt",))
 
     def merge(prev: DataFrame, counts: DataFrame) -> DataFrame:
@@ -1790,18 +1736,20 @@ def mg_rollup_batch_fn(table_dir: str, commits_dir: str, k: int):
         )
         return (
             counts.crossJoin(F.broadcast(kth))
-            .select("user_id", (F.col("cnt") - F.col("sub")).alias("cnt"))
+            .select(
+                F.lit(0).alias("bucket"),
+                "user_id",
+                (F.col("cnt") - F.col("sub")).alias("cnt"),
+            )
             .filter(F.col("cnt") > 0)
         )
 
-    return versioned_merge_fn(
-        commits_dir,
-        (
-            table_dir,
-            _MG_SCHEMA,
-            lambda b: b.groupBy("user_id").agg(F.count("*").cast("long").alias("cnt")),
-            merge,
-        ),
+    return snapshot_merge_fn(
+        table,
+        lambda b: b.groupBy("user_id")
+        .agg(F.count("*").cast("long").alias("cnt"))
+        .withColumn("bucket", F.lit(0)),
+        merge,
     )
 
 
@@ -1818,12 +1766,16 @@ def run_bounded_mg_heavy_hitters(
     folds into a ≤ inv_support-row summary once; the verify pass
     shuffles candidate keys only."""
     from ..schemas import load_table
+    from ..sources.snapshot import SnapshotTable
 
     ev = load_table(spark, sf_dir, "events").select("user_id")
     candidates = _drain_sink(
         _four_file_stream(ev),
-        lambda t, c: mg_rollup_batch_fn(t, c, k=inv_support),
-        lambda t, c: _read_committed(spark, t, c, _MG_SCHEMA),
+        lambda t, _: mg_rollup_batch_fn(
+            SnapshotTable(t, "bucket int, user_id long, cnt long", 1),
+            k=inv_support,
+        ),
+        lambda t, _: SnapshotTable.open(t).read(spark),
     ).select("user_id")
     total = ev.agg(F.count("*").alias("total"))
     return (
@@ -2230,7 +2182,8 @@ def snapshot_view_batch_fn(table, view_dir: str, commits_dir: str):
     The view is an append table (:data:`_SNAPSHOT_VIEW`): the first
     micro-batch seeds it with snapshot 0's partials as ``batch=0``, and
     each refresh appends the signed partials of (applied, target] as
-    ``batch=<target>`` without reading the committed view.
+    ``batch=<target>`` without reading the committed view; every
+    :data:`COMPACT_EVERY` snapshot ids a compaction follows.
 
     Scale: the downstream view of a 100 TB table refreshes per
     trigger by reading O(changed buckets); the full-table aggregation
@@ -2239,7 +2192,9 @@ def snapshot_view_batch_fn(table, view_dir: str, commits_dir: str):
 
     def publish(partials: DataFrame, sid: int) -> None:
         partials.write.mode("overwrite").parquet(f"{view_dir}/batch={sid}")
-        _commit(commits_dir, sid, [])
+        _commit_folds(
+            partials.sparkSession, commits_dir, sid, (view_dir, _SNAPSHOT_VIEW)
+        )
 
     def fn(batch: DataFrame, batch_id: int) -> None:
         # delivered snapshot ids: bounded driver state (one tiny row

@@ -275,7 +275,6 @@ def main() -> None:
     )
     from cassaforte_meter_transmission_gen_spark.streaming.pipeline import (
         scd2_bucketed_batch_fn,
-        scd2_batch_fn,
     )
 
     orders = (
@@ -308,8 +307,9 @@ def main() -> None:
         .localCheckpoint()
     )
     scd2_schema = (
-        "o_orderkey bigint, o_orderstatus string, o_totalprice double,"
-        " valid_from_seq int, valid_to_seq int, is_current boolean"
+        "bucket int, o_orderkey bigint, o_orderstatus string,"
+        " o_totalprice double, valid_from_seq int, valid_to_seq int,"
+        " is_current boolean"
     )
     payload = ["o_orderkey", "o_orderstatus", "o_totalprice"]
     scd2_out: dict = {
@@ -317,23 +317,22 @@ def main() -> None:
         "batch_keys": 20,
         "shapes": {},
     }
-    # full rewrite
-    fdir = os.path.join(root, "scd2_full")
-    fcom = os.path.join(root, "scd2_full_commits")
-    ffn = scd2_batch_fn(fdir, fcom, scd2_schema, "o_orderkey", payload)
+    # full rewrite: the same batch fn on a one-bucket table
+    tf = SnapshotTable(os.path.join(root, "scd2_full"), scd2_schema, 1)
+    ffn = scd2_bucketed_batch_fn(tf, "o_orderkey", payload)
     ffn(seed_feed, 0)
-    b0 = _tree_bytes(fdir)
+    b0 = _tree_bytes(tf.root)
     t0 = time.perf_counter()
     ffn(upd_feed, 1)
     scd2_out["shapes"]["full_rewrite"] = {
         "apply_sec": round(time.perf_counter() - t0, 3),
-        "bytes_written": _tree_bytes(fdir) - b0,
+        "bytes_written": _tree_bytes(tf.root) - b0,
     }
     # bucketed, production bucket count
     n_scd2_buckets = 256
     ts = SnapshotTable(
         os.path.join(root, "scd2_bucketed"),
-        "bucket int, " + scd2_schema,
+        scd2_schema,
         n_scd2_buckets,
     )
     bfn = scd2_bucketed_batch_fn(ts, "o_orderkey", payload)

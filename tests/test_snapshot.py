@@ -395,6 +395,42 @@ def test_emptied_bucket_and_physical_erasure(spark, tmp_path):
         assert ks.isdisjoint(doomed), p
 
 
+def test_snapshot_merge_fn_empties_a_touched_bucket(spark, tmp_path):
+    """A ``snapshot_merge_fn`` merge that returns no rows for a bucket
+    its delta touches must empty that bucket instead of carrying its
+    committed rows forward, and every untouched bucket must keep its
+    bucket-manifest name. The merge here upserts the delta's rows and
+    deletes the keys whose ``v`` is negative."""
+    from cassaforte_meter_transmission_gen_spark.streaming.pipeline import (
+        snapshot_merge_fn,
+    )
+
+    t = _mk(spark, tmp_path)
+    fn = snapshot_merge_fn(
+        t,
+        lambda b: b,
+        lambda prev, d: prev.join(d.select("k"), "k", "left_anti").unionByName(
+            d.filter(F.col("v") >= 0)
+        ),
+    )
+    rows = [(k, k * 10) for k in range(12)]
+    base = _df(spark, rows)
+    fn(base, 0)
+    bdoom = base.first()["bucket"]
+    doomed = {r["k"] for r in base.collect() if r["bucket"] == bdoom}
+    fn(_df(spark, [(k, -1) for k in sorted(doomed)]), 1)
+
+    assert t.batch_high_watermark() == 1
+    assert {r["k"] for r in t.read(spark).collect()} == set(range(12)) - doomed
+    assert t.manifest(1)["buckets"][str(bdoom)] == []
+    before = t.root_manifest(0)["bucket_manifests"]
+    after = t.root_manifest(1)["bucket_manifests"]
+    assert set(after) == set(before)
+    assert {b: after[b] for b in after if b != str(bdoom)} == {
+        b: before[b] for b in before if b != str(bdoom)
+    }
+
+
 def test_manifest_file_stats_prune_and_carry(spark, tmp_path):
     """File stats: recorded at commit from the parquet footers;
     range-clustered buckets prune disjoint files (and ONLY disjoint

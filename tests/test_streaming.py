@@ -666,6 +666,48 @@ def test_reader_survives_concurrent_compaction_cycle(spark, tmp_path):
     assert fresh.select("datetime").distinct().count() == 13 * 20
 
 
+def test_append_fold_sink_compacts_every_compact_every_batches(spark, tmp_path):
+    """An append-fold sink compacts its own tables: at batch id
+    ``COMPACT_EVERY`` the chunk ledger folds its old batch dirs into
+    ``_compacted/upto=<COMPACT_EVERY - COMPACT_KEEP_BATCHES>``, and its
+    committed ledger reads the same as the one the same two batches
+    leave under ids 0 and 1, where nothing compacts. The replay guard
+    only skips ids ≤ the high watermark, so the two batches need no
+    ids in between."""
+    import os
+
+    from cassaforte_meter_transmission_gen_spark.streaming.pipeline import (
+        _CHUNK_LEDGER,
+        COMPACT_EVERY,
+        COMPACT_KEEP_BATCHES,
+        chunk_ledger_batch_fn,
+        read_fold_table,
+    )
+
+    batches = [
+        spark.createDataFrame(rows, "doc_id long, text string")
+        for rows in (
+            [(10, "alpha beta"), (11, "alpha")],
+            [(12, "beta gamma"), (13, "alpha")],
+        )
+    ]
+
+    def ledger(root, ids):
+        table, commits = f"{root}/ledger", f"{root}/_commits"
+        fn = chunk_ledger_batch_fn(table, commits)
+        for b, batch_id in zip(batches, ids):
+            fn(b, batch_id)
+        rows = read_fold_table(spark, table, commits, _CHUNK_LEDGER).collect()
+        return table, sorted(map(tuple, rows))
+
+    _, want = ledger(tmp_path / "plain", (0, 1))
+    table, got = ledger(tmp_path / "cadence", (0, COMPACT_EVERY))
+    upto = COMPACT_EVERY - COMPACT_KEEP_BATCHES
+    assert os.listdir(f"{table}/_compacted") == [f"upto={upto}"]
+    assert got == want
+    assert not os.path.exists(f"{tmp_path}/plain/ledger/_compacted")
+
+
 def test_streaming_interval_join_equals_batch(spark, sf_small):
     """The stream-stream interval join must produce exactly the batch
     range join's pairs on the same events — every (purchase, click ≤
@@ -865,25 +907,35 @@ def test_cms_rollup_replay_is_exactly_once(spark, tmp_path):
     assert mass == {r: 200 for r in range(CMS_DEPTH)}, mass
 
 
-def test_scd2_maintenance_replay_and_chaining(spark, tmp_path):
-    """Streaming SCD2 maintenance (scd2_batch_fn): versions chain
-    across micro-batches (the committed open version is carried into
-    the next batch's window), deletes close without opening, and a
-    replayed batch id — even with DIFFERENT rows — is a no-op."""
-    import pyspark.sql.functions as F
+#: the SCD2 history of a (k, v) feed, bucketed
+_SCD2_HISTORY = (
+    "bucket int, k bigint, v string, valid_from_seq int, valid_to_seq int,"
+    " is_current boolean"
+)
 
+
+def _scd2_table(tmp_path):
+    """A one-bucket SCD2 history table over (k, v)."""
+    from cassaforte_meter_transmission_gen_spark.sources.snapshot import (
+        SnapshotTable,
+    )
+
+    return SnapshotTable(str(tmp_path / "hist"), _SCD2_HISTORY, 1)
+
+
+def test_scd2_maintenance_replay_and_chaining(spark, tmp_path):
+    """Streaming SCD2 maintenance (scd2_bucketed_batch_fn on a
+    one-bucket table): versions chain across micro-batches (the
+    committed open version is carried into the next batch's window),
+    deletes close without opening, and a replayed batch id — even with
+    DIFFERENT rows — is a no-op."""
     from cassaforte_meter_transmission_gen_spark.streaming.pipeline import (
-        scd2_batch_fn,
+        scd2_bucketed_batch_fn,
     )
 
     schema_feed = "k bigint, v string, seq int, op string"
-    schema_hist = (
-        "k bigint, v string, valid_from_seq int, valid_to_seq int,"
-        " is_current boolean"
-    )
-    table = str(tmp_path / "hist")
-    commits = str(tmp_path / "_commits")
-    fn = scd2_batch_fn(table, commits, schema_hist, "k", ["k", "v"])
+    table = _scd2_table(tmp_path)
+    fn = scd2_bucketed_batch_fn(table, "k", ["k", "v"])
 
     def batch(rows):
         return spark.createDataFrame(rows, schema_feed)
@@ -899,7 +951,7 @@ def test_scd2_maintenance_replay_and_chaining(spark, tmp_path):
 
     hist = {
         (r.k, r.valid_from_seq): r
-        for r in spark.read.schema(schema_hist).parquet(f"{table}/v=2").collect()
+        for r in table.read(spark).drop("bucket").collect()
     }
     assert len(hist) == 4  # three versions of key 1, one closed of key 2
     assert (hist[(1, 0)].v, hist[(1, 0)].valid_to_seq) == ("a", 1)
@@ -919,17 +971,12 @@ def test_scd2_redelivered_seq_under_new_batch_id_is_noop(spark, tmp_path):
     duplicate versions). The history must be byte-identical to the
     no-redelivery run, with no valid_from_seq == valid_to_seq rows."""
     from cassaforte_meter_transmission_gen_spark.streaming.pipeline import (
-        scd2_batch_fn,
+        scd2_bucketed_batch_fn,
     )
 
     schema_feed = "k bigint, v string, seq int, op string"
-    schema_hist = (
-        "k bigint, v string, valid_from_seq int, valid_to_seq int,"
-        " is_current boolean"
-    )
-    table = str(tmp_path / "hist")
-    commits = str(tmp_path / "_commits")
-    fn = scd2_batch_fn(table, commits, schema_hist, "k", ["k", "v"])
+    table = _scd2_table(tmp_path)
+    fn = scd2_bucketed_batch_fn(table, "k", ["k", "v"])
 
     def batch(rows):
         return spark.createDataFrame(rows, schema_feed)
@@ -940,7 +987,7 @@ def test_scd2_redelivered_seq_under_new_batch_id_is_noop(spark, tmp_path):
     # alongside one genuinely new event for key 2
     fn(batch([(1, "a1", 1, "u"), (2, "b", 0, "u"), (2, "b2", 2, "u")]), 2)
 
-    rows = spark.read.schema(schema_hist).parquet(f"{table}/v=2").collect()
+    rows = table.read(spark).drop("bucket").collect()
     hist = {(r.k, r.valid_from_seq): r for r in rows}
     assert len(rows) == len(hist) == 4  # no duplicate versions
     assert all(
@@ -1043,6 +1090,21 @@ def test_psi_counts_replay_is_exactly_once(spark, tmp_path):
     assert got == {0: (3, 0), 9: (0, 1), 1: (0, 2)}
 
 
+def _mg_table(tmp_path):
+    """A one-bucket Misra–Gries summary table."""
+    from cassaforte_meter_transmission_gen_spark.sources.snapshot import (
+        SnapshotTable,
+    )
+
+    return SnapshotTable(
+        str(tmp_path / "mg_summary"), "bucket int, user_id long, cnt long", 1
+    )
+
+
+def _user_batch(spark):
+    return lambda users: spark.createDataFrame([(u,) for u in users], "user_id long")
+
+
 def test_mg_rollup_replay_is_exactly_once_and_capped(spark, tmp_path):
     """The streaming Misra–Gries merge must (a) be a no-op on replayed
     batch ids — counts are additive, so a leaked replay shifts them
@@ -1054,14 +1116,9 @@ def test_mg_rollup_replay_is_exactly_once_and_capped(spark, tmp_path):
         mg_rollup_batch_fn,
     )
 
-    table = str(tmp_path / "mg_summary")
-    commits = str(tmp_path / "_commits")
-    fn = mg_rollup_batch_fn(table, commits, k=5)
-
-    def batch(users):
-        return spark.createDataFrame(
-            [(u,) for u in users], "user_id long"
-        )
+    table = _mg_table(tmp_path)
+    fn = mg_rollup_batch_fn(table, k=5)
+    batch = _user_batch(spark)
 
     fn(batch([7] * 30 + list(range(100, 120))), 0)
     fn(batch([7] * 30 + list(range(200, 220))), 1)
@@ -1069,16 +1126,36 @@ def test_mg_rollup_replay_is_exactly_once_and_capped(spark, tmp_path):
     fn(batch([7] * 999), 1)  # late replay, new values — ditto
 
     stored = {
-        r["user_id"]: r["cnt"]
-        for r in spark.read.schema("user_id long, cnt long")
-        .parquet(f"{table}/v=1")
-        .collect()
+        r["user_id"]: r["cnt"] for r in table.read(spark).drop("bucket").collect()
     }
     assert len(stored) <= 5
     # key 7: true count 60 across both committed batches; MG may have
     # subtracted but never added — and at 60/100 support it MUST survive
     assert 0 < stored[7] <= 60
     assert 60 > 100 // (5 + 1)  # sanity: above the guarantee line
+
+
+def test_mg_rollup_batch_that_caps_every_count_empties_the_summary(
+    spark, tmp_path
+):
+    """A batch of k+1 distinct users, each seen once, caps every merged
+    count to 0 when the committed summary holds counts of 1: the
+    committed summary must then be empty, not the previous one."""
+    from cassaforte_meter_transmission_gen_spark.streaming.pipeline import (
+        mg_rollup_batch_fn,
+    )
+
+    table = _mg_table(tmp_path)
+    fn = mg_rollup_batch_fn(table, k=3)
+    batch = _user_batch(spark)
+    fn(batch([1, 2]), 0)
+    assert sorted(map(tuple, table.read(spark).drop("bucket").collect())) == [
+        (1, 1),
+        (2, 1),
+    ]
+    fn(batch([10, 11, 12, 13]), 1)
+    assert table.batch_high_watermark() == 1
+    assert table.read(spark).count() == 0
 
 
 def test_auc_scores_replay_is_exactly_once(spark, tmp_path):
@@ -1116,20 +1193,25 @@ def test_auc_scores_replay_is_exactly_once(spark, tmp_path):
 
 
 def _crash_sink(spark, sink, root):
-    """(make_fn, read_state, commits_dir) for one sink of the commit
-    protocol under ``root``: the five-table ingest (retaining one
-    marker, so the prune after commit deletes marker 0 at batch 1),
-    the same ingest compacting every batch into a segment, one of the
-    append-fold sinks (:func:`_fold_sink`), or the chunk ledger
-    compacting every batch into a segment."""
+    """(make_fn, read_state, high_watermark) for one sink under
+    ``root``: the five-table ingest (retaining one marker, so the prune
+    after commit deletes marker 0 at batch 1), the same ingest
+    compacting every batch into a segment, one of the append-fold sinks
+    (:func:`_fold_sink`), the chunk ledger compacting every batch into
+    a segment, or one of the snapshot-manifest sinks
+    (:func:`_snapshot_sink`). The append sinks' markers land in
+    ``<root>/_commits``."""
     from cassaforte_meter_transmission_gen_spark.operators.ingest import TABLES
     from cassaforte_meter_transmission_gen_spark.streaming.pipeline import (
+        _high_watermark,
         compact_fold_tables,
         read_fold_table,
         read_stream_table,
         streaming_ingest_batch_fn,
     )
 
+    if sink in _SNAPSHOT_SINKS:
+        return _snapshot_sink(spark, sink, root)
     commits = f"{root}/_commits"
     if sink in ("ingest", "compact"):
         paths = {t: f"{root}/{t}" for t in TABLES}
@@ -1153,7 +1235,7 @@ def _crash_sink(spark, sink, root):
                 )
                 for t in TABLES
             },
-            commits,
+            lambda: _high_watermark(commits),
         )
     make_fold, tables = _fold_sink(
         spark, sink.removesuffix("-compact"), root, commits
@@ -1179,7 +1261,69 @@ def _crash_sink(spark, sink, root):
             out.append(sorted(map(tuple, df.collect())))
         return out
 
-    return make, read, commits
+    return make, read, lambda: _high_watermark(commits)
+
+
+#: the sinks committed by ``snapshot_merge_fn`` (:func:`_snapshot_sink`)
+_SNAPSHOT_SINKS = (
+    "mg",
+    "scd2",
+    "scd2-bucketed",
+    "ledger-bucketed",
+    "ledger-lsm",
+    "ledger-lsm-compact",
+)
+
+
+def _snapshot_sink(spark, sink, root):
+    """(make_fn, read_state, high_watermark) of the snapshot-manifest
+    sink ``sink`` on a table under ``root``. The LSM ledger's state is
+    its folded read; ``ledger-lsm-compact`` runs it at a size tier of
+    one file, so batch 1's append is followed by a compaction of the
+    buckets it touched."""
+    from unittest import mock
+
+    from cassaforte_meter_transmission_gen_spark.sources.snapshot import (
+        SnapshotTable,
+    )
+    from cassaforte_meter_transmission_gen_spark.streaming import pipeline as p
+
+    def scd2(t):
+        return p.scd2_bucketed_batch_fn(t, "k", ["k", "v"])
+
+    ledger = (p._CHUNK_LEDGER_BUCKETED_SCHEMA, p.CHUNK_LEDGER_N_BUCKETS)
+    batch_fn, schema, n_buckets = {
+        "mg": (
+            lambda t: p.mg_rollup_batch_fn(t, k=5),
+            "bucket int, user_id long, cnt long",
+            1,
+        ),
+        "scd2": (scd2, _SCD2_HISTORY, 1),
+        "scd2-bucketed": (scd2, _SCD2_HISTORY, 4),
+        "ledger-bucketed": (p.chunk_ledger_bucketed_batch_fn, *ledger),
+        "ledger-lsm": (p.chunk_ledger_lsm_batch_fn, *ledger),
+        "ledger-lsm-compact": (p.chunk_ledger_lsm_batch_fn, *ledger),
+    }[sink]
+    path = f"{root}/table"
+
+    def make():
+        fn = batch_fn(SnapshotTable(path, schema, n_buckets))
+        if sink != "ledger-lsm-compact":
+            return fn
+
+        def tiered(batch, batch_id):
+            with mock.patch.object(p, "CHUNK_LEDGER_COMPACT_MAX_FILES", 1):
+                fn(batch, batch_id)
+
+        return tiered
+
+    def read():
+        rows = SnapshotTable.open(path).read(spark)
+        if sink.startswith("ledger-lsm"):
+            rows = p.ledger_merge(rows)
+        return sorted(map(tuple, rows.drop("bucket").collect()))
+
+    return make, read, lambda: SnapshotTable.open(path).batch_high_watermark()
 
 
 def _fold_sink(spark, sink, root, commits):
@@ -1256,7 +1400,15 @@ def _crash_batches(spark, sink):
         return [
             spark.createDataFrame([(str(i),)], "value string") for i in range(2)
         ]
-    if sink in ("nb", "ledger", "ledger-compact"):
+    if sink.startswith("scd2"):  # batch 1 updates 1–3, deletes 4
+        return [
+            spark.createDataFrame(rows, "k bigint, v string, seq int, op string")
+            for rows in (
+                [(k, f"v{k}", 0, "u") for k in range(1, 9)],
+                [(k, f"w{k}", 1, "u") for k in (1, 2, 3)] + [(4, "v4", 1, "d")],
+            )
+        ]
+    if sink == "nb" or sink.startswith("ledger"):
         texts = ["alpha beta", "beta gamma gamma", "alpha delta", "gamma"]
         return [
             spark.createDataFrame(
@@ -1308,6 +1460,17 @@ _CRASH_STEPS = [
     ("ledger-compact", "replace", "ledger/_compacted/upto=1"),
     ("view", "parquet", "view/batch=1"),
     ("view", "replace", "marker"),
+    *[
+        (sink, patch, target)
+        for sink in _SNAPSHOT_SINKS[:-1]
+        for patch, target in (
+            ("parquet", "data/snap=1"),
+            ("replace", "manifests/b/*-1.json"),
+            ("link", f"manifests/{1:020d}.json"),
+        )
+    ],
+    ("ledger-lsm-compact", "replace", "manifests/b/*-2.json"),
+    ("ledger-lsm-compact", "link", f"manifests/{2:020d}.json"),
 ]
 
 
@@ -1323,17 +1486,17 @@ def test_crash_at_every_commit_step_replays_exactly_once(
     1 — after one of its table writes, instead of the marker's
     ``os.replace``, in the marker prune after the marker, or in a
     compaction after the commit, between a segment's temp write and its
-    publish (a grain's SUM, the chunk ledger's MIN/SUM). Readers must
-    see exactly the batches ≤ the high watermark, and replaying batch 1
-    through a fresh fn must leave every table equal to an uninterrupted
-    run."""
+    publish (a grain's SUM, the chunk ledger's MIN/SUM); for a
+    snapshot-manifest sink, after its ``data/snap=1`` write, at a bucket
+    manifest's ``os.replace`` or at the root manifest's ``os.link`` (the
+    commit point), and for the LSM ledger inside the compaction that
+    follows its append. Readers must see exactly the batches ≤ the high
+    watermark, and replaying batch 1 through a fresh fn must leave
+    every table equal to an uninterrupted run."""
+    import fnmatch
     import os
 
     from pyspark.sql.readwriter import DataFrameWriter
-
-    from cassaforte_meter_transmission_gen_spark.streaming.pipeline import (
-        _high_watermark,
-    )
 
     batches = _crash_batches(spark, sink)
     make, read, _ = _crash_sink(spark, sink, str(tmp_path / "reference"))
@@ -1342,7 +1505,8 @@ def test_crash_at_every_commit_step_replays_exactly_once(
         ref_fn(b, i)
         want.append(read())
 
-    make, read, commits = _crash_sink(spark, sink, str(tmp_path / "crashed"))
+    make, read, high_watermark = _crash_sink(spark, sink, str(tmp_path / "crashed"))
+    commits = str(tmp_path / "crashed" / "_commits")
     make()(batches[0], 0)
     if patch == "parquet":
         real_parquet = DataFrameWriter.parquet
@@ -1360,12 +1524,21 @@ def test_crash_at_every_commit_step_replays_exactly_once(
             if (
                 os.path.dirname(dst) == commits
                 if target == "marker"
-                else dst.endswith(target)
+                else fnmatch.fnmatch(dst, f"*/{target}")
             ):
                 raise RuntimeError(f"injected crash before publishing {target}")
             return real_replace(src, dst)
 
         monkeypatch.setattr(os, "replace", replace)
+    elif patch == "link":
+        real_link = os.link
+
+        def link(src, dst, *args, **kwargs):
+            if dst.endswith(target):
+                raise RuntimeError(f"injected crash before publishing {target}")
+            return real_link(src, dst, *args, **kwargs)
+
+        monkeypatch.setattr(os, "link", link)
     else:
         real_remove = os.remove
 
@@ -1379,7 +1552,7 @@ def test_crash_at_every_commit_step_replays_exactly_once(
         make()(batches[1], 1)
     monkeypatch.undo()
 
-    hw = _high_watermark(commits)
+    hw = high_watermark()
     assert hw == (1 if target == "gc" or sink.endswith("compact") else 0)
     assert read() == want[hw]
     make()(batches[1], 1)
